@@ -79,20 +79,25 @@ def _content(content, content_type):
     raise RewriteError(f"unknown content type {content_type!r}")
 
 
-class _Node:
-    """Open-element state shared by the VM and the Element facade."""
+class _Node(list):
+    """Open-element state shared by the VM and the Element facade.
+
+    The node is also its own open-stack entry: the list
+    ``[orig_name, suppressing, None, None]`` in the stack-entry layout of
+    _run_pass, where the ``None`` end action sends its end tag down the
+    full node path."""
 
     __slots__ = (
-        "orig_name", "tag_name", "renamed", "_attrs",
+        "tag_name", "renamed", "_attrs",
         "_tokattrs_c", "explicit_self_closing", "void", "_tok",
-        "modified", "removed_mode", "suppressing",
+        "modified", "removed_mode",
         "before_parts", "prepend_parts", "append_parts", "after_parts",
         "inner_content", "text_active", "end_tag_handlers", "end_removed",
         "_byte_info", "_byte_cursor",
     )
 
     def __init__(self, tok: tk.Token, byte_cursor=None):
-        self.orig_name = tok.name
+        list.__init__(self, (tok.name, False, None, None))
         self.tag_name = tok.name
         self.renamed = False
         self._attrs = None  # materialized on first access (most elements
@@ -104,7 +109,6 @@ class _Node:
         self._tok = tok  # raw sliced lazily (passthrough is range-emitted)
         self.modified = False
         self.removed_mode = None  # None | "content" | "unwrap"
-        self.suppressing = False
         self.before_parts = None
         self.prepend_parts = None
         self.append_parts = None
@@ -187,43 +191,26 @@ class _Node:
         return "".join(parts)
 
 
-class _InertNode:
-    """Lightweight open-stack entry for start tags that NO handler
-    selector can possibly match (fast-skip dispatch; sanitizer-off
-    passes only). Provides exactly what the VM pop paths and the
-    ancestor matcher read; every handler-mutable field is a class-level
-    immutable default — inert nodes are never handed to handlers, so
-    they are never written."""
+class _InertNode(list):
+    """Light open-stack entry ``[name, False, True, None, tok]`` for a
+    start tag that NO handler selector can possibly match (fast-skip
+    dispatch; sanitizer-free passes only). Its end tag takes the light
+    pop path like any light entry; it also answers the ancestor-matcher
+    protocol, since descendant combinators inspect ancestors. Inert
+    entries are never handed to handlers, so they are never written."""
 
-    __slots__ = ("orig_name", "tag_name", "_tok", "_attrs")
+    __slots__ = ()
 
-    suppressing = False
-    text_active = None
-    end_tag_handlers = None
-    removed_mode = None
-    end_removed = False
-    renamed = False
-    modified = False
-    before_parts = None
-    prepend_parts = None
-    append_parts = None
-    after_parts = None
-    inner_content = None
-
-    def __init__(self, tok):
-        self.orig_name = self.tag_name = tok.name
-        self._tok = tok
-        self._attrs = None
+    @property
+    def tag_name(self):
+        return self[0]
 
     def get_attr(self, name):
-        # ancestor-matcher protocol (descendant combinators inspect
-        # ancestors' attrs); read-only, so a dict is fine
-        a = self._attrs
-        if a is None:
-            ta = self._tok.attrs
-            # extraction already dedups first-wins, names unique
-            a = self._attrs = {t.name: t.value for t in ta} if ta else {}
-        return a.get(name)
+        # extraction already dedups first-wins, so the first hit is it
+        for a in self[4].attrs or ():
+            if a.name == name:
+                return a.value
+        return None
 
 
 class Element:
@@ -554,10 +541,7 @@ class Rewriter:
                     gc.disable()
             _GC_PAUSE_DEPTH += 1
         try:
-            if self.handlers or self.sanitizer is None:
-                out = _run_pass(html, self.sanitizer, self.handlers)
-            else:
-                out = _sanitize_pass(html, self.sanitizer, self._san_memo)
+            out = _run_pass(html, self.sanitizer, self.handlers, self._san_memo)
             if self.sanitizer is not None and _needs_final_pass(
                 out, self._final_gate_re
             ):
@@ -666,276 +650,45 @@ def _cdata_extent(html: str, tok) -> tuple:
 _SAN_MEMO_CAP = 50_000
 
 
-def _sanitize_pass(html, sanitizer, san_memo=None) -> str:
-    """Sanitize-only fast path (no user handlers): semantically identical
-    to _run_pass with handlers=[] but without the handler-dispatch / node
-    machinery for trivial kept elements. Stack entries are light 4-lists
-    [orig_name, suppressing, end_raw, after_str] where end_raw: True=emit
-    the end tag raw, False=drop it, or a string to emit instead."""
-    tokens = tk.tokenize(html)
-    out: list[str] = []
-    emit = out.append
-    stack: list[list] = []
-    # open-element name counts: O(1) orphan-end-tag rejection (a flood
-    # of unmatched end tags over a deep stack would otherwise scan the
-    # whole stack per tag — an adversarial quadratic)
-    open_counts: dict = {}
-    suppress = 0
-    allow_comments = sanitizer.allow_comments
-    allow_doctype = sanitizer.allow_doctype
-    # inlined action_for: one dict .get per start tag instead of a
-    # method call + try/except frame (r6; None is a stored value meaning
-    # "allowed", so the unknown-tag default only fires on missing keys)
-    action_get = sanitizer._actions.get
-    unknown_action = sanitizer._actions["unknown"]
+def _run_pass(html, sanitizer, handlers, san_memo) -> str:
+    """The one streaming pass: the sanitizer and every handler act on
+    each token as it is lexed (reference rewriter.rs:284-294).
 
-    # contiguous passthrough tokens are emitted as ONE source slice
-    run_start = -1
-    run_end = -1
-    # _sanitize_element outcome memo (see the START_TAG node branch);
-    # keys are raw tag slices. r6: normally the REWRITER-level dict
-    # (cross-document hits — see Rewriter.__init__), capped at
-    # _SAN_MEMO_CAP; per-pass fallback for direct callers.
-    if san_memo is None:
-        san_memo = {}
-    elif len(san_memo) > _SAN_MEMO_CAP:
-        san_memo.clear()
+    Open-stack entries are lists ``[name, suppressing, end, after]``. A
+    start tag that no handler can see takes a LIGHT branch and pushes a
+    plain entry whose ``end`` is True (emit the end tag raw) or False
+    (drop it) and whose ``after`` is a string to emit after the end tag
+    (or None). Every other start tag builds a _Node, which is its own
+    entry with ``end`` None: its end tag takes the full node path. Two
+    cases are light:
 
-    def keep(tok):
-        nonlocal run_start, run_end
-        if tok.start == run_end:
-            run_end = tok.end
-        else:
-            if run_start >= 0:
-                emit(html[run_start:run_end])
-            run_start = tok.start
-            run_end = tok.end
+    * sanitize-only passes (no handlers): every start tag, with the
+      _sanitize_element outcome memoized in ``san_memo`` (the Rewriter's
+      cross-document dict) on the raw tag slice;
+    * sanitizer-free passes whose selectors are all tag-prefiltered: tags
+      outside the union of required tags (fast-skip; the entry is an
+      _InertNode so the ancestor matcher can read it).
 
-    def flush():
-        nonlocal run_start, run_end
-        if run_start >= 0:
-            emit(html[run_start:run_end])
-            run_start = -1
-            run_end = -1
-
-    TEXT, START_TAG, END_TAG, COMMENT = tk.TEXT, tk.START_TAG, tk.END_TAG, tk.COMMENT
-    # index-based so the foreign-content CDATA repair can re-lex and
-    # splice the remaining token stream (see the COMMENT branch); the
-    # re-lex is LAZY (chunked via lex_pos) so N repairs cost O(n), not
-    # O(N * n) — see _RELEX_CHUNK
-    ntok = len(tokens)
-    ti = 0
-    lex_pos = None  # byte pos to resume lazy lexing at (None = fully lexed)
-    n_html = len(html)
-    while True:
-        if ti >= ntok:
-            if lex_pos is None or lex_pos >= n_html:
-                break
-            tokens, lex_pos = tk.tokenize(
-                html, start=lex_pos, limit=_RELEX_CHUNK
-            )
-            ntok = len(tokens)
-            ti = 0
-            continue
-        tok = tokens[ti]
-        ti += 1
-        kind = tok.kind
-        if kind == TEXT:
-            # keep() inlined on the two hottest branches (TEXT and the
-            # attr-less kept start tag, ~80% of keep calls — r6): the
-            # closure call alone is ~70ns against a ~1.2us/token budget
-            if suppress == 0:
-                if tok.start == run_end:
-                    run_end = tok.end
-                else:
-                    if run_start >= 0:
-                        emit(html[run_start:run_end])
-                    run_start = tok.start
-                    run_end = tok.end
-            continue
-
-        if kind == START_TAG:
-            name = tok.name
-            action = action_get(name, unknown_action)
-            void = name in VOID_TAGS
-            no_end = void or tok.self_closing
-
-            # attr-less test WITHOUT forcing lazy extraction (r6): a
-            # non-None _ablob means the hot/batch lexer validated a
-            # non-empty attribute blob, so the tag HAS attrs — reading
-            # tok.attrs here would extract them even when the
-            # _sanitize_element memo below hits (where they are unused)
-            if action is None and tok._ablob is None and not tok._attrs \
-                    and name != "iframe":
-                # kept, untouched: raw passthrough (the common case)
-                if suppress == 0:
-                    if tok.start == run_end:
-                        run_end = tok.end
-                    else:
-                        if run_start >= 0:
-                            emit(html[run_start:run_end])
-                        run_start = tok.start
-                        run_end = tok.end
-                if not no_end:
-                    open_counts[name] = open_counts.get(name, 0) + 1
-                    stack.append([name, False, True, None])
-                continue
-
-            if action is not None:
-                remove_contents, wrap_ws = action
-                if remove_contents:
-                    if no_end:
-                        continue  # tag dropped, nothing to suppress
-                    open_counts[name] = open_counts.get(name, 0) + 1
-                    stack.append([name, True, False, None])
-                    suppress += 1
-                else:
-                    if wrap_ws and suppress == 0:
-                        flush()
-                        emit(" ")  # before (void: the single space)
-                    if not no_end:
-                        open_counts[name] = open_counts.get(name, 0) + 1
-                        stack.append(
-                            [name, False, False, " " if wrap_ws else None]
-                        )
-                continue
-
-            # kept element with attributes (or iframe): full node logic.
-            # _sanitize_element is a pure function of (raw tag bytes,
-            # frozen config) — no positional or stack state — so its
-            # OUTCOME is memoized per pass on the raw slice (r5): web
-            # corpora repeat start tags massively, and a hit skips attr
-            # extraction + unescape/allowlist/protocol checks +
-            # re-serialization entirely. Three outcomes: "content"
-            # (force-removed, suppress subtree), "keep" (raw passthrough
-            # — includes canonical-rebuild == source), ("emit", s,
-            # inner) (re-serialized, optional inner replacement).
-            raw = html[tok.start:tok.end]
-            hit = san_memo.get(raw)
-            if hit is None:
-                node = _Node(tok)
-                _sanitize_element(sanitizer, node)
-                if node.removed_mode == "content":
-                    hit = ("content", None, None)
-                elif node.modified or node.inner_content is not None:
-                    s = node.serialize_start()
-                    if node.inner_content is None and s == raw:
-                        # canonical rebuild == source bytes (already
-                        # double-quoted, lowercase, single-spaced): keep
-                        # the raw run contiguous instead of flushing
-                        hit = ("keep", None, None)
-                    else:
-                        hit = ("emit", s, node.inner_content)
-                else:
-                    hit = ("keep", None, None)
-                san_memo[raw] = hit
-            mode, s, inner = hit
-            if mode == "content":  # force-removed via <!-- attr
-                if not no_end:
-                    open_counts[name] = open_counts.get(name, 0) + 1
-                    stack.append([name, True, False, None])
-                    suppress += 1
-                continue
-            if suppress == 0:
-                if mode == "keep":
-                    keep(tok)
-                else:
-                    flush()
-                    emit(s)
-                    if inner is not None and not no_end:
-                        emit(inner)
-            if mode == "emit" and inner is not None and not no_end:
-                open_counts[name] = open_counts.get(name, 0) + 1
-                stack.append([name, True, True, None])
-                suppress += 1
-            elif not no_end:
-                open_counts[name] = open_counts.get(name, 0) + 1
-                stack.append([name, False, True, None])
-            continue
-
-        if kind == END_TAG:
-            name = tok.name
-            if not open_counts.get(name):
-                if suppress == 0:
-                    keep(tok)  # orphan end tag passes through
-                continue
-            for k in range(len(stack) - 1, -1, -1):
-                if stack[k][0] == name:
-                    idx = k
-                    break
-            for entry in stack[idx + 1 :]:
-                if entry[1]:
-                    suppress -= 1
-                open_counts[entry[0]] -= 1
-            closing = stack[idx]
-            open_counts[name] -= 1
-            del stack[idx:]
-            if closing[1]:
-                suppress -= 1
-            if suppress == 0:
-                if closing[2]:
-                    keep(tok)
-                if closing[3] is not None:
-                    flush()
-                    emit(closing[3])
-            continue
-
-        if kind == COMMENT:
-            # CDATA in an OPEN svg/math subtree is CHARACTER DATA, not a
-            # comment (same rule as _run_pass, and lexing must agree
-            # between the two passes — the sanitize-vs-VM differential
-            # fuzz pins it): emit verbatim regardless of allow_comments,
-            # repairing '>'-containing data to the ']]>' terminator and
-            # re-lexing the remainder.
-            if (
-                (open_counts.get("svg") or open_counts.get("math"))
-                and tok.end - tok.start >= 10
-                and html.startswith("<![CDATA[", tok.start, tok.end)
-            ):
-                cd_end, merged = _cdata_extent(html, tok)
-                if cd_end is not None:
-                    if merged:
-                        # drop the stale lookahead; the refill at the
-                        # loop top re-lexes lazily from cd_end
-                        tokens = ()
-                        ntok = 0
-                        ti = 0
-                        lex_pos = cd_end
-                    if suppress == 0:
-                        if cd_end == tok.end:
-                            keep(tok)
-                        else:
-                            flush()
-                            emit(html[tok.start:cd_end])
-                    continue
-            if allow_comments and suppress == 0:
-                keep(tok)
-            continue
-
-        # DOCTYPE
-        if allow_doctype and suppress == 0:
-            keep(tok)
-
-    flush()
-    return "".join(out)
-
-
-def _run_pass(html, sanitizer, handlers) -> str:
+    Sanitizer+handler passes build a _Node for every tag, because
+    ancestor selectors read post-sanitize attributes."""
     # batch-attr tokens; attribute_source_location lazily re-parses its
     # own tag with span tracking on the rare access (Element facade)
     tokens = tk.tokenize(html)
     out: list[str] = []
     emit = out.append
-    stack: list[_Node] = []       # matching stack (implicit pops)
-    # open-element name counts: O(1) orphan-end-tag rejection (see
-    # _sanitize_pass — same adversarial-quadratic guard)
+    stack: list[list] = []        # matching stack (implicit pops)
+    # open-element name counts: O(1) orphan-end-tag rejection (a flood
+    # of unmatched end tags over a deep stack would otherwise scan the
+    # whole stack per tag — an adversarial quadratic)
     open_counts: dict = {}
-    ruby_stack: list[str] = []    # Selma-style ancestors stack
+    ruby_stack: list[str] = []    # Selma-style ancestors (handler passes)
     suppress = 0
     # handler_idx -> count of OPEN elements whose text selector matched:
     # maintained on push/pop so text tokens read the active set O(1)
     # instead of re-scanning the open stack per chunk
     tactive_counts: dict = {}
+    drop_comments = sanitizer is not None and not sanitizer.allow_comments
+    drop_doctype = sanitizer is not None and not sanitizer.allow_doctype
 
     # contiguous untouched tokens are emitted as ONE source slice
     run_start = -1
@@ -958,55 +711,70 @@ def _run_pass(html, sanitizer, handlers) -> str:
             run_start = -1
             run_end = -1
 
+    sanitize_only = not handlers
+    if sanitize_only:
+        # inlined action_for: one dict .get per start tag instead of a
+        # method call + try/except frame (r6; None is a stored value
+        # meaning "allowed", so the unknown-tag default only fires on
+        # missing keys)
+        action_get = sanitizer._actions.get
+        unknown_action = sanitizer._actions["unknown"]
+        if len(san_memo) > _SAN_MEMO_CAP:
+            san_memo.clear()
+    else:
+        # shared per-pass byte-offset cursor for
+        # attribute_source_location (incremental prefix encodes — see
+        # _Node._byte_cursor)
+        byte_cursor = [None, 0, 0]
+        # flattened per-handler dispatch specs: selector/flag attribute
+        # chains resolved ONCE per pass instead of per element per
+        # handler (~9 attribute loads saved per start tag)
+        hspecs = [
+            (
+                h_idx,
+                h.obj.handle_element if h.has_element else None,
+                h.obj.on_end_tag if h.has_end_tag else None,
+                sel.required_tags if (sel := h.selector.element_selector) is not None else None,
+                sel.prefilter_complete if sel is not None else False,
+                sel.matches if sel is not None else None,
+                tsel.required_tags if (tsel := h.selector.text_selector) is not None else None,
+                tsel.prefilter_complete if tsel is not None else False,
+                tsel.matches if tsel is not None else None,
+            )
+            for h_idx, h in enumerate(handlers)
+        ]
+        # fast-skip dispatch: when the pass has NO sanitizer and EVERY
+        # handler selector (element and text) is tag-prefiltered, a
+        # start tag whose name is outside the union of required tags can
+        # match nothing — push an inert light entry and skip the _Node +
+        # handler loop entirely. A handler CAN rename an element into the
+        # union, but only an element some selector matched can be
+        # renamed, and those always take the full path, so the skip is
+        # sound.
+        fast_skip = None
+        if sanitizer is None:
+            req_union: set | None = set()
+            for h in handlers:
+                for sel in (h.selector.element_selector,
+                            h.selector.text_selector):
+                    if sel is None:
+                        continue
+                    if sel.required_tags is None:
+                        req_union = None
+                        break
+                    req_union |= sel.required_tags
+                if req_union is None:
+                    break
+            fast_skip = req_union
+
     ntok = len(tokens)
     ti = 0
     # lazy re-lex state after a merged CDATA repair (see _RELEX_CHUNK)
     lex_pos = None
     n_html = len(html)
-    # shared per-pass byte-offset cursor for attribute_source_location
-    # (incremental prefix encodes — see _Node._byte_cursor)
-    byte_cursor = [None, 0, 0]
-    # flattened per-handler dispatch specs: selector/flag attribute
-    # chains resolved ONCE per pass instead of per element per handler
-    # (~9 attribute loads saved per start tag)
-    hspecs = [
-        (
-            h_idx,
-            h.obj.handle_element if h.has_element else None,
-            h.obj.on_end_tag if h.has_end_tag else None,
-            sel.required_tags if (sel := h.selector.element_selector) is not None else None,
-            sel.prefilter_complete if sel is not None else False,
-            sel.matches if sel is not None else None,
-            tsel.required_tags if (tsel := h.selector.text_selector) is not None else None,
-            tsel.prefilter_complete if tsel is not None else False,
-            tsel.matches if tsel is not None else None,
-        )
-        for h_idx, h in enumerate(handlers)
-    ]
-    # fast-skip dispatch: when the pass has NO sanitizer and EVERY
-    # handler selector (element and text) is tag-prefiltered, a start
-    # tag whose name is outside the union of required tags can match
-    # nothing — push a lightweight inert stack entry and skip the _Node
-    # + handler loop entirely. A handler CAN rename an element into the
-    # union, but only an element some selector matched can be renamed,
-    # and those always take the full path, so the skip is sound.
-    fast_skip = None
-    if sanitizer is None:
-        req_union: set | None = set()
-        for h in handlers:
-            for sel in (h.selector.element_selector, h.selector.text_selector):
-                if sel is None:
-                    continue
-                if sel.required_tags is None:
-                    req_union = None
-                    break
-                req_union |= sel.required_tags
-            if req_union is None:
-                break
-        fast_skip = req_union
-
     # hoist kind constants: 2-3 module-attr lookups per token otherwise
-    TEXT, START_TAG, END_TAG, COMMENT = tk.TEXT, tk.START_TAG, tk.END_TAG, tk.COMMENT
+    TEXT, START_TAG, END_TAG = tk.TEXT, tk.START_TAG, tk.END_TAG
+    COMMENT = tk.COMMENT
     while True:
         if ti >= ntok:
             if lex_pos is None or lex_pos >= n_html:
@@ -1031,76 +799,172 @@ def _run_pass(html, sanitizer, handlers) -> str:
             ti = 0
             continue
         tok = tokens[ti]
+        ti += 1
         kind = tok.kind
 
         if kind == TEXT:
-            # coalesce CONTIGUOUS text tokens (stray "<" fragments) into
-            # one slice. Contiguity must be checked: a dropped construct
-            # ("</>") between two text tokens leaves a source gap, and a
-            # blind start..end slice would resurrect the dropped bytes
-            # (caught by differential fuzz; _sanitize_pass is gap-safe)
-            t_start = tok.start
-            t_end = tok.end
-            text_type = tok.text_type
-            while (
-                ti + 1 < ntok
-                and tokens[ti + 1].kind == TEXT
-                and tokens[ti + 1].start == t_end
-            ):
-                ti += 1
-                t_end = tokens[ti].end
-            ti += 1
             if tactive_counts:
-                active = tactive_counts  # keys = active handler indices
-                if active:
-                    chunk = TextChunk(html[t_start:t_end], text_type)
-                    dispatched = False
-                    for h_idx in sorted(active):
-                        h = handlers[h_idx]
-                        ignore = h.selector.ignore_text_within
-                        if ignore and any(
-                            name in ignore for name in ruby_stack
-                        ):
-                            continue
-                        if chunk.content == "":
-                            continue  # empty-chunk suppression (rewriter.rs:531-537)
-                        if not h.has_text:
-                            raise RewriteError(
-                                "handler with match_text_within must define "
-                                "handle_text_chunk"
-                            )
-                        h.obj.handle_text_chunk(chunk)
-                        dispatched = True
-                    if dispatched or chunk.before_parts or chunk.after_parts:
-                        if suppress == 0:
-                            flush()
-                            for p in chunk.before_parts:
-                                emit(p)
-                            if not chunk.removed:
-                                emit(chunk.content)
-                            for p in chunk.after_parts:
-                                emit(p)
+                # coalesce CONTIGUOUS text tokens (stray "<" fragments)
+                # into one chunk. Contiguity must be checked: a dropped
+                # construct ("</>") between two text tokens leaves a
+                # source gap, and a blind start..end slice would
+                # resurrect the dropped bytes (caught by differential
+                # fuzz). With no text handler active the run merge
+                # below joins contiguous tokens anyway.
+                t_end = tok.end
+                while (
+                    ti < ntok
+                    and tokens[ti].kind == TEXT
+                    and tokens[ti].start == t_end
+                ):
+                    t_end = tokens[ti].end
+                    ti += 1
+                chunk = TextChunk(html[tok.start:t_end], tok.text_type)
+                dispatched = False
+                for h_idx in sorted(tactive_counts):
+                    h = handlers[h_idx]
+                    ignore = h.selector.ignore_text_within
+                    if ignore and any(
+                        name in ignore for name in ruby_stack
+                    ):
                         continue
+                    if chunk.content == "":
+                        continue  # empty-chunk suppression (rewriter.rs:531-537)
+                    if not h.has_text:
+                        raise RewriteError(
+                            "handler with match_text_within must define "
+                            "handle_text_chunk"
+                        )
+                    h.obj.handle_text_chunk(chunk)
+                    dispatched = True
+                if suppress == 0:
+                    if dispatched or chunk.before_parts or chunk.after_parts:
+                        flush()
+                        for p in chunk.before_parts:
+                            emit(p)
+                        if not chunk.removed:
+                            emit(chunk.content)
+                        for p in chunk.after_parts:
+                            emit(p)
+                    else:
+                        keep(tok.start, t_end)
+                continue
             if suppress == 0:
-                # keep() inlined on the two hottest branches (TEXT and
-                # the inert fast-skip start tag — r6, same as
-                # _sanitize_pass): ~70ns closure call per token saved
-                if t_start == run_end:
-                    run_end = t_end
+                # keep() inlined on the three hottest branches (TEXT and
+                # the attr-less/inert light start tags, r6): the closure
+                # call alone is ~70ns against a ~1.2us/token budget
+                if tok.start == run_end:
+                    run_end = tok.end
                 else:
                     if run_start >= 0:
                         emit(html[run_start:run_end])
-                    run_start = t_start
-                    run_end = t_end
+                    run_start = tok.start
+                    run_end = tok.end
             continue
 
-        ti += 1
-
         if kind == START_TAG:
-            if fast_skip is not None and tok.name not in fast_skip:
+            name = tok.name
+            if sanitize_only:
+                action = action_get(name, unknown_action)
+                no_end = name in VOID_TAGS or tok.self_closing
+
+                # attr-less test WITHOUT forcing lazy extraction (r6): a
+                # non-None _ablob means the hot/batch lexer validated a
+                # non-empty attribute blob, so the tag HAS attrs — reading
+                # tok.attrs here would extract them even when the
+                # san_memo lookup below hits (where they are unused)
+                if action is None and tok._ablob is None and not tok._attrs \
+                        and name != "iframe":
+                    # kept, untouched: raw passthrough (the common case)
+                    if suppress == 0:
+                        if tok.start == run_end:
+                            run_end = tok.end
+                        else:
+                            if run_start >= 0:
+                                emit(html[run_start:run_end])
+                            run_start = tok.start
+                            run_end = tok.end
+                    if not no_end:
+                        open_counts[name] = open_counts.get(name, 0) + 1
+                        stack.append([name, False, True, None])
+                    continue
+
+                if action is not None:
+                    remove_contents, wrap_ws = action
+                    if remove_contents:
+                        if no_end:
+                            continue  # tag dropped, nothing to suppress
+                        open_counts[name] = open_counts.get(name, 0) + 1
+                        stack.append([name, True, False, None])
+                        suppress += 1
+                    else:
+                        if wrap_ws and suppress == 0:
+                            flush()
+                            emit(" ")  # before (void: the single space)
+                        if not no_end:
+                            open_counts[name] = open_counts.get(name, 0) + 1
+                            stack.append(
+                                [name, False, False, " " if wrap_ws else None]
+                            )
+                    continue
+
+                # kept element with attributes (or iframe).
+                # _sanitize_element is a pure function of (raw tag bytes,
+                # frozen config) — no positional or stack state — so its
+                # OUTCOME is memoized on the raw slice (r5): web corpora
+                # repeat start tags massively, and a hit skips attr
+                # extraction + unescape/allowlist/protocol checks +
+                # re-serialization entirely. Three outcomes: "content"
+                # (force-removed, suppress subtree), "keep" (raw
+                # passthrough — includes canonical-rebuild == source),
+                # ("emit", s, inner) (re-serialized, optional inner
+                # replacement).
+                raw = html[tok.start:tok.end]
+                hit = san_memo.get(raw)
+                if hit is None:
+                    node = _Node(tok)
+                    _sanitize_element(sanitizer, node)
+                    if node.removed_mode == "content":
+                        hit = ("content", None, None)
+                    elif node.modified or node.inner_content is not None:
+                        s = node.serialize_start()
+                        if node.inner_content is None and s == raw:
+                            # canonical rebuild == source bytes (already
+                            # double-quoted, lowercase, single-spaced):
+                            # keep the raw run contiguous, no flush
+                            hit = ("keep", None, None)
+                        else:
+                            hit = ("emit", s, node.inner_content)
+                    else:
+                        hit = ("keep", None, None)
+                    san_memo[raw] = hit
+                mode, s, inner = hit
+                if mode == "content":  # force-removed via <!-- attr
+                    if not no_end:
+                        open_counts[name] = open_counts.get(name, 0) + 1
+                        stack.append([name, True, False, None])
+                        suppress += 1
+                    continue
+                if suppress == 0:
+                    if mode == "keep":
+                        keep(tok.start, tok.end)
+                    else:
+                        flush()
+                        emit(s)
+                        if inner is not None and not no_end:
+                            emit(inner)
+                if not no_end:
+                    open_counts[name] = open_counts.get(name, 0) + 1
+                    if inner is not None:  # replaced content: suppress
+                        stack.append([name, True, True, None])
+                        suppress += 1
+                    else:
+                        stack.append([name, False, True, None])
+                continue
+
+            void = name in VOID_TAGS
+            if fast_skip is not None and name not in fast_skip:
                 # inert: emit verbatim, maintain the open stacks only
-                name = tok.name
-                void = name in VOID_TAGS
                 if suppress == 0:
                     if tok.start == run_end:
                         run_end = tok.end
@@ -1111,50 +975,47 @@ def _run_pass(html, sanitizer, handlers) -> str:
                         run_end = tok.end
                 if not (void or tok.self_closing):
                     open_counts[name] = open_counts.get(name, 0) + 1
-                    stack.append(_InertNode(tok))
+                    stack.append(_InertNode((name, False, True, None, tok)))
                 if not void:
                     ruby_stack.append(name)
                 continue
-            node = _Node(tok, byte_cursor)
-            name = node.orig_name
 
+            node = _Node(tok, byte_cursor)
             if sanitizer is not None:
                 _sanitize_element(sanitizer, node)
 
-            if handlers:
-                for (h_idx, helem, hend, ereq, ecomp, ematch,
-                     treq, tcomp, tmatch) in hspecs:
-                    if ematch is not None and (
-                        ereq is None
-                        # node.tag_name read per handler: an earlier
-                        # handler's rename is visible to later matches
-                        or node.tag_name in ereq
-                    ) and (ecomp or ematch(node, stack)):
-                        if hend is not None and not node.void:
-                            if node.end_tag_handlers is None:
-                                node.end_tag_handlers = []
-                            node.end_tag_handlers.append(hend)
-                        if helem is not None:
-                            try:
-                                # ruby_stack is passed LIVE (it holds
-                                # exactly this element's ancestors during
-                                # dispatch); Element.ancestors copies on
-                                # access, so no per-element snapshot —
-                                # like the reference, an Element is only
-                                # valid inside its callback
-                                helem(Element(node, ruby_stack))
-                            except RewriteError:
-                                raise
-                            except Exception as exc:
-                                raise RewriteError(str(exc)) from exc
-                    if tmatch is not None and (
-                        treq is None or node.tag_name in treq
-                    ) and (tcomp or tmatch(node, stack)):
-                        if node.text_active is None:
-                            node.text_active = set()
-                        node.text_active.add(h_idx)
+            for (h_idx, helem, hend, ereq, ecomp, ematch,
+                 treq, tcomp, tmatch) in hspecs:
+                if ematch is not None and (
+                    ereq is None
+                    # node.tag_name read per handler: an earlier
+                    # handler's rename is visible to later matches
+                    or node.tag_name in ereq
+                ) and (ecomp or ematch(node, stack)):
+                    if hend is not None and not void:
+                        if node.end_tag_handlers is None:
+                            node.end_tag_handlers = []
+                        node.end_tag_handlers.append(hend)
+                    if helem is not None:
+                        try:
+                            # ruby_stack is passed LIVE (it holds exactly
+                            # this element's ancestors during dispatch);
+                            # Element.ancestors copies on access, so no
+                            # per-element snapshot — like the reference,
+                            # an Element is only valid inside its callback
+                            helem(Element(node, ruby_stack))
+                        except RewriteError:
+                            raise
+                        except Exception as exc:
+                            raise RewriteError(str(exc)) from exc
+                if tmatch is not None and (
+                    treq is None or node.tag_name in treq
+                ) and (tcomp or tmatch(node, stack)):
+                    if node.text_active is None:
+                        node.text_active = set()
+                    node.text_active.add(h_idx)
 
-            no_end_tag = node.void or node.explicit_self_closing
+            no_end_tag = void or node.explicit_self_closing
             emit_ok = suppress == 0
 
             if emit_ok and node.before_parts:
@@ -1177,11 +1038,11 @@ def _run_pass(html, sanitizer, handlers) -> str:
                         flush()
                         emit(node.inner_content)
                 if node.inner_content is not None and not no_end_tag:
-                    node.suppressing = True
+                    node[1] = True  # suppressing
                     suppress += 1
             elif mode == "content":
                 if not no_end_tag:
-                    node.suppressing = True
+                    node[1] = True
                     suppress += 1
             # mode == "unwrap": tag dropped, content flows
 
@@ -1191,16 +1052,14 @@ def _run_pass(html, sanitizer, handlers) -> str:
                     for p in node.after_parts:
                         emit(p)
             else:
-                open_counts[node.orig_name] = (
-                    open_counts.get(node.orig_name, 0) + 1
-                )
+                open_counts[name] = open_counts.get(name, 0) + 1
                 stack.append(node)
                 if node.text_active:
                     for i in node.text_active:
                         tactive_counts[i] = tactive_counts.get(i, 0) + 1
 
-            if not node.void:
-                ruby_stack.append(node.orig_name)
+            if not void:
+                ruby_stack.append(name)
             continue
 
         if kind == END_TAG:
@@ -1209,20 +1068,21 @@ def _run_pass(html, sanitizer, handlers) -> str:
                 if suppress == 0:
                     keep(tok.start, tok.end)  # orphan end tag verbatim
                 continue
-            # find innermost open element with this (original) name
+            # find innermost open entry with this (original) name
             top = len(stack) - 1
             for k in range(top, -1, -1):
-                if stack[k].orig_name == name:
+                if stack[k][0] == name:
                     idx = k
                     break
             if idx != top:
                 # implicit closes above the match: no end-tag events fire
-                for node in stack[idx + 1 :]:
-                    if node.suppressing:
+                for entry in stack[idx + 1 :]:
+                    if entry[1]:
                         suppress -= 1
-                    open_counts[node.orig_name] -= 1
-                    if node.text_active:
-                        for i in node.text_active:
+                    open_counts[entry[0]] -= 1
+                    if (tactive_counts and entry[2] is None
+                            and entry.text_active):
+                        for i in entry.text_active:
                             c = tactive_counts[i] - 1
                             if c:
                                 tactive_counts[i] = c
@@ -1231,6 +1091,21 @@ def _run_pass(html, sanitizer, handlers) -> str:
             closing = stack[idx]
             open_counts[name] -= 1
             del stack[idx:]
+            if closing[1]:
+                suppress -= 1
+            end = closing[2]
+            if end is not None:
+                # light entry: no handler saw the element
+                if ruby_stack:
+                    ruby_stack.pop()
+                if suppress == 0:
+                    if end:
+                        keep(tok.start, tok.end)
+                    if closing[3] is not None:
+                        flush()
+                        emit(closing[3])
+                continue
+
             if closing.text_active:
                 for i in closing.text_active:
                     c = tactive_counts[i] - 1
@@ -1238,7 +1113,6 @@ def _run_pass(html, sanitizer, handlers) -> str:
                         tactive_counts[i] = c
                     else:
                         del tactive_counts[i]
-
             if closing.end_tag_handlers:
                 facade = EndTag(closing.tag_name, closing)
                 for cb in closing.end_tag_handlers:
@@ -1253,8 +1127,6 @@ def _run_pass(html, sanitizer, handlers) -> str:
                 # element's own end tag fires (rewriter.rs:423-428)
                 ruby_stack.pop()
 
-            if closing.suppressing:
-                suppress -= 1
             if suppress == 0:
                 mode = closing.removed_mode
                 if mode is None and not closing.end_removed:
@@ -1347,18 +1219,13 @@ def _run_pass(html, sanitizer, handlers) -> str:
                                 emit(p)
                             emit("]]>")
                     continue
-            if sanitizer is not None and not sanitizer.allow_comments:
-                pass  # removed
-            elif suppress == 0:
+            if not drop_comments and suppress == 0:
                 keep(tok.start, tok.end)
             continue
 
-        if kind == tk.DOCTYPE:
-            if sanitizer is not None and not sanitizer.allow_doctype:
-                pass
-            elif suppress == 0:
-                keep(tok.start, tok.end)
-            continue
+        # DOCTYPE
+        if not drop_doctype and suppress == 0:
+            keep(tok.start, tok.end)
 
     flush()
     return "".join(out)

@@ -54,7 +54,9 @@ def topk_cosine(
     lambda trees cost ~0.1s of py4j per call — a third of this bench
     row's wall. The parsed operators are the identical tree
     (differential-pinned by test_topk_cosine_expr_matches_column_tree)."""
-    arr = "array(" + ",".join(_dlit(float(x)) for x in query) + ")"
+    arr = "array(" + ",".join(
+        _dlit(float(x), f"query vector index {i}") for i, x in enumerate(query)
+    ) + ")"
     dot = (
         f"aggregate(zip_with(embedding, {arr}, "
         "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
@@ -290,24 +292,25 @@ def _collect_centroids(embeddings: DataFrame, n_centroids: int):
     )
 
 
-def _dlit(v: float) -> str:
+def _dlit(v: float, what: str) -> str:
     """Exact SQL double literal: ``repr`` is the shortest decimal that
     round-trips to the same IEEE double, and Spark's parser converts
     decimal-with-``D`` via Double.parseDouble (correctly rounded) — the
-    parsed literal is bit-identical to ``F.lit(v)``."""
+    parsed literal is bit-identical to ``F.lit(v)``. ``what`` names the
+    value being built, for the non-finite error."""
     import math  # noqa: PLC0415
 
     if not math.isfinite(v):
-        raise ValueError(f"non-finite centroid component: {v!r}")
+        raise ValueError(f"non-finite {what}: {v!r}")
     return repr(v) + "D"
 
 
-def _lit_best_struct(cents_rows, ne_name="_ne"):
+def _lit_best_struct(cents_rows):
     """array_max over per-centroid (round(cosine, 9), -cid) structs with
     the centroid table inlined as LITERALS (r6): the centroid norms are
     precomputed on the driver (same left-fold + sqrt as _norm — IEEE ops
     in the same order, so bit-identical) and the row's embedding norm is
-    hoisted into the ``ne_name`` column, computed ONCE instead of once
+    hoisted into the ``_ne`` column, computed ONCE instead of once
     per centroid. Same comparator as _argmax_assign's max(struct(c,
     nc)): highest cosine, ties -> smallest cid. Replaces the crossJoin +
     groupBy argmax with a single narrow projection — no exchange, no
@@ -329,15 +332,16 @@ def _lit_best_struct(cents_rows, ne_name="_ne"):
         acc = 0.0
         for v in vec:
             acc += v * v
-        cn = math.sqrt(acc)
-        arr = "array(" + ",".join(_dlit(v) for v in vec) + ")"
+        what = f"component of centroid {cid}"
+        arr = "array(" + ",".join(_dlit(v, what) for v in vec) + ")"
+        cn = _dlit(math.sqrt(acc), f"norm of centroid {cid}")
         dot = (
             f"aggregate(zip_with(embedding, {arr}, "
             "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
             "(acc, v) -> acc + v)"
         )
         parts.append(
-            f"named_struct('c', round({dot} / ({ne_name} * {_dlit(cn)}), 9),"
+            f"named_struct('c', round({dot} / (_ne * {cn}), 9),"
             f" 'nc', {-cid})"
         )
     return F.expr("array_max(array(" + ",".join(parts) + "))")

@@ -245,9 +245,14 @@ def test_lit_best_struct_expr_matches_column_tree(spark):
         .collect()
     )
     assert old == new
-    # non-finite components must fail loudly, not emit invalid SQL
-    with pytest.raises(ValueError):
-        simsearch._dlit(float("nan"))
+    # non-finite components must fail loudly, not emit invalid SQL, and
+    # say which literal was being built
+    with pytest.raises(ValueError, match="x: nan"):
+        simsearch._dlit(float("nan"), "x")
+    with pytest.raises(ValueError, match="component of centroid 7: inf"):
+        simsearch._lit_best_struct([(3, [0.5, 0.5]), (7, [0.5, float("inf")])])
+    with pytest.raises(ValueError, match="query vector index 1: nan"):
+        simsearch.topk_cosine(None, [0.5, float("nan")])
 
 
 def test_topk_cosine_expr_matches_column_tree(spark):

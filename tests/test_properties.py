@@ -82,17 +82,6 @@ def test_tokenizer_is_lossless_modulo_dropped_constructs(html):
     assert tail == "" or tail.startswith("<"), (html, tail)
 
 
-@given(_fragments)
-@settings(max_examples=150, deadline=None)
-def test_sanitize_only_fast_path_equals_general_vm(html):
-    import selma_spark.rewriter as R
-    from selma_spark.sanitizer import Sanitizer
-
-    for cfg in (S.DEFAULT, S.BASIC, S.RELAXED):
-        san = Sanitizer(cfg)
-        assert R._sanitize_pass(html, san) == R._run_pass(html, san, [])
-
-
 _attr_soup = st.lists(
     st.sampled_from([
         "<a", " x", " x=", " x= ", ' x="v"', " x='v'", " x=v", ' x="v',
@@ -122,7 +111,7 @@ def test_batch_attr_path_agrees_with_span_path(html):
 
 
 class _NeverMatches:
-    """Forces the handler-dispatch pass (_run_pass) without mutating."""
+    """Sends every start tag down the _Node branch without mutating."""
 
     def selector(self):
         from selma_spark.selector import Selector
@@ -135,14 +124,16 @@ class _NeverMatches:
 
 @given(_fragments)
 @settings(max_examples=300, deadline=None)
-def test_sanitize_fast_path_equals_handler_path(html):
-    """_sanitize_pass (no-handler fast path) and _run_pass (handler
-    dispatch) are two implementations of the same sanitize semantics —
-    outputs must be byte-identical on any input."""
-    for cfg in (S.DEFAULT, S.RELAXED):
-        fast = Rewriter(sanitizer=cfg).rewrite(html)
-        slow = Rewriter(sanitizer=cfg, handlers=[_NeverMatches()]).rewrite(html)
-        assert fast == slow, (html, fast, slow)
+def test_sanitize_light_branch_equals_node_branch(html):
+    """A sanitize-only rewrite sends every start tag down the light
+    branch (memoized _sanitize_element outcome, plain stack entries); a
+    never-matching handler sends every tag down the _Node branch. The
+    two are the same sanitize semantics — outputs must be byte-identical
+    on any input, under every built-in config that differs in shape."""
+    for cfg in (S.DEFAULT, S.BASIC, S.RELAXED):
+        light = Rewriter(sanitizer=cfg).rewrite(html)
+        node = Rewriter(sanitizer=cfg, handlers=[_NeverMatches()]).rewrite(html)
+        assert light == node, (html, light, node)
 
 
 class _Universal:
@@ -239,17 +230,43 @@ def test_orphan_end_tag_flood_is_linear():
 
 
 def test_dropped_empty_end_tag_never_resurrects():
-    """'</>' is dropped by the tokenizer; the handler path's text
-    coalescing must not slice across the gap and re-emit it (caught by
-    the 50k-case differential fuzz)."""
-    import selma_spark.rewriter as R
-    from selma_spark.sanitizer import Sanitizer
-
+    """'</>' is dropped by the tokenizer; neither the light branch's run
+    merge nor the node branch's text coalescing may slice across the gap
+    and re-emit it (caught by the 50k-case differential fuzz)."""
     for html in ('a</>b', 'x</></>y', '1 < 2</>tail', "<b>t</>u</b>"):
         for cfg in (S.DEFAULT, S.RELAXED):
-            san = Sanitizer(cfg)
-            assert R._sanitize_pass(html, san) == R._run_pass(html, san, [])
-            assert "</>" not in R._run_pass(html, san, [])
+            light = Rewriter(sanitizer=cfg).rewrite(html)
+            node = Rewriter(sanitizer=cfg, handlers=[_NeverMatches()]).rewrite(html)
+            assert light == node, (html, light, node)
+            assert "</>" not in light
+
+
+def test_rewriter_sanitize_memo(monkeypatch):
+    """The _sanitize_element outcome memo lives on the Rewriter and is
+    keyed on raw tag slices: a repeat document adds no entries and
+    rewrites identically; the memo clears once it passes its cap; a
+    pass with handlers never writes to it."""
+    import selma_spark.rewriter as R
+
+    html = (
+        '<p class="a">x</p><a href="http://e.example/x" title=t>y</a>'
+        "<img src=/i.png alt=z><b>plain</b>"
+    )
+    r = Rewriter(sanitizer=S.RELAXED)
+    first = r.rewrite(html)
+    n = len(r._san_memo)
+    assert n == 3  # the three tags with attributes
+    assert r.rewrite(html) == first
+    assert len(r._san_memo) == n
+
+    monkeypatch.setattr(R, "_SAN_MEMO_CAP", n - 1)
+    other = "<b id=q>z</b>"
+    assert r.rewrite(other) == Rewriter(sanitizer=S.RELAXED).rewrite(other)
+    assert list(r._san_memo) == ["<b id=q>"]
+
+    h = Rewriter(sanitizer=S.RELAXED, handlers=[_NeverMatches()])
+    assert h.rewrite(html) == first
+    assert h._san_memo == {}
 
 
 @given(st.data())
