@@ -285,11 +285,11 @@ class Element:
         want = str(attr).lower()
         tok_attrs = self._node._tok_attrs
         if tok_attrs and tok_attrs[0].name_span is None:
-            # tokens come from the batch-attr fast path (spans not
-            # materialized); re-parse just this tag's source slice with
-            # span tracking — the token keeps its offsets into src
+            # hot-lexer token (lazy batch attrs, no spans): re-parse just
+            # this tag with the general scanner, which records spans —
+            # the token keeps its offsets into src
             tok = self._node._tok
-            retok, _ = tk._parse_start_tag(tok.src, tok.start, need_spans=True)
+            retok, _ = tk._parse_start_tag(tok.src, tok.start)
             tok_attrs = self._node._tok_attrs = retok.attrs
         for a in tok_attrs:
             if a.name == want:
@@ -575,8 +575,10 @@ def _final_pass(html, sanitizer) -> str:
     """Final sanitization (reference rewriter.rs:323-354): re-parse and
     force-remove disallowed escapeworthy tags. All nine escapeworthy tags
     are rawtext/rcdata containers (tags.rs:193-209), so their subtrees
-    hold no nested elements and no stack is needed — one lean scan."""
-    tokens = tk.tokenize(html, light=True)
+    hold no nested elements and no stack is needed — one lean scan. It
+    lexes with the same tokenize as the first pass, so both passes split
+    tags the same way; the tokens' lazy attrs are never read."""
+    tokens = tk.tokenize(html)
     out: list[str] = []
     emit = out.append
     skip_until = None
@@ -671,8 +673,9 @@ def _run_pass(html, sanitizer, handlers, san_memo) -> str:
 
     Sanitizer+handler passes build a _Node for every tag, because
     ancestor selectors read post-sanitize attributes."""
-    # batch-attr tokens; attribute_source_location lazily re-parses its
-    # own tag with span tracking on the rare access (Element facade)
+    # hot-lexer tokens carry lazy attrs without spans;
+    # attribute_source_location re-parses its own tag with the general
+    # scanner on the rare access (Element facade)
     tokens = tk.tokenize(html)
     out: list[str] = []
     emit = out.append
@@ -869,7 +872,7 @@ def _run_pass(html, sanitizer, handlers, san_memo) -> str:
                 no_end = name in VOID_TAGS or tok.self_closing
 
                 # attr-less test WITHOUT forcing lazy extraction (r6): a
-                # non-None _ablob means the hot/batch lexer validated a
+                # non-None _ablob means the hot lexer validated a
                 # non-empty attribute blob, so the tag HAS attrs — reading
                 # tok.attrs here would extract them even when the
                 # san_memo lookup below hits (where they are unused)

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -549,7 +550,15 @@ class ParquetSink:
         df.sparkSession.catalog.refreshByPath(path)
 
     def read_lineage(self, spark):
-        return spark.read.parquet(self.lineage_path)
+        """The lineage frame, or None when no run has written one yet.
+        Any other read failure (a corrupt or unreadable lineage dir)
+        raises: silently recomputing every bucket would hide it."""
+        try:
+            return spark.read.parquet(self.lineage_path)
+        except AnalysisException as e:
+            if e.getCondition() == "PATH_NOT_FOUND":
+                return None
+            raise
 
 
 class IcebergSink:
@@ -594,6 +603,9 @@ class IcebergSink:
         df.writeTo(path).createOrReplace()
 
     def read_lineage(self, spark):
+        """The lineage table, or None when no run has created it yet."""
+        if not spark.catalog.tableExists(self.lineage_path):
+            return None
         return spark.read.table(self.lineage_path)
 
 
@@ -625,18 +637,13 @@ def run_pipeline(
 
     b = bucketed(docs, n_buckets, byte_weighted=byte_weighted)
 
-    done = None
-    if resume:
-        try:
-            done = (
-                sink.read_lineage(spark)
-                .where(F.col("status") == "ok")
-                .select("partition_id")
-                .distinct()
-            )
-        except Exception:
-            done = None
+    done = sink.read_lineage(spark) if resume else None
     if done is not None:
+        done = (
+            done.where(F.col("status") == "ok")
+            .select("partition_id")
+            .distinct()
+        )
         # broadcast anti-join: lineage is tiny relative to the corpus
         b = b.join(
             F.broadcast(done),

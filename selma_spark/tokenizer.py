@@ -17,8 +17,11 @@ pinned by the reference test corpus:
 * orphan end tags are their own tokens (they pass through the sanitizer,
   see rewriter-level tests around test/test_helper.rb:47-53 goldens).
 
-Attribute tokens record byte offsets of name and value in the original
-input for ``attribute_source_location``
+Two start-tag parsers split tags: the hot ``_HOT`` match, whose tokens
+carry lazy batch attributes, and the general scanner ``_parse_start_tag``
+for every other shape. The general scanner records character offsets of
+each attribute's name and value in the original input, which
+``attribute_source_location`` reads
 (reference: ext/selma/src/html/element.rs:117-156).
 """
 
@@ -34,44 +37,15 @@ from .tags import (
     text_type_for,
 )
 
-# One-shot matcher for the common start-tag shape: simple name, attrs
-# with no whitespace around '=', terminated by '>' or '/>'. Anything it
-# can't express (stray '/', '='-leading names, ws around '=') falls back
-# to the general scanner below. Values starting with a quote that reach
-# the unquoted alternative also fall back (see guard in _parse_start_tag).
-# atomic groups ((?>...)) keep the regex from backtracking into a value
-# choice the sequential scanner would never revisit — without them the
-# engine can "re-parse" a quoted value as unquoted and diverge
-_FAST_TAG = re.compile(
-    r"([a-zA-Z][a-zA-Z0-9-]*)"
-    r"((?:[\t\n\r\f ]+[^\t\n\r\f /=>]+"
-    r"(?>=(?![\t\n\r\f ])(?>\"[^\"]*\"|'[^']*'|[^\t\n\r\f >]*))?)*)"
-    r"[\t\n\r\f ]*(/?)>"
-)
-# NB: '=' followed by whitespace is refused ((?![\t\n\r\f ])) so those
-# tags take the general scanner, which implements the HTML5
-# before-attribute-value rule (skip ws, next run is the value).
-_FAST_ATTR = re.compile(
-    r"[\t\n\r\f ]+([^\t\n\r\f /=>]+)"
-    r"(?>=(?![\t\n\r\f ])(\"[^\"]*\"|'[^']*'|[^\t\n\r\f >]*))?"
-)
-
-# batch attr extraction (C-level findall) for passes that never consult
-# attribute source spans (sanitize/final). The strict validator re-checks
-# the blob with quote-led unquoted values EXCLUDED — precisely the one
-# shape where the sequential scanner falls back to the general parser —
-# so findall tiling is guaranteed to agree with the eager loop.
-_FAST_ATTR_ALL = re.compile(
+# batch attr extraction (one C-level findall) over a blob the hot
+# pattern already matched; that shape excludes quote-led unquoted
+# values, so findall tiling agrees with the general scanner's attrs
+_BLOB_ATTRS = re.compile(
     r"[\t\n\r\f ]+([^\t\n\r\f /=>]+)"
     r"(?:(=)(?![\t\n\r\f ])((?>\"[^\"]*\"|'[^']*'|[^\t\n\r\f >]*)))?"
 )
-_STRICT_BLOB = re.compile(
-    r"(?:[\t\n\r\f ]+[^\t\n\r\f /=>]+"
-    r"(?:=(?![\t\n\r\f ])"
-    r"(?>\"[^\"]*\"|'[^']*'|[^\"'\t\n\r\f >][^\t\n\r\f >]*|))?)*"
-)
 
-# C-speed span scanners (HTML5 charsets; see _WS/_ATTR_NAME_END below)
+# C-speed scanners for the general start-tag scanner (HTML5 charsets)
 _RE_TAG_NAME = re.compile(r"[^\t\n\r\f />]*")
 _RE_WS = re.compile(r"[\t\n\r\f ]*")
 _RE_ATTR_NAME = re.compile(r"[^\t\n\r\f /=>]*")
@@ -84,11 +58,7 @@ END_TAG = 2
 COMMENT = 3
 DOCTYPE = 4
 
-_WS = " \t\n\r\f"
-_WS_SET = frozenset(_WS)
-_ATTR_NAME_END = frozenset(_WS + "/>=")
-_UNQUOTED_END = frozenset(_WS + ">")
-_TAG_NAME_END = frozenset(_WS + "/>")
+_TAG_NAME_END = frozenset(" \t\n\r\f/>")
 
 _ASCII_ALPHA = frozenset(
     "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ"
@@ -98,7 +68,8 @@ _ASCII_ALPHA = frozenset(
 class Attr:
     """One parsed attribute. ``value`` is the raw source value (entities
     NOT decoded); ``has_value`` distinguishes ``disabled`` from
-    ``disabled=""``. Source spans are (start, end) byte offsets or None."""
+    ``disabled=""``. Source spans are (start, end) character offsets or
+    None."""
 
     __slots__ = ("name", "raw_name", "value", "has_value", "name_span", "value_span")
 
@@ -116,14 +87,15 @@ class Token:
     ``raw`` slices lazily — passthrough paths emit contiguous source
     ranges instead of materializing per-token strings.
 
-    Attributes are LAZY on the fast batch path: _parse_start_tag
-    validates the attribute blob eagerly (tag BOUNDARIES must never
-    depend on whether attrs were read), stores its (start, end) span in
-    ``_ablob``, and the ``attrs`` property extracts on first access.
+    Start tags lexed by ``_HOT`` carry LAZY attributes: the match itself
+    validates the attribute blob (tag BOUNDARIES never depend on whether
+    attrs were read), its (start, end) span goes in ``_ablob``, and the
+    ``attrs`` property extracts on first access, with spans None.
     Handler-only passes touch attrs for the few tags a selector
     prefilter matches, so ~all extraction work is skipped (42% of
     tokenize time on the md fixture); sanitize passes read every kept
-    element's attrs and pay exactly what the eager path did."""
+    element's attrs. Start tags from ``_parse_start_tag`` carry eager
+    attrs with source spans."""
 
     __slots__ = ("kind", "src", "start", "end", "name", "_attrs",
                  "self_closing", "text_type", "_ablob")
@@ -156,13 +128,13 @@ class Token:
 
 
 def _extract_attrs(src: str, blob_start: int, blob_end: int):
-    """Batch attr extraction over a STRICT_BLOB-validated span: one
-    C-level findall, first-wins dedup, quote stripping; spans stay None
-    (the handler pass re-tokenizes with spans on the rare
-    attribute_source_location access)."""
+    """Batch attr extraction over a blob ``_HOT`` matched: one C-level
+    findall, first-wins dedup, quote stripping; spans stay None
+    (attribute_source_location re-parses the tag with
+    ``_parse_start_tag`` on the rare access)."""
     attrs: list[Attr] = []
     seen: set[str] = set()
-    for raw_attr, eq, rawval in _FAST_ATTR_ALL.findall(
+    for raw_attr, eq, rawval in _BLOB_ATTRS.findall(
         src, blob_start, blob_end
     ):
         aname = raw_attr.lower()
@@ -179,25 +151,26 @@ def _extract_attrs(src: str, blob_start: int, blob_end: int):
 
 
 # HOT-path lexer: one C-level match consumes a text run AND the
-# following simple tag (end tag, or start tag in _FAST_TAG's shape) —
-# halving Python-loop iterations vs find+branch+match per token (the
-# r5 single-core tokenizer win; the cold dispatch below is unchanged
-# and handles everything the alternation doesn't: comments, doctype,
-# bogus constructs, literal '<', EOF-truncated tags). Groups: 1 text
-# run, 2 end-tag name, 3 start-tag name, 4 attr blob, 5 self-closing
-# slash. Backtracking-safe: [^<]* contains no '<', so a failed tag
-# alternative cannot retry at an earlier position.
+# following simple tag — halving Python-loop iterations vs
+# find+branch+match per token (the r5 single-core tokenizer win). The
+# cold dispatch in tokenize handles everything the alternation doesn't:
+# comments, doctype, bogus constructs, literal '<', EOF-truncated tags,
+# and start tags outside the simple shape (stray '/', '='-leading names,
+# ws around '=', quote-led unquoted values), which go to
+# _parse_start_tag. Groups: 1 text run, 2 end-tag name, 3 start-tag
+# name, 4 attr blob, 5 self-closing slash. Backtracking-safe: [^<]*
+# contains no '<', so a failed tag alternative cannot retry at an
+# earlier position; atomic groups keep a quoted value from being
+# re-read as unquoted, which the sequential scanner never does.
 _HOT = re.compile(
     r"([^<]*)<"
     r"(?:"
     r"/([a-zA-Z][^\t\n\r\f />]*)[^>]*>"
     r"|"
     r"([a-zA-Z][a-zA-Z0-9-]*)"
-    # the blob here is _STRICT_BLOB's shape, not _FAST_TAG's: a hot
-    # match therefore GUARANTEES a batch-extractable blob (no separate
-    # validation pass); quote-led unquoted values fail the whole
-    # alternation and fall to the cold path, which routes them through
-    # _parse_start_tag's fast-then-general chain exactly as before
+    # '=' followed by whitespace and quote-led unquoted values fail the
+    # whole alternation: the general scanner implements the HTML5
+    # before-attribute-value rule and the unterminated-quote cases
     r"((?:[\t\n\r\f ]+[^\t\n\r\f /=>]+"
     r"(?:=(?![\t\n\r\f ])"
     r"(?>\"[^\"]*\"|'[^']*'|[^\"'\t\n\r\f >][^\t\n\r\f >]*|))?)*)"
@@ -206,16 +179,10 @@ _HOT = re.compile(
 )
 
 
-def tokenize(html: str, light: bool = False, need_spans: bool = False,
-             start: int = 0, limit: int | None = None):
-    """light=True skips attribute materialization (used by passes that
-    only need tag names/boundaries, e.g. the final sanitization pass).
-    need_spans=True materializes attribute source spans (only the
-    handler pass needs them, for attribute_source_location); the default
-    uses a faster batch extraction with spans=None. ``start`` lexes from
-    a byte offset with ABSOLUTE token spans (used by the rewriter's
-    foreign-content CDATA repair to re-lex the document after a merged
-    ``]]>`` terminator).
+def tokenize(html: str, start: int = 0, limit: int | None = None):
+    """Lex ``html`` into tokens. ``start`` lexes from a byte offset with
+    ABSOLUTE token spans (used by the rewriter's foreign-content CDATA
+    repair to re-lex the document after a merged ``]]>`` terminator).
 
     ``limit`` (r6) makes the lex RESUMABLE: once at least ``limit``
     tokens exist the call returns ``(tokens, resume_pos)`` at the next
@@ -234,225 +201,147 @@ def tokenize(html: str, light: bool = False, need_spans: bool = False,
     find = html.find
     # lowercase copy for case-insensitive close-tag scans in rawtext modes
     hlow = None
-    hot = None if need_spans else _HOT.match
+    hot = _HOT.match
 
     while i < n:
         if limit is not None and len(tokens) >= limit:
             return tokens, i
-        m = hot(html, i) if hot is not None else None
+        m = hot(html, i)
         if m is not None:
             t_end = m.end(1)
             if t_end > i:
                 append(Token(TEXT, html, i, t_end))
             ename, raw_name, blob, slash = m.group(2, 3, 4, 5)
-            i_new = m.end()
+            i = m.end()
             if ename is not None:
                 # positional args throughout the lexer: keyword-arg
                 # Token construction measured ~200ns/call slower (r6)
-                append(Token(END_TAG, html, t_end, i_new, ename.lower()))
-                i = i_new
+                append(Token(END_TAG, html, t_end, i, ename.lower()))
                 continue
-            if blob and not light:
-                # batch path: the hot pattern's blob IS the strict shape,
-                # so extraction can be deferred with no validation pass —
-                # same contract as _parse_start_tag's batch branch
+            if blob:
+                # the match validated the blob: extraction is deferred
                 tok = Token(
-                    START_TAG, html, t_end, i_new,
-                    raw_name.lower(), None, slash == "/",
+                    START_TAG, html, t_end, i, raw_name.lower(), None,
+                    slash == "/",
                 )
                 tok._ablob = (m.end(3), m.end(4))
             else:
                 tok = Token(
-                    START_TAG, html, t_end, i_new, raw_name.lower(),
-                    [], slash == "/",
+                    START_TAG, html, t_end, i, raw_name.lower(), [],
+                    slash == "/",
                 )
-            append(tok)
-            i = i_new
-            mode_tag = tok.name
-            if mode_tag == "plaintext":
-                if i < n:
-                    append(Token(TEXT, html, i, n, None, None, False, TEXT_TYPE_PLAIN))
-                break
-            if not tok.self_closing and (
-                mode_tag == "script"
-                or mode_tag in RAWTEXT_TAGS
-                or mode_tag in RCDATA_TAGS
-            ):
-                if hlow is None:
-                    hlow = html.lower()
-                i = _consume_rawtext(html, hlow, i, mode_tag, append)
-            continue
-        lt = find("<", i)
-        if lt < 0:
-            append(Token(TEXT, html, i, n))
-            break
-        if lt > i:
-            append(Token(TEXT, html, i, lt))
-        j = lt + 1
-        if j >= n:
-            # lone "<" at EOF: incomplete token, dropped (lol-html stream
-            # end discards it — pinned by the "" expectation for
-            # '<<script>…' in selma_sanitizer_malicious_html_test.rb:156)
-            break
-        c = html[j]
-        if c in _ASCII_ALPHA:
-            tok, i = _parse_start_tag(html, lt, light, need_spans)
-            if tok is None:
-                break  # incomplete tag at EOF -> dropped
-            append(tok)
-            mode_tag = tok.name
-            if mode_tag == "plaintext":
-                if i < n:
-                    append(Token(TEXT, html, i, n, None, None, False, TEXT_TYPE_PLAIN))
-                break
-            if not tok.self_closing and (
-                mode_tag == "script"
-                or mode_tag in RAWTEXT_TAGS
-                or mode_tag in RCDATA_TAGS
-            ):
-                if hlow is None:
-                    hlow = html.lower()
-                i = _consume_rawtext(html, hlow, i, mode_tag, append)
-        elif c == "/":
-            k = j + 1
-            if k >= n:
-                break  # "</" at EOF dropped
-            c2 = html[k]
-            if c2 in _ASCII_ALPHA:
-                tok, i = _parse_end_tag(html, lt)
-                if tok is None:
-                    break
-                append(tok)
-            elif c2 == ">":
-                i = k + 1  # "</>" dropped entirely (HTML5)
-            else:
-                # bogus comment "</ ..."
-                gt = find(">", k)
-                if gt < 0:
-                    append(Token(COMMENT, html, lt, n))
-                    break
-                append(Token(COMMENT, html, lt, gt + 1))
-                i = gt + 1
-        elif c == "!":
-            if html.startswith("--", j + 1):
-                # comment; HTML5 allows the abrupt "<!-->" / "<!--->"
-                body_start = j + 3
-                if html.startswith(">", body_start):
-                    append(Token(COMMENT, html, lt, body_start + 1))
-                    i = body_start + 1
-                    continue
-                if html.startswith("->", body_start):
-                    append(Token(COMMENT, html, lt, body_start + 2))
-                    i = body_start + 2
-                    continue
-                close = find("-->", body_start)
-                if close < 0:
-                    append(Token(COMMENT, html, lt, n))
-                    break
-                append(Token(COMMENT, html, lt, close + 3))
-                i = close + 3
-            elif html[j + 1 : j + 8].lower() == "doctype":
-                gt = find(">", j)
-                if gt < 0:
-                    append(Token(DOCTYPE, html, lt, n))
-                    break
-                append(Token(DOCTYPE, html, lt, gt + 1))
-                i = gt + 1
-            else:
-                gt = find(">", j)
-                if gt < 0:
-                    append(Token(COMMENT, html, lt, n))
-                    break
-                append(Token(COMMENT, html, lt, gt + 1))
-                i = gt + 1
-        elif c == "?":
-            gt = find(">", j)
-            if gt < 0:
-                append(Token(COMMENT, html, lt, n))
-                break
-            append(Token(COMMENT, html, lt, gt + 1))
-            i = gt + 1
         else:
-            # literal "<" text; continue scanning after it
-            append(Token(TEXT, html, lt, j))
-            i = j
+            lt = find("<", i)
+            if lt < 0:
+                append(Token(TEXT, html, i, n))
+                break
+            if lt > i:
+                append(Token(TEXT, html, i, lt))
+            j = lt + 1
+            if j >= n:
+                # lone "<" at EOF: incomplete token, dropped (lol-html
+                # stream end discards it — pinned by the "" expectation
+                # for '<<script>…' in
+                # selma_sanitizer_malicious_html_test.rb:156)
+                break
+            c = html[j]
+            if c in _ASCII_ALPHA:
+                tok, i = _parse_start_tag(html, lt)
+                if tok is None:
+                    break  # incomplete tag at EOF -> dropped
+            elif c == "/":
+                k = j + 1
+                if k >= n:
+                    break  # "</" at EOF dropped
+                c2 = html[k]
+                if c2 in _ASCII_ALPHA:
+                    tok, i = _parse_end_tag(html, lt)
+                    if tok is None:
+                        break
+                    append(tok)
+                elif c2 == ">":
+                    i = k + 1  # "</>" dropped entirely (HTML5)
+                else:
+                    # bogus comment "</ ..."
+                    gt = find(">", k)
+                    if gt < 0:
+                        append(Token(COMMENT, html, lt, n))
+                        break
+                    append(Token(COMMENT, html, lt, gt + 1))
+                    i = gt + 1
+                continue
+            elif c == "!":
+                if html.startswith("--", j + 1):
+                    # comment; HTML5 allows the abrupt "<!-->" / "<!--->"
+                    body_start = j + 3
+                    if html.startswith(">", body_start):
+                        append(Token(COMMENT, html, lt, body_start + 1))
+                        i = body_start + 1
+                        continue
+                    if html.startswith("->", body_start):
+                        append(Token(COMMENT, html, lt, body_start + 2))
+                        i = body_start + 2
+                        continue
+                    close = find("-->", body_start)
+                    if close < 0:
+                        append(Token(COMMENT, html, lt, n))
+                        break
+                    append(Token(COMMENT, html, lt, close + 3))
+                    i = close + 3
+                elif html[j + 1 : j + 8].lower() == "doctype":
+                    gt = find(">", j)
+                    if gt < 0:
+                        append(Token(DOCTYPE, html, lt, n))
+                        break
+                    append(Token(DOCTYPE, html, lt, gt + 1))
+                    i = gt + 1
+                else:
+                    gt = find(">", j)
+                    if gt < 0:
+                        append(Token(COMMENT, html, lt, n))
+                        break
+                    append(Token(COMMENT, html, lt, gt + 1))
+                    i = gt + 1
+                continue
+            elif c == "?":
+                gt = find(">", j)
+                if gt < 0:
+                    append(Token(COMMENT, html, lt, n))
+                    break
+                append(Token(COMMENT, html, lt, gt + 1))
+                i = gt + 1
+                continue
+            else:
+                # literal "<" text; continue scanning after it
+                append(Token(TEXT, html, lt, j))
+                i = j
+                continue
+        # a start tag from either parser: switch the lexer mode
+        append(tok)
+        mode_tag = tok.name
+        if mode_tag == "plaintext":
+            if i < n:
+                append(Token(TEXT, html, i, n, None, None, False, TEXT_TYPE_PLAIN))
+            break
+        if not tok.self_closing and (
+            mode_tag == "script"
+            or mode_tag in RAWTEXT_TAGS
+            or mode_tag in RCDATA_TAGS
+        ):
+            if hlow is None:
+                hlow = html.lower()
+            i = _consume_rawtext(html, hlow, i, mode_tag, append)
     if limit is not None:
         return tokens, n
     return tokens
 
 
-def _parse_start_tag(html: str, lt: int, light: bool = False,
-                     need_spans: bool = False):
-    """Parse a start tag beginning at ``lt`` (html[lt] == '<', next is
-    alpha). Returns (Token, next_index) or (None, n) if EOF hit before
-    '>' (incomplete tag -> dropped). light skips Attr materialization."""
-    m = _FAST_TAG.match(html, lt + 1)
-    if m is not None:
-        raw_name, blob, slash = m.group(1, 2, 3)
-        attrs: list[Attr] = []
-        if blob and not light and not need_spans:
-            # batch path: validate the blob EAGERLY (quote-led unquoted
-            # values fall back, matching the eager scanner — boundaries
-            # must never depend on lazy state), then DEFER extraction to
-            # Token.attrs first access (one C-level findall; spans None)
-            blob_start, blob_end = m.end(1), m.end(2)
-            sm = _STRICT_BLOB.match(html, blob_start, blob_end)
-            if sm is None or sm.end() != blob_end:
-                return _parse_start_tag_general(html, lt)
-            end = m.end()
-            tok = Token(
-                START_TAG, html, lt, end, raw_name.lower(),
-                None, slash == "/",
-            )
-            tok._ablob = (blob_start, blob_end)
-            return tok, end
-        elif blob and not light:
-            seen = set()
-            pos = m.end(1)
-            blob_end = m.start(3) if slash else m.end(2)
-            while pos < blob_end:
-                am = _FAST_ATTR.match(html, pos, blob_end)
-                if am is None:
-                    break  # structure mismatch: use the general parser
-                aname = am.group(1).lower()
-                val = am.group(2)
-                if val is None:
-                    if aname not in seen:
-                        seen.add(aname)
-                        attrs.append(
-                            Attr(aname, am.group(1), "", False, am.span(1), None)
-                        )
-                else:
-                    c0 = val[:1]
-                    if c0 in ('"', "'"):
-                        if len(val) < 2 or not val.endswith(c0):
-                            break  # quote-led unquoted value: general parser
-                        vs, ve = am.start(2) + 1, am.end(2) - 1
-                        val = val[1:-1]
-                    else:
-                        vs, ve = am.span(2)
-                    if aname not in seen:
-                        seen.add(aname)
-                        attrs.append(
-                            Attr(aname, am.group(1), val, True, am.span(1), (vs, ve))
-                        )
-                pos = am.end()
-            else:
-                pos = blob_end
-            if pos < blob_end:
-                return _parse_start_tag_general(html, lt)
-        end = m.end()
-        return (
-            Token(START_TAG, html, lt, end, raw_name.lower(), attrs,
-                  slash == "/"),
-            end,
-        )
-    return _parse_start_tag_general(html, lt)
-
-
-def _parse_start_tag_general(html: str, lt: int):
-    """General HTML5-flavoured start-tag scanner (handles stray '/',
-    '='-leading attr names, whitespace around '=', unterminated quotes)."""
+def _parse_start_tag(html: str, lt: int):
+    """General HTML5-flavoured start-tag scanner, beginning at ``lt``
+    (html[lt] == '<', next is alpha): stray '/', '='-leading attr names,
+    whitespace around '=', unterminated quotes. Returns
+    (Token, next_index), or (None, n) if EOF hit before '>' (incomplete
+    tag -> dropped). Attrs are eager and carry source spans."""
     n = len(html)
     i = lt + 1
     start_name = i

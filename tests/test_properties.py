@@ -95,19 +95,23 @@ _attr_soup = st.lists(
 @given(_attr_soup)
 @settings(max_examples=500, deadline=None)
 def test_batch_attr_path_agrees_with_span_path(html):
-    """The C-level findall attribute extraction (need_spans=False) and
-    the eager span-tracking scanner (need_spans=True) must produce
-    identical token streams on ANY input — this differential caught the
-    ws-after-equals fast-path divergence."""
-    def sig(toks):
-        return [
-            (t.kind, t.start, t.end, t.name, t.self_closing,
-             [(a.name, a.raw_name, a.value, a.has_value)
-              for a in (t.attrs or [])])
-            for t in toks
-        ]
+    """Every start tag tokenize yields, whether the hot match (lazy
+    batch attrs) or the general scanner lexed it, must re-parse with
+    the general scanner (_parse_start_tag, eager attrs with spans) to
+    the same end, name, self_closing and attrs on ANY input — this
+    differential caught the ws-after-equals fast-path divergence."""
+    from selma_spark import tokenizer as tk
 
-    assert sig(tokenize(html)) == sig(tokenize(html, need_spans=True))
+    def sig(t):
+        return (t.end, t.name, t.self_closing,
+                [(a.name, a.raw_name, a.value, a.has_value)
+                 for a in t.attrs])
+
+    for tok in tokenize(html):
+        if tok.kind == START_TAG:
+            retok, end = tk._parse_start_tag(html, tok.start)
+            assert end == retok.end
+            assert sig(tok) == sig(retok), (html, tok)
 
 
 class _NeverMatches:
@@ -357,8 +361,8 @@ def test_hot_lexer_agrees_with_cold_dispatch(html):
     """r5 hot-path lexer differential: the combined text+tag regex
     (tokenizer._HOT) must produce token streams identical to the cold
     find/branch/match dispatch — kinds, boundaries, names, self_closing,
-    text types, AND extracted attrs — in both batch and light modes
-    (120k-case bulk fuzz ran clean at introduction; this pins it in CI)."""
+    text types, AND extracted attrs (120k-case bulk fuzz ran clean at
+    introduction; this pins it in CI)."""
     from selma_spark import tokenizer as tk
 
     class _NoHot:
@@ -368,27 +372,25 @@ def test_hot_lexer_agrees_with_cold_dispatch(html):
 
     real = tk._HOT
     try:
-        tk._HOT = real
-        hot_b, hot_l = tk.tokenize(html), tk.tokenize(html, light=True)
+        hot = tk.tokenize(html)
         tk._HOT = _NoHot
-        cold_b, cold_l = tk.tokenize(html), tk.tokenize(html, light=True)
+        cold = tk.tokenize(html)
     finally:
         tk._HOT = real
-    for x, y in ((hot_b, cold_b), (hot_l, cold_l)):
-        assert len(x) == len(y), (html, len(x), len(y))
-        for t1, t2 in zip(x, y):
-            assert (
-                t1.kind, t1.start, t1.end, t1.name,
-                t1.self_closing, t1.text_type,
-            ) == (
-                t2.kind, t2.start, t2.end, t2.name,
-                t2.self_closing, t2.text_type,
-            ), (html, t1, t2)
-            a1 = [(a.name, a.raw_name, a.value, a.has_value)
-                  for a in (t1.attrs or [])]
-            a2 = [(a.name, a.raw_name, a.value, a.has_value)
-                  for a in (t2.attrs or [])]
-            assert a1 == a2, (html, a1, a2)
+    assert len(hot) == len(cold), (html, len(hot), len(cold))
+    for t1, t2 in zip(hot, cold):
+        assert (
+            t1.kind, t1.start, t1.end, t1.name,
+            t1.self_closing, t1.text_type,
+        ) == (
+            t2.kind, t2.start, t2.end, t2.name,
+            t2.self_closing, t2.text_type,
+        ), (html, t1, t2)
+        a1 = [(a.name, a.raw_name, a.value, a.has_value)
+              for a in (t1.attrs or [])]
+        a2 = [(a.name, a.raw_name, a.value, a.has_value)
+              for a in (t2.attrs or [])]
+        assert a1 == a2, (html, a1, a2)
 
 
 @given(_fragments)

@@ -194,6 +194,30 @@ def test_run_pipeline_resumes_after_partial_failure(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_run_pipeline_resume_raises_on_corrupt_lineage(spark):
+    """Only a missing lineage dir means "no run yet". A lineage dir that
+    cannot be read must fail the resume loudly, not fall back to a
+    silent full recompute."""
+    import glob
+
+    tmp = tempfile.mkdtemp(prefix="selma_corrupt_")
+    try:
+        docs = interleaved_spans(
+            spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        )
+        res = run_pipeline(spark, docs, tmp, config="default", n_buckets=4)
+        parts = glob.glob(f"{res.lineage_path}/*.parquet")
+        assert parts
+        for p in parts:
+            with open(p, "wb") as fh:
+                fh.write(b"not a parquet file")
+        spark.catalog.refreshByPath(res.lineage_path)
+        with pytest.raises(Exception):
+            run_pipeline(spark, docs, tmp, config="default", n_buckets=4)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def test_run_pipeline_resumes_byte_weighted_across_partition_counts(spark):
     """Resume chaos under BYTE-WEIGHTED bucketing: the stratified-salted
     LPT deal must reproduce the identical doc->bucket assignment on a
