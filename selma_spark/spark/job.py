@@ -85,11 +85,7 @@ def main(argv=None) -> int:
         resume=not args.no_resume,
         sink=sink,
     )
-    if args.sink == "iceberg":
-        n = spark.read.table(res.output_path).count()
-    else:
-        n = spark.read.parquet(res.output_path).count()
-    print(f"selma-spark: wrote {n} documents -> {res.output_path}")
+    print(f"selma-spark: wrote {res.doc_count} documents -> {res.output_path}")
     print(f"lineage: {res.lineage_path}  metrics: {res.metrics_path}")
     return 0
 

@@ -21,14 +21,24 @@ Spark-first design notes (scale target: 10^12 docs / ~100 TB):
 * Resume: output is bucketed by a DETERMINISTIC function of doc_id
   (not spark_partition_id), written per-bucket with dynamic partition
   overwrite; a ``lineage`` table records completed buckets and a
-  restart anti-joins them away.
+  restart filters them out with a ``bucket`` predicate built from the
+  collected lineage rows. Lineage and metrics come from the write job
+  itself (per-bucket tallies the rewrite UDF sends through one
+  accumulator), so the committed output is never read back; a resume
+  with every bucket done runs no job over documents.
 """
 
 from __future__ import annotations
 
+import hashlib
 import time
+from datetime import datetime, timezone
 
-from pyspark.errors import AnalysisException
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -66,7 +76,8 @@ def resolve_config(config):
 
 
 def make_rewrite_fn(config="default", handlers_factory=None,
-                    max_text_bytes=None, on_error="raise", memo_bc=None):
+                    max_text_bytes=None, on_error="raise", memo_bc=None,
+                    _stats=None):
     """Build the mapInArrow function: record batches of
     (..., spans, ...) rows in, same schema out. Text spans are rewritten;
     media spans pass through byte-identical with order preserved.
@@ -74,7 +85,12 @@ def make_rewrite_fn(config="default", handlers_factory=None,
     Works directly on the arrow ListArray's flat struct children — only
     the text strings ever cross into Python objects (no per-span dict
     materialization), which keeps the arrow hop ~5x cheaper than a
-    pandas round-trip on nested data."""
+    pandas round-trip on nested data.
+
+    ``_stats`` is run_pipeline's internal lineage path, not a user
+    option: a ``_BucketStats`` accumulator. The batches must then carry
+    ``doc_id`` and ``bucket``; each task tallies every batch per bucket
+    and adds the tally once, after its last batch."""
     cfg = resolve_config(config)
 
     def fn(batches):
@@ -125,7 +141,7 @@ def make_rewrite_fn(config="default", handlers_factory=None,
                     return v
         import pyarrow.compute as pc  # noqa: PLC0415
 
-        if rw is None and memo_bc is None:
+        if rw is None and memo_bc is None and _stats is None:
             # pure passthrough (config None, no handlers): the rebuild
             # below is an identity — skip the arrow decode/re-encode of
             # every text cell entirely (r6)
@@ -140,6 +156,7 @@ def make_rewrite_fn(config="default", handlers_factory=None,
                 v = _get(t)
                 return _rw(t) if v is None else v
 
+        tally = {}
         for batch in batches:
             spans_idx = batch.schema.get_field_index("spans")
             lst = batch.column(spans_idx)
@@ -195,11 +212,19 @@ def make_rewrite_fn(config="default", handlers_factory=None,
             new_lst = pa.ListArray.from_arrays(
                 lst.offsets, new_values, type=lst.type, mask=mask
             )
+            if _stats is not None:
+                _tally_batch(tally, batch, lst.offsets, texts, new_texts_arr)
             arrays = [
                 new_lst if i == spans_idx else batch.column(i)
                 for i in range(batch.num_columns)
             ]
             yield pa.RecordBatch.from_arrays(arrays, schema=batch.schema)
+        if _stats is not None:
+            # once per task, after the last batch: a failed attempt sends
+            # nothing (the worker ships accumulator updates only with a
+            # successful result), and Spark applies one result-stage
+            # task's update per partition
+            _stats.add(tally)
 
     return fn
 
@@ -514,12 +539,100 @@ def bucketed(docs: DataFrame, n_buckets: int, byte_weighted: bool = False) -> Da
 
 # --- resumable run with lineage + metrics ----------------------------------
 
+_MASK64 = (1 << 64) - 1
+
+
+def _doc_id_hashes(doc_ids):
+    """The lineage checksum's per-document hash, as a uint64 numpy array:
+    the 8-byte little-endian blake2b digest of each UTF-8 ``doc_id`` (a
+    NULL id hashes as '')."""
+    return np.frombuffer(
+        b"".join(
+            hashlib.blake2b((d or "").encode(), digest_size=8).digest()
+            for d in doc_ids
+        ),
+        dtype="<u8",
+    )
+
+
+def _lineage_checksum(doc_count: int, hash_sum: int) -> str:
+    """A bucket's lineage checksum: its doc count and the sum mod 2^64 of
+    ``_doc_id_hashes`` over its documents, as ``"<count>:<16 hex>"``.
+    Order-independent and fixed-size, so per-task tallies add up in any
+    order and a bucket of any size costs one short string."""
+    return f"{doc_count}:{hash_sum & _MASK64:016x}"
+
+
+def _add_tally(acc, other):
+    """Merge ``other`` into ``acc``; both map bucket -> [docs, bytes_in,
+    bytes_out, hash_sum], ``hash_sum`` being the sum mod 2^64 of
+    ``_doc_id_hashes``."""
+    for k, (n, b_in, b_out, h) in other.items():
+        t = acc.setdefault(k, [0, 0, 0, 0])
+        t[0] += n
+        t[1] += b_in
+        t[2] += b_out
+        t[3] = (t[3] + h) & _MASK64
+    return acc
+
+
+class _BucketStats(AccumulatorParam):
+    """run_pipeline's per-bucket tally accumulator (see ``_add_tally``)."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, acc, other):
+        return _add_tally(acc, other)
+
+
+def _tally_batch(tally, batch, offsets, texts_in, texts_out):
+    """Add one rewritten batch to a task's ``_BucketStats`` tally: per
+    bucket, the doc count, UTF-8 bytes of span text before and after the
+    rewrite, and the doc_id hash sum. ``offsets`` are the spans list's
+    (absolute) offsets into ``texts_in``/``texts_out``."""
+    off = offsets.to_numpy()
+
+    def row_bytes(texts):
+        lens = pc.fill_null(pc.binary_length(texts), 0).to_numpy()
+        cum = np.concatenate(([0], np.cumsum(lens, dtype=np.int64)))
+        return cum[off[1:]] - cum[off[:-1]]
+
+    b_in, b_out = row_bytes(texts_in), row_bytes(texts_out)
+    hashes = _doc_id_hashes(
+        batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
+    )
+    buckets = batch.column(batch.schema.get_field_index("bucket")).to_numpy()
+    for k in np.unique(buckets):
+        m = buckets == k
+        # numpy uint64 sums wrap, i.e. they are already mod 2^64
+        _add_tally(tally, {int(k): [
+            int(m.sum()), int(b_in[m].sum()), int(b_out[m].sum()),
+            int(hashes[m].sum()),
+        ]})
+
+
+def _hadoop_path(spark, path: str):
+    """``path`` as a Hadoop Path with its FileSystem, so any scheme Spark
+    reads (file:, hdfs://, s3a://) works from the driver."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p, p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+
+
+def _arrow_schema(ddl: str):
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+    from pyspark.sql.types import _parse_datatype_string  # noqa: PLC0415
+
+    return to_arrow_schema(_parse_datatype_string(ddl))
+
 
 class PipelineResult:
-    def __init__(self, output_path, lineage_path, metrics_path):
+    def __init__(self, output_path, lineage_path, metrics_path, doc_count):
         self.output_path = output_path
         self.lineage_path = lineage_path
         self.metrics_path = metrics_path
+        # documents in the output: the lineage's doc_count total
+        self.doc_count = doc_count
 
 
 class ParquetSink:
@@ -541,24 +654,31 @@ class ParquetSink:
             self.output_path
         )
 
-    def read_documents(self, spark):
-        spark.catalog.refreshByPath(self.output_path)
-        return spark.read.parquet(self.output_path)
-
-    def write_aux(self, df, path):
-        df.write.mode("overwrite").parquet(path)
-        df.sparkSession.catalog.refreshByPath(path)
+    def write_table(self, spark, table, path):
+        """Replace ``path`` with ``table`` (a small pyarrow table) as one
+        parquet file, written by pyarrow through the path's Hadoop
+        FileSystem. Runs no Spark job."""
+        buf = pa.BufferOutputStream()
+        pq.write_table(table, buf)
+        p, fs = _hadoop_path(spark, path)
+        fs.delete(p, True)
+        out = fs.create(_hadoop_path(spark, f"{path}/part-00000.parquet")[0])
+        try:
+            out.write(buf.getvalue().to_pybytes())
+        finally:
+            out.close()
+        spark.catalog.refreshByPath(path)
 
     def read_lineage(self, spark):
-        """The lineage frame, or None when no run has written one yet.
-        Any other read failure (a corrupt or unreadable lineage dir)
-        raises: silently recomputing every bucket would hide it."""
-        try:
-            return spark.read.parquet(self.lineage_path)
-        except AnalysisException as e:
-            if e.getCondition() == "PATH_NOT_FOUND":
-                return None
-            raise
+        """The lineage frame, or None when the lineage dir does not exist
+        (no run has written one yet). A lineage dir that cannot be read
+        (corrupt, unreadable) raises: silently recomputing every bucket
+        would hide it. The schema is given, so reading runs no
+        footer-inference job."""
+        p, fs = _hadoop_path(spark, self.lineage_path)
+        if not fs.exists(p):
+            return None
+        return spark.read.schema(LINEAGE_SCHEMA).parquet(self.lineage_path)
 
 
 class IcebergSink:
@@ -591,16 +711,13 @@ class IcebergSink:
         spark = df.sparkSession
         if not spark.catalog.tableExists(self.output_path):
             # identity partition on the resume bucket column: aligned
-            # with the lineage anti-join and dynamic-overwrite contract
+            # with the lineage bucket filter and dynamic-overwrite contract
             df.writeTo(self.output_path).partitionedBy("bucket").create()
         else:
             df.writeTo(self.output_path).overwritePartitions()
 
-    def read_documents(self, spark):
-        return spark.read.table(self.output_path)
-
-    def write_aux(self, df, path):
-        df.writeTo(path).createOrReplace()
+    def write_table(self, spark, table, path):
+        spark.createDataFrame(table).writeTo(path).createOrReplace()
 
     def read_lineage(self, spark):
         """The lineage table, or None when no run has created it yet."""
@@ -625,72 +742,82 @@ def run_pipeline(
 
     ``sink`` is the storage strategy (default ParquetSink(output_dir);
     pass IcebergSink(\"catalog.db.table\") on a cluster with Iceberg
-    jars). On restart, buckets recorded 'ok' in lineage are anti-joined
-    away and only the remainder is recomputed (dynamic partition
-    overwrite / overwritePartitions keeps completed buckets intact)."""
+    jars). One Spark job runs over the documents: the bucketed
+    rewrite-and-write. Its rewrite UDF tallies, per bucket, the doc
+    count, text bytes in and out and the doc_id checksum, and the
+    lineage and metrics rows are built on the driver from that tally and
+    written by the sink; the output is never read back. On restart, the
+    buckets recorded 'ok' in lineage are filtered out, only the
+    remainder is recomputed (dynamic partition overwrite /
+    overwritePartitions keeps completed buckets intact), and their
+    lineage rows are kept as they were. When every bucket
+    ``0..n_buckets-1`` is already 'ok', nothing is written."""
+    from .shipping import ensure_shipped
+
+    ensure_shipped(spark)
     if sink is None:
         sink = ParquetSink(output_dir)
-    out_path = sink.output_path
-    lineage_path = sink.lineage_path
-    metrics_path = sink.metrics_path
     sink.prepare(spark)
+    lineage_schema = _arrow_schema(LINEAGE_SCHEMA)
+
+    prior = lineage_schema.empty_table()
+    if resume:
+        lineage = sink.read_lineage(spark)
+        if lineage is not None:
+            prior = (
+                lineage.where(F.col("status") == "ok")
+                .select(*lineage_schema.names)
+                .toArrow()
+                .cast(lineage_schema)
+            )
+    done = set(prior["partition_id"].to_pylist())
+    todo = [k for k in range(n_buckets) if k not in done]
+    prior_docs = pc.sum(prior["doc_count"]).as_py() or 0
+    result = PipelineResult(
+        sink.output_path, sink.lineage_path, sink.metrics_path, prior_docs
+    )
+    if not todo:
+        return result
 
     b = bucketed(docs, n_buckets, byte_weighted=byte_weighted)
-
-    done = sink.read_lineage(spark) if resume else None
-    if done is not None:
-        done = (
-            done.where(F.col("status") == "ok")
-            .select("partition_id")
-            .distinct()
-        )
-        # broadcast anti-join: lineage is tiny relative to the corpus
-        b = b.join(
-            F.broadcast(done),
-            b["bucket"] == done["partition_id"],
-            "left_anti",
-        )
-
+    if done:
+        b = b.where(F.col("bucket").isin(todo))
+    stats = spark.sparkContext.accumulator({}, _BucketStats())
     t0 = time.time()
     b = b.repartition(n_buckets, "bucket")
-    rewritten = b.mapInArrow(
-        make_rewrite_fn(config, handlers_factory), schema=b.schema
-    )
-    sink.write_documents(rewritten)
+    # the UDF must run in the write's result stage (after the bucket
+    # exchange): Spark applies result-task accumulator updates once per
+    # partition, but re-applies a shuffle-map task's on a stage retry
+    sink.write_documents(b.mapInArrow(
+        make_rewrite_fn(config, handlers_factory, _stats=stats),
+        schema=b.schema,
+    ))
     wall_ms = int((time.time() - t0) * 1000)
 
-    # lineage + metrics derived from the committed output (consistent
-    # with what actually landed)
-    out_df = sink.read_documents(spark)
-    lineage = out_df.groupBy(F.col("bucket").cast("int").alias("partition_id")).agg(
-        F.count("*").alias("doc_count"),
-        F.sha2(
-            F.concat_ws(",", F.sort_array(F.collect_list("doc_id"))), 256
-        ).alias("checksum"),
-        F.lit("ok").alias("status"),
-        F.lit(1).alias("attempt"),
-        F.current_timestamp().alias("ts"),
+    tally = stats.value
+    counts = [tally.get(k, [0, 0, 0, 0]) for k in todo]
+    ts = datetime.now(timezone.utc)
+    new = pa.Table.from_pydict({
+        "partition_id": todo,
+        "doc_count": [c[0] for c in counts],
+        "checksum": [_lineage_checksum(c[0], c[3]) for c in counts],
+        "status": ["ok"] * len(todo),
+        "attempt": [1] * len(todo),
+        "ts": [ts] * len(todo),
+    }, schema=lineage_schema)
+    sink.write_table(
+        spark, pa.concat_tables([prior, new]), sink.lineage_path
     )
-    sink.write_aux(lineage, lineage_path)
-
-    metrics = out_df.groupBy(F.col("bucket").cast("int").alias("partition_id")).agg(
-        F.count("*").alias("docs"),
-        F.sum(
-            F.aggregate(
-                "spans", F.lit(0).cast("bigint"),
-                lambda acc, s: acc + F.coalesce(F.length(s["text"]), F.lit(0)),
-            )
-        ).alias("bytes_out"),
-    ).select(
-        F.lit("rewrite").alias("stage"),
-        "partition_id",
-        "docs",
-        F.lit(None).cast("long").alias("bytes_in"),
-        "bytes_out",
-        F.lit(wall_ms).alias("wall_ms"),
-    )
-    sink.write_aux(metrics, metrics_path)
-    return PipelineResult(out_path, lineage_path, metrics_path)
+    sink.write_table(spark, pa.Table.from_pydict({
+        "stage": ["rewrite"] * len(todo),
+        "partition_id": todo,
+        "docs": [c[0] for c in counts],
+        "bytes_in": [c[1] for c in counts],
+        "bytes_out": [c[2] for c in counts],
+        "wall_ms": [wall_ms] * len(todo),
+    }, schema=_arrow_schema(METRICS_SCHEMA)), sink.metrics_path)
+    result.doc_count += sum(c[0] for c in counts)
+    return result
 
 
 def _collect_links(docs: DataFrame, collector_name: str) -> DataFrame:

@@ -4,6 +4,7 @@ checkpoint-resume lineage semantics."""
 
 import shutil
 import tempfile
+from pathlib import Path
 
 import pytest
 from pyspark.sql import SparkSession
@@ -21,6 +22,7 @@ from selma_spark.spark.pipeline import (
 )
 
 SF_DIR = "/root/testdata/sf0.001"
+REPO = Path(__file__).resolve().parents[1]
 
 
 @pytest.fixture(scope="session")
@@ -290,6 +292,225 @@ def test_run_pipeline_resumes_byte_weighted_across_partition_counts(spark):
         assert lineage2.where("status = 'ok'").count() == 4
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _group_jobs(spark, group):
+    """(jobs, input records) over every job run under ``group``, read
+    from the status store."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    records = sum(
+        store.lastStageAttempt(s).inputRecords()
+        for j in jobs
+        for s in sc.statusTracker().getJobInfo(j).stageIds
+    )
+    return len(jobs), records
+
+
+def _doc_text_bytes(spans):
+    return sum(len(s["text"].encode()) for s in spans or [] if s["text"] is not None)
+
+
+def test_run_pipeline_lineage_and_metrics_match_ground_truth(spark):
+    """Every bucket's lineage and metrics row against values recomputed
+    here from the input and output frames: doc count, checksum (count
+    and the sum mod 2^64 of an 8-byte blake2b of each doc_id), and UTF-8
+    text bytes in and out. An empty bucket is recorded with zeros."""
+    import hashlib
+
+    tmp = tempfile.mkdtemp(prefix="selma_truth_")
+    try:
+        extra = spark.createDataFrame(
+            [
+                ("cjk", [{"kind": "text", "text": "<b>日本語 😀</b><script>x</script>",
+                          "media_ref": None, "offset": 0}]),
+                ("null-text", [{"kind": "text", "text": None, "media_ref": None,
+                                "offset": 0}]),
+                ("null-spans", None),
+                ("no-spans", []),
+            ],
+            "doc_id string, spans array<struct<kind:string,text:string,"
+            "media_ref:string,offset:int>>",
+        )
+        docs = make_span_docs(spark).unionByName(extra)
+        n_buckets = 32  # more buckets than docs: some stay empty
+        res = run_pipeline(spark, docs, tmp, config="relaxed", n_buckets=n_buckets)
+        inputs = {r["doc_id"]: r["spans"] for r in docs.collect()}
+        out = spark.read.parquet(res.output_path).collect()
+        assert sorted(r["doc_id"] for r in out) == sorted(inputs)
+
+        want = {k: [0, 0, 0, 0] for k in range(n_buckets)}
+        for r in out:
+            w = want[r["bucket"]]
+            w[0] += 1
+            w[1] += _doc_text_bytes(inputs[r["doc_id"]])
+            w[2] += _doc_text_bytes(r["spans"])
+            w[3] += int.from_bytes(
+                hashlib.blake2b(r["doc_id"].encode(), digest_size=8).digest(),
+                "little",
+            )
+        assert any(w[0] == 0 for w in want.values())
+        assert sum(w[1] != w[2] for w in want.values()) > 0
+
+        lineage = {r["partition_id"]: r for r in
+                   spark.read.parquet(res.lineage_path).collect()}
+        metrics = {r["partition_id"]: r for r in
+                   spark.read.parquet(res.metrics_path).collect()}
+        assert sorted(lineage) == sorted(metrics) == list(range(n_buckets))
+        for k, (n, b_in, b_out, h) in want.items():
+            assert lineage[k]["doc_count"] == n
+            assert lineage[k]["checksum"] == f"{n}:{h % 2**64:016x}"
+            assert lineage[k]["status"] == "ok"
+            m = metrics[k]
+            assert (m["stage"], m["docs"], m["bytes_in"], m["bytes_out"]) == (
+                "rewrite", n, b_in, b_out)
+        assert res.doc_count == len(inputs)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_run_pipeline_reads_documents_once_and_noop_resume_reads_none(spark):
+    """A run reads its input once and never reads its output back (the
+    status store's input records over the call's job group equal the
+    input doc count). A resume whose lineage already has every bucket
+    'ok' runs no job over documents: only the lineage read runs."""
+    tmp = tempfile.mkdtemp(prefix="selma_noop_")
+    sc = spark.sparkContext
+    try:
+        docs = interleaved_spans(
+            spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        )
+        n_docs = docs.count()
+        sc.setJobGroup("selma-run", "first run")
+        run_pipeline(spark, docs, tmp, config="default", n_buckets=4)
+        jobs, records = _group_jobs(spark, "selma-run")
+        assert records == n_docs
+        assert jobs <= 2  # the bucket exchange's map stage + the write
+
+        sc.setJobGroup("selma-noop-resume", "no-op resume")
+        res = run_pipeline(spark, docs, tmp, config="default", n_buckets=4)
+        jobs, records = _group_jobs(spark, "selma-noop-resume")
+        assert (jobs, records) == (1, 4)  # the 4 lineage rows
+        assert res.doc_count == n_docs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _run_script(script, cwd, *args):
+    """Run ``script`` with a fresh interpreter in ``cwd``; the package is
+    importable on the driver only (through sys.path, not PYTHONPATH,
+    which Spark would hand on to its Python workers)."""
+    import os
+    import subprocess
+    import sys
+
+    env = dict(os.environ, PYSPARK_PYTHON=sys.executable)
+    env.pop("PYTHONPATH", None)
+    return subprocess.run(
+        [sys.executable, "-c", script, *args],
+        cwd=cwd, env=env, capture_output=True, text=True, timeout=300,
+    )
+
+
+_SCRIPT_HEAD = f"""
+import sys
+sys.path.insert(0, {str(REPO)!r})
+from pyspark.sql import SparkSession
+from selma_spark.spark.pipeline import run_pipeline
+DOC_SCHEMA = ("doc_id string, spans array<struct<kind:string,text:string,"
+              "media_ref:string,offset:int>>")
+"""
+
+
+def test_run_pipeline_ships_the_package_from_any_cwd():
+    """run_pipeline itself ships selma_spark to the Python workers: a
+    driver whose cwd is outside the repo still runs it."""
+    tmp = tempfile.mkdtemp(prefix="selma_cwd_")
+    try:
+        proc = _run_script(_SCRIPT_HEAD + """
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+docs = spark.createDataFrame(
+    [(f"d{i}", [("text", "<b>x</b><script>y</script>", None, 0)])
+     for i in range(20)], DOC_SCHEMA)
+res = run_pipeline(spark, docs, sys.argv[1], config="relaxed", n_buckets=2)
+print("docs", res.doc_count)
+""", tmp, f"{tmp}/out")
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        assert "docs 20" in proc.stdout
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_run_pipeline_lineage_survives_task_retries():
+    """On local[4,2] every write task may fail once. A handler that
+    raises mid-task (after several arrow batches) on each task's first
+    attempt only: the retried run's lineage must count every output doc
+    once, and every bucket's checksum must equal a clean run's."""
+    import json
+
+    tmp = tempfile.mkdtemp(prefix="selma_retry_")
+    try:
+        proc = _run_script(_SCRIPT_HEAD + """
+import json
+from pyspark import TaskContext
+from selma_spark.selector import Selector
+
+class FailFirstAttempt:
+    fail = True
+
+    def __init__(self):
+        self.n = 0
+
+    def selector(self):
+        return Selector(match_element="b")
+
+    def handle_element(self, el):
+        self.n += 1
+        if (self.fail and self.n == 25
+                and TaskContext.get().attemptNumber() == 0):
+            raise RuntimeError("injected first-attempt failure")
+
+class Clean(FailFirstAttempt):
+    fail = False
+
+spark = (SparkSession.builder.master("local[4,2]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10")
+         .getOrCreate())
+docs = spark.createDataFrame(
+    [(f"d{i}", [("text", f"<b>{i}</b>", None, 0)]) for i in range(400)],
+    DOC_SCHEMA)
+sc = spark.sparkContext
+store = sc._jsc.sc().statusStore()
+got = {}
+for name, handler in (("retried", FailFirstAttempt), ("clean", Clean)):
+    sc.setJobGroup(name, name)
+    res = run_pipeline(spark, docs, f"{sys.argv[1]}/{name}", config=None,
+                       handlers_factory=lambda h=handler: [h()], n_buckets=4)
+    lineage = spark.read.parquet(res.lineage_path).collect()
+    got[name] = {
+        "failed_tasks": sum(
+            store.lastStageAttempt(s).numFailedTasks()
+            for j in sc.statusTracker().getJobIdsForGroup(name)
+            for s in sc.statusTracker().getJobInfo(j).stageIds),
+        "out_rows": spark.read.parquet(res.output_path).count(),
+        "doc_count": sum(r["doc_count"] for r in lineage),
+        "checksums": {r["partition_id"]: r["checksum"] for r in lineage},
+    }
+print(json.dumps(got))
+""", tmp, tmp)
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        got = json.loads(proc.stdout.strip().splitlines()[-1])
+        retried, clean = got["retried"], got["clean"]
+        assert retried["failed_tasks"] > 0 and clean["failed_tasks"] == 0
+        assert retried["out_rows"] == retried["doc_count"] == 400
+        assert retried["checksums"] == clean["checksums"]
+        assert len(clean["checksums"]) == 4
+    finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
