@@ -200,73 +200,29 @@ NEAR_DUP_MAX_HAMMING = 3
 # cap): a band bucket holding this many signatures is an exact-dup
 # mega-cluster, not near-dup territory — stop growing its state
 NEAR_DUP_MAX_BAND_STATE = 100
+# last_ts_ms is the bucket's last-seen EVENT time, so an arrival can
+# prune a bucket whose horizon passed without an intervening batch
 NEAR_DUP_STATE_SCHEMA = (
-    "doc_ids array<string>, sims array<bigint>, ttl_ms bigint"
-)
-# event-time variant adds the bucket's last-seen EVENT time so arrivals
-# can prune a bucket whose horizon passed without an intervening batch
-NEAR_DUP_EVENT_STATE_SCHEMA = (
-    "doc_ids array<string>, sims array<bigint>, ttl_ms bigint, "
-    "last_ts_ms bigint"
+    "doc_ids array<string>, sims array<bigint>, last_ts_ms bigint"
 )
 NEAR_DUP_OUTPUT_SCHEMA = "doc_id string, band_id int, near_dup_of string"
 
 
-# state TTL: a band bucket idle this long is evicted (bounded-state
-# horizon, the stateful-op analogue of dropDuplicatesWithinWatermark's
-# watermark). Module-level so the pickled state fn can read it; the
-# builder overrides it per query via the _ttl_ms closure column instead
-# of mutating globals.
+# state TTL: a band bucket idle this long in event time is evicted
+# (bounded-state horizon, the stateful-op analogue of
+# dropDuplicatesWithinWatermark's watermark)
 NEAR_DUP_STATE_TTL_MS = 30 * 60 * 1000
 
 
-def _near_dup_band_fn(key, pdf_iter, state):
-    """applyInPandasWithState function for one (band_id, band_val)
-    bucket: match each arriving signature against the bucket's stored
-    signatures (state) AND earlier arrivals in the same batch, flag
-    hamming <= NEAR_DUP_MAX_HAMMING. Arrivals are processed in doc_id
-    order so within-batch pairing is deterministic regardless of task
-    scheduling. Hamming uses an unsigned-64 mask before bit_count —
-    Python's int.bit_count is sign-magnitude, not two's-complement.
-
-    State is DOUBLY bounded: capped at NEAR_DUP_MAX_BAND_STATE
-    signatures per bucket, and evicted wholesale after the bucket has
-    been idle for its TTL (processing-time timeout — each data batch
-    re-arms it). A timed-out invocation sees no input rows and only
-    removes the state."""
-    import pandas as pd  # noqa: PLC0415
-
-    band_id = int(key[0])
-    if state.hasTimedOut:
-        state.remove()
-        yield pd.DataFrame(columns=["doc_id", "band_id", "near_dup_of"])
-        return
-    if state.exists:
-        doc_ids, sims, ttl_ms = state.get
-        doc_ids, sims = list(doc_ids), list(sims)
-    else:
-        doc_ids, sims, ttl_ms = [], [], None
-    batch = []
-    for pdf in pdf_iter:
-        if ttl_ms is None and "_ttl_ms" in pdf.columns and len(pdf):
-            ttl_ms = int(pdf["_ttl_ms"].iloc[0])
-        for doc_id, sim in zip(pdf["doc_id"], pdf["simhash"]):
-            batch.append((str(doc_id), int(sim)))
-    batch.sort()
-    rows = _match_and_absorb(batch, doc_ids, sims, band_id)
-    if ttl_ms is None:
-        ttl_ms = NEAR_DUP_STATE_TTL_MS
-    state.update((doc_ids, sims, int(ttl_ms)))
-    state.setTimeoutDuration(int(ttl_ms))
-    yield pd.DataFrame(rows, columns=["doc_id", "band_id", "near_dup_of"])
-
-
 def _match_and_absorb(batch, doc_ids, sims, band_id):
-    """Shared matcher for both eviction modes: flag each arrival against
-    the bucket's stored signatures AND earlier same-batch arrivals,
-    absorbing new signatures in-place up to the cap. A re-sent/replayed
-    doc_id must not burn a cap slot — duplicate entries would evict room
-    for genuinely distinct signatures in hot buckets (ADVICE r4 #1)."""
+    """Flag each arrival against the bucket's stored signatures AND
+    earlier same-batch arrivals, absorbing new signatures in-place up to
+    the cap. Among several matches the lowest doc_id wins. A
+    re-sent/replayed doc_id neither matches itself nor burns a cap slot —
+    duplicate entries would evict room for genuinely distinct signatures
+    in hot buckets (ADVICE r4 #1). Hamming uses an unsigned-64 mask
+    before bit_count — Python's int.bit_count is sign-magnitude, not
+    two's-complement."""
     seen = set(doc_ids)  # O(1) replay check alongside the ordered lists
     rows = []
     for doc_id, sim in batch:
@@ -285,15 +241,27 @@ def _match_and_absorb(batch, doc_ids, sims, band_id):
     return rows
 
 
-def _near_dup_band_fn_event(key, pdf_iter, state):
-    """EVENT-time twin of _near_dup_band_fn (VERDICT r4 #6): the bucket
-    horizon is measured in the data's own ``ingest_ts``, like
-    stream_dedup_documents' watermark, not in wall-clock. Eviction is
-    double-pathed and fully deterministic:
+def _near_dup_band_fn(key, pdf_iter, state, ttl_ms):
+    """applyInPandasWithState function for one (band_id, band_val)
+    bucket: match each arriving signature against the bucket's stored
+    signatures (state) AND earlier arrivals in the same batch, flag
+    hamming <= NEAR_DUP_MAX_HAMMING. Arrivals are processed in doc_id
+    order so within-batch pairing is deterministic regardless of task
+    scheduling.
+
+    The bucket horizon ``ttl_ms`` is measured in the data's own
+    ``ingest_ts``, like stream_dedup_documents' watermark, never in
+    wall-clock. It is read from ``ts_ms``, the JVM's epoch millis of
+    ``ingest_ts``: the pandas ``ingest_ts`` column holds naive wall-clock
+    time in the session time zone, which would shift every timer by the
+    zone's UTC offset (west of UTC, setTimeoutTimestamp then rejects a
+    timeout behind the watermark). Eviction is double-pathed and fully
+    deterministic:
 
     1. timer path — the timeout TIMESTAMP is (last event ts + ttl); when
        the stream's watermark passes it with no new data for the bucket,
-       the timed-out invocation removes the state wholesale;
+       the timed-out invocation sees no input rows and removes the state
+       wholesale;
     2. arrival path — a batch whose EARLIEST event time is beyond
        (last_ts + ttl) clears the inherited signatures before matching,
        because Spark does not fire a group's timer in a batch where that
@@ -309,45 +277,31 @@ def _near_dup_band_fn_event(key, pdf_iter, state):
         yield pd.DataFrame(columns=["doc_id", "band_id", "near_dup_of"])
         return
     if state.exists:
-        doc_ids, sims, ttl_ms, last_ts_ms = state.get
+        doc_ids, sims, last_ts_ms = state.get
         doc_ids, sims = list(doc_ids), list(sims)
     else:
-        doc_ids, sims, ttl_ms, last_ts_ms = [], [], None, None
-    batch = []
-    batch_min_ts = batch_max_ts = None
+        doc_ids, sims, last_ts_ms = [], [], None
+    batch, stamps = [], []
     for pdf in pdf_iter:
-        if ttl_ms is None and "_ttl_ms" in pdf.columns and len(pdf):
-            ttl_ms = int(pdf["_ttl_ms"].iloc[0])
-        for doc_id, sim, ts in zip(
-            pdf["doc_id"], pdf["simhash"], pdf["ingest_ts"]
+        for doc_id, sim, ts_ms in zip(
+            pdf["doc_id"], pdf["simhash"], pdf["ts_ms"]
         ):
-            ts_ms = int(pd.Timestamp(ts).value // 1_000_000)
             batch.append((str(doc_id), int(sim)))
-            if batch_min_ts is None or ts_ms < batch_min_ts:
-                batch_min_ts = ts_ms
-            if batch_max_ts is None or ts_ms > batch_max_ts:
-                batch_max_ts = ts_ms
-    if ttl_ms is None:
-        ttl_ms = NEAR_DUP_STATE_TTL_MS
-    if (
-        last_ts_ms is not None
-        and batch_min_ts is not None
-        and batch_min_ts - int(last_ts_ms) > int(ttl_ms)
-    ):
+            stamps.append(int(ts_ms))
+    if last_ts_ms is not None and min(stamps) - int(last_ts_ms) > ttl_ms:
         doc_ids, sims = [], []  # horizon passed: expire inherited state
     batch.sort()
     rows = _match_and_absorb(batch, doc_ids, sims, band_id)
-    new_last = max(int(last_ts_ms or 0), int(batch_max_ts or 0))
-    state.update((doc_ids, sims, int(ttl_ms), new_last))
-    state.setTimeoutTimestamp(new_last + int(ttl_ms))
+    new_last = max(int(last_ts_ms or 0), max(stamps))
+    state.update((doc_ids, sims, new_last))
+    state.setTimeoutTimestamp(new_last + ttl_ms)
     yield pd.DataFrame(rows, columns=["doc_id", "band_id", "near_dup_of"])
 
 
 def stream_near_dup_flags(
     spark: SparkSession, input_dir: str, checkpoint_dir: str,
     query_name: str = "near_dup_flags",
-    state_ttl_ms: int | None = None,
-    eviction: str = "processing",
+    state_ttl_ms: int = NEAR_DUP_STATE_TTL_MS,
 ):
     """Streaming NEAR-duplicate detection (VERDICT r3 #7, beyond the
     exact dedup above): per micro-batch, each document's 64-bit simhash
@@ -359,53 +313,51 @@ def stream_near_dup_flags(
     loses no candidates while keying state by (band_id, band_val) keeps
     each state cell tiny and the shuffle an equi-partition on the band
     key — the same scale shape as the batch simhash_near_dup join.
-    State per cell is DOUBLY bounded: capped signature count (saturated
-    cells are exact-dup territory) AND a processing-time TTL
-    (``state_ttl_ms``, default NEAR_DUP_STATE_TTL_MS) that evicts idle
-    buckets — the stateful-op analogue of
-    dropDuplicatesWithinWatermark's horizon.
 
-    ``eviction`` picks the horizon clock (VERDICT r4 #6): "processing"
-    (default) evicts on wall-clock idleness; "event" measures the
-    horizon in the data's own ingest_ts — a watermark-bounded
-    EventTimeTimeout like stream_dedup_documents, deterministic under
-    replay/backfill where wall-clock TTLs are not (a backfill that
-    pauses 31 wall-minutes mid-stream would spuriously evict every
-    bucket in processing mode).
+    State per cell is DOUBLY bounded: capped signature count (saturated
+    cells are exact-dup territory) AND an event-time TTL
+    (``state_ttl_ms``) that evicts idle buckets — the stateful-op
+    analogue of dropDuplicatesWithinWatermark's horizon. The clock is
+    the data's own ``ingest_ts`` under a watermark of (max ingest_ts -
+    state_ttl_ms) with EventTimeTimeout, so expiry is deterministic
+    under replay/backfill and the availableNow query terminates once
+    its input is drained.
+
+    A doc whose ``ingest_ts`` is already older than the watermark when
+    it arrives is late: Spark drops it before the state function, so it
+    gets NO output row. Late docs are counted, per micro-batch, in the
+    query progress field ``stateOperators[0].numRowsDroppedByWatermark``
+    (one dropped row per band, i.e. 4 per doc).
+
     A doc is a near-dup iff ANY of its 4 band rows carries a non-null
     near_dup_of (aggregate downstream). Update-mode in-memory sink."""
+    import functools  # noqa: PLC0415
+
     from pyspark.sql.streaming.state import GroupStateTimeout  # noqa: PLC0415
 
     from .shipping import ensure_shipped  # noqa: PLC0415
     from .textops import _SIMHASH64_EXPR  # noqa: PLC0415
 
-    if eviction not in ("processing", "event"):
-        raise ValueError("eviction must be 'processing' or 'event'")
     ensure_shipped(spark)
     docs = (
         spark.readStream.schema("doc_id string, text string, ingest_ts timestamp")
         .option("maxFilesPerTrigger", 1)
         .parquet(input_dir)
     )
-    ttl_ms = (
-        int(state_ttl_ms) if state_ttl_ms is not None
-        else NEAR_DUP_STATE_TTL_MS
-    )
+    ttl_ms = int(state_ttl_ms)
+    # EventTimeTimeout requires a watermark on the grouped stream; the
+    # horizon itself doubles as the allowed lateness
     sh = docs.select(
-        "doc_id",
-        "ingest_ts",
-        F.expr(_SIMHASH64_EXPR).alias("simhash"),
-        F.lit(ttl_ms).alias("_ttl_ms"),
-    )
-    if eviction == "event":
-        # EventTimeTimeout requires a watermark on the grouped stream;
-        # the horizon itself doubles as the allowed lateness
-        sh = sh.withWatermark("ingest_ts", f"{ttl_ms} milliseconds")
+        "doc_id", "ingest_ts", F.expr(_SIMHASH64_EXPR).alias("simhash")
+    ).withWatermark("ingest_ts", f"{ttl_ms} milliseconds")
+    # the grouped rows keep the watermarked ingest_ts (Spark rejects an
+    # event-time timeout without it); ts_ms is its epoch millis for the
+    # state function's clock
     bands = sh.select(
         "doc_id",
         "simhash",
-        "_ttl_ms",
         "ingest_ts",
+        F.unix_millis("ingest_ts").alias("ts_ms"),
         F.explode(
             F.array(
                 *[
@@ -420,24 +372,15 @@ def stream_near_dup_flags(
             )
         ).alias("b"),
     ).select(
-        "doc_id", "simhash", "_ttl_ms", "ingest_ts", "b.band_id", "b.band_val"
+        "doc_id", "simhash", "ingest_ts", "ts_ms", "b.band_id", "b.band_val"
     )
-    if eviction == "event":
-        flags = bands.groupBy("band_id", "band_val").applyInPandasWithState(
-            _near_dup_band_fn_event,
-            outputStructType=NEAR_DUP_OUTPUT_SCHEMA,
-            stateStructType=NEAR_DUP_EVENT_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    else:
-        flags = bands.groupBy("band_id", "band_val").applyInPandasWithState(
-            _near_dup_band_fn,
-            outputStructType=NEAR_DUP_OUTPUT_SCHEMA,
-            stateStructType=NEAR_DUP_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
+    flags = bands.groupBy("band_id", "band_val").applyInPandasWithState(
+        functools.partial(_near_dup_band_fn, ttl_ms=ttl_ms),
+        outputStructType=NEAR_DUP_OUTPUT_SCHEMA,
+        stateStructType=NEAR_DUP_STATE_SCHEMA,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
     return (
         flags.writeStream.outputMode("update")
         .format("memory")
@@ -483,6 +426,9 @@ def stream_running_event_totals(
     applyInPandasWithState (update mode, in-memory sink for inspection)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
+    from .shipping import ensure_shipped
+
+    ensure_shipped(spark)
     schema = (
         "event_id bigint, ts timestamp, user_id bigint, event_type string, "
         "value double, props string"

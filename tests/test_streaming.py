@@ -1,6 +1,7 @@
 """Structured Streaming path: micro-batch rewrite equals the batch
 pipeline; watermarked windowed aggregation over events."""
 
+import random
 import shutil
 import tempfile
 
@@ -44,7 +45,7 @@ def test_stream_rewrite_matches_batch(spark):
         q = stream_rewrite(
             spark, f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt", config="default"
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         q.stop()
 
         streamed = spark.read.parquet(f"{tmp}/out/documents")
@@ -78,7 +79,7 @@ def test_stream_event_metrics_end_to_end(spark):
         events = spark.read.parquet(f"{SF_DIR}/events.parquet")
         events.repartition(3).write.parquet(f"{tmp}/in")
         q = stream_event_metrics(spark, f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt")
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         q.stop()
         out = spark.read.parquet(f"{tmp}/out")
         # append mode only emits windows sealed by the watermark; the
@@ -104,7 +105,7 @@ def test_stateful_running_totals(spark):
         q = stream_running_event_totals(
             spark, f"{tmp}/in", f"{tmp}/ckpt", query_name="rt_test"
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         q.stop()
         # update-mode memory sink: the LAST row per event_type is the
         # final running total and must equal the batch aggregate
@@ -139,14 +140,14 @@ def test_stream_rewrite_resumes_from_checkpoint(spark):
         )
         first.write.parquet(f"{in_dir}/part1")
         q = stream_rewrite(spark, f"{in_dir}/*", out_dir, ckpt, "default")
-        q.awaitTermination()
+        assert q.awaitTermination(120)
         got1 = spark.read.parquet(f"{out_dir}/documents")
         n1 = got1.count()
         assert n1 == first.count()
 
         second.write.parquet(f"{in_dir}/part2")
         q2 = stream_rewrite(spark, f"{in_dir}/*", out_dir, ckpt, "default")
-        q2.awaitTermination()
+        assert q2.awaitTermination(120)
         got = spark.read.parquet(f"{out_dir}/documents")
         ids = [r["doc_id"] for r in got.select("doc_id").collect()]
         assert len(ids) == len(set(ids)) == 200  # no reprocessing dupes
@@ -202,7 +203,7 @@ def test_stream_near_dup_flags(spark):
         q = stream_near_dup_flags(
             spark, f"{inp}/*", ckpt, query_name="snear_test"
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         q.stop()
 
         rows = spark.sql(
@@ -234,60 +235,82 @@ def test_stream_near_dup_flags(spark):
 
 
 def test_stream_near_dup_state_ttl_evicts_idle_buckets(spark):
-    """Bounded state, part 2: a band bucket idle past the TTL is
-    evicted (processing-time timeout), so a duplicate arriving AFTER
-    the horizon is NOT flagged — mirroring
-    dropDuplicatesWithinWatermark's bounded-memory contract."""
+    """Bounded state, part 2 (timer path): once the watermark passes an
+    idle band bucket's horizon, its event-time timer fires in a batch
+    with no data for it and removes the state, so a duplicate arriving
+    AFTER the horizon is NOT flagged — mirroring
+    dropDuplicatesWithinWatermark's bounded-memory contract. A copy
+    whose own ingest_ts is behind the watermark is late: it gets no
+    output row and is counted in numRowsDroppedByWatermark. The session
+    time zone is west of UTC: timers must be set in epoch time, not in
+    the naive wall-clock time the state function's pandas frames hold."""
     import datetime
     import pathlib
 
     from selma_spark.spark.streaming import stream_near_dup_flags
 
     tmp = tempfile.mkdtemp(prefix="selma_snear_ttl_")
+    session_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
         inp, ckpt = f"{tmp}/in", f"{tmp}/ckpt"
         pathlib.Path(inp).mkdir(parents=True)
         t0 = datetime.datetime(2026, 1, 1, 12, 0, 0)
+        t10 = t0 + datetime.timedelta(minutes=10)
         base = (
             "alpha beta gamma delta epsilon zeta eta theta iota kappa "
             "lambda mu nu xi omicron pi rho sigma tau upsilon"
         )
         schema = "doc_id string, text string, ingest_ts timestamp"
-        # three files -> three micro-batches (maxFilesPerTrigger=1)
-        spark.createDataFrame([("a", base, t0)], schema).coalesce(1) \
-            .write.mode("append").parquet(f"{inp}/f1")
-        spark.createDataFrame(
-            [("z", "totally different interleaved filler words here", t0)],
-            schema,
-        ).coalesce(1).write.mode("append").parquet(f"{inp}/f2")
-        spark.createDataFrame([("b", base, t0)], schema).coalesce(1) \
-            .write.mode("append").parquet(f"{inp}/f3")
+        # one file per micro-batch (maxFilesPerTrigger=1):
+        #   f1 a at t0; f2 filler z at t0+10min moves the watermark to
+        #   t0+9min; f3 filler y has no data for a's buckets, so their
+        #   timers (t0+60s) fire there; f4 b, a copy of a, at t0+10min;
+        #   f5 a late copy of a at t0, behind the watermark
+        filler_z = "totally different interleaved filler words here"
+        filler_y = "another unrelated filler line about harbor cranes"
+        for name, doc_id, text, ts in (
+            ("f1", "a", base, t0),
+            ("f2", "z", filler_z, t10),
+            ("f3", "y", filler_y, t10),
+            ("f4", "b", base, t10),
+            ("f5", "late", base, t0),
+        ):
+            spark.createDataFrame([(doc_id, text, ts)], schema).coalesce(1) \
+                .write.mode("append").parquet(f"{inp}/{name}")
 
         q = stream_near_dup_flags(
             spark, f"{inp}/*", ckpt, query_name="snear_ttl_test",
-            state_ttl_ms=1,
+            state_ttl_ms=60_000,
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         q.stop()
         rows = spark.sql(
             "SELECT doc_id, count(near_dup_of) AS n_hits "
             "FROM snear_ttl_test GROUP BY 1"
         ).collect()
         got = {r["doc_id"]: r["n_hits"] for r in rows}
-        # a's band state was evicted while batch f2 ran (idle > 1ms), so
-        # the byte-identical re-send b is NOT flagged
         assert got["a"] == 0
+        # a's 4 band cells were removed by their timers, so the
+        # byte-identical re-send b is NOT flagged
         assert got["b"] == 0, got
+        assert "late" not in got, got
+        ops = [p.stateOperators[0] for p in q.recentProgress]
+        assert sum(o.numRowsRemoved for o in ops) >= 4
+        assert sum(o.numRowsDroppedByWatermark for o in ops) == 4
     finally:
+        spark.conf.set("spark.sql.session.timeZone", session_tz)
         shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_stream_near_dup_event_time_eviction(spark):
-    """EVENT-time horizon (VERDICT r4 #6): duplicates arriving within
-    the event-time TTL are flagged; a duplicate whose ingest_ts is past
-    the horizon is NOT — state expiry follows the DATA's clock, with no
-    wall-clock sleeps anywhere in the test (deterministic by
-    construction, unlike a processing-time TTL)."""
+    """EVENT-time horizon (VERDICT r4 #6), arrival path: duplicates
+    arriving within the event-time TTL are flagged; a duplicate whose
+    ingest_ts is past the horizon is NOT. It lands in the first batch
+    after the watermark passes the bucket's horizon, where Spark fires
+    no timer for a bucket that has data, so the arrival check expires
+    the state. No wall-clock sleeps anywhere in the test (deterministic
+    by construction)."""
     import datetime
     import pathlib
 
@@ -322,9 +345,9 @@ def test_stream_near_dup_event_time_eviction(spark):
 
         q = stream_near_dup_flags(
             spark, f"{inp}/*", ckpt, query_name="snear_evt_test",
-            state_ttl_ms=60_000, eviction="event",
+            state_ttl_ms=60_000,
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         q.stop()
         rows = spark.sql(
             "SELECT doc_id, min(near_dup_of) AS dup_of, "
@@ -335,6 +358,87 @@ def test_stream_near_dup_event_time_eviction(spark):
         assert got["c"][0] == "a" and got["c"][1] > 0  # inside horizon
         assert got["z"][1] == 0                       # unrelated
         assert got["b"][1] == 0, got                  # past horizon: evicted
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_match_and_absorb_cap_replay_lowest_id_and_sign():
+    """The pure per-bucket matcher, no Spark: the bucket stops growing
+    at the cap, a replayed doc_id neither matches itself nor burns a
+    cap slot, the lowest matching doc_id wins, and signed simhashes are
+    compared as unsigned 64-bit words."""
+    from selma_spark.spark.streaming import (
+        NEAR_DUP_MAX_BAND_STATE,
+        _match_and_absorb,
+    )
+
+    cap = NEAR_DUP_MAX_BAND_STATE
+    # seeded random words: no two lie within hamming 3 of each other
+    rng = random.Random(7)
+    batch = [(f"d{i:04d}", rng.getrandbits(64)) for i in range(cap + 5)]
+
+    # cap: every arrival gets a row, only the first `cap` are stored
+    doc_ids, sims = [], []
+    rows = _match_and_absorb(batch, doc_ids, sims, 2)
+    assert rows == [(d, 2, None) for d, _ in batch]
+    assert list(zip(doc_ids, sims)) == batch[:cap]
+
+    # replay: an already-stored doc_id is not its own match and takes
+    # no slot, so a distinct doc still fits the last slot
+    doc_ids = [d for d, _ in batch[:cap - 1]]
+    sims = [s for _, s in batch[:cap - 1]]
+    rows = _match_and_absorb([batch[3], batch[cap]], doc_ids, sims, 0)
+    assert rows == [(batch[3][0], 0, None), (batch[cap][0], 0, None)]
+    assert list(zip(doc_ids, sims)) == batch[:cap - 1] + [batch[cap]]
+
+    # lowest doc_id wins among several matches, whatever the stored order
+    rows = _match_and_absorb([("z", 0b1000)], ["m", "c", "x"],
+                             [0b1001, 0b1010, 0b1000], 1)
+    assert rows == [("z", 1, "c")]
+
+    # signed pairs go through the 64-bit mask: 1 vs -2**63 differ in 2
+    # bits (sign-magnitude bit_count would say 63); 0 vs -1 differ in
+    # all 64 (sign-magnitude would say 1)
+    assert _match_and_absorb([("b", -2**63)], ["a"], [1], 3) == [("b", 3, "a")]
+    assert _match_and_absorb([("b", -1)], ["a"], [0], 3) == [("b", 3, None)]
+
+
+def test_stream_running_event_totals_ships_the_package_from_any_cwd(spark):
+    """stream_running_event_totals ships selma_spark to the Python
+    workers itself: a driver whose cwd is outside the repo still runs
+    its pickled state function."""
+    import datetime
+
+    from test_spark_pipeline import REPO, _run_script
+
+    tmp = tempfile.mkdtemp(prefix="selma_cwd_rt_")
+    try:
+        t0 = datetime.datetime(2026, 1, 1)
+        spark.createDataFrame(
+            [(i, t0, i, "view" if i % 3 == 0 else "click", 1.5, None)
+             for i in range(30)],
+            "event_id bigint, ts timestamp, user_id bigint, "
+            "event_type string, value double, props string",
+        ).coalesce(1).write.parquet(f"{tmp}/in")
+        proc = _run_script(f"""
+import sys
+sys.path.insert(0, {str(REPO)!r})
+from pyspark.sql import SparkSession
+from selma_spark.spark.streaming import stream_running_event_totals
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.shuffle.partitions", "2").getOrCreate())
+q = stream_running_event_totals(
+    spark, sys.argv[1] + "/in", sys.argv[1] + "/ckpt", query_name="rt")
+assert q.awaitTermination(120)
+for r in spark.sql(
+        "SELECT event_type, max(n_events) AS n, max(value_sum) AS v "
+        "FROM rt GROUP BY 1 ORDER BY 1").collect():
+    print(r.event_type, r.n, r.v)
+""", tmp, tmp)
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        assert "click 20 30.0" in proc.stdout, proc.stdout
+        assert "view 10 15.0" in proc.stdout, proc.stdout
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -374,7 +478,7 @@ def test_stream_dedup_documents(spark):
             "append"
         ).parquet(inp)
         q = stream_dedup_documents(spark, inp, outp, ckpt)
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         out = spark.read.parquet(outp)
         texts = sorted(
             r["spans"][0]["text"] for r in out.collect()
