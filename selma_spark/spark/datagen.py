@@ -21,7 +21,7 @@ DuckDB — reproduces the same bytes):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SPAN_SCHEMA = (
@@ -31,9 +31,10 @@ DOC_SCHEMA = f"doc_id string, spans {SPAN_SCHEMA}"
 
 # Wrapper shapes keyed by doc_id % 6. Kept deliberately SQL-simple so the
 # DuckDB oracle can reproduce both the construction and the DEFAULT- and
-# RELAXED-sanitized outputs (see queries.py).
+# RELAXED-sanitized outputs (see queries.py). Reads ``_id``, a column of
+# the frame it runs on, never the select's own ``doc_id`` alias.
 _WRAPPERS_SQL_SPARK = """
-CASE CAST(doc_id AS BIGINT) % 6
+CASE _id % 6
   WHEN 0 THEN concat('<div>', text, '</div>')
   WHEN 1 THEN concat('<b>', text, '</b>')
   WHEN 2 THEN concat('<p class="x">', text, '</p>')
@@ -43,21 +44,27 @@ CASE CAST(doc_id AS BIGINT) % 6
 END
 """
 
+# The span projections are SQL text parsed in one selectExpr: the same
+# tree composed from Column calls costs one py4j round trip per node.
+_NO_SPANS = f"CAST(array() AS {SPAN_SCHEMA})"
+_MEDIA_SPAN = (
+    "named_struct('kind', 'media', 'text', CAST(NULL AS STRING),"
+    " 'media_ref', concat('media://', CAST(_id AS STRING), '/1'),"
+    " 'offset', CAST(1 AS INT))"
+)
 
-def _span(kind: Column, text: Column, media_ref: Column, offset: Column) -> Column:
-    return F.struct(
-        kind.alias("kind"),
-        text.alias("text"),
-        media_ref.alias("media_ref"),
-        offset.cast("int").alias("offset"),
+
+def _text_span(text: str, offset: str) -> str:
+    return (
+        f"named_struct('kind', 'text', 'text', {text},"
+        f" 'media_ref', CAST(NULL AS STRING), 'offset', CAST({offset} AS INT))"
     )
 
 
-# interleaved_spans projection cache (r6): same rationale as
-# _BENCH_SPAN_COLS — the expression tree is parameterless (unresolved
-# attrs + literals), rebuilt identically per call (~0.13 s of py4j
-# round-trips) by every span-corpus query in the catalog.
-_INTERLEAVED_COLS: tuple | None = None
+def _sql_str(s: str) -> str:
+    """Any Python string as a SQL string expression: UTF-8 bytes in a hex
+    literal, so quotes, backslashes and non-ASCII need no escaping."""
+    return f"CAST(X'{s.encode('utf-8').hex()}' AS STRING)"
 
 
 def interleaved_spans(documents: DataFrame) -> DataFrame:
@@ -68,37 +75,15 @@ def interleaved_spans(documents: DataFrame) -> DataFrame:
       span 1: media span 'media://{doc_id}/1'      iff doc_id %% 4 == 0
       span N: text span '<em>ok</em>'              iff doc_id %% 3 == 0
     """
-    global _INTERLEAVED_COLS
-    d = documents.select(
-        F.col("doc_id").cast("bigint").alias("_id"),
-        F.col("text"),
+    extra = _text_span("'<em>ok</em>'", "CASE WHEN _id % 4 = 0 THEN 2 ELSE 1 END")
+    spans = (
+        f"concat(array({_text_span(_WRAPPERS_SQL_SPARK, '0')}),"
+        f" CASE WHEN _id % 4 = 0 THEN array({_MEDIA_SPAN}) ELSE {_NO_SPANS} END,"
+        f" CASE WHEN _id % 3 = 0 THEN array({extra}) ELSE {_NO_SPANS} END)"
     )
-    if _INTERLEAVED_COLS is not None:
-        return d.select(*_INTERLEAVED_COLS)
-    null_s = F.lit(None).cast("string")
-    wrapped = F.expr(_WRAPPERS_SQL_SPARK)
-    has_media = (F.col("_id") % 4) == 0
-    has_extra = (F.col("_id") % 3) == 0
-
-    span0 = _span(F.lit("text"), wrapped, null_s, F.lit(0))
-    media = _span(
-        F.lit("media"),
-        null_s,
-        F.concat(F.lit("media://"), F.col("_id").cast("string"), F.lit("/1")),
-        F.lit(1),
-    )
-    extra_off = F.when(has_media, F.lit(2)).otherwise(F.lit(1))
-    extra = _span(F.lit("text"), F.lit("<em>ok</em>"), null_s, extra_off)
-
-    spans = F.concat(
-        F.array(span0),
-        F.when(has_media, F.array(media)).otherwise(F.array().cast(SPAN_SCHEMA)),
-        F.when(has_extra, F.array(extra)).otherwise(F.array().cast(SPAN_SCHEMA)),
-    )
-    _INTERLEAVED_COLS = (
-        F.col("_id").cast("string").alias("doc_id"), spans.alias("spans")
-    )
-    return d.select(*_INTERLEAVED_COLS)
+    return documents.selectExpr(
+        "CAST(doc_id AS BIGINT) AS _id", "text"
+    ).selectExpr("CAST(_id AS STRING) AS doc_id", f"{spans} AS spans")
 
 
 def golden_payloads() -> list[str]:
@@ -111,57 +96,32 @@ def golden_payloads() -> list[str]:
     return [p.replace("\0", "") for p in payloads]
 
 
-# bench_spans projection-column cache (r6): the spans expression tree is
-# ~0.25 s of driver-side py4j/expression building per call and depends
-# only on (skew_pct, skew_factor), never on the input frame — the
-# columns are unresolved attributes + literals (immutable JVM expression
-# objects, valid for reuse across plans and sessions in one process).
-# The frozen bench rebuilds the corpus per flagship rep, so without this
-# every rep re-pays identical plan construction.
-_BENCH_SPAN_COLS: dict = {}
-
-
-def _bench_span_cols(skew_pct: float, skew_factor: int):
-    key = (skew_pct, skew_factor)
-    cols = _BENCH_SPAN_COLS.get(key)
-    if cols is not None:
-        return cols
+def _bench_spans_sql(skew_pct: float, skew_factor: int) -> str:
     payloads = golden_payloads()
-    payload_arr = F.array(*[F.lit(p) for p in payloads])
-    depth = (F.col("_id") % 9).cast("int")
-    nest_open = F.expr("repeat('<span>', CAST(_id % 9 AS INT))")
-    nest_close = F.expr("repeat('</span>', CAST(_id % 9 AS INT))")
-    payload = F.element_at(payload_arr, (F.col("_id") % len(payloads) + 1).cast("int"))
-    base_html = F.concat(
-        nest_open,
-        F.lit("<p>"), F.col("text"), F.lit("</p>"),
-        payload,
-        nest_close,
+    payload = (
+        f"element_at(array({', '.join(_sql_str(p) for p in payloads)}),"
+        f" CAST(_id % {len(payloads)} + 1 AS INT))"
+    )
+    depth = "CAST(_id % 9 AS INT)"
+    base_html = (
+        f"concat(repeat('<span>', {depth}), '<p>', text, '</p>', {payload},"
+        f" repeat('</span>', {depth}))"
     )
     skew_mod = max(2, int(round(1 / skew_pct)))
-    is_skewed = (F.col("_id") % skew_mod) == 0
-    html = F.when(
-        is_skewed, F.concat_ws("<br>", F.array_repeat(base_html, skew_factor))
-    ).otherwise(base_html)
-
-    null_s = F.lit(None).cast("string")
-    span0 = _span(F.lit("text"), html, null_s, F.lit(0))
-    media = _span(
-        F.lit("media"), null_s,
-        F.concat(F.lit("media://"), F.col("_id").cast("string"), F.lit("/1")),
-        F.lit(1),
+    html = (
+        f"CASE WHEN _id % {skew_mod} = 0"
+        f" THEN concat_ws('<br>', array_repeat({base_html}, {skew_factor}))"
+        f" ELSE {base_html} END"
     )
-    span2 = _span(F.lit("text"), F.concat(F.lit("<b>tail "), depth.cast("string"), F.lit("</b>")), null_s,
-                  F.when((F.col("_id") % 2) == 0, F.lit(2)).otherwise(F.lit(1)))
-    spans = F.concat(
-        F.array(span0),
-        F.when((F.col("_id") % 2) == 0, F.array(media))
-         .otherwise(F.array().cast(SPAN_SCHEMA)),
-        F.array(span2),
+    tail = _text_span(
+        f"concat('<b>tail ', CAST({depth} AS STRING), '</b>')",
+        "CASE WHEN _id % 2 = 0 THEN 2 ELSE 1 END",
     )
-    cols = (F.col("_id").cast("string").alias("doc_id"), spans.alias("spans"))
-    _BENCH_SPAN_COLS[key] = cols
-    return cols
+    return (
+        f"concat(array({_text_span(html, '0')}),"
+        f" CASE WHEN _id % 2 = 0 THEN array({_MEDIA_SPAN}) ELSE {_NO_SPANS} END,"
+        f" array({tail}))"
+    )
 
 
 def bench_spans(
@@ -189,5 +149,7 @@ def bench_spans(
         )
     if n_partitions:
         d = d.repartition(n_partitions)
-    doc_id_col, spans_col = _bench_span_cols(skew_pct, skew_factor)
-    return d.select(doc_id_col, spans_col)
+    return d.selectExpr(
+        "CAST(_id AS STRING) AS doc_id",
+        f"{_bench_spans_sql(skew_pct, skew_factor)} AS spans",
+    )

@@ -449,32 +449,18 @@ def rewrite_documents_dedup(
     )
 
 
-# rewritten_text projection cache (r6): three HOF lambda conversions of
-# py4j work per call, parameterless — same reuse argument as the datagen
-# column caches (immutable expression objects).
-_REWRITTEN_TEXT_COL = None
-
-
 def rewritten_text(docs: DataFrame, config="default") -> DataFrame:
     """Rewrite + concatenate the text spans per document (offset order).
     Returns (doc_id, out_text) — the comparison surface the SQL oracle
     can mirror."""
-    global _REWRITTEN_TEXT_COL
-    out = rewrite_documents(docs, config)
-    if _REWRITTEN_TEXT_COL is None:
-        _REWRITTEN_TEXT_COL = F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.filter("spans", lambda s: s["kind"] == F.lit("text")),
-                    lambda a, b: F.when(a["offset"] < b["offset"], -1)
-                    .when(a["offset"] > b["offset"], 1)
-                    .otherwise(0),
-                ),
-                lambda s: s["text"],
-            ),
-            "",
-        ).alias("out_text")
-    return out.select("doc_id", _REWRITTEN_TEXT_COL)
+    return rewrite_documents(docs, config).selectExpr(
+        "doc_id",
+        """array_join(transform(array_sort(
+             filter(spans, s -> s.kind = 'text'),
+             (a, b) -> CASE WHEN a.offset < b.offset THEN -1
+                            WHEN a.offset > b.offset THEN 1 ELSE 0 END),
+           s -> s.text), '') AS out_text""",
+    )
 
 
 # --- byte-weighted skew rebalancing ---------------------------------------

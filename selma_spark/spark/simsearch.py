@@ -4,7 +4,7 @@ array<float>, label).
 Brute-force cosine top-k is the exactness baseline (one narrow pass +
 a small top-k); sign-LSH bucketing is the scale path (hash-partitioned
 candidate generation so the 100TB case never does an all-pairs join).
-Dot products run through ``F.aggregate``/``F.zip_with`` — JVM-side
+Dot products run through SQL ``aggregate``/``zip_with`` — JVM-side
 higher-order functions, no Python in the loop."""
 
 from __future__ import annotations
@@ -13,25 +13,33 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+# The dot product, norm and cosine are SQL fragments for F.expr: one
+# parsed string is one py4j call, where the same higher-order-function
+# tree composed from Column calls costs one round trip per node. Each
+# definition exists once; every cosine in this module is built from them.
+def _dot(a: str, b: str) -> str:
+    """Left fold of the element-wise products, each element CAST to DOUBLE."""
+    return (
+        f"aggregate(zip_with({a}, {b}, "
+        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
+        "(acc, v) -> acc + v)"
     )
 
 
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(
-            a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
-        )
+def _norm(a: str) -> str:
+    return (
+        f"sqrt(aggregate({a}, 0.0D, "
+        "(acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
     )
+
+
+def _cosine(a: str, b: str) -> str:
+    return f"{_dot(a, b)} / ({_norm(a)} * {_norm(b)})"
 
 
 def embedding_norms(embeddings: DataFrame) -> DataFrame:
-    return embeddings.select(
-        "vec_id", F.round(_norm("embedding"), 4).alias("norm")
+    return embeddings.selectExpr(
+        "vec_id", f"round({_norm('embedding')}, 4) AS norm"
     ).orderBy("vec_id")
 
 
@@ -57,21 +65,9 @@ def topk_cosine(
     arr = "array(" + ",".join(
         _dlit(float(x), f"query vector index {i}") for i, x in enumerate(query)
     ) + ")"
-    dot = (
-        f"aggregate(zip_with(embedding, {arr}, "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
-        "(acc, v) -> acc + v)"
+    df = embeddings.selectExpr(
+        "vec_id", f"round({_cosine('embedding', arr)}, 4) AS cosine"
     )
-    ne = (
-        "sqrt(aggregate(embedding, 0.0D, "
-        "(acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-    )
-    nq = (
-        f"sqrt(aggregate({arr}, 0.0D, "
-        "(acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-    )
-    sim = F.expr(f"round({dot} / ({ne} * {nq}), 4)")
-    df = embeddings.select("vec_id", sim.alias("cosine"))
     if exclude_vec_id is not None:
         df = df.where(F.col("vec_id") != exclude_vec_id)
     return df.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(k)
@@ -112,10 +108,6 @@ def topk_cosine_lsh(
         ).otherwise(F.lit(0))
     candidates = embeddings.where(bucket == qbucket)
     return topk_cosine(candidates, query, k, exclude_vec_id=exclude_vec_id)
-
-
-def _cosine(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def ivf_assign(embeddings: DataFrame, n_centroids: int = 16) -> DataFrame:
@@ -171,9 +163,7 @@ def topk_cosine_ivf(
     # depend on summation-order ulps near centroid-distance ties
     probe = (
         q.crossJoin(F.broadcast(cents))
-        .select(
-            "cid", F.round(_cosine(F.col("qemb"), F.col("cemb")), 9).alias("_cos")
-        )
+        .selectExpr("cid", f"round({_cosine('qemb', 'cemb')}, 9) AS _cos")
         .orderBy(F.desc("_cos"), "cid")
         .limit(nprobe)
         .select("cid")
@@ -184,10 +174,11 @@ def topk_cosine_ivf(
         .where(F.col("vec_id") != query_vec_id)
         .join(embeddings, "vec_id")
     )
-    sim = _cosine(F.col("embedding"), F.col("qemb"))
     return (
         cands.crossJoin(F.broadcast(q))
-        .select("vec_id", F.round(sim, 4).alias("cosine"))
+        .selectExpr(
+            "vec_id", f"round({_cosine('embedding', 'qemb')}, 4) AS cosine"
+        )
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
     )
@@ -221,10 +212,8 @@ def _assign_scored(embeddings: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, cid, _cos) against an arbitrary centroid table — the
     broadcast-join + 9-decimal-rounded cosine shared by ivf_assign and
     the k-means refinement rounds."""
-    return embeddings.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "cid",
-        F.round(_cosine(F.col("embedding"), F.col("cemb")), 9).alias("_cos"),
+    return embeddings.crossJoin(F.broadcast(cents)).selectExpr(
+        "vec_id", "cid", f"round({_cosine('embedding', 'cemb')}, 9) AS _cos"
     )
 
 
@@ -243,39 +232,6 @@ def _argmax_assign(scored: DataFrame, with_cosine: bool = False) -> DataFrame:
 
 
 KMEANS_ROUNDS = 5
-
-
-# parameterless column-tree caches (pass-4 pattern: pure functions of
-# the cache key, immutable JVM expression objects, reusable across
-# plans/sessions in one process). The norm tree costs ~23ms of py4j
-# per build; the per-dim mean-agg trees ~0.4s — both were rebuilt per
-# Lloyd round before pass 7.
-_NORM_EMB_COL = None
-_MEANS_COLS: dict = {}
-
-
-def _norm_embedding_col():
-    global _NORM_EMB_COL
-    if _NORM_EMB_COL is None:
-        _NORM_EMB_COL = _norm("embedding")
-    return _NORM_EMB_COL
-
-
-def _means_cols(dim: int):
-    cols = _MEANS_COLS.get(dim)
-    if cols is None:
-        aggs = tuple(
-            F.sum(F.element_at("embedding", i + 1).cast("double")).alias(
-                f"_s{i}"
-            )
-            for i in range(dim)
-        )
-        sels = tuple(
-            F.round(F.col(f"_s{i}") / F.col("_n"), 6).alias(f"_c{i}")
-            for i in range(dim)
-        )
-        cols = _MEANS_COLS[dim] = (F.count("*").alias("_n"), aggs, sels)
-    return cols
 
 
 def _collect_centroids(embeddings: DataFrame, n_centroids: int):
@@ -335,14 +291,9 @@ def _lit_best_struct(cents_rows):
         what = f"component of centroid {cid}"
         arr = "array(" + ",".join(_dlit(v, what) for v in vec) + ")"
         cn = _dlit(math.sqrt(acc), f"norm of centroid {cid}")
-        dot = (
-            f"aggregate(zip_with(embedding, {arr}, "
-            "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
-            "(acc, v) -> acc + v)"
-        )
+        dot = _dot("embedding", arr)
         parts.append(
-            f"named_struct('c', round({dot} / (_ne * {cn}), 9),"
-            f" 'nc', {-cid})"
+            f"named_struct('c', round({dot} / (_ne * {cn}), 9), 'nc', {-cid})"
         )
     return F.expr("array_max(array(" + ",".join(parts) + "))")
 
@@ -356,7 +307,7 @@ def _lit_assign(
     """(vec_id, cid[, cosine][, embedding]) against a driver-resident
     centroid table — one narrow projection (argmax inline per row), zero
     shuffles. Values identical to _argmax_assign(_assign_scored(...))."""
-    base = embeddings.withColumn("_ne", _norm_embedding_col()).withColumn(
+    base = embeddings.withColumn("_ne", F.expr(_norm("embedding"))).withColumn(
         "_m", _lit_best_struct(cents_rows)
     )
     cols = ["vec_id", (-F.col("_m.nc")).cast("bigint").alias("cid")]
@@ -414,14 +365,24 @@ def kmeans_refine(
         # it, same as the cross-engine oracle contract always has).
         # division AND rounding stay Spark-side: F.round is HALF_UP
         # while Python's round() is half-even — the engines must
-        # agree at .5e-6 boundaries. Column trees cached per dim
-        # (pass 7): they are pure functions of dim, and rebuilding
-        # them cost ~0.4s of py4j per round.
-        count_col, agg_cols, sel_cols = _means_cols(dim)
+        # agree at .5e-6 boundaries. The 2 x dim expressions are SQL
+        # text: composed from Column calls they cost ~0.7 s of py4j per
+        # round, parsed ~0.1 s.
         means = (
             assigned.groupBy("cid")
-            .agg(count_col, *agg_cols)
-            .select("cid", *sel_cols)
+            .agg(
+                F.expr("count(*) AS _n"),
+                *[
+                    F.expr(
+                        f"sum(CAST(element_at(embedding, {i + 1}) AS DOUBLE))"
+                        f" AS _s{i}"
+                    )
+                    for i in range(dim)
+                ],
+            )
+            .selectExpr(
+                "cid", *[f"round(_s{i} / _n, 6) AS _c{i}" for i in range(dim)]
+            )
             .collect()
         )
         rows = sorted(
@@ -455,9 +416,7 @@ def topk_cosine_ivf_refined(
     )
     probe = (
         q.crossJoin(F.broadcast(cents))
-        .select(
-            "cid", F.round(_cosine(F.col("qemb"), F.col("cemb")), 9).alias("_cos")
-        )
+        .selectExpr("cid", f"round({_cosine('qemb', 'cemb')}, 9) AS _cos")
         .orderBy(F.desc("_cos"), "cid")
         .limit(nprobe)
         .select("cid")
@@ -469,10 +428,11 @@ def topk_cosine_ivf_refined(
     cands = assign.join(F.broadcast(probe), "cid").where(
         F.col("vec_id") != query_vec_id
     )
-    sim = _cosine(F.col("embedding"), F.col("qemb"))
     return (
         cands.crossJoin(F.broadcast(q))
-        .select("vec_id", F.round(sim, 4).alias("cosine"))
+        .selectExpr(
+            "vec_id", f"round({_cosine('embedding', 'qemb')}, 4) AS cosine"
+        )
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
     )
@@ -654,12 +614,10 @@ def near_dup_cosine(
     # value, so the rounded cosine is bit-identical)
     e = embeddings.select(
         _bucket_expr(n_components).alias("bucket"), "vec_id", "embedding",
-        _norm("embedding").alias("_n"),
+        F.expr(_norm("embedding")).alias("_n"),
     )
     a, b = e.alias("a"), e.alias("b")
-    sim = _dot(F.col("a.embedding"), F.col("b.embedding")) / (
-        F.col("a._n") * F.col("b._n")
-    )
+    sim = F.expr(f"{_dot('a.embedding', 'b.embedding')} / (a._n * b._n)")
     return (
         a.join(
             b,

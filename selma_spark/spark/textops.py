@@ -77,47 +77,27 @@ def quality_scores(documents: DataFrame) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def _shingles(toks, k=3):
-    # word k-shingles via sequence+transform (stays in codegen)
-    return F.when(
-        F.size(toks) >= k,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - k + 1),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(toks, i),
-                F.element_at(toks, i + 1),
-                F.element_at(toks, i + 2),
-            ),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
+# Word 3-shingles of ``text`` as SQL text, parsed by F.expr/selectExpr:
+# sequence+transform stays in codegen, and one parsed string is one py4j
+# call where the same tree composed from Column calls costs one per node.
+_SHINGLES_SQL = """CASE WHEN size(split(text, ' ')) >= 3
+  THEN transform(sequence(1, size(split(text, ' ')) - 3 + 1),
+    i -> concat_ws(' ', element_at(split(text, ' '), i),
+      element_at(split(text, ' '), i + 1), element_at(split(text, ' '), i + 2)))
+  ELSE array(concat_ws(' ', split(text, ' '))) END"""
 
 
-def _salted(salt):
-    # NB: keep the lambda single-arg — F.transform treats a two-arg
-    # lambda as (element, index)
-    return lambda s: F.md5(F.concat(F.lit(salt), s))
-
-
-# minhash/shingle projection caches (r6): these column trees are
-# parameterless (unresolved attrs + literals; HOF lambda conversion is
-# ~0.1 s of py4j per build) and were rebuilt identically on every call —
-# inside the timed region of every near-dup/minhash query. Expression
-# objects are immutable and safe to reuse across plans and sessions.
-_MINHASH_COLS: list | None = None
-_SIG_COLS: tuple | None = None
+def _minhash_sql(sh: str) -> list[str]:
+    """mh0..mh3 over the shingle array ``sh``: min of md5(salt || shingle)."""
+    return [
+        f"array_min(transform({sh}, s -> md5(concat('{salt}', s)))) AS mh{i}"
+        for i, salt in enumerate(MINHASH_SALTS)
+    ]
 
 
 def _minhash_df(documents: DataFrame) -> DataFrame:
     """(doc_id, mh0..mh3) without the presentation sort."""
-    global _MINHASH_COLS
-    if _MINHASH_COLS is None:
-        sh = _shingles(tokens_col())
-        _MINHASH_COLS = [
-            F.array_min(F.transform(sh, _salted(salt))).alias(f"mh{i}")
-            for i, salt in enumerate(MINHASH_SALTS)
-        ]
-    return documents.select("doc_id", *_MINHASH_COLS)
+    return documents.selectExpr("doc_id", *_minhash_sql(_SHINGLES_SQL))
 
 
 def _lsh_signature_frame(
@@ -135,20 +115,11 @@ def _lsh_signature_frame(
     driver GC when the result goes out of scope — CacheManager-registered
     persists live for the whole session. (At petascale you'd materialize
     signatures to a table once instead — same idea, durable form.)"""
-    global _SIG_COLS
-    if _SIG_COLS is None:
-        sh = F.array_distinct(_shingles(tokens_col()))
-        _SIG_COLS = (
-            sh.alias("sh"),
-            [
-                F.array_min(F.transform("sh", _salted(salt))).alias(f"mh{i}")
-                for i, salt in enumerate(MINHASH_SALTS)
-            ],
-        )
-    sh_col, mh_cols = _SIG_COLS
-    base = documents.select("doc_id", sh_col)
-    keep = (["sh"] if with_shingles else []) + mh_cols
-    return base.select("doc_id", *keep).localCheckpoint()
+    base = documents.selectExpr(
+        "doc_id", f"array_distinct({_SHINGLES_SQL}) AS sh"
+    )
+    keep = (["sh"] if with_shingles else []) + _minhash_sql("sh")
+    return base.selectExpr("doc_id", *keep).localCheckpoint()
 
 
 def minhash_signatures(documents: DataFrame) -> DataFrame:
@@ -509,10 +480,8 @@ def simhash_near_dup(
 
 def ngram_jaccard(documents: DataFrame, doc_a: int, doc_b: int) -> DataFrame:
     """Jaccard similarity of two documents' word-3-gram sets."""
-    toks = tokens_col()
-    sh = F.array_distinct(_shingles(toks))
-    d = documents.where(F.col("doc_id").isin(doc_a, doc_b)).select(
-        "doc_id", sh.alias("sh")
+    d = documents.where(F.col("doc_id").isin(doc_a, doc_b)).selectExpr(
+        "doc_id", f"array_distinct({_SHINGLES_SQL}) AS sh"
     )
     a = d.where(F.col("doc_id") == doc_a).select(F.col("sh").alias("sa"))
     b = d.where(F.col("doc_id") == doc_b).select(F.col("sh").alias("sb"))

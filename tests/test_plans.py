@@ -198,6 +198,25 @@ def test_kmeans_refined_assign_is_narrow_inline_argmax(spark):
     assert "Exchange rangepartitioning" in plan, plan
 
 
+def _column_dot(a, b):
+    """The Column-call dot product _lit_best_struct and topk_cosine were
+    built from before they became SQL text; kept here as the independent
+    reference for the two differentials below."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _column_norm(a):
+    return F.sqrt(
+        F.aggregate(
+            a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
+        )
+    )
+
+
 def test_lit_best_struct_expr_matches_column_tree(spark):
     """r6 pass 7: _lit_best_struct is built as ONE parsed SQL string
     (~60ms of py4j per centroid saved — ~6s per kmeans_refined_assign
@@ -222,7 +241,7 @@ def test_lit_best_struct_expr_matches_column_tree(spark):
             structs.append(
                 F.struct(
                     F.round(
-                        simsearch._dot(F.col("embedding"), clit)
+                        _column_dot(F.col("embedding"), clit)
                         / (ne_col * F.lit(cn)),
                         9,
                     ).alias("c"),
@@ -231,15 +250,17 @@ def test_lit_best_struct_expr_matches_column_tree(spark):
             )
         return F.array_max(F.array(*structs))
 
-    base = emb.withColumn("_ne", simsearch._norm("embedding"))
+    base = emb.withColumn("_ne", _column_norm(F.col("embedding")))
     old = (
         base.withColumn("_m", column_tree(rows, F.col("_ne")))
         .select("vec_id", "_m")
         .orderBy("vec_id")
         .collect()
     )
+    # the production side: _lit_assign's SQL norm column, then the struct
     new = (
-        base.withColumn("_m", simsearch._lit_best_struct(rows))
+        emb.withColumn("_ne", F.expr(simsearch._norm("embedding")))
+        .withColumn("_m", simsearch._lit_best_struct(rows))
         .select("vec_id", "_m")
         .orderBy("vec_id")
         .collect()
@@ -262,8 +283,8 @@ def test_topk_cosine_expr_matches_column_tree(spark):
     emb = q.load(spark, SF_DIR, "embeddings")
     qv = simsearch.query_vector(spark, emb, 0)
     qlit = F.array(*[F.lit(float(x)) for x in qv])
-    old_sim = simsearch._dot(F.col("embedding"), qlit) / (
-        simsearch._norm(F.col("embedding")) * simsearch._norm(qlit)
+    old_sim = _column_dot(F.col("embedding"), qlit) / (
+        _column_norm(F.col("embedding")) * _column_norm(qlit)
     )
     old = (
         emb.select("vec_id", F.round(old_sim, 4).alias("cosine"))

@@ -1,0 +1,139 @@
+"""Structural guards over the Spark layer (selma_spark/spark/*.py).
+
+* No module holds a Column or DataFrame: expression trees are built per
+  call (the costly higher-order-function ones as SQL text), so nothing
+  at module level can outlive the session or JVM gateway it came from.
+* Every function that hands Python code to the executors (mapInArrow,
+  mapInPandas, applyInPandas*, udf.register) also calls ensure_shipped,
+  so workers can import the package from any driver cwd. Checked on the
+  source, so it covers entry points no Spark test reaches.
+"""
+
+import ast
+import importlib
+import pkgutil
+from pathlib import Path
+
+import pytest
+from pyspark.sql import Column, DataFrame, SparkSession
+
+import selma_spark.spark
+from selma_spark.spark import datagen, pipeline, simsearch, textops
+
+SF_DIR = "/root/testdata/sf0.001"
+SPARK_DIR = Path(selma_spark.spark.__file__).resolve().parent
+
+
+@pytest.fixture(scope="session")
+def spark():
+    s = (
+        SparkSession.builder.master("local[4]")
+        .appName("selma-spark-layer-tests")
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    yield s
+
+
+def _spark_objects(value, where, depth=0):
+    """(where, type name) for every Column/DataFrame in ``value``, looking
+    into dict/list/tuple/set values up to three levels deep."""
+    if isinstance(value, (Column, DataFrame)):
+        return [(where, type(value).__name__)]
+    if depth >= 3:
+        return []
+    if isinstance(value, dict):
+        items = [(f"{where}[{k!r}]", v) for k, v in value.items()]
+    elif isinstance(value, (list, tuple, set, frozenset)):
+        items = [(f"{where}[{i}]", v) for i, v in enumerate(value)]
+    else:
+        return []
+    found = []
+    for w, v in items:
+        found += _spark_objects(v, w, depth + 1)
+    return found
+
+
+def test_no_module_level_column_or_dataframe_state(spark):
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    # every builder that once kept its expression tree in a module global
+    spans = datagen.interleaved_spans(docs)
+    datagen.bench_spans(docs)
+    datagen.bench_spans(docs, skew_pct=0.25, skew_factor=3)
+    pipeline.rewritten_text(spans, "relaxed")
+    textops.minhash_signatures(docs)
+    textops.near_dup_pairs(docs)  # builds the checkpointed signature frame
+    textops.ngram_jaccard(docs, 0, 1)
+    simsearch.embedding_norms(emb)
+    simsearch.near_dup_cosine(emb)
+    simsearch.kmeans_refined_assign(emb, rounds=1)
+
+    names = [m.name for m in pkgutil.iter_modules([str(SPARK_DIR)])]
+    assert {"datagen", "pipeline", "simsearch", "textops"} <= set(names)
+    held = []
+    for name in names:
+        mod = importlib.import_module(f"selma_spark.spark.{name}")
+        for attr, value in vars(mod).items():
+            held += _spark_objects(value, f"{name}.{attr}")
+    assert held == []
+
+
+_UDF_METHODS = ("mapInArrow", "mapInPandas")
+
+
+def _own_calls(fn):
+    """Calls in ``fn``'s body, not counting nested function bodies."""
+    stack, calls = list(fn.body), []
+    while stack:
+        node = stack.pop()
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            continue
+        if isinstance(node, ast.Call):
+            calls.append(node.func)
+        stack.extend(ast.iter_child_nodes(node))
+    return calls
+
+
+def _ships_python(func) -> bool:
+    if not isinstance(func, ast.Attribute):
+        return False
+    if func.attr in _UDF_METHODS or func.attr.startswith("applyInPandas"):
+        return True
+    return (
+        func.attr == "register"
+        and isinstance(func.value, ast.Attribute)
+        and func.value.attr == "udf"
+    )
+
+
+def _called_name(func) -> str | None:
+    if isinstance(func, ast.Name):
+        return func.id
+    if isinstance(func, ast.Attribute):
+        return func.attr
+    return None
+
+
+def test_every_python_udf_entry_point_calls_ensure_shipped():
+    entry_points, missing = [], []
+    for path in sorted(SPARK_DIR.glob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        # the module body itself (nested defs excluded) counts as a unit
+        units = [ast.Module(body=tree.body, type_ignores=[])]
+        units += [
+            n for n in ast.walk(tree)
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for unit in units:
+            calls = _own_calls(unit)
+            if not any(_ships_python(c) for c in calls):
+                continue
+            where = f"{path.name}:{getattr(unit, 'name', '<module>')}"
+            entry_points.append(where)
+            if "ensure_shipped" not in {_called_name(c) for c in calls}:
+                missing.append(where)
+    # the scan must see the real entry points, or it proves nothing
+    assert len(entry_points) >= 15, entry_points
+    assert missing == []

@@ -94,6 +94,47 @@ def test_media_spans_byte_identical_order_preserved(spark):
     assert after.exceptAll(before).count() == 0
 
 
+def _expected_interleaved(doc_id, text):
+    """interleaved_spans' documented layout, built in Python."""
+    wrap = (
+        ("<div>", "</div>"), ("<b>", "</b>"), ('<p class="x">', "</p>"),
+        ("", "<script>alert(1)</script>"),
+        ('<a href="http://example.com/">', "</a>"),
+        ("<span><strong>", "</strong></span>"),
+    )[doc_id % 6]
+    spans = [("text", wrap[0] + text + wrap[1], None, 0)]
+    if doc_id % 4 == 0:
+        spans.append(("media", None, f"media://{doc_id}/1", 1))
+    if doc_id % 3 == 0:
+        spans.append(("text", "<em>ok</em>", None, len(spans)))
+    return (str(doc_id), spans)
+
+
+def test_interleaved_spans_needs_no_lateral_alias(spark):
+    """The generator's SQL reads only columns of the frame it runs on: with
+    Spark's implicit lateral column alias resolution off, it builds the
+    same rows (it once read its own ``doc_id`` alias and failed there
+    with UNRESOLVED_COLUMN)."""
+    raw = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    expected = sorted(
+        _expected_interleaved(r["doc_id"], r["text"])
+        for r in raw.select("doc_id", "text").collect()
+    )
+    key = "spark.sql.lateralColumnAlias.enableImplicitResolution"
+    prev = spark.conf.get(key)
+    try:
+        for value in ("true", "false"):
+            spark.conf.set(key, value)
+            got = sorted(
+                (r["doc_id"], [tuple(s) for s in r["spans"]])
+                for r in interleaved_spans(raw).collect()
+            )
+            assert got == expected, value
+    finally:
+        spark.conf.set(key, prev)
+    assert len(expected) == raw.count() > 0
+
+
 def test_bucketing_modes(spark):
     docs = interleaved_spans(spark.read.parquet(f"{SF_DIR}/documents.parquet"))
     h = bucketed(docs, 8)
