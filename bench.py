@@ -495,7 +495,7 @@ def main():
         "pricing_summary",
         "revenue_by_nation",
     ):
-        def query_row(fn=q.all_queries()[name]):
+        def query_row(fn=q.build_queries()[name]):
             # a failed query stops the session; the next one rebuilds it
             spark = get_spark(cpus=CPUS, app_name="selma-bench-queries")
             # min-of-2 like every other row (VERDICT r3 #4): these are

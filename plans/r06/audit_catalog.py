@@ -1,5 +1,5 @@
-"""r6 catalog-wide plan audit: one row per catalog entry (50 driver +
-folded) with the plan signals that matter at 100 TB — Exchange count,
+"""r6 catalog-wide plan audit: one row per catalog entry (the 50
+build_queries() entries) with the plan signals that matter at 100 TB — Exchange count,
 join strategies, Python-eval nodes, single-partition exchanges, nested
 loops. Output: plans/r06/catalog_audit.tsv (+ stderr progress).
 
@@ -35,7 +35,7 @@ spark = (
 spark.sparkContext.setLogLevel("ERROR")
 
 rows = []
-for name, fn in q.all_queries().items():
+for name, fn in q.build_queries().items():
     try:
         df = fn(spark, SF_DIR)
         buf = io.StringIO()

@@ -48,9 +48,7 @@ cap("kmeans_refined_assign", simsearch.kmeans_refined_assign(emb, rounds=1))
 cap("embedding_topk_ivf_refined",
     simsearch.topk_cosine_ivf_refined(emb, rounds=1))
 cap("simhash", textops.simhash64(docs))
-cap("simhash128", textops.simhash128(docs))
 cap("simhash_near_dup", textops.simhash_near_dup(docs))
-cap("simhash_near_dup128", textops.simhash_near_dup128(docs))
 cap("near_dup_verified", textops.near_dup_verified(docs))
 cap("near_dup_pairs", textops.near_dup_pairs(docs))
 cap("near_dup_clusters", textops.near_dup_clusters(docs))

@@ -163,16 +163,6 @@ class LinkCollector:
             self.hrefs.append(href)
 
 
-class ExternalLinkCollector(LinkCollector):
-    """Collects absolute http(s) links, skipping self-referencing anchor
-    decorations — exercises the reference's attribute-operator +
-    ``:not()`` selector surface end-to-end (reference
-    test/selma_selector_test.rb:18-44; README.md ``a[href^=...]``
-    examples) through the distributed path."""
-
-    SELECTOR = Selector(match_element='a[href^="http"]:not([class="anchor"])')
-
-
 class ScopedTextCollector:
     """Collects text chunks within <div> scopes while IGNORING text
     inside <b> subtrees — the match_text_within + ignore_text_within
@@ -197,25 +187,6 @@ class ScopedTextCollector:
 
     def handle_text_chunk(self, chunk):
         self.chunks.append(chunk.to_s())
-
-
-class ParaAnnotator:
-    """Exercises the four content-insertion surfaces plus as_: :text
-    escaping on one element (reference element.rs before/after/prepend/
-    append; test/selma_rewriter_match_element_test.rb): every <p> gets
-    an escaped <note> marker before it, "[" prepended, "]" appended and
-    ")" after it."""
-
-    SELECTOR = Selector(match_element="p")
-
-    def selector(self):
-        return self.SELECTOR
-
-    def handle_element(self, element):
-        element.before("<note>", as_="text")
-        element.prepend("[", as_="html")
-        element.append("]", as_="html")
-        element.after(")", as_="html")
 
 
 class HrefToGopher:

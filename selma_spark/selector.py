@@ -20,7 +20,6 @@ from __future__ import annotations
 import re
 
 _IDENT_RE = re.compile(r"[-\w -￿\\]+")
-_WS_RE = re.compile(r"\s+")
 
 
 class SelectorError(ValueError):

@@ -3,8 +3,9 @@
 Media spans are opaque references (``media_ref``) standing in for binary
 image/audio/video payloads. The Spark-side plumbing — schema, batch
 shape, partitioning, arrow-vectorized UDF signatures — is real and
-tested; the actual byte decoding is STUBBED (the container has no
-image/audio libraries) behind a deterministic fake featurizer.
+tested. Image payloads are synthesized per ref (no image assets ship
+with the package) and then decoded and resized for real by a
+dependency-free BMP decoder.
 
 At 100 TB the binary payloads would live in a ``content: binary`` column
 (or object-store refs exactly like ``media_ref``); the mapInPandas batch
@@ -17,11 +18,6 @@ import hashlib
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-MEDIA_FEATURE_SCHEMA = (
-    "media_ref string, mime string, width int, height int, "
-    "feature array<float>"
-)
 
 
 def media_manifest(docs: DataFrame) -> DataFrame:
@@ -87,6 +83,9 @@ def decode_media_bytes(payload: bytes) -> tuple[int, int, list]:
     return width, h, rows
 
 
+_HEX = "0123456789abcdef"
+
+
 def synth_bmp(media_ref: str) -> bytes:
     """Deterministic tiny 24-bit BMP for a media ref — the stand-in for
     fetching the real payload from the object store (the container ships
@@ -125,109 +124,6 @@ def synth_bmp(media_ref: str) -> bytes:
     return header + bytes(px)
 
 
-def fake_featurize(media_ref: str, dim: int = 8) -> list[float]:
-    """Deterministic stand-in feature vector: bytes of md5(media_ref)
-    scaled to [0,1). Keeps the batch shape identical to a real encoder;
-    md5 (not sha1) so the value oracle is expressible in ANSI SQL
-    (hex-digit arithmetic over DuckDB's md5)."""
-    h = hashlib.md5(media_ref.encode("utf-8")).digest()
-    return [b / 256.0 for b in h[:dim]]
-
-
-def media_features(docs: DataFrame, dim: int = 8) -> DataFrame:
-    """Arrow-vectorized feature extraction over media spans: explode is
-    JVM-side; the UDF sees batches of refs and returns fixed-dim vectors.
-    Swap fake_featurize for a real decoder without touching the plan."""
-    refs = (
-        docs.select(F.explode("spans").alias("s"))
-        .where(F.col("s.kind") == "media")
-        .select(F.col("s.media_ref").alias("media_ref"))
-    )
-
-    from .shipping import ensure_shipped
-
-    ensure_shipped(docs.sparkSession)
-
-    def fn(iterator):
-        for pdf in iterator:
-            feats = [fake_featurize(r, dim) for r in pdf["media_ref"]]
-            mimes, widths, heights = [], [], []
-            for f in feats:
-                mimes.append("image/jpeg" if f[0] < 0.5 else "audio/wav")
-                widths.append(int(f[1] * 1024) + 1)
-                heights.append(int(f[2] * 1024) + 1)
-            out = pdf.copy()
-            out["mime"] = mimes
-            out["width"] = widths
-            out["height"] = heights
-            out["feature"] = feats
-            yield out
-
-    return refs.mapInPandas(fn, schema=MEDIA_FEATURE_SCHEMA)
-
-
-_HEX = "0123456789abcdef"
-
-
-def _fake_dims(media_ref: str) -> tuple[int, int]:
-    """Deterministic stand-in for decoded image dimensions: md5-hex
-    arithmetic, reproducible in ANSI SQL for the oracle."""
-    h = hashlib.md5(media_ref.encode("utf-8")).hexdigest()
-    return 64 + _HEX.index(h[0]) * 64, 64 + _HEX.index(h[1]) * 64
-
-
-def _fake_duration_s(media_ref: str) -> int:
-    h = hashlib.md5(media_ref.encode("utf-8")).hexdigest()
-    return 5 + _HEX.index(h[0]) * 2  # 5..35 seconds
-
-
-RESIZE_SCHEMA = (
-    "media_ref string, width int, height int, new_width int, "
-    "new_height int, resized binary"
-)
-
-
-def resize_images(docs: DataFrame, max_px: int = 256) -> DataFrame:
-    """Resize plumbing for image media spans: aspect-preserving fit into
-    max_px (integer math, oracle-checkable); the pixel resample itself is
-    stubbed — `resized` carries a deterministic fake payload with the
-    real binary column shape. Swap the stub for PIL without touching the
-    plan."""
-    from .shipping import ensure_shipped
-
-    ensure_shipped(docs.sparkSession)
-    refs = (
-        docs.select(F.explode("spans").alias("s"))
-        .where(F.col("s.kind") == "media")
-        .select(F.col("s.media_ref").alias("media_ref"))
-        .where(F.substring(F.md5("media_ref"), 1, 1).isin(*"012345"))
-    )
-
-    def fn(iterator):
-        for pdf in iterator:
-            w_l, h_l, nw_l, nh_l, blob_l = [], [], [], [], []
-            for r in pdf["media_ref"]:
-                w, h = _fake_dims(r)
-                m = max(w, h)
-                if m <= max_px:
-                    nw, nh = w, h
-                else:
-                    nw, nh = w * max_px // m, h * max_px // m
-                w_l.append(w)
-                h_l.append(h)
-                nw_l.append(nw)
-                nh_l.append(nh)
-                # stub for the resampled bytes (real shape, fake content)
-                blob_l.append(hashlib.sha1(r.encode("utf-8")).digest())
-            out = pdf.copy()
-            out["width"], out["height"] = w_l, h_l
-            out["new_width"], out["new_height"] = nw_l, nh_l
-            out["resized"] = blob_l
-            yield out
-
-    return refs.mapInPandas(fn, schema=RESIZE_SCHEMA)
-
-
 DECODED_RESIZE_SCHEMA = (
     "media_ref string, width int, height int, new_width int, "
     "new_height int, checksum bigint"
@@ -244,10 +140,10 @@ def decoded_resize(docs: DataFrame, max_px: int = 8) -> DataFrame:
     sum((y*nw + x + 1) * (r + 2g + 4b)) — so the oracle pins actual
     output pixels, not just dimensions.
 
-    Scale shape: same as resize_images — explode + class filter are
-    JVM-side, the decoder runs arrow-batched in mapInPandas, per-row
-    work is bounded by max_px^2. Swapping synth_bmp for a real payload
-    column (binary) or store fetch changes nothing in the plan."""
+    Scale shape: explode + class filter are JVM-side, the decoder runs
+    arrow-batched in mapInPandas, per-row work is bounded by max_px^2.
+    Swapping synth_bmp for a real payload column (binary) or store fetch
+    changes nothing in the plan."""
     from .shipping import ensure_shipped
 
     ensure_shipped(docs.sparkSession)
@@ -287,39 +183,3 @@ def decoded_resize(docs: DataFrame, max_px: int = 8) -> DataFrame:
 
     return refs.mapInPandas(fn, schema=DECODED_RESIZE_SCHEMA)
 
-
-FRAME_SCHEMA = "media_ref string, frame_no int, ts_s int, frame binary"
-
-
-def sample_frames(docs: DataFrame, every_s: int = 10) -> DataFrame:
-    """Frame-sampling plumbing for video media spans: one output row per
-    sampled frame (1->N fan-out inside the pandas UDF — the batch shape a
-    real ffmpeg-backed sampler needs). Frame decode is stubbed; timing
-    math (every_s grid over the fake duration) is oracle-checkable."""
-    from .shipping import ensure_shipped
-
-    ensure_shipped(docs.sparkSession)
-    refs = (
-        docs.select(F.explode("spans").alias("s"))
-        .where(F.col("s.kind") == "media")
-        .select(F.col("s.media_ref").alias("media_ref"))
-        .where(~F.substring(F.md5("media_ref"), 1, 1).isin(*"0123456789a"))
-    )
-
-    def fn(iterator):
-        import pandas as pd  # noqa: PLC0415
-
-        for pdf in iterator:
-            rows = []
-            for r in pdf["media_ref"]:
-                dur = _fake_duration_s(r)
-                for i, t in enumerate(range(0, dur + 1, every_s)):
-                    rows.append(
-                        (r, i, t,
-                         hashlib.sha1(f"{r}@{t}".encode("utf-8")).digest())
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "frame_no", "ts_s", "frame"]
-            )
-
-    return refs.mapInPandas(fn, schema=FRAME_SCHEMA)

@@ -42,6 +42,7 @@ from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..extract import DensityTextExtractor, LinkCollector, ScopedTextCollector
 from ..rewriter import Rewriter
 from ..sanitizer import BUILTIN_CONFIGS
 from .datagen import DOC_SCHEMA
@@ -80,7 +81,8 @@ def make_rewrite_fn(config="default", handlers_factory=None,
                     _stats=None):
     """Build the mapInArrow function: record batches of
     (..., spans, ...) rows in, same schema out. Text spans are rewritten;
-    media spans pass through byte-identical with order preserved.
+    media spans, and text spans over ``max_text_bytes`` UTF-8 bytes, pass
+    through byte-identical with order preserved.
 
     Works directly on the arrow ListArray's flat struct children — only
     the text strings ever cross into Python objects (no per-span dict
@@ -116,11 +118,6 @@ def make_rewrite_fn(config="default", handlers_factory=None,
                         return t
             else:
                 rw = base_rw
-            if max_text_bytes is not None:
-                # oversized-span quarantine (the reference's memory caps,
-                # rewriter.rs:156-227, re-expressed as a routing decision)
-                def rw(t, _rw=rw, _cap=max_text_bytes):
-                    return t if len(t) > _cap else _rw(t)
             if not handlers:
                 # sanitize-only rewrite is a pure function of the span
                 # text (handlers may carry state across calls, so they
@@ -180,13 +177,20 @@ def make_rewrite_fn(config="default", handlers_factory=None,
                 # through unchanged (matches the old per-row condition)
                 new_texts_arr = texts
             else:
-                mask = pc.fill_null(
-                    pc.and_(
-                        pc.and_(pc.equal(kinds, "text"), texts.is_valid()),
-                        pc.match_substring(texts, "<"),
-                    ),
-                    False,
+                cand = pc.and_(
+                    pc.and_(pc.equal(kinds, "text"), texts.is_valid()),
+                    pc.match_substring(texts, "<"),
                 )
+                if max_text_bytes is not None:
+                    # oversized-span quarantine (the reference's memory
+                    # caps, rewriter.rs:156-227, re-expressed as a routing
+                    # decision): a span over the cap in UTF-8 bytes is no
+                    # candidate, so it keeps its original buffer
+                    cand = pc.and_(
+                        cand,
+                        pc.less_equal(pc.binary_length(texts), max_text_bytes),
+                    )
+                mask = pc.fill_null(cand, False)
                 rewritten = pa.array(
                     [rw(t) for t in texts.filter(mask).to_pylist()],
                     type=pa.string(),
@@ -281,9 +285,9 @@ def rewrite_documents_memo(
     try:
         stats = distinct_df.agg(
             F.count("*").alias("n"),
-            F.coalesce(F.sum(F.length("text")), F.lit(0)).alias("chars"),
+            F.coalesce(F.sum(F.octet_length("text")), F.lit(0)).alias("bytes"),
         ).first()
-        if stats["n"] > max_distinct or stats["chars"] > max_memo_bytes:
+        if stats["n"] > max_distinct or stats["bytes"] > max_memo_bytes:
             return rewrite_documents_dedup(
                 docs, config, handlers_factory, max_text_bytes, on_error
             )
@@ -806,161 +810,77 @@ def run_pipeline(
     return result
 
 
-def _collect_links(docs: DataFrame, collector_name: str) -> DataFrame:
-    """Per-document link extraction via an attribute-selector handler
-    from selma_spark.extract (named so the closure ships by name, not by
-    pickled class): one streaming parse per document inside mapInArrow,
-    rows out as (doc_id, n_links, hrefs_csv). Narrow plan — the
-    distributed twin of the reference's attribute-matching handler
-    surface (test/selma_rewriter_match_attribute_test.rb).
+def _per_doc_rows(docs: DataFrame, handler_cls, row, schema: str) -> DataFrame:
+    """One row per document from a stateful selma_spark.extract handler:
+    per document, concatenate the text spans, reset the handler, run ONE
+    streaming parse, and emit ``(doc_id, *row(handler))`` under
+    ``schema`` (DDL; doc_id first). Narrow plan — the distributed twin
+    of the reference's handler surfaces.
 
     The Rewriter (handler compile + dispatch table) is built ONCE PER
-    TASK; only the collector's accumulator state is reset per document
-    (the per-doc Rewriter.__init__ was a measurable tax on small-doc
-    corpora — VERDICT r2 #3; the flagship path at make_rewrite_fn is the
+    TASK; only the handler's state is reset per document (the per-doc
+    Rewriter.__init__ was a measurable tax on small-doc corpora —
+    VERDICT r2 #3; the flagship path at make_rewrite_fn is the
     template)."""
     from .shipping import ensure_shipped
 
     ensure_shipped(docs.sparkSession)
+    out = _arrow_schema(schema)
+    row_types = [f.type for f in out][1:]
 
     def fn(batches):
-        import pyarrow as pa  # noqa: PLC0415
-
-        from selma_spark import extract  # noqa: PLC0415
-        from selma_spark.rewriter import Rewriter  # noqa: PLC0415
-
-        col = getattr(extract, collector_name)()
-        rw = Rewriter(sanitizer=None, handlers=[col]).rewrite
+        handler = handler_cls()
+        rw = Rewriter(sanitizer=None, handlers=[handler]).rewrite
         for batch in batches:
-            doc_ids = batch.column(batch.schema.get_field_index("doc_id"))
             lst = batch.column(batch.schema.get_field_index("spans"))
-            values = lst.values
-            kinds = values.field("kind").to_pylist()
-            texts = values.field("text").to_pylist()
+            kinds = lst.values.field("kind").to_pylist()
+            texts = lst.values.field("text").to_pylist()
             offsets = lst.offsets.to_pylist()
-            n_links, hrefs_csv = [], []
+            rows = []
             for i in range(len(batch)):
                 lo, hi = offsets[i], offsets[i + 1]
-                html = "".join(
+                handler.reset()
+                rw("".join(
                     t for k, t in zip(kinds[lo:hi], texts[lo:hi])
                     if k == "text" and t
-                )
-                col.reset()
-                rw(html)
-                n_links.append(len(col.hrefs))
-                hrefs_csv.append(",".join(col.hrefs))
+                ))
+                rows.append(row(handler))
+            cols = list(zip(*rows)) if rows else [()] * len(row_types)
             yield pa.RecordBatch.from_arrays(
-                [doc_ids, pa.array(n_links, type=pa.int32()),
-                 pa.array(hrefs_csv, type=pa.string())],
-                names=["doc_id", "n_links", "hrefs_csv"],
+                [batch.column(batch.schema.get_field_index("doc_id"))]
+                + [pa.array(c, type=t) for c, t in zip(cols, row_types)],
+                names=out.names,
             )
 
-    return docs.mapInArrow(
-        fn, schema="doc_id string, n_links int, hrefs_csv string"
-    )
+    return docs.mapInArrow(fn, schema=schema)
 
 
 def extract_links(docs: DataFrame) -> DataFrame:
     """Every a[href] per document (LinkCollector)."""
-    return _collect_links(docs, "LinkCollector")
+    return _per_doc_rows(
+        docs, LinkCollector,
+        lambda c: (len(c.hrefs), ",".join(c.hrefs)),
+        "doc_id string, n_links int, hrefs_csv string",
+    )
 
 
 def collect_scoped_text(docs: DataFrame) -> DataFrame:
     """Per-document text-chunk collection through the
     match_text_within="div" / ignore_text_within=["b"] dispatch
-    (ScopedTextCollector): one streaming parse per document inside
-    mapInArrow, rows out as (doc_id, n_chunks, chunks_csv). Narrow plan;
-    Rewriter built once per task, collector state reset per document."""
-    from .shipping import ensure_shipped
-
-    ensure_shipped(docs.sparkSession)
-
-    def fn(batches):
-        import pyarrow as pa  # noqa: PLC0415
-
-        from selma_spark.extract import ScopedTextCollector  # noqa: PLC0415
-        from selma_spark.rewriter import Rewriter  # noqa: PLC0415
-
-        col = ScopedTextCollector()
-        rw = Rewriter(sanitizer=None, handlers=[col]).rewrite
-        for batch in batches:
-            doc_ids = batch.column(batch.schema.get_field_index("doc_id"))
-            lst = batch.column(batch.schema.get_field_index("spans"))
-            values = lst.values
-            kinds = values.field("kind").to_pylist()
-            texts = values.field("text").to_pylist()
-            offsets = lst.offsets.to_pylist()
-            n_chunks, chunks_csv = [], []
-            for i in range(len(batch)):
-                lo, hi = offsets[i], offsets[i + 1]
-                html = "".join(
-                    t for k, t in zip(kinds[lo:hi], texts[lo:hi])
-                    if k == "text" and t
-                )
-                col.reset()
-                rw(html)
-                n_chunks.append(len(col.chunks))
-                chunks_csv.append("|".join(col.chunks))
-            yield pa.RecordBatch.from_arrays(
-                [doc_ids, pa.array(n_chunks, type=pa.int32()),
-                 pa.array(chunks_csv, type=pa.string())],
-                names=["doc_id", "n_chunks", "chunks_csv"],
-            )
-
-    return docs.mapInArrow(
-        fn, schema="doc_id string, n_chunks int, chunks_csv string"
+    (ScopedTextCollector)."""
+    return _per_doc_rows(
+        docs, ScopedTextCollector,
+        lambda c: (len(c.chunks), "|".join(c.chunks)),
+        "doc_id string, n_chunks int, chunks_csv string",
     )
-
-
-def extract_external_links(docs: DataFrame) -> DataFrame:
-    """Absolute http(s) links excluding class="anchor" decorations:
-    ``a[href^="http"]:not([class="anchor"])`` through the distributed
-    path (ExternalLinkCollector)."""
-    return _collect_links(docs, "ExternalLinkCollector")
 
 
 def density_extract_stats(docs: DataFrame) -> DataFrame:
     """Main-content extraction stats via the boilerpipe-style
-    DensityTextExtractor (extract.py): per document, concatenate text
-    spans, run ONE streaming parse with FRESH per-document extractor
-    state (reset()), and report accepted-block stats. Narrow plan; the
-    Rewriter itself is built once per task (VERDICT r2 #3)."""
-    from .shipping import ensure_shipped
-
-    ensure_shipped(docs.sparkSession)
-
-    def fn(batches):
-        import pyarrow as pa  # noqa: PLC0415
-
-        from selma_spark.extract import DensityTextExtractor  # noqa: PLC0415
-        from selma_spark.rewriter import Rewriter  # noqa: PLC0415
-
-        ex = DensityTextExtractor()
-        rw = Rewriter(sanitizer=None, handlers=[ex]).rewrite
-        for batch in batches:
-            doc_ids = batch.column(batch.schema.get_field_index("doc_id"))
-            lst = batch.column(batch.schema.get_field_index("spans"))
-            values = lst.values
-            kinds = values.field("kind").to_pylist()
-            texts = values.field("text").to_pylist()
-            offsets = lst.offsets.to_pylist()
-            n_blocks, main_chars = [], []
-            for i in range(len(batch)):
-                lo, hi = offsets[i], offsets[i + 1]
-                html = "".join(
-                    t for k, t in zip(kinds[lo:hi], texts[lo:hi])
-                    if k == "text" and t
-                )
-                ex.reset()
-                rw(html)
-                n_blocks.append(len(ex.blocks))
-                main_chars.append(len(ex.main_text))
-            yield pa.RecordBatch.from_arrays(
-                [doc_ids, pa.array(n_blocks, type=pa.int32()),
-                 pa.array(main_chars, type=pa.int64())],
-                names=["doc_id", "n_blocks", "main_chars"],
-            )
-
-    return docs.mapInArrow(
-        fn, schema="doc_id string, n_blocks int, main_chars bigint"
+    DensityTextExtractor: accepted blocks and main-text length per
+    document."""
+    return _per_doc_rows(
+        docs, DensityTextExtractor,
+        lambda ex: (len(ex.blocks), len(ex.main_text)),
+        "doc_id string, n_blocks int, main_chars bigint",
     )

@@ -20,15 +20,17 @@ from pyspark.sql import functions as F
 from ..golden import PROTOCOLS, STRINGS
 from . import layout, simsearch, textops
 from .datagen import bench_spans, interleaved_spans
-from .multimodal import (
-    decoded_resize,
-    media_features,
-    media_manifest,
-    resize_images,
-    sample_frames,
+from .multimodal import decoded_resize, media_manifest
+from .pipeline import (
+    bucketed,
+    collect_scoped_text,
+    density_extract_stats,
+    extract_links,
+    rewrite_documents,
+    rewritten_text,
+    with_doc_bytes,
 )
-from .pipeline import bucketed, density_extract_stats, rewrite_documents, rewritten_text, with_doc_bytes
-from .textops import MINHASH_SALTS, STOPWORDS, _LANG_MARKERS
+from .textops import MINHASH_SALTS, STOPWORDS
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -85,37 +87,36 @@ def _golden_cases(corpus):
         yield case, corpus[case]
 
 
-def _golden_query(corpus):
-    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        rows = [
-            (case, data["html"]) for case, data in _golden_cases(corpus)
-        ]
-        parts = []
-        for config in _CONFIGS:
-            docs = spark.createDataFrame(rows, "case_name string, html string").select(
-                F.col("case_name").alias("doc_id"),
-                F.array(
-                    F.struct(
-                        F.lit("text").alias("kind"),
-                        F.col("html").alias("text"),
-                        F.lit(None).cast("string").alias("media_ref"),
-                        F.lit(0).cast("int").alias("offset"),
-                    )
-                ).alias("spans"),
-            )
-            parts.append(
-                rewritten_text(docs, config).select(
-                    F.col("doc_id").alias("case_name"),
-                    F.lit(config).alias("config"),
-                    F.col("out_text").alias("output"),
+def q_golden_protocols(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The golden PROTOCOLS corpus through the distributed rewrite under
+    every built-in config."""
+    rows = [
+        (case, data["html"]) for case, data in _golden_cases(PROTOCOLS)
+    ]
+    parts = []
+    for config in _CONFIGS:
+        docs = spark.createDataFrame(rows, "case_name string, html string").select(
+            F.col("case_name").alias("doc_id"),
+            F.array(
+                F.struct(
+                    F.lit("text").alias("kind"),
+                    F.col("html").alias("text"),
+                    F.lit(None).cast("string").alias("media_ref"),
+                    F.lit(0).cast("int").alias("offset"),
                 )
+            ).alias("spans"),
+        )
+        parts.append(
+            rewritten_text(docs, config).select(
+                F.col("doc_id").alias("case_name"),
+                F.lit(config).alias("config"),
+                F.col("out_text").alias("output"),
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.orderBy("case_name", "config")
-
-    return q
+        )
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out.orderBy("case_name", "config")
 
 
 def _sql_quote(s: str) -> str:
@@ -156,46 +157,6 @@ FROM documents ORDER BY doc_id
 """
 
 
-def q_sanitize_relaxed_roundtrip(spark, sf_dir):
-    return rewritten_text(spans_df(spark, sf_dir), "relaxed").orderBy("doc_id")
-
-
-ORACLE_RELAXED_ROUNDTRIP = """
-SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-  (CASE doc_id % 6
-     WHEN 0 THEN '<div>' || text || '</div>'
-     WHEN 1 THEN '<b>' || text || '</b>'
-     WHEN 2 THEN '<p class="x">' || text || '</p>'
-     WHEN 3 THEN text
-     WHEN 4 THEN '<a href="http://example.com/">' || text || '</a>'
-     ELSE '<span><strong>' || text || '</strong></span>' END)
-  || (CASE WHEN doc_id % 3 = 0 THEN '<em>ok</em>' ELSE '' END) AS out_text
-FROM documents ORDER BY doc_id
-"""
-
-
-def q_span_kind_counts(spark, sf_dir):
-    out = rewrite_documents(spans_df(spark, sf_dir), "default")
-    return (
-        out.select(F.explode("spans").alias("s"))
-        .groupBy(F.col("s.kind").alias("kind"))
-        .agg(F.count("*").alias("n"))
-        .orderBy("kind")
-    )
-
-
-ORACLE_SPAN_KIND_COUNTS = """
-SELECT kind, n FROM (
-  SELECT 'media' AS kind,
-         count(*) FILTER (WHERE doc_id % 4 = 0) AS n FROM documents
-  UNION ALL
-  SELECT 'text' AS kind,
-         count(*) + count(*) FILTER (WHERE doc_id % 3 = 0) AS n
-  FROM documents
-) ORDER BY kind
-"""
-
-
 def q_media_passthrough(spark, sf_dir):
     out = rewrite_documents(spans_df(spark, sf_dir), "relaxed")
     return (
@@ -210,21 +171,6 @@ ORACLE_MEDIA_PASSTHROUGH = """
 SELECT CAST(doc_id AS VARCHAR) AS doc_id,
        'media://' || doc_id || '/1' AS media_ref
 FROM documents WHERE doc_id % 4 = 0 ORDER BY doc_id
-"""
-
-
-def q_span_order_preserved(spark, sf_dir):
-    out = rewrite_documents(spans_df(spark, sf_dir), "default")
-    offs = F.array_sort(F.transform("spans", lambda s: s["offset"]))
-    ok = offs == F.sequence(F.lit(0), F.size("spans") - 1)
-    return out.select(
-        F.count("*").alias("n_docs"),
-        F.sum(F.when(ok, 1).otherwise(0)).alias("n_ordered"),
-    )
-
-
-ORACLE_SPAN_ORDER = """
-SELECT count(*) AS n_docs, count(*) AS n_ordered FROM documents
 """
 
 
@@ -259,17 +205,6 @@ WHERE doc_id % 6 <> 3 ORDER BY doc_id
 # text-analytics / training-data ops (SQL-parity oracles)
 # --------------------------------------------------------------------------
 
-def q_doc_stats_by_lang(spark, sf_dir):
-    return textops.doc_stats_by_lang(load(spark, sf_dir, "documents"))
-
-
-ORACLE_DOC_STATS = """
-SELECT lang, count(*) AS n_docs,
-       CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-       CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens
-FROM documents GROUP BY lang ORDER BY lang
-"""
-
 
 def q_dedup_exact(spark, sf_dir):
     return textops.dedup_exact(load(spark, sf_dir, "documents"))
@@ -291,38 +226,6 @@ SELECT doc_id, len(string_split(text, ' ')) AS n_tokens
 FROM documents ORDER BY doc_id
 """
 
-
-def q_quality_scores(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    return docs.select(
-        "doc_id",
-        F.length("text").alias("n_chars"),
-        F.size(toks).alias("n_tokens"),
-        F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t))).alias(
-            "n_stopwords"
-        ),
-        F.array_max(F.transform(toks, F.length)).alias("max_token_len"),
-        F.regexp_count(
-            F.coalesce("text", F.lit("")), F.lit(r"[!-/:-@\[-`{-~]")
-        ).alias("n_punct"),
-    ).orderBy("doc_id")
-
-
-_STOP_SQL = ", ".join(f"'{s}'" for s in STOPWORDS)
-
-ORACLE_QUALITY = rf"""
-SELECT doc_id, length(text) AS n_chars,
-       len(string_split(text, ' ')) AS n_tokens,
-       len(list_filter(string_split(text, ' '),
-                       t -> t IN ({_STOP_SQL}))) AS n_stopwords,
-       list_aggregate(list_transform(string_split(text, ' '),
-                                     t -> length(t)), 'max') AS max_token_len,
-       len(regexp_extract_all(coalesce(text, ''), '[!-/:-@\[-`{{-~]'))
-         AS n_punct
-FROM documents ORDER BY doc_id
-"""
 
 _DUCK_SHINGLES = """
 CASE WHEN len(toks) >= 3
@@ -348,10 +251,6 @@ SELECT doc_id, {_MH_COLS} FROM s ORDER BY doc_id
 """
 
 
-def q_near_dup_pairs(spark, sf_dir):
-    return textops.near_dup_pairs(load_split(spark, sf_dir, "documents"))
-
-
 # multi-band (b=4, r=1) candidate generation with the bucket-size cap
 # mirrored from textops.lsh_bands (buckets > 50 docs dropped pre-join)
 _DUCK_LSH_BANDS = f"""
@@ -365,15 +264,6 @@ bands AS (
 kept AS (
   SELECT doc_id, band_id, band_val FROM bands
   QUALIFY count(*) OVER (PARTITION BY band_id, band_val) <= 50)
-"""
-
-ORACLE_NEAR_DUP = f"""
-WITH {_DUCK_LSH_BANDS.format(shingles=_DUCK_SHINGLES)}
-SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-FROM kept a JOIN kept b
-  ON a.band_id = b.band_id AND a.band_val = b.band_val
- AND a.doc_id < b.doc_id
-ORDER BY doc_a, doc_b
 """
 
 
@@ -439,100 +329,6 @@ FROM d ORDER BY doc_id
 """
 
 
-# --- 128-bit variant (textops.simhash128 / simhash_near_dup128) -------------
-# same construction with digits 1-32; word bits read digit
-# (off + j//4 + 1), bit (j % 4)
-
-def _simhash_bits_sql(off: int) -> str:
-    return " + ".join(
-        f"(CASE WHEN 2 * len(list_filter(digs, "
-        f"dv -> ((dv[{off + j // 4 + 1}] >> {j % 4}) & 1) = 1)) "
-        f"> n THEN {_simhash_weight_sql(j)} ELSE 0 END)"
-        for j in range(64)
-    )
-
-
-_SIMHASH_DIGS32_SQL = """
-d AS (SELECT doc_id, len(toks) AS n,
-        list_transform(
-          list_transform(toks, s -> md5(s)),
-          h -> list_transform(range(1, 33),
-                 i -> strpos('0123456789abcdef', substr(h, i, 1)) - 1)) AS digs
-      FROM t)
-"""
-
-
-def q_simhash128_near_dup(spark, sf_dir):
-    return textops.simhash_near_dup128(load_split(spark, sf_dir, "documents"))
-
-
-ORACLE_SIMHASH128_NEAR_DUP = f"""
-WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-{_SIMHASH_DIGS32_SQL},
-sh AS (SELECT doc_id, CAST({{hi}} AS BIGINT) AS sim_hi,
-              CAST({{lo}} AS BIGINT) AS sim_lo FROM d),
-bands AS (
-  {" UNION ALL ".join(
-      f"SELECT doc_id, sim_hi, sim_lo, {k} AS band_id, "
-      f"({'sim_hi' if k < 2 else 'sim_lo'} >> {32 * (k % 2)})"
-      f" & 4294967295 AS band_val FROM sh"
-      for k in range(4))}),
-kept AS (
-  SELECT doc_id, sim_hi, sim_lo, band_id, band_val FROM bands
-  QUALIFY count(*) OVER (PARTITION BY band_id, band_val) <= 100)
-SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(bit_count(xor(a.sim_hi, b.sim_hi))
-            + bit_count(xor(a.sim_lo, b.sim_lo)) AS INT) AS hamming
-FROM kept a JOIN kept b
-  ON a.band_id = b.band_id AND a.band_val = b.band_val
- AND a.doc_id < b.doc_id
-WHERE bit_count(xor(a.sim_hi, b.sim_hi))
-      + bit_count(xor(a.sim_lo, b.sim_lo)) <= 3
-ORDER BY doc_a, doc_b
-""".replace("{hi}", _simhash_bits_sql(0)).replace(
-    "{lo}", _simhash_bits_sql(16)
-)
-
-
-def q_ngram_jaccard(spark, sf_dir):
-    return textops.ngram_jaccard(load(spark, sf_dir, "documents"), 1, 2)
-
-
-ORACLE_NGRAM_JACCARD = f"""
-WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-           WHERE doc_id IN (1, 2)),
-s AS (SELECT doc_id, list_distinct({_DUCK_SHINGLES}) AS sh FROM t)
-SELECT 1 AS doc_a, 2 AS doc_b,
-  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        / len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
-FROM s a, s b WHERE a.doc_id = 1 AND b.doc_id = 2
-"""
-
-
-def q_lang_id(spark, sf_dir):
-    return textops.lang_id_ngram(load(spark, sf_dir, "documents"))
-
-
-def _langid_oracle() -> str:
-    score_cols = []
-    for lang, markers in sorted(_LANG_MARKERS.items()):
-        marks = ", ".join(f"'{m}'" for m in markers)
-        score_cols.append(
-            f"len(list_filter(string_split(text, ' '), t -> t IN ({marks}))) "
-            f"AS s_{lang}"
-        )
-    langs_desc = sorted(_LANG_MARKERS, reverse=True)  # argmax lex tie-break
-    greatest = "greatest(" + ", ".join(f"s_{lang}" for lang in sorted(_LANG_MARKERS)) + ")"
-    case = f"CASE WHEN {greatest} = 0 THEN 'und' "
-    for lang in langs_desc:
-        case += f"WHEN s_{lang} = {greatest} THEN '{lang}' "
-    case += "END"
-    return (
-        "WITH s AS (SELECT doc_id, " + ", ".join(score_cols) + " FROM documents) "
-        f"SELECT doc_id, {case} AS pred_lang FROM s ORDER BY doc_id"
-    )
-
-
 def q_lang_id_trigram(spark, sf_dir):
     """Corpus-profile char-trigram language ID (Cavnar-Trenkle style):
     per-lang top-64 document-frequent trigram profiles, broadcast into
@@ -577,19 +373,6 @@ pred AS (
   GROUP BY 1)
 SELECT d.doc_id, coalesce(p.pred_lang, 'und') AS pred_lang
 FROM documents d LEFT JOIN pred p USING (doc_id) ORDER BY doc_id
-"""
-
-
-def q_token_counts_bpe(spark, sf_dir):
-    return textops.token_counts_bpe(load(spark, sf_dir, "documents"))
-
-
-ORACLE_TOKEN_COUNTS_BPE = """
-SELECT doc_id,
-       len(string_split(text, ' ')) AS n_ws_tokens,
-       len(regexp_extract_all(coalesce(text, ''),
-           ' ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 \t\n\r]+')) AS n_bpe_tokens
-FROM documents ORDER BY doc_id
 """
 
 
@@ -897,41 +680,6 @@ ORDER BY cosine DESC, vec_id LIMIT 10
 """
 
 
-def q_lsh_buckets(spark, sf_dir):
-    return simsearch.sign_lsh_buckets(load(spark, sf_dir, "embeddings"))
-
-
-ORACLE_LSH_BUCKETS = """
-SELECT bucket, count(*) AS n_vectors FROM (
-  SELECT (CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END)
-       + (CASE WHEN embedding[2] > 0 THEN 2 ELSE 0 END)
-       + (CASE WHEN embedding[3] > 0 THEN 4 ELSE 0 END)
-       + (CASE WHEN embedding[4] > 0 THEN 8 ELSE 0 END) AS bucket
-  FROM embeddings) GROUP BY bucket ORDER BY bucket
-"""
-
-
-def q_label_stats(spark, sf_dir):
-    emb = load(spark, sf_dir, "embeddings")
-    return (
-        emb.groupBy("label")
-        .agg(
-            F.count("*").alias("n_vectors"),
-            F.sum(
-                F.when(F.element_at("embedding", 1) > 0, 1).otherwise(0)
-            ).alias("n_pos_c0"),
-        )
-        .orderBy("label")
-    )
-
-
-ORACLE_LABEL_STATS = """
-SELECT label, count(*) AS n_vectors,
-       count(*) FILTER (WHERE embedding[1] > 0) AS n_pos_c0
-FROM embeddings GROUP BY label ORDER BY label
-"""
-
-
 # --------------------------------------------------------------------------
 # multimodal
 # --------------------------------------------------------------------------
@@ -949,95 +697,6 @@ SELECT CAST(doc_id AS VARCHAR) AS doc_id,
                  IN ('6','7','8','9','a') THEN 'audio/wav'
             ELSE 'video/mp4' END AS mime
 FROM documents WHERE doc_id % 4 = 0 ORDER BY doc_id, media_ref
-"""
-
-
-def q_media_features(spark, sf_dir):
-    """Feature extraction over media spans via the mapInPandas featurizer.
-    The array<float> feature column is surfaced as an integer CSV
-    (exact byte recovery: round(x*256)) so the driver canon — which
-    sorts column values — never sees an unhashable list, and the md5
-    fake is reproducible in the SQL oracle."""
-    out = media_features(spans_df(spark, sf_dir))
-    return out.select(
-        "media_ref",
-        "mime",
-        "width",
-        "height",
-        F.concat_ws(
-            ",",
-            F.transform(
-                "feature", lambda x: F.round(x * 256).cast("int").cast("string")
-            ),
-        ).alias("feature_csv"),
-    ).orderBy("media_ref")
-
-
-def _duck_md5_byte(i: int) -> str:
-    """DuckDB expression for byte i of md5(media_ref) as an integer."""
-    d1 = f"substr(hx, {2 * i + 1}, 1)"
-    d2 = f"substr(hx, {2 * i + 2}, 1)"
-    return (
-        f"((strpos('0123456789abcdef', {d1}) - 1) * 16"
-        f" + strpos('0123456789abcdef', {d2}) - 1)"
-    )
-
-
-# mime/width/height/feature derive from the md5 bytes of the ref:
-# f_i = b_i/256; mime = image iff b0 < 128; width = b1*4+1; height = b2*4+1
-ORACLE_MEDIA_FEATURES = f"""
-WITH m AS (
-  SELECT 'media://' || doc_id || '/1' AS media_ref
-  FROM documents WHERE doc_id % 4 = 0),
-h AS (SELECT media_ref, md5(media_ref) AS hx FROM m),
-b AS (SELECT media_ref,
-  {", ".join(f"{_duck_md5_byte(i)} AS b{i}" for i in range(8))}
-  FROM h)
-SELECT media_ref,
-       CASE WHEN b0 < 128 THEN 'image/jpeg' ELSE 'audio/wav' END AS mime,
-       CAST(b1 * 4 + 1 AS INT) AS width,
-       CAST(b2 * 4 + 1 AS INT) AS height,
-       {" || ',' || ".join(f"CAST(b{i} AS VARCHAR)" for i in range(8))}
-         AS feature_csv
-FROM b ORDER BY media_ref
-"""
-
-
-# --------------------------------------------------------------------------
-# flagship extraction (rows-only: HTML rewriting is not SQL-expressible)
-# --------------------------------------------------------------------------
-
-def _extract_handlers():
-    from ..extract import ContentExtractor  # noqa: PLC0415
-
-    return [ContentExtractor()]
-
-
-def q_media_resize_plan(spark, sf_dir):
-    """Image-resize leg: fit into 256px, integer math; pixel resample
-    stubbed (binary column excluded here so the oracle checks values)."""
-    out = resize_images(spans_df(spark, sf_dir))
-    return out.select(
-        "media_ref", "width", "height", "new_width", "new_height"
-    ).orderBy("media_ref")
-
-
-# fake dims = 64 + hexdigit*64 over md5(ref); aspect-fit into 256
-ORACLE_MEDIA_RESIZE = """
-WITH m AS (
-  SELECT 'media://' || doc_id || '/1' AS media_ref FROM documents
-  WHERE doc_id % 4 = 0),
-img AS (
-  SELECT media_ref,
-         64 + (strpos('0123456789abcdef', substr(md5(media_ref), 1, 1)) - 1) * 64 AS width,
-         64 + (strpos('0123456789abcdef', substr(md5(media_ref), 2, 1)) - 1) * 64 AS height
-  FROM m WHERE substr(md5(media_ref), 1, 1) IN ('0','1','2','3','4','5'))
-SELECT media_ref, CAST(width AS INT) AS width, CAST(height AS INT) AS height,
-  CAST(CASE WHEN greatest(width, height) <= 256 THEN width
-       ELSE width * 256 // greatest(width, height) END AS INT) AS new_width,
-  CAST(CASE WHEN greatest(width, height) <= 256 THEN height
-       ELSE height * 256 // greatest(width, height) END AS INT) AS new_height
-FROM img ORDER BY media_ref
 """
 
 
@@ -1088,29 +747,14 @@ FROM px GROUP BY 1, 2, 3, 4, 5 ORDER BY media_ref
 """
 
 
-def q_frame_samples(spark, sf_dir):
-    """Video frame-sampling leg: 1->N fan-out per video ref on a 10s
-    grid over the (deterministic fake) duration; frame bytes stubbed."""
-    out = sample_frames(spans_df(spark, sf_dir))
-    return out.select("media_ref", "frame_no", "ts_s").orderBy(
-        "media_ref", "frame_no"
-    )
+# --------------------------------------------------------------------------
+# flagship extraction (rows-only: HTML rewriting is not SQL-expressible)
+# --------------------------------------------------------------------------
 
+def _extract_handlers():
+    from ..extract import ContentExtractor  # noqa: PLC0415
 
-# duration = 5 + hexdigit(md5[0])*2; frames at 0,10,20.. <= duration
-ORACLE_FRAME_SAMPLES = """
-WITH m AS (
-  SELECT 'media://' || doc_id || '/1' AS media_ref FROM documents
-  WHERE doc_id % 4 = 0),
-v AS (
-  SELECT media_ref,
-         5 + (strpos('0123456789abcdef', substr(md5(media_ref), 1, 1)) - 1) * 2 AS dur
-  FROM m WHERE substr(md5(media_ref), 1, 1) NOT IN
-        ('0','1','2','3','4','5','6','7','8','9','a'))
-SELECT media_ref, CAST(u.i AS INT) AS frame_no, CAST(u.i * 10 AS INT) AS ts_s
-FROM v, UNNEST(range(0, dur // 10 + 1)) AS u(i)
-ORDER BY media_ref, frame_no
-"""
+    return [ContentExtractor()]
 
 
 def q_byte_weighted_buckets(spark, sf_dir):
@@ -1161,8 +805,6 @@ FROM ranked GROUP BY 1 ORDER BY 1
 def q_extract_links(spark, sf_dir):
     """Attribute-selector handler surface through the distributed path:
     every a[href] collected per document."""
-    from .pipeline import extract_links  # noqa: PLC0415
-
     return extract_links(spans_df(spark, sf_dir)).orderBy("doc_id")
 
 
@@ -1172,56 +814,6 @@ ORACLE_EXTRACT_LINKS = """
 SELECT CAST(doc_id AS VARCHAR) AS doc_id,
        CAST(CASE WHEN doc_id % 6 = 4 THEN 1 ELSE 0 END AS INT) AS n_links,
        CASE WHEN doc_id % 6 = 4 THEN 'http://example.com/' ELSE '' END
-         AS hrefs_csv
-FROM documents ORDER BY doc_id
-"""
-
-
-def q_extract_external_links(spark, sf_dir):
-    """Attribute-operator + :not() selector surface end-to-end:
-    ``a[href^="http"]:not([class="anchor"])`` (reference
-    test/selma_selector_test.rb:18-44) driven through the distributed
-    extraction path. The link-rich HTML is synthesized deterministically
-    from doc_id (JVM-side concat — no UDF) with one kept http link, one
-    kept https link on even ids, one class="anchor" link excluded by
-    :not, one relative link excluded by ^="http", and one href-less
-    anchor excluded by [href]."""
-    from .pipeline import extract_external_links  # noqa: PLC0415
-
-    docs = load(spark, sf_dir, "documents")
-    did = F.col("doc_id").cast("string")
-    html = F.concat(
-        F.lit('<p>intro <a href="http://ex.com/'), did, F.lit('">x</a>'),
-        F.lit(' <a class="anchor" href="http://ex.com/a'), did, F.lit('">#</a>'),
-        F.lit(' <a href="/rel/'), did, F.lit('">z</a>'),
-        F.when(
-            F.col("doc_id") % 2 == 0,
-            F.concat(
-                F.lit(' <a href="https://cdn.ex.com/'), did, F.lit('">w</a>')
-            ),
-        ).otherwise(F.lit("")),
-        F.lit(' <a name="top">t</a></p>'),
-    )
-    spans_docs = docs.select(
-        did.alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("text").alias("kind"),
-                html.alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
-                F.lit(0).cast("int").alias("offset"),
-            )
-        ).alias("spans"),
-    )
-    return extract_external_links(spans_docs).orderBy("doc_id")
-
-
-ORACLE_EXTRACT_EXTERNAL_LINKS = """
-SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-       CAST(CASE WHEN doc_id % 2 = 0 THEN 2 ELSE 1 END AS INT) AS n_links,
-       'http://ex.com/' || doc_id
-         || (CASE WHEN doc_id % 2 = 0
-                  THEN ',https://cdn.ex.com/' || doc_id ELSE '' END)
          AS hrefs_csv
 FROM documents ORDER BY doc_id
 """
@@ -1247,8 +839,6 @@ def q_text_within_ignore(spark, sf_dir):
     chunks within <div> are collected EXCEPT those inside a nested <b>
     subtree (indirect-ancestor suppression). HTML synthesized from
     doc_id/text JVM-side; the kept chunk set is deterministic."""
-    from .pipeline import collect_scoped_text  # noqa: PLC0415
-
     docs = load(spark, sf_dir, "documents")
     did = F.col("doc_id").cast("string")
     html = F.concat(
@@ -1269,35 +859,6 @@ ORACLE_TEXT_WITHIN_IGNORE = """
 SELECT CAST(doc_id AS VARCHAR) AS doc_id,
        CAST(2 AS INT) AS n_chunks,
        text || '|seen ' || doc_id AS chunks_csv
-FROM documents ORDER BY doc_id
-"""
-
-
-def q_annotate_paragraphs(spark, sf_dir):
-    """before/prepend/append/after + as_: :text escaping end-to-end:
-    every <p> gains an ESCAPED <note> marker before it, "[" prepended,
-    "]" appended, ")" after it; output is the reassembled text."""
-    from .pipeline import rewrite_documents  # noqa: PLC0415
-
-    def handlers():
-        from ..extract import ParaAnnotator  # noqa: PLC0415
-
-        return [ParaAnnotator()]
-
-    docs = load(spark, sf_dir, "documents")
-    html = F.concat(F.lit("<p>"), F.col("text"), F.lit("</p>"))
-    out = rewrite_documents(
-        _single_text_span_docs(docs, html), None, handlers_factory=handlers
-    )
-    return out.select(
-        "doc_id",
-        F.element_at("spans", 1)["text"].alias("out_text"),
-    ).orderBy("doc_id")
-
-
-ORACLE_ANNOTATE_PARAGRAPHS = """
-SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-       '&lt;note&gt;<p>[' || text || ']</p>)' AS out_text
 FROM documents ORDER BY doc_id
 """
 
@@ -1498,12 +1059,14 @@ def q_corpus_keep_list(spark, sf_dir):
     return textops.corpus_keep_list(load(spark, sf_dir, "documents"))
 
 
+_STOP_SQL = ", ".join(f"'{s}'" for s in STOPWORDS)
+
 ORACLE_KEEP_LIST = f"""
 WITH scored AS (
   SELECT doc_id, md5(text) AS h,
     len(string_split(text, ' ')) AS n_tokens,
     CAST(len(list_filter(string_split(text, ' '),
-         t -> t IN ({", ".join("'" + s + "'" for s in STOPWORDS)}))) AS DOUBLE)
+         t -> t IN ({_STOP_SQL}))) AS DOUBLE)
       / len(string_split(text, ' ')) AS stop_ratio
   FROM documents),
 keepers AS (SELECT h, min(doc_id) AS doc_id FROM scored GROUP BY h)
@@ -1512,6 +1075,17 @@ FROM scored s JOIN keepers k ON s.h = k.h AND s.doc_id = k.doc_id
 WHERE s.n_tokens >= 20 AND s.stop_ratio <= 0.5
 ORDER BY s.doc_id
 """
+
+
+def _duck_md5_byte(i: int) -> str:
+    """DuckDB expression for byte i of the md5 hex digest ``hx`` as an
+    integer."""
+    d1 = f"substr(hx, {2 * i + 1}, 1)"
+    d2 = f"substr(hx, {2 * i + 2}, 1)"
+    return (
+        f"((strpos('0123456789abcdef', {d1}) - 1) * 16"
+        f" + strpos('0123456789abcdef', {d2}) - 1)"
+    )
 
 
 def q_stratified_sample(spark, sf_dir):
@@ -1524,17 +1098,9 @@ def _stratified_sample_oracle() -> str:
     from .textops import SAMPLE_DEFAULT_RATE, SAMPLE_RATES  # noqa: PLC0415
 
     # u = first 32 md5 bits of CAST(doc_id AS VARCHAR), via 4 hex-byte
-    # extractions (same _duck_md5_byte arithmetic as the media oracles)
-    def byte(i):
-        d1 = f"substr(hx, {2 * i + 1}, 1)"
-        d2 = f"substr(hx, {2 * i + 2}, 1)"
-        return (
-            f"((strpos('0123456789abcdef', {d1}) - 1) * 16"
-            f" + strpos('0123456789abcdef', {d2}) - 1)"
-        )
-
+    # extractions
     u = " + ".join(
-        f"{byte(i)} * {1 << (8 * (3 - i))}" for i in range(4)
+        f"{_duck_md5_byte(i)} * {1 << (8 * (3 - i))}" for i in range(4)
     )
     case = "CASE "
     for lang, rate in sorted(SAMPLE_RATES.items()):
@@ -1567,12 +1133,6 @@ FROM staged GROUP BY 1 ORDER BY 1
 """
 
 
-def q_ivf_cells(spark, sf_dir):
-    """IVF coarse-quantizer cell occupancy (deterministic seed
-    centroids: vec_id < 16; argmax cosine, ties -> smallest cid)."""
-    return simsearch.ivf_cells(load(spark, sf_dir, "embeddings"))
-
-
 _DUCK_IVF_ASSIGN = """
 c AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cemb
       FROM embeddings WHERE vec_id < 16),
@@ -1589,11 +1149,6 @@ best AS (
            row_number() OVER (PARTITION BY vec_id
                               ORDER BY cos DESC, cid) AS rn
     FROM scored) WHERE rn = 1)
-"""
-
-ORACLE_IVF_CELLS = f"""
-WITH {_DUCK_IVF_ASSIGN}
-SELECT cid, count(*) AS n_vectors FROM best GROUP BY 1 ORDER BY 1
 """
 
 
@@ -1617,22 +1172,6 @@ JOIN probe p ON b.cid = p.cid
 JOIN e ON e.vec_id = b.vec_id, q
 WHERE b.vec_id <> 0
 ORDER BY cosine DESC, b.vec_id LIMIT 10
-"""
-
-
-def q_kmeans_step(spark, sf_dir):
-    """One distributed Lloyd iteration: IVF assignment + component-wise
-    centroid mean recompute, one row per (cid, dim)."""
-    return simsearch.kmeans_step(load(spark, sf_dir, "embeddings"))
-
-
-ORACLE_KMEANS_STEP = f"""
-WITH {_DUCK_IVF_ASSIGN},
-av AS (
-  SELECT b.cid, CAST(u.d AS INT) AS dim, e.emb[u.d + 1] AS v
-  FROM best b JOIN e ON e.vec_id = b.vec_id, UNNEST(range(0, 64)) AS u(d))
-SELECT cid, dim, round(avg(v), 6) AS centroid
-FROM av GROUP BY 1, 2 ORDER BY 1, 2
 """
 
 
@@ -1722,14 +1261,9 @@ WHERE b.vec_id <> 0
 ORDER BY cosine DESC, b.vec_id LIMIT 10"""
 
 
-def q_pq_codes(spark, sf_dir):
-    """Product-quantization encoding: nearest codebook entry (squared
-    L2, ties -> smallest cid) per 16-dim subspace, 4 codes per vector."""
-    return simsearch.pq_codes(load(spark, sf_dir, "embeddings"))
-
-
 # elementwise (x-y)^2 summed in index order, rounded to 9 BEFORE the
-# per-(vec, subspace) argmin — mirrors simsearch._l2sq / pq_codes
+# per-(vec, subspace) argmin — mirrors simsearch._l2sq / pq_codes (the
+# codes topk_pq_adc scans)
 _DUCK_PQ_CODES = """
 c AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cemb
       FROM embeddings WHERE vec_id < 16),
@@ -1745,13 +1279,6 @@ codes AS (
     SELECT vec_id, j, cid,
            row_number() OVER (PARTITION BY vec_id, j ORDER BY d2, cid) AS rn
     FROM sd) WHERE rn = 1)
-"""
-
-ORACLE_PQ_CODES = f"""
-WITH {_DUCK_PQ_CODES}
-SELECT vec_id,
-  {", ".join(f"CAST(max(CASE WHEN j = {j} THEN cid END) AS INT) AS code{j}" for j in range(4))}
-FROM codes GROUP BY vec_id ORDER BY vec_id
 """
 
 
@@ -2089,27 +1616,21 @@ FROM ranked WHERE rk <= 5 ORDER BY o_orderpriority, rk
 
 # The driver records CORRECTNESS rows for the FIRST 50 queries() keys
 # (insertion order — confirmed r2: 51 entries -> 50 rows; r3: 63 -> the
-# first 50 exactly). Policy (VERDICT r3 #1): keep the driver-visible
-# catalog at EXACTLY 50 so every entry gets an independent driver row,
-# ordered newest/least-driver-verified FIRST; redundant demo entries
-# (subsumed by a fuller query that exercises the same operator) live in
-# build_folded_queries() below — still value-oracled every pytest run
-# (tests/test_spark_queries.py parametrizes over BOTH registries), just
-# not spending one of the 50 driver slots.
+# first 50 exactly). Policy (VERDICT r3 #1): keep the catalog at EXACTLY
+# 50 so every entry gets an independent driver row, ordered
+# newest/least-driver-verified FIRST. This is the only registry: adding
+# a query means replacing one.
 DRIVER_CATALOG_CAP = 50
 
 
 def build_queries():
-    # r5 rotation (VERDICT r4 #2): the 11 folded entries with ZERO
-    # lifetime driver rows + the new decoded_layout lead the window;
-    # 12 long-stable entries (3-4 lifetime green driver rows each, every
-    # operator still represented in-window — see build_folded_queries
-    # notes) rotate out to the folded registry. After this round, every
-    # catalog entry has >= 1 lifetime driver-green CORRECTNESS row.
+    # r5 rotation (VERDICT r4 #2): entries with ZERO lifetime driver rows
+    # + the new decoded_layout lead the window. Every entry has >= 1
+    # lifetime driver-green CORRECTNESS row.
     return {
         # --- round-5 addition (no driver evidence yet) ---
         "decoded_layout": q_decoded_layout,
-        # --- rotated IN from the folded set (zero lifetime driver rows) ---
+        # --- zero lifetime driver rows before r5 ---
         "contamination_check": q_contamination_check,
         "repetition_scores": q_repetition_scores,
         "length_quantiles": q_length_quantiles,
@@ -2136,7 +1657,7 @@ def build_queries():
         "asof_view_purchase": q_asof_view_purchase,
         "range_join_promos": q_range_join_promos,
         # --- driver-verified in r1-r4 ---
-        "golden_protocols": _golden_query(PROTOCOLS),
+        "golden_protocols": q_golden_protocols,
         "sanitize_default_roundtrip": q_sanitize_default_roundtrip,
         "media_passthrough": q_media_passthrough,
         "relaxed_unchanged_docs": q_relaxed_unchanged_docs,
@@ -2163,69 +1684,6 @@ def build_queries():
         "stratified_sample": q_stratified_sample,
         "salted_lang_counts": q_salted_lang_counts,
     }
-
-
-def build_folded_queries():
-    """Catalog entries folded OUT of the 50-slot driver window (VERDICT
-    r3 #1): each is a demo/intermediate surface of an operator that a
-    fuller driver-visible query exercises end-to-end (noted per entry).
-    They remain first-class — value-oracled against DuckDB every pytest
-    run — they just don't spend a driver slot."""
-    return {
-        # candidate-pair stage of near_dup_verified / near_dup_clusters
-        "near_dup_pairs": q_near_dup_pairs,
-        # 1-row Jaccard demo; exact Jaccard is near_dup_verified's verify
-        "ngram_jaccard": q_ngram_jaccard,
-        # bucket histograms subsumed by embedding_topk_lsh / _ivf / _pq
-        "lsh_buckets": q_lsh_buckets,
-        "ivf_cells": q_ivf_cells,
-        "pq_codes": q_pq_codes,
-        # single Lloyd round subsumed by kmeans_refined_assign's loop
-        "kmeans_step": q_kmeans_step,
-        # 128-bit scale variant of the in-window simhash_near_dup (r5:
-        # 4x32-bit pigeonhole bands for corpora where 16-bit bands
-        # saturate — soak-measured onset ~3M docs)
-        "simhash128_near_dup": q_simhash128_near_dup,
-        # span-order invariant also pinned by media_passthrough + the
-        # roundtrip queries (span-sequence equality is their whole check)
-        "span_order_preserved": q_span_order_preserved,
-        # fake-dims resize plan subsumed by the REAL decode decoded_resize
-        "media_resize_plan": q_media_resize_plan,
-        # --- rotated OUT in r5 (3-4 lifetime green driver rows each;
-        # operator coverage retained in-window as noted) ---
-        # golden_sql_udf (in-window) carries the SAME values through the
-        # SQL-UDF registration path; golden_protocols stays in-window
-        "golden_strings": _golden_query(STRINGS),
-        # relaxed config still pinned by relaxed_unchanged_docs (window)
-        # + the golden matrix; default roundtrip stays in-window
-        "sanitize_relaxed_roundtrip": q_sanitize_relaxed_roundtrip,
-        # span projection/explode pinned by media_passthrough (window)
-        "span_kind_counts": q_span_kind_counts,
-        # per-lang aggs pinned by salted_lang_counts (window)
-        "doc_stats_by_lang": q_doc_stats_by_lang,
-        # quality ratios composed inside corpus_keep_list (window)
-        "quality_scores": q_quality_scores,
-        # marker-based lang ID; the fuller trigram classifier stays
-        "lang_id": q_lang_id,
-        # BPE-ish regex counting; token_counts rotated in-window
-        "token_counts_bpe": q_token_counts_bpe,
-        # simple agg over events; event_window_rollup stays in-window
-        "label_stats": q_label_stats,
-        # media UDF batch shape pinned by decoded_resize + media_manifest
-        "media_features": q_media_features,
-        # frame-grid timing math; sampler plumbing unchanged since r2
-        "frame_samples": q_frame_samples,
-        # :not()/attr-operator selector pinned by extract_links (window)
-        "extract_external_links": q_extract_external_links,
-        # before/after insertion pinned by text_within_ignore (window)
-        # + golden matrix; content-insertion tests stay green
-        "annotate_paragraphs": q_annotate_paragraphs,
-    }
-
-
-def all_queries():
-    """Driver window + folded entries (bench and tests use this)."""
-    return {**build_folded_queries(), **build_queries()}
 
 
 def build_oracles():
@@ -2284,29 +1742,3 @@ def build_oracles():
         "salted_lang_counts": ORACLE_SALTED_LANG_COUNTS,
     }
 
-
-def build_folded_oracles():
-    """DuckDB oracle for every build_folded_queries() key."""
-    return {
-        "near_dup_pairs": ORACLE_NEAR_DUP,
-        "ngram_jaccard": ORACLE_NGRAM_JACCARD,
-        "lsh_buckets": ORACLE_LSH_BUCKETS,
-        "ivf_cells": ORACLE_IVF_CELLS,
-        "pq_codes": ORACLE_PQ_CODES,
-        "kmeans_step": ORACLE_KMEANS_STEP,
-        "simhash128_near_dup": ORACLE_SIMHASH128_NEAR_DUP,
-        "span_order_preserved": ORACLE_SPAN_ORDER,
-        "media_resize_plan": ORACLE_MEDIA_RESIZE,
-        "golden_strings": _golden_oracle(STRINGS),
-        "sanitize_relaxed_roundtrip": ORACLE_RELAXED_ROUNDTRIP,
-        "span_kind_counts": ORACLE_SPAN_KIND_COUNTS,
-        "doc_stats_by_lang": ORACLE_DOC_STATS,
-        "quality_scores": ORACLE_QUALITY,
-        "lang_id": _langid_oracle(),
-        "token_counts_bpe": ORACLE_TOKEN_COUNTS_BPE,
-        "label_stats": ORACLE_LABEL_STATS,
-        "media_features": ORACLE_MEDIA_FEATURES,
-        "frame_samples": ORACLE_FRAME_SAMPLES,
-        "extract_external_links": ORACLE_EXTRACT_EXTERNAL_LINKS,
-        "annotate_paragraphs": ORACLE_ANNOTATE_PARAGRAPHS,
-    }

@@ -37,12 +37,6 @@ def _cosine(a: str, b: str) -> str:
     return f"{_dot(a, b)} / ({_norm(a)} * {_norm(b)})"
 
 
-def embedding_norms(embeddings: DataFrame) -> DataFrame:
-    return embeddings.selectExpr(
-        "vec_id", f"round({_norm('embedding')}, 4) AS norm"
-    ).orderBy("vec_id")
-
-
 def query_vector(spark: SparkSession, embeddings: DataFrame, vec_id: int):
     row = embeddings.where(F.col("vec_id") == vec_id).select("embedding").head()
     if row is None:
@@ -73,21 +67,15 @@ def topk_cosine(
     return df.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(k)
 
 
-def sign_lsh_buckets(embeddings: DataFrame, n_components: int = 4) -> DataFrame:
-    """Sign-LSH (quadrant) bucketing on the first n components: the
-    IVF-style candidate-pruning path — neighbors are searched only
-    within a bucket, turning all-pairs into a per-bucket problem."""
+def _bucket_expr(n_components: int = 4):
+    """Sign-LSH (quadrant) bucket of ``embedding``: bit j is set iff
+    component j is positive."""
     bucket = F.lit(0)
     for j in range(n_components):
         bucket = bucket + F.when(
             F.element_at("embedding", j + 1) > 0, F.lit(1 << j)
         ).otherwise(F.lit(0))
-    return (
-        embeddings.select(bucket.alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count("*").alias("n_vectors"))
-        .orderBy("bucket")
-    )
+    return bucket
 
 
 def topk_cosine_lsh(
@@ -101,12 +89,7 @@ def topk_cosine_lsh(
     for j in range(n_components):
         if query[j] > 0:
             qbucket |= 1 << j
-    bucket = F.lit(0)
-    for j in range(n_components):
-        bucket = bucket + F.when(
-            F.element_at("embedding", j + 1) > 0, F.lit(1 << j)
-        ).otherwise(F.lit(0))
-    candidates = embeddings.where(bucket == qbucket)
+    candidates = embeddings.where(_bucket_expr(n_components) == qbucket)
     return topk_cosine(candidates, query, k, exclude_vec_id=exclude_vec_id)
 
 
@@ -129,17 +112,6 @@ def ivf_assign(embeddings: DataFrame, n_centroids: int = 16) -> DataFrame:
     # is far below any meaningful similarity resolution. argmax via
     # struct-max over (cosine, -cid): one aggregate, no window.
     return _argmax_assign(_assign_scored(embeddings, cents))
-
-
-def ivf_cells(embeddings: DataFrame, n_centroids: int = 16) -> DataFrame:
-    """Cell occupancy of the IVF index (the partition histogram you'd
-    monitor for quantizer skew)."""
-    return (
-        ivf_assign(embeddings, n_centroids)
-        .groupBy("cid")
-        .agg(F.count("*").alias("n_vectors"))
-        .orderBy("cid")
-    )
 
 
 def topk_cosine_ivf(
@@ -181,30 +153,6 @@ def topk_cosine_ivf(
         )
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
-    )
-
-
-def kmeans_step(embeddings: DataFrame, n_centroids: int = 16) -> DataFrame:
-    """One distributed Lloyd iteration over the IVF coarse quantizer:
-    assign every vector to its nearest centroid (ivf_assign — broadcast
-    centroids, struct-max argmax), then recompute each centroid as the
-    component-wise mean of its assigned vectors. Output is one row per
-    (cid, dim) so no float-array stringification is needed cross-engine.
-
-    Scale shape: the only shuffle is the (cid, dim) partial-agg mean —
-    the classic distributed k-means step. A full refinement loop
-    composes this with a centroid-table swap per round and a
-    localCheckpoint per iteration (the near_dup_clusters pattern);
-    assignment cost stays broadcast-join narrow throughout."""
-    assign = ivf_assign(embeddings, n_centroids)
-    joined = assign.join(
-        embeddings.select("vec_id", "embedding"), "vec_id"
-    )
-    ex = joined.select("cid", F.posexplode("embedding").alias("dim", "v"))
-    return (
-        ex.groupBy("cid", "dim")
-        .agg(F.round(F.avg(F.col("v").cast("double")), 6).alias("centroid"))
-        .orderBy("cid", "dim")
     )
 
 
@@ -573,30 +521,6 @@ def topk_pq_adc(
         .orderBy(F.asc("adc_d2"), F.asc("vec_id"))
         .limit(k)
     )
-
-
-def label_centroids(embeddings: DataFrame) -> DataFrame:
-    """Per-label count + mean of the first embedding component —
-    a groupBy with map-side partial aggregation."""
-    return (
-        embeddings.groupBy("label")
-        .agg(
-            F.count("*").alias("n_vectors"),
-            F.round(F.avg(F.element_at("embedding", 1).cast("double")), 5).alias(
-                "mean_c0"
-            ),
-        )
-        .orderBy("label")
-    )
-
-
-def _bucket_expr(n_components: int = 4):
-    bucket = F.lit(0)
-    for j in range(n_components):
-        bucket = bucket + F.when(
-            F.element_at("embedding", j + 1) > 0, F.lit(1 << j)
-        ).otherwise(F.lit(0))
-    return bucket
 
 
 def near_dup_cosine(

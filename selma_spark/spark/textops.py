@@ -6,8 +6,9 @@ pushdown/column pruning and whole-stage codegen. Each op has a matching
 DuckDB oracle in queries.py.
 
 Ops: exact dedup (hash-groupBy), MinHash signatures + LSH candidate
-pairs, SimHash (hex-digit-parity variant), n-gram Jaccard shingles,
-token counting, quality scoring, and a trigram language-ID heuristic.
+pairs with exact shingle-Jaccard verify, SimHash (hex-digit-parity
+variant), token counting, corpus quality filtering, and a trigram
+language-ID heuristic.
 """
 
 from __future__ import annotations
@@ -21,18 +22,6 @@ MINHASH_SALTS = ("s0", "s1", "s2", "s3")
 
 def tokens_col(text_col="text"):
     return F.split(F.col(text_col), " ")
-
-
-def doc_stats_by_lang(documents: DataFrame) -> DataFrame:
-    return (
-        documents.groupBy("lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").alias("sum_chars"),
-            F.sum(F.size(tokens_col())).alias("total_tokens"),
-        )
-        .orderBy("lang")
-    )
 
 
 def dedup_exact(documents: DataFrame) -> DataFrame:
@@ -53,28 +42,10 @@ def token_counts(documents: DataFrame) -> DataFrame:
 
 
 def _stopword_hits(toks):
-    """Count of STOPWORDS occurrences — shared by quality_scores and
-    corpus_keep_list so the ratio definition cannot drift."""
+    """Count of STOPWORDS occurrences (corpus_keep_list's stopword
+    ratio numerator)."""
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     return F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
-
-
-def quality_scores(documents: DataFrame) -> DataFrame:
-    """Heuristic quality signals: length, token count, mean token length,
-    stopword ratio — the standard cheap pre-filters for a training
-    corpus."""
-    toks = tokens_col()
-    n_tokens = F.size(toks)
-    n_stop = _stopword_hits(toks)
-    return documents.select(
-        "doc_id",
-        F.length("text").alias("n_chars"),
-        n_tokens.alias("n_tokens"),
-        F.round(
-            (F.length("text") - (n_tokens - 1)) / n_tokens, 4
-        ).alias("avg_token_len"),
-        F.round(n_stop / n_tokens, 4).alias("stopword_ratio"),
-    ).orderBy("doc_id")
 
 
 # Word 3-shingles of ``text`` as SQL text, parsed by F.expr/selectExpr:
@@ -232,8 +203,6 @@ def near_dup_pairs(
 # Bit 63's weight is INT64_MIN: in two's complement the subset-sum of
 # {1, 2, ..., 2^62, -2^63} is exactly the signed 64-bit signature and can
 # never overflow BIGINT in either engine.
-SIMHASH_WEIGHTS = tuple(1 << j for j in range(63)) + (-(1 << 63),)
-
 _SIMHASH_WEIGHTS_SQL = ", ".join(
     [f"{1 << j}L" for j in range(63)] + ["(-9223372036854775807L - 1L)"]
 )
@@ -281,131 +250,6 @@ def simhash64(documents: DataFrame) -> DataFrame:
     return documents.select(
         "doc_id", F.expr(_SIMHASH64_EXPR).alias("simhash")
     ).orderBy("doc_id")
-
-
-# --- 128-bit SimHash (the band-saturation scale path) -----------------------
-# The r5 x640 soak made the 64-bit comment measurable: at 3.2M docs the
-# 4x16-bit band space (262,144 buckets) saturates (~49 docs/bucket) and
-# the cap starts dropping 8% of buckets. md5 already yields 128 bits, so
-# the scale variant uses BOTH words: two 64-bit majority-vote signatures
-# (hex digits 1-16 and 17-32) and 4x32-bit pigeonhole bands — hamming<=3
-# over the 128 bits still guarantees >=1 exact band, while the band
-# space grows to 4 * 2^32 (~1.7e10 buckets), pushing saturation out to
-# ~10^11 docs. The digit arrays are built ONCE into a named column so
-# the per-token md5 pass isn't duplicated across the two words.
-
-# r6: same packed-word formulation as _SIMHASH64_EXPR — per token, md5
-# hex digits 1-16 and 17-32 become TWO 64-bit words (digit layout and
-# shift table identical to the 64-bit path by construction)
-_SIMHASH_WORD64_LO = (
-    "shiftleft(CAST(conv(substring(h, 17, 8), 16, 10) AS BIGINT), 32)"
-    " | CAST(conv(substring(h, 25, 8), 16, 10) AS BIGINT)"
-)
-
-_SIMHASH_WORDS32_EXPR = f"""
-transform(
-  transform(split(text, ' '), t -> md5(t)),
-  h -> array({_SIMHASH_WORD64}, {_SIMHASH_WORD64_LO}))
-"""
-
-
-def _simhash_word_expr(dig_off: int) -> str:
-    """64-bit majority-vote word over hex digits [dig_off+1, dig_off+16]
-    of a pre-built ``ws`` column (per-token [hi_word, lo_word] pairs;
-    ``n_toks`` holds the token count). Same bit permutation as
-    _SIMHASH64_EXPR — bit j reads the packed word at literal shift
-    60 - 4*(j div 4) + j mod 4."""
-    idx = 1 if dig_off == 0 else 2
-    return f"""
-aggregate(
-  zip_with(
-    aggregate(ws, array_repeat(0, 64),
-      (acc, wp) -> zip_with(acc, array({_SIMHASH_SHIFTS_SQL}),
-        (a, s) -> a + CAST(shiftright(element_at(wp, {idx}), s) & 1 AS INT))),
-    array({_SIMHASH_WEIGHTS_SQL}),
-    (c, w) -> IF(2 * c > n_toks, w, 0L)),
-  0L, (a, b) -> a + b)
-"""
-
-
-def simhash128(documents: DataFrame) -> DataFrame:
-    """128-bit SimHash as two BIGINT words: ``sim_hi`` over md5 hex
-    digits 1-16 (identical to simhash64's value — pinned by test) and
-    ``sim_lo`` over digits 17-32. One md5 pass per token (digs built
-    once; Catalyst keeps the named column because it feeds both
-    words)."""
-    digs = documents.select(
-        "doc_id",
-        F.expr(_SIMHASH_WORDS32_EXPR).alias("ws"),
-        F.size(F.split(F.col("text"), " ")).alias("n_toks"),
-    )
-    return digs.select(
-        "doc_id",
-        F.expr(_simhash_word_expr(0)).alias("sim_hi"),
-        F.expr(_simhash_word_expr(16)).alias("sim_lo"),
-    ).orderBy("doc_id")
-
-
-def simhash_near_dup128(
-    documents: DataFrame, max_hamming: int = 3, max_band_size: int = 100
-) -> DataFrame:
-    """128-bit SimHash near-duplicate pairs with 4 x 32-bit pigeonhole
-    bands — the same chain shape as simhash_near_dup (checkpointed
-    signature frame, capped buckets, JVM bit_count verify, merge-hinted
-    corpus-scaled joins) with a band space that survives corpora where
-    16-bit bands saturate (soak-measured onset at ~3M docs)."""
-    sh = (
-        simhash128(documents)
-        .select("doc_id", "sim_hi", "sim_lo")
-        .localCheckpoint()
-    )
-    word = {0: "sim_hi", 1: "sim_hi", 2: "sim_lo", 3: "sim_lo"}
-    bands = sh.select(
-        "doc_id",
-        "sim_hi",
-        "sim_lo",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("band_id"),
-                        F.shiftright(F.col(word[k]), 32 * (k % 2))
-                        .bitwiseAND(F.lit(4294967295))
-                        .alias("band_val"),
-                    )
-                    for k in range(4)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "sim_hi", "sim_lo", "b.band_id", "b.band_val")
-    counts = bands.groupBy("band_id", "band_val").agg(
-        F.count("*").alias("_n")
-    )
-    kept = bands.join(
-        counts.where(F.col("_n") <= max_band_size).hint("merge"),
-        ["band_id", "band_val"],
-    ).drop("_n")
-    a, b = kept.alias("a"), kept.hint("merge").alias("b")
-    ham = (
-        F.bit_count(F.col("a.sim_hi").bitwiseXOR(F.col("b.sim_hi")))
-        + F.bit_count(F.col("a.sim_lo").bitwiseXOR(F.col("b.sim_lo")))
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            ham.alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-        .orderBy("doc_a", "doc_b")
-    )
 
 
 def simhash_bands(sh: DataFrame) -> DataFrame:
@@ -476,35 +320,6 @@ def simhash_near_dup(
         .distinct()
         .orderBy("doc_a", "doc_b")
     )
-
-
-def ngram_jaccard(documents: DataFrame, doc_a: int, doc_b: int) -> DataFrame:
-    """Jaccard similarity of two documents' word-3-gram sets."""
-    d = documents.where(F.col("doc_id").isin(doc_a, doc_b)).selectExpr(
-        "doc_id", f"array_distinct({_SHINGLES_SQL}) AS sh"
-    )
-    a = d.where(F.col("doc_id") == doc_a).select(F.col("sh").alias("sa"))
-    b = d.where(F.col("doc_id") == doc_b).select(F.col("sh").alias("sb"))
-    return a.crossJoin(b).select(
-        F.lit(doc_a).alias("doc_a"),
-        F.lit(doc_b).alias("doc_b"),
-        F.round(
-            F.size(F.array_intersect("sa", "sb"))
-            / F.size(F.array_union("sa", "sb")),
-            4,
-        ).alias("jaccard"),
-    )
-
-
-# trigram profiles per language: deterministic tiny heuristic (the corpus
-# langs are synthetic labels; this demonstrates the n-gram langid shape)
-_LANG_MARKERS = {
-    "en": ("the", "and"),
-    "es": ("el", "la"),
-    "de": ("der", "und"),
-    "fr": ("le", "et"),
-    "zh": ("de", "shi"),
-}
 
 
 def _char_trigrams(text_col="text"):
@@ -588,31 +403,6 @@ def lang_id_trigram(documents: DataFrame, profile_k: int = 64) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def lang_id_ngram(documents: DataFrame) -> DataFrame:
-    """Language-ID heuristic: score = marker-token hits per language,
-    predict argmax (ties -> 'und'). Structured like a real n-gram
-    classifier but with a deterministic tiny marker table."""
-    toks = tokens_col()
-    def marker_hit(markers):
-        arr = F.array(*[F.lit(m) for m in markers])
-        return lambda t: F.array_contains(arr, t)
-
-    scores = [
-        F.struct(
-            F.size(F.filter(toks, marker_hit(markers))).alias("score"),
-            F.lit(lang).alias("lang"),
-        )
-        for lang, markers in sorted(_LANG_MARKERS.items())
-    ]
-    best = F.array_max(F.array(*scores))
-    return documents.select(
-        "doc_id",
-        F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und")).alias(
-            "pred_lang"
-        ),
-    ).orderBy("doc_id")
-
-
 # Rabin-Karp rolling-hash fingerprinting (w=5 char windows, base 131,
 # modulus 1000003, winnowing-style selection hash % 16 == 0). The
 # polynomial is written with literal coefficients so the DuckDB oracle
@@ -652,26 +442,6 @@ def rolling_fingerprints(documents: DataFrame) -> DataFrame:
         F.size(fps).alias("n_fp"),
         F.array_min(fps).alias("min_fp"),
         F.array_max(fps).alias("max_fp"),
-    ).orderBy("doc_id")
-
-
-# GPT-2-style pre-tokenizer regex, restricted to constructs with
-# identical semantics in Java regex (Spark) and RE2 (DuckDB): ordered
-# alternation, explicit ASCII classes (no \s, whose definition differs
-# between the engines).
-BPE_TOKEN_RE = r" ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 \t\n\r]+"
-
-
-def token_counts_bpe(documents: DataFrame) -> DataFrame:
-    """Token counting, BPE-ish: whitespace-split count plus a GPT-2-style
-    regex token count (letters / digits / punctuation runs with optional
-    leading space). Pure JVM regex — one narrow pass."""
-    return documents.select(
-        "doc_id",
-        F.size(tokens_col()).alias("n_ws_tokens"),
-        F.regexp_count(F.coalesce("text", F.lit("")), F.lit(BPE_TOKEN_RE)).alias(
-            "n_bpe_tokens"
-        ),
     ).orderBy("doc_id")
 
 

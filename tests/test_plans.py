@@ -327,11 +327,9 @@ def test_near_dup_chain_never_planner_broadcasts(spark):
         textops.near_dup_verified(docs),
         textops.near_dup_pairs(docs),
         textops.simhash_near_dup(docs),
-        # r6 (ADVICE r5 #3): the 128-bit scale variant and the star-
-        # contraction output carry the same tiny checkpoint-ancestry
-        # estimates — pin them too so a dropped merge hint can't regress
-        # unpinned
-        textops.simhash_near_dup128(docs),
+        # r6 (ADVICE r5 #3): the star-contraction output carries the same
+        # tiny checkpoint-ancestry estimates — pin it too so a dropped
+        # merge hint can't regress unpinned
         textops.near_dup_clusters(docs),
     ):
         plan = plan_of(df, mode="simple")

@@ -9,6 +9,7 @@ pipeline-added scale operators' own documented contracts
 """
 
 import hashlib
+import math
 from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
@@ -72,6 +73,23 @@ def _py_minhash(shingles: frozenset) -> tuple:
         )
         for salt in MINHASH_SALTS
     )
+
+
+def _kept_bands(mh: dict, max_band_size: int) -> set:
+    """(band_id, band_val) buckets holding at most max_band_size docs —
+    the buckets textops.lsh_bands keeps."""
+    occupancy: dict[tuple, int] = {}
+    for sig in mh.values():
+        for band_id, val in enumerate(sig):
+            key = (band_id, val)
+            occupancy[key] = occupancy.get(key, 0) + 1
+    return {key for key, n in occupancy.items() if n <= max_band_size}
+
+
+def _round_half_up_9(x: float) -> Decimal:
+    """Twin of Spark's round(double, 9): HALF_UP on the shortest decimal
+    representation of the double."""
+    return Decimal(repr(x)).quantize(Decimal("1e-9"), rounding=ROUND_HALF_UP)
 
 
 def _round_half_up_4(num: int, den: int) -> Decimal:
@@ -164,72 +182,6 @@ def test_pigeonhole_shared_band_property(corpus):
     assert checked > 0
 
 
-def _py_simhash128(text: str) -> tuple:
-    toks = text.split(" ")
-    counts = [0] * 128
-    for t in toks:
-        h = hashlib.md5(t.encode("utf-8")).hexdigest()
-        for j in range(128):
-            counts[j] += (int(h[j // 4], 16) >> (j % 4)) & 1
-    hi = lo = 0
-    for j in range(64):
-        if 2 * counts[j] > len(toks):
-            hi |= 1 << j
-        if 2 * counts[64 + j] > len(toks):
-            lo |= 1 << j
-    return hi, lo
-
-
-def test_simhash128_near_dup_equals_brute_force(spark, corpus):
-    """128-bit variant (r5, the band-saturation scale path): output must
-    equal the all-pairs 128-bit hamming<=3 set modulo kept 32-bit bands,
-    and sim_hi must equal the 64-bit signature bit-for-bit."""
-    from selma_spark.spark import textops as T
-
-    sigs = {d: _py_simhash128(t) for d, t in corpus.items()}
-    occupancy: dict[tuple, int] = {}
-    for hi, lo in sigs.values():
-        for k in range(4):
-            w = hi if k < 2 else lo
-            key = (k, (w >> (32 * (k % 2))) & 0xFFFFFFFF)
-            occupancy[key] = occupancy.get(key, 0) + 1
-    kept = {key for key, n in occupancy.items() if n <= 100}
-
-    def bands_of(hi, lo):
-        for k in range(4):
-            w = hi if k < 2 else lo
-            yield (k, (w >> (32 * (k % 2))) & 0xFFFFFFFF)
-
-    expected = set()
-    ids = sorted(sigs)
-    for i, a in enumerate(ids):
-        for b in ids[i + 1 :]:
-            ha, la = sigs[a]
-            hb, lb = sigs[b]
-            if ((ha ^ hb).bit_count() + (la ^ lb).bit_count()) > 3:
-                continue
-            if any(
-                ka == kb and ka in kept
-                for ka, kb in zip(bands_of(ha, la), bands_of(hb, lb))
-            ):
-                expected.add((a, b))
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    got = {
-        (int(r["doc_a"]), int(r["doc_b"]))
-        for r in T.simhash_near_dup128(docs).collect()
-    }
-    assert got == expected
-    assert got, "vacuous corpus"
-    # hi word is bit-for-bit the 64-bit signature
-    s64 = {
-        int(r["doc_id"]): int(r["simhash"])
-        for r in T.simhash64(docs).collect()
-    }
-    for r in T.simhash128(docs).collect():
-        assert int(r["sim_hi"]) == s64[int(r["doc_id"])]
-
-
 # --- clustering: star contraction vs brute-force components -----------------
 
 def test_near_dup_clusters_matches_brute_components_on_chain_graph(spark):
@@ -315,13 +267,7 @@ def test_near_dup_verified_equals_brute_force_jaccard(spark, corpus):
     t = Decimal("0.5")
     shingles = {d: _py_shingles(txt) for d, txt in corpus.items()}
     mh = {d: _py_minhash(s) for d, s in shingles.items()}
-
-    occupancy: dict[tuple, int] = {}
-    for sig in mh.values():
-        for band_id, val in enumerate(sig):
-            key = (band_id, val)
-            occupancy[key] = occupancy.get(key, 0) + 1
-    kept = {key for key, n in occupancy.items() if n <= 50}
+    kept = _kept_bands(mh, max_band_size=50)
 
     expected = set()
     candidates = 0
@@ -350,3 +296,97 @@ def test_near_dup_verified_equals_brute_force_jaccard(spark, corpus):
     # the candidate stage really is doing work: brute-force candidates
     # far exceed survivors, else the verify stage is vacuous here
     assert candidates > len(expected)
+
+
+def test_near_dup_pairs_equals_brute_force_shared_kept_band(spark, corpus):
+    """The LSH candidate stage alone: near_dup_pairs returns EXACTLY the
+    pairs agreeing on >= 1 of the 4 minhash bands whose bucket holds at
+    most max_band_size docs, each pair once."""
+    mh = {d: _py_minhash(_py_shingles(t)) for d, t in corpus.items()}
+    kept = _kept_bands(mh, max_band_size=50)
+    ids = sorted(mh)
+    expected = {
+        (a, b)
+        for i, a in enumerate(ids)
+        for b in ids[i + 1 :]
+        if any(mh[a][k] == mh[b][k] and (k, mh[a][k]) in kept
+               for k in range(4))
+    }
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    rows = textops.near_dup_pairs(docs).collect()
+    got = [(int(r["doc_a"]), int(r["doc_b"])) for r in rows]
+    assert len(got) == len(set(got))
+    assert set(got) == expected
+    assert got == sorted(got)
+    assert got, "vacuous corpus: no banded candidate pairs"
+
+
+# --- quantizers: nearest-codeword assignment vs brute force -----------------
+
+@pytest.fixture(scope="module")
+def embeddings(spark):
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    vecs = {int(r["vec_id"]): [float(v) for v in r["embedding"]]
+            for r in emb.collect()}
+    return emb, vecs
+
+
+def test_ivf_assign_equals_brute_force_nearest_centroid(embeddings):
+    """ivf_assign: every vector goes to the seed centroid (vec_id < 16)
+    of largest 9-decimal cosine, ties to the smallest centroid id."""
+    from selma_spark.spark import simsearch
+
+    emb, vecs = embeddings
+
+    def cosine(a, b):
+        dot = 0.0
+        for x, y in zip(a, b):
+            dot += x * y
+        na = nb = 0.0
+        for x in a:
+            na += x * x
+        for y in b:
+            nb += y * y
+        return dot / (math.sqrt(na) * math.sqrt(nb))
+
+    cents = {c: vecs[c] for c in range(16)}
+    expected = {
+        v: min(cents, key=lambda c: (-_round_half_up_9(cosine(e, cents[c])), c))
+        for v, e in vecs.items()
+    }
+    got = {int(r["vec_id"]): int(r["cid"])
+           for r in simsearch.ivf_assign(emb).collect()}
+    assert got == expected
+    assert len(set(got.values())) > 1, "vacuous: one cell holds everything"
+
+
+def test_pq_codes_equal_brute_force_nearest_subcodeword(embeddings):
+    """pq_codes: per vector and per 16-dim subspace, the codebook entry
+    (vec_id < 16) of least 9-decimal squared L2, ties to the smallest
+    id."""
+    from selma_spark.spark import simsearch
+
+    emb, vecs = embeddings
+    m, sub, k = simsearch.PQ_M, simsearch.PQ_SUBDIM, simsearch.PQ_K
+
+    def l2sq(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += (x - y) * (x - y)
+        return acc
+
+    expected = {}
+    for v, e in vecs.items():
+        expected[v] = tuple(
+            min(range(k), key=lambda c: (
+                _round_half_up_9(l2sq(e[j * sub:(j + 1) * sub],
+                                      vecs[c][j * sub:(j + 1) * sub])), c))
+            for j in range(m)
+        )
+    rows = simsearch.pq_codes(emb).collect()
+    got = {int(r["vec_id"]): tuple(int(r[f"code{j}"]) for j in range(m))
+           for r in rows}
+    assert got == expected
+    assert [int(r["vec_id"]) for r in rows] == sorted(vecs)
+    # every codebook entry encodes itself
+    assert all(got[c] == (c,) * m for c in range(k))

@@ -65,8 +65,6 @@ def test_no_module_level_column_or_dataframe_state(spark):
     pipeline.rewritten_text(spans, "relaxed")
     textops.minhash_signatures(docs)
     textops.near_dup_pairs(docs)  # builds the checkpointed signature frame
-    textops.ngram_jaccard(docs, 0, 1)
-    simsearch.embedding_norms(emb)
     simsearch.near_dup_cosine(emb)
     simsearch.kmeans_refined_assign(emb, rounds=1)
 
@@ -135,5 +133,11 @@ def test_every_python_udf_entry_point_calls_ensure_shipped():
             if "ensure_shipped" not in {_called_name(c) for c in calls}:
                 missing.append(where)
     # the scan must see the real entry points, or it proves nothing
-    assert len(entry_points) >= 15, entry_points
+    assert len(entry_points) >= 11, entry_points
+    assert {
+        "functions.py:register_sql_functions",
+        "pipeline.py:_per_doc_rows",
+        "pipeline.py:run_pipeline",
+        "streaming.py:stream_running_event_totals",
+    } <= set(entry_points), entry_points
     assert missing == []

@@ -80,6 +80,34 @@ def test_span_sequence_equality_against_core(spark):
         assert spans[2]["text"] == core.rewrite("<b>tail</b>")
 
 
+@pytest.mark.parametrize("config", ["default", "restricted", "basic"])
+def test_span_sequence_equality_against_golden(spark, config):
+    """The other builtin profiles through the distributed rewrite: text
+    spans equal the golden expectations, the media span and the
+    (kind, offset) skeleton pass through unchanged."""
+    out = {r["doc_id"]: r["spans"] for r in
+           rewrite_documents(make_span_docs(spark), config).collect()}
+    tail = Rewriter(sanitizer=S.BUILTIN_CONFIGS[config]).rewrite("<b>tail</b>")
+    for i, (case, data) in enumerate(sorted(STRINGS.items())):
+        spans = out[f"doc-{i}"]
+        assert [(s["kind"], s["offset"]) for s in spans] == [
+            ("text", 0), ("media", 1), ("text", 2)]
+        assert spans[0]["text"] == data[config], case
+        assert spans[1]["media_ref"] == f"media://doc-{i}/1"
+        assert spans[2]["text"] == tail
+
+
+@pytest.mark.parametrize("config", sorted(S.BUILTIN_CONFIGS))
+def test_rewrite_documents_is_idempotent(spark, config):
+    """A sanitize-only rewrite is a fixpoint: rewriting its own output
+    changes no span."""
+    once = rewrite_documents(make_span_docs(spark), config)
+    twice = rewrite_documents(once, config)
+    assert once.count() > 0
+    assert once.exceptAll(twice).count() == 0
+    assert twice.exceptAll(once).count() == 0
+
+
 def test_media_spans_byte_identical_order_preserved(spark):
     docs = bench_spans(
         spark.read.parquet(f"{SF_DIR}/documents.parquet"), replicate=2
@@ -556,15 +584,75 @@ print(json.dumps(got))
 
 
 def test_oversized_docs_quarantined(spark):
-    docs = make_span_docs(spark)
+    # the cap counts UTF-8 bytes: "<b>ééé</b>" is 10 characters but 13
+    # bytes, so it is quarantined too; "<b>é</b>" (9 bytes) is rewritten
+    docs = make_span_docs(spark).unionByName(spark.createDataFrame(
+        [("doc-utf8", [{"kind": "text", "text": "<b>ééé</b>",
+                        "media_ref": None, "offset": 0},
+                       {"kind": "text", "text": "<b>é</b>",
+                        "media_ref": None, "offset": 1}])],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    ))
     inputs = {r["doc_id"]: r["spans"] for r in docs.collect()}
     out = rewrite_documents(docs, "default", max_text_bytes=10).collect()
-    # every text span longer than the cap passes through byte-identical
+    # every text span over the cap passes through byte-identical
     # (DEFAULT would otherwise strip all its tags)
+    checked = set()
     for r in out:
         for s, orig in zip(r["spans"], inputs[r["doc_id"]]):
-            if s["kind"] == "text" and len(orig["text"] or "") > 10:
+            if (s["kind"] == "text"
+                    and len((orig["text"] or "").encode("utf-8")) > 10):
                 assert s["text"] == orig["text"]
+                checked.add(r["doc_id"])
+        if r["doc_id"] == "doc-utf8":
+            assert r["spans"][1]["text"] == "é"
+    assert "doc-utf8" in checked
+
+
+def _span_batch(texts):
+    """One arrow batch, one document, one text span per entry."""
+    import pyarrow as pa
+
+    span = pa.struct([("kind", pa.string()), ("text", pa.string()),
+                      ("media_ref", pa.string()), ("offset", pa.int32())])
+    spans = pa.array(
+        [[{"kind": "text", "text": t, "media_ref": None, "offset": i}
+          for i, t in enumerate(texts)]],
+        type=pa.list_(span),
+    )
+    return pa.RecordBatch.from_arrays(
+        [pa.array(["d"]), spans], names=["doc_id", "spans"]
+    )
+
+
+@pytest.mark.parametrize(
+    "text, cap, quarantined",
+    [
+        ("<b>abc</b>", 10, False),     # 10 bytes: at the cap
+        ("<b>abcd</b>", 10, True),     # 11 bytes
+        ("<b>é</b>", 10, False),       # 8 chars, 9 bytes
+        ("<b>éé</b>", 10, True),       # 9 chars, 11 bytes
+        ("<b>日本</b>", 12, True),      # 9 chars, 13 bytes
+        ("<b>😀</b>", 11, False),      # 8 chars, 11 bytes: at the cap
+        ("<b>😀</b>", 10, True),       # 8 chars, 11 bytes
+        ("<b>" + "x" * 100 + "</b>", None, False),  # no cap
+    ],
+    ids=["ascii-at-cap", "ascii-over", "2byte-under", "2byte-over",
+         "3byte-over", "4byte-at-cap", "4byte-over", "no-cap"],
+)
+def test_max_text_bytes_counts_utf8_bytes(text, cap, quarantined):
+    """The candidate mask compares UTF-8 byte length with the cap: a
+    span over it keeps its original text, one at or under it is
+    rewritten (DEFAULT strips the <b>)."""
+    from selma_spark.spark.pipeline import make_rewrite_fn
+
+    fn = make_rewrite_fn("default", max_text_bytes=cap)
+    (out,) = list(fn(iter([_span_batch([text, "<i>x</i>"])])))
+    got = out.column(out.schema.get_field_index("spans")).to_pylist()[0]
+    assert got[0]["text"] == (text if quarantined else text[3:-4])
+    assert got[1]["text"] == "x"
+    assert [s["offset"] for s in got] == [0, 1]
 
 
 def test_on_error_keep_contains_failures(spark):
@@ -724,6 +812,39 @@ def test_memo_byte_cap_falls_back_before_collect(spark):
         ).collect()
     }
     assert out == direct
+
+
+@pytest.mark.parametrize(
+    "text, falls_back",
+    [("<b>" + "a" * 10 + "</b>", False),   # 17 chars, 17 bytes
+     ("<b>" + "日" * 10 + "</b>", True)],  # 17 chars, 37 bytes
+    ids=["ascii", "cjk"],
+)
+def test_memo_byte_cap_counts_utf8_bytes(spark, monkeypatch, text, falls_back):
+    """max_memo_bytes bounds the UTF-8 bytes collected to the driver, so
+    a distinct set under the cap in characters but over it in bytes
+    takes the join-based fallback; either way the output is unchanged."""
+    from selma_spark.spark import pipeline
+
+    calls = []
+    dedup = pipeline.rewrite_documents_dedup
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return dedup(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "rewrite_documents_dedup", spy)
+    docs = spark.createDataFrame(
+        [("d", [{"kind": "text", "text": text, "media_ref": None,
+                 "offset": 0}])],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+    out = pipeline.rewrite_documents_memo(
+        docs, "default", max_memo_bytes=20
+    ).collect()
+    assert out[0]["spans"][0]["text"] == text[3:-4]
+    assert bool(calls) == falls_back
 
 
 def test_rewrite_paths_agree_on_random_dirty_corpus(spark):
@@ -919,6 +1040,50 @@ def test_lsh_hot_band_is_capped(spark):
     # exact dedup still catches the hot cluster
     dups = textops.dedup_exact(docs).where(F.col("n_dups") >= 1000)
     assert dups.count() == 1
+
+
+_BODY = ("The real article body, long enough to clear the minimum "
+         "text threshold for a main-content block easily.")
+
+
+@pytest.mark.parametrize(
+    "collect, html, empty",
+    [
+        ("extract_links", '<a href="/1">a</a><p><a href="/2">b</a></p>',
+         (0, "")),
+        ("collect_scoped_text", "<div>kept <b>ignored</b> too</div>",
+         (0, "")),
+        ("density_extract_stats", f"<div><p>{_BODY}</p></div>", (0, 0)),
+    ],
+)
+def test_per_doc_collectors_reset_state_per_document(spark, collect, html,
+                                                     empty):
+    """One row per document, and handler state never leaks between the
+    documents of one task: a media-only or null-spans document after a
+    full one reads empty, and a repeat of the full one reads the same."""
+    from selma_spark.spark import pipeline
+
+    def text(t, off=0):
+        return {"kind": "text", "text": t, "media_ref": None, "offset": off}
+
+    docs = spark.createDataFrame(
+        [("a", [text(html)]),
+         ("b", [{"kind": "media", "text": None, "media_ref": "m://b",
+                 "offset": 0}]),
+         ("c", None),
+         ("d", [text(html[: len(html) // 2]),
+                text(html[len(html) // 2:], 1)])],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    ).coalesce(1)
+    rows = getattr(pipeline, collect)(docs).collect()
+    out = {r[0]: tuple(r[1:]) for r in rows}
+    assert len(rows) == 4
+    assert out["a"] != empty
+    assert out["b"] == out["c"] == empty
+    # text spans are concatenated before the one parse, so a document
+    # split mid-tag reads like the whole one
+    assert out["d"] == out["a"]
 
 
 def test_sql_function_main_content(spark):

@@ -61,16 +61,9 @@ def _rows_to_set(cols, rows):
 
 
 def _entries():
-    """Driver-visible registry PLUS the folded entries (VERDICT r3 #1:
-    the driver records only the first 50 queries() keys, so redundant
-    demo entries moved to build_folded_queries — still value-oracled
-    here on every pytest run)."""
     import __spark_entry__ as e
-    from selma_spark.spark import queries as _q
 
-    qs = {**_q.build_folded_queries(), **e.queries()}
-    oracles = {**_q.build_folded_oracles(), **e.oracle_sql()}
-    return qs, oracles
+    return e.queries(), e.oracle_sql()
 
 
 QS, ORACLES = _entries()
@@ -88,10 +81,30 @@ def test_driver_catalog_is_exactly_at_cap():
     # INSERTION order must match too: the driver walks the first 50
     # queries() keys, and oracle lookup must agree row-for-row
     assert list(e.queries()) == list(e.oracle_sql())
-    # folded and driver-visible keys never overlap
-    from selma_spark.spark import queries as _q
 
-    assert not set(_q.build_folded_queries()) & set(e.queries())
+
+def test_catalog_is_the_only_registry():
+    """Every q_* function in queries.py is a build_queries() entry and
+    every module-level ORACLE_* string reaches build_oracles(), so no
+    second registry of queries outside the driver window can grow
+    back: adding a query means replacing one."""
+    import ast
+    import inspect
+
+    from selma_spark.spark import queries as q
+
+    tree = ast.parse(inspect.getsource(q))
+    defined = {
+        n.name for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name.startswith("q_")
+    }
+    assert defined == {fn.__name__ for fn in q.build_queries().values()}
+    oracles = list(q.build_oracles().values())
+    orphans = [
+        name for name, sql in vars(q).items()
+        if name.startswith("ORACLE_") and not any(sql in o for o in oracles)
+    ]
+    assert orphans == []
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
@@ -118,17 +131,15 @@ def test_query_matches_oracle(name, spark, duck):
 
 
 def test_every_query_has_an_oracle():
-    # every catalog entry (driver-visible AND folded) is value-checked —
-    # no rows-only escape hatch
+    # every catalog entry is value-checked — no rows-only escape hatch
     assert sorted(QS) == sorted(ORACLES)
 
 
 def test_corpus_invariant_for_synth_html_oracles():
-    """ADVICE r3: the synthesized-HTML oracles (text_within_ignore,
-    annotate_paragraphs, extract_external_links) assume every corpus
-    ``text`` is non-empty and contains no '<' — an empty text yields 1
-    chunk vs the oracle's hard-coded 2, and a '<' would change parsing
-    vs the literal-concatenation oracle. Pin the fixture invariant here
+    """ADVICE r3: the synthesized-HTML oracle (text_within_ignore)
+    assumes every corpus ``text`` is non-empty and contains no '<' — an
+    empty text yields 1 chunk vs the oracle's hard-coded 2, and a '<'
+    would change parsing vs the literal-concatenation oracle. Pin the fixture invariant here
     so a regenerated corpus fails LOUDLY at the fixture level instead of
     as an inscrutable oracle mismatch."""
     con = duckdb.connect()
