@@ -481,11 +481,6 @@ def main():
         _guarded(result, "reference_fixtures", fixture_rows)
 
     # secondary per-query timings on the big session
-    # NOTE: the dedup-before-rewrite variants (pipeline.rewrite_documents_
-    # memo / _dedup) are deliberately NOT benched here — bench_spans salts
-    # every replica's text (replicas are distinct payloads), so a dedup
-    # pass cannot help on this corpus and timing it would be noise. They
-    # are pinned for correctness in tests/test_spark_pipeline.py.
     for name in (
         "sanitize_default_roundtrip",
         "dedup_exact",

@@ -12,9 +12,11 @@ Spark-first design notes (scale target: 10^12 docs / ~100 TB):
   reference rewriter.rs:356-440 / README.md:7; Catalyst cannot fuse
   across opaque UDFs, so we must not split handlers into separate UDF
   columns).
-* Documents whose text spans contain no ``<`` bypass tokenization
-  entirely (cheap Python check; semantics are identity for tag-free
-  text — pinned by test/selma_sanitizer_parser_test.rb:7-13).
+* Text spans that contain no ``<`` bypass tokenization entirely: an
+  arrow candidate mask (computed in C, per batch) keeps them in their
+  original buffers, so they never become Python strings; semantics are
+  identity for tag-free text — pinned by
+  test/selma_sanitizer_parser_test.rb:7-13.
 * Skew: documents are atomic units, so giant-document skew is handled
   by *byte-weighted bucketing* (greedy round-robin over size order) —
   an explicit repartition, used when writing resumable output.
@@ -77,8 +79,7 @@ def resolve_config(config):
 
 
 def make_rewrite_fn(config="default", handlers_factory=None,
-                    max_text_bytes=None, on_error="raise", memo_bc=None,
-                    _stats=None):
+                    max_text_bytes=None, on_error="raise", _stats=None):
     """Build the mapInArrow function: record batches of
     (..., spans, ...) rows in, same schema out. Text spans are rewritten;
     media spans, and text spans over ``max_text_bytes`` UTF-8 bytes, pass
@@ -138,20 +139,12 @@ def make_rewrite_fn(config="default", handlers_factory=None,
                     return v
         import pyarrow.compute as pc  # noqa: PLC0415
 
-        if rw is None and memo_bc is None and _stats is None:
+        if rw is None and _stats is None:
             # pure passthrough (config None, no handlers): the rebuild
             # below is an identity — skip the arrow decode/re-encode of
             # every text cell entirely (r6)
             yield from batches
             return
-
-        if memo_bc is not None and rw is not None:
-            memo_get = memo_bc.value.get
-            bc_base_rw = rw
-
-            def rw(t, _get=memo_get, _rw=bc_base_rw):
-                v = _get(t)
-                return _rw(t) if v is None else v
 
         tally = {}
         for batch in batches:
@@ -172,9 +165,9 @@ def make_rewrite_fn(config="default", handlers_factory=None,
             # match_substring('') is false, and fill_null folds the
             # null-kind / null-text cases to false.
             if rw is None:
-                # passthrough config carrying a broadcast memo: the memo
-                # was itself built by the identity rewrite, so texts pass
-                # through unchanged (matches the old per-row condition)
+                # passthrough config (config None, no handlers) on
+                # run_pipeline's _stats path: the batch is still walked
+                # for the tally, but every text is carried over unchanged
                 new_texts_arr = texts
             else:
                 cand = pc.and_(
@@ -250,209 +243,6 @@ def rewrite_documents(
     )
 
 
-def rewrite_documents_memo(
-    docs: DataFrame,
-    config="default",
-    handlers_factory=None,
-    max_text_bytes=None,
-    on_error="raise",
-    max_distinct: int = 2_000_000,
-    max_memo_bytes: int = 256 << 20,
-) -> DataFrame:
-    """Dedup-before-rewrite, broadcast flavor: rewrite each DISTINCT text
-    payload once in a small side job, broadcast the text->output dict,
-    and keep the main pass NARROW (mapInArrow lookup; zero shuffle of
-    the corpus). Same output as rewrite_documents.
-
-    This is the right shape when the distinct-payload set is bounded
-    (boilerplate-heavy web corpora: nav/footer/template spans repeat
-    millions of times). The distinct set must fit in executor memory —
-    enforced by ``max_distinct``; above it, falls back to
-    rewrite_documents_dedup (join-based, unbounded cardinality)."""
-    spark = docs.sparkSession
-    # the distinct payload set must fit in driver memory; check BOTH the
-    # row cap and the byte cap DISTRIBUTEDLY before any driver collect
-    # (a few-but-huge-payload corpus would otherwise OOM the driver
-    # inside toPandas before the byte check ever ran)
-    distinct_df = (
-        docs.select(F.explode("spans").alias("s"))
-        .where(F.col("s.kind") == "text")
-        .select(F.col("s.text").alias("text"))
-        .where(F.col("text").isNotNull() & F.col("text").contains("<"))
-        .distinct()
-        .persist()
-    )
-    try:
-        stats = distinct_df.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum(F.octet_length("text")), F.lit(0)).alias("bytes"),
-        ).first()
-        if stats["n"] > max_distinct or stats["bytes"] > max_memo_bytes:
-            return rewrite_documents_dedup(
-                docs, config, handlers_factory, max_text_bytes, on_error
-            )
-        distinct_pdf = distinct_df.toPandas()
-    finally:
-        distinct_df.unpersist()
-    # rewrite the distinct payloads in a small local-data job (no second
-    # corpus scan), keyed by position
-    wrapped = spark.createDataFrame(
-        [(str(i), t) for i, t in enumerate(distinct_pdf["text"])],
-        "doc_id string, text string",
-    ).select(
-        "doc_id",
-        F.array(
-            F.struct(
-                F.lit("text").alias("kind"),
-                F.col("text").alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
-                F.lit(0).cast("int").alias("offset"),
-            )
-        ).alias("spans"),
-    )
-    out_by_key = (
-        rewrite_documents(
-            wrapped, config, handlers_factory, max_text_bytes, on_error
-        )
-        .select("doc_id", F.element_at("spans", 1)["text"].alias("out"))
-        .toPandas()
-        .set_index("doc_id")["out"]
-    )
-    memo_bc = spark.sparkContext.broadcast(
-        {
-            t: out_by_key[str(i)]
-            for i, t in enumerate(distinct_pdf["text"])
-        }
-    )
-    from .shipping import ensure_shipped
-
-    ensure_shipped(spark)
-    return docs.mapInArrow(
-        make_rewrite_fn(config, handlers_factory, max_text_bytes, on_error,
-                        memo_bc=memo_bc),
-        schema=docs.schema,
-    )
-
-
-def rewrite_documents_dedup(
-    docs: DataFrame,
-    config="default",
-    handlers_factory=None,
-    max_text_bytes=None,
-    on_error="raise",
-    broadcast_rewritten: bool = False,
-) -> DataFrame:
-    """Rewrite with distinct-payload elimination: rewrite each DISTINCT
-    text span once, hash-join the results back, reassemble spans in
-    offset order. Same output as rewrite_documents (span-sequence
-    equality; pinned by tests/test_spark_pipeline.py).
-
-    Trade-off vs the narrow path: +2 shuffles (distinct + join +
-    reassembly groupBy) in exchange for running the Python rewrite once
-    per distinct payload. On web corpora (20-40% exact-dup pages,
-    boilerplate-heavy) the Python pass dominates end-to-end cost by
-    10-50x per byte, so this wins whenever the dup ratio is
-    non-trivial; on an all-unique corpus it only costs the shuffles.
-    The join key is md5(text) (not the text itself) so shuffle rows
-    stay narrow.
-
-    ``broadcast_rewritten=True`` hints the rewritten-distinct side into a
-    broadcast hash join so the corpus side never shuffles for the join.
-    Like any broadcast (and like rewrite_documents_memo), the build side
-    still transits the driver in BroadcastExchange — only use it when
-    the distinct-payload set is known to fit comfortably in driver and
-    executor memory."""
-    from .shipping import ensure_shipped
-
-    ensure_shipped(docs.sparkSession)
-    span_t = docs.schema["spans"].dataType.elementType
-
-    ex = docs.select(
-        "doc_id", F.posexplode("spans").alias("pos", "s")
-    ).select("doc_id", "pos", F.col("s.*"))
-    # NULL text must not share a key with '' (md5(coalesce) would collide
-    # them and F.first could swap one for the other); prefix-disambiguate
-    text_rows = ex.where(F.col("kind") == "text").withColumn(
-        "_h",
-        F.when(F.col("text").isNull(), F.lit("null:"))
-        .otherwise(F.concat(F.lit("md5:"), F.md5("text"))),
-    )
-
-    distinct = text_rows.select("_h", "text").groupBy("_h").agg(
-        F.first("text").alias("text")
-    )
-    # run the distinct payloads through the SAME arrow UDF (wrapped as
-    # single-span docs so the fast paths/quarantine behavior match)
-    wrapped = distinct.select(
-        F.col("_h").alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("text").alias("kind"),
-                F.col("text").alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
-                F.lit(0).cast("int").alias("offset"),
-            )
-        ).alias("spans"),
-    )
-    rewritten = rewrite_documents(
-        wrapped, config, handlers_factory, max_text_bytes, on_error
-    ).select(
-        F.col("doc_id").alias("_h"),
-        F.element_at("spans", 1)["text"].alias("_out_text"),
-    )
-
-    if broadcast_rewritten:
-        rewritten = F.broadcast(rewritten)
-    new_text = (
-        text_rows.join(rewritten, "_h")
-        .select(
-            "doc_id", "pos", "kind",
-            F.col("_out_text").alias("text"),
-            "media_ref", "offset",
-        )
-    )
-    media_rows = ex.where(F.col("kind") != "text")
-    all_rows = new_text.unionByName(media_rows)
-    reassembled = (
-        all_rows.groupBy("doc_id")
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            "pos",
-                            F.struct("kind", "text", "media_ref", "offset").alias("s"),
-                        )
-                    )
-                ),
-                lambda e: e["s"],
-            )
-            .cast(f"array<{span_t.simpleString()}>")
-            .alias("spans"),
-        )
-    )
-    # docs with zero spans still round-trip (left join back to the keys);
-    # NULL spans arrays stay NULL (parity with rewrite_documents, which
-    # masks them through the arrow hop) — only genuinely-empty arrays
-    # come back as empty
-    arr_t = f"array<{span_t.simpleString()}>"
-    keys = docs.select(
-        "doc_id",
-        F.col("spans").isNull().alias("_spans_null"),
-        *[c for c in docs.columns if c not in ("doc_id", "spans")],
-    )
-    return keys.join(reassembled, "doc_id", "left").select(
-        *[
-            F.when(F.col("_spans_null"), F.lit(None).cast(arr_t))
-            .otherwise(F.coalesce("spans", F.array().cast(arr_t)))
-            .alias("spans")
-            if c == "spans"
-            else c
-            for c in docs.columns
-        ]
-    )
-
-
 def rewritten_text(docs: DataFrame, config="default") -> DataFrame:
     """Rewrite + concatenate the text spans per document (offset order).
     Returns (doc_id, out_text) — the comparison surface the SQL oracle
@@ -476,7 +266,7 @@ def with_doc_bytes(docs: DataFrame) -> DataFrame:
         F.aggregate(
             "spans",
             F.lit(0).cast("bigint"),
-            lambda acc, s: acc + F.coalesce(F.length(s["text"]), F.lit(0)),
+            lambda acc, s: acc + F.coalesce(F.octet_length(s["text"]), F.lit(0)),
         ),
     )
 

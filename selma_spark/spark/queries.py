@@ -771,8 +771,9 @@ def q_byte_weighted_buckets(spark, sf_dir):
     )
 
 
-# doc bytes = len(text) + wrapper overhead (by doc_id%%6) + 11 ('<em>ok</em>')
-# when doc_id%%3=0; media spans carry NULL text. The deal is the
+# doc bytes = strlen(text) (UTF-8 bytes, like Spark's octet_length) +
+# wrapper overhead (by doc_id%%6) + 11 ('<em>ok</em>') when doc_id%%3=0;
+# media spans carry NULL text. The deal is the
 # stratified-salted LPT from pipeline.bucketed: stratum = digit count of
 # bytes, salt = first md5 hex digit of doc_id, row_number within
 # (stratum, salt) over (bytes DESC, doc_id ASC), bucket =
@@ -780,7 +781,7 @@ def q_byte_weighted_buckets(spark, sf_dir):
 ORACLE_BYTE_BUCKETS = """
 WITH sized AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-    length(text)
+    strlen(text)
       + (CASE doc_id % 6 WHEN 0 THEN 11 WHEN 1 THEN 7 WHEN 2 THEN 17
                          WHEN 3 THEN 25 WHEN 4 THEN 34 ELSE 30 END)
       + (CASE WHEN doc_id % 3 = 0 THEN 11 ELSE 0 END) AS bytes

@@ -157,9 +157,9 @@ def stream_dedup_documents(
         .parquet(input_dir)
     )
     # per-span fingerprint covers kind + text + media_ref, with NULL
-    # text disambiguated from '' (the same null-vs-empty collision fixed
-    # in rewrite_documents_dedup) — two distinct media-only docs must
-    # NOT collide and be dropped as duplicates
+    # text and '' given different keys (md5(coalesce(text, '')) would
+    # collide them) — two distinct media-only docs must NOT collide and
+    # be dropped as duplicates
     span_fp = F.transform(
         "spans",
         lambda s: F.concat_ws(

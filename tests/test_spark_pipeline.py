@@ -182,6 +182,22 @@ def test_bucketing_modes(spark):
     assert max(vals) <= 1.5 * min(vals)
 
 
+def test_doc_bytes_counts_utf8_bytes(spark):
+    """Byte-weighted bucketing balances BYTES, so a doc's weight is the
+    UTF-8 size of its text spans (3 bytes per CJK char), not their
+    character count; NULL text and media spans weigh nothing."""
+    docs = spark.createDataFrame(
+        [("cjk", [("text", "日本語" * 4, None, 0)]),
+         ("mixed", [("text", "<b>é</b>", None, 0),
+                    ("media", None, "media://m/1", 1),
+                    ("text", None, None, 2)])],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+    got = {r["doc_id"]: r["_bytes"] for r in with_doc_bytes(docs).collect()}
+    assert got == {"cjk": 36, "mixed": 9}
+
+
 def test_run_pipeline_writes_and_resumes(spark):
     tmp = tempfile.mkdtemp(prefix="selma_pipe_")
     try:
@@ -674,98 +690,190 @@ def test_on_error_keep_contains_failures(spark):
     out = rewrite_documents(
         docs, "relaxed", handlers_factory=boom_handlers, on_error="keep"
     )
-    assert out.count() == docs.count()
+    # every span of every doc has an element, so every rewrite raises:
+    # each doc must come back whole and unmodified (not dropped, not
+    # partially rewritten, spans in order)
+    before = {r["doc_id"]: r["spans"] for r in docs.collect()}
+    after = {r["doc_id"]: r["spans"] for r in out.collect()}
+    assert after == before
 
 
-def test_dedup_rewrite_matches_direct_path(spark):
-    """rewrite_documents_dedup (distinct-payload elimination) must produce
-    span-sequence equality (kind, text, media_ref, order) with the narrow
-    per-document path on a corpus with duplicate texts."""
-    from selma_spark.spark.pipeline import rewrite_documents_dedup
+def _blink_boom_factory():
+    """A handlers_factory whose handler raises on every <blink>. Built
+    inside a function so cloudpickle ships it by value to the workers,
+    which cannot import this test module."""
+    def factory():
+        from selma_spark.selector import Selector
 
-    base = interleaved_spans(
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        class BlinkBoom:
+            def selector(self):
+                return Selector(match_element="blink")
+
+            def handle_element(self, el):
+                raise ValueError("boom on blink")
+
+        return [BlinkBoom()]
+
+    return factory
+
+
+def _blink_docs(spark):
+    return spark.createDataFrame(
+        [("ok", [("text", "<b>x</b>", None, 0)]),
+         ("bad", [("text", "<blink>y</blink>", None, 0),
+                  ("media", None, "media://bad/1", 1),
+                  ("text", "<i>z</i>", None, 2)])],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
     )
-    # replicate so distinct-elimination actually has duplicates to elide
-    docs = base.unionByName(
-        base.withColumn("doc_id", F.concat(F.col("doc_id"), F.lit("_copy")))
-    )
-    direct = {
+
+
+def test_on_error_keep_rewrites_the_spans_that_do_not_fail(spark):
+    """Containment is as narrow as the failure: only a span whose
+    rewrite raises passes through unmodified; the other spans of the
+    same doc, and every other doc, are still rewritten."""
+    out = {
         r["doc_id"]: [tuple(s) for s in r["spans"]]
-        for r in rewrite_documents(docs, "relaxed").collect()
-    }
-    dedup = {
-        r["doc_id"]: [tuple(s) for s in r["spans"]]
-        for r in rewrite_documents_dedup(docs, "relaxed").collect()
-    }
-    assert direct == dedup
-    # broadcast-join flavor: same output, rewritten side broadcast
-    bcast = {
-        r["doc_id"]: [tuple(s) for s in r["spans"]]
-        for r in rewrite_documents_dedup(
-            docs, "relaxed", broadcast_rewritten=True
+        for r in rewrite_documents(
+            _blink_docs(spark), "default",
+            handlers_factory=_blink_boom_factory(), on_error="keep",
         ).collect()
     }
-    assert direct == bcast
-
-
-def test_memo_rewrite_matches_direct_path(spark):
-    """Broadcast-memo dedup variant (and its join-based fallback) must
-    match the narrow path span-for-span."""
-    from selma_spark.spark.pipeline import rewrite_documents_memo
-
-    base = interleaved_spans(
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    )
-    docs = base.unionByName(
-        base.withColumn("doc_id", F.concat(F.col("doc_id"), F.lit("_copy")))
-    )
-    direct = {
-        r["doc_id"]: [tuple(s) for s in r["spans"]]
-        for r in rewrite_documents(docs, "relaxed").collect()
+    assert out == {
+        "ok": [("text", "x", None, 0)],
+        "bad": [("text", "<blink>y</blink>", None, 0),
+                ("media", None, "media://bad/1", 1),
+                ("text", "z", None, 2)],
     }
-    memo = {
-        r["doc_id"]: [tuple(s) for s in r["spans"]]
-        for r in rewrite_documents_memo(docs, "relaxed").collect()
+
+
+def test_on_error_raise_fails_the_job(spark):
+    """The default on_error="raise" surfaces a handler failure as a job
+    failure instead of passing the span through."""
+    out = rewrite_documents(
+        _blink_docs(spark), "default", handlers_factory=_blink_boom_factory()
+    )
+    with pytest.raises(Exception, match="boom on blink"):
+        out.collect()
+
+
+def test_stateful_handler_sees_every_repeated_span(spark):
+    """Handlers are never memoized: three docs carrying the same span,
+    rewritten in one task by a handler that numbers the elements it
+    sees, come out numbered 1, 2, 3 (a memo would repeat the first
+    outcome three times)."""
+    from selma_spark.selector import Selector
+
+    def numbering_handlers():
+        class Numbering:
+            n = 0
+
+            def selector(self):
+                return Selector(match_element="b")
+
+            def handle_element(self, el):
+                self.n += 1
+                el.set_attribute("data-n", str(self.n))
+
+        return [Numbering()]
+
+    docs = spark.createDataFrame(
+        [(f"d{i}", [("text", "<b>x</b>", None, 0)]) for i in range(3)],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    ).coalesce(1)
+    out = rewrite_documents(docs, None, handlers_factory=numbering_handlers)
+    got = sorted(r["spans"][0]["text"] for r in out.collect())
+    assert got == [f'<b data-n="{n}">x</b>' for n in (1, 2, 3)]
+
+
+def test_rewrite_without_config_or_handlers_is_identity(spark):
+    """config=None with no handlers is the pure passthrough: every doc,
+    NULL spans arrays, NULL and '' texts and tag-bearing texts
+    included, comes back exactly as it went in."""
+    docs = spark.createDataFrame(
+        [("a", [("text", "<script>x</script><b>y</b>", None, 0),
+                ("media", None, "media://a/1", 1)]),
+         ("b", None),
+         ("c", []),
+         ("d", [("text", None, None, 0), ("text", "", None, 1)])],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+    before = {r["doc_id"]: r["spans"] for r in docs.collect()}
+    after = {
+        r["doc_id"]: r["spans"] for r in rewrite_documents(docs, None).collect()
     }
-    assert direct == memo
+    assert after == before
+
+
+def test_make_rewrite_fn_has_only_the_narrow_path_options():
+    """One documents-rewrite path: the arrow fn and its public wrapper
+    take exactly these options, and no dedup/memo knob."""
+    import inspect
+
+    from selma_spark.spark.pipeline import make_rewrite_fn
+
+    assert list(inspect.signature(make_rewrite_fn).parameters) == [
+        "config", "handlers_factory", "max_text_bytes", "on_error", "_stats",
+    ]
+    assert list(inspect.signature(rewrite_documents).parameters) == [
+        "docs", "config", "handlers_factory", "max_text_bytes", "on_error",
+    ]
+
+
+def test_byte_weighted_buckets_match_oracle_on_multibyte_text(spark):
+    """Spark's byte-weighted deal and its DuckDB oracle weigh the same
+    UTF-8 bytes on a non-ASCII corpus (CJK and emoji texts whose byte
+    and character counts fall in different size strata), so they agree
+    bucket for bucket."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from selma_spark.spark.queries import (
+        ORACLE_BYTE_BUCKETS,
+        q_byte_weighted_buckets,
+    )
+
+    alphabet = ["a", "é", "日", "😀"]
+    texts = [alphabet[i % 4] * (1 + (i * 7) % 40) for i in range(96)]
+    tmp = tempfile.mkdtemp(prefix="selma_mb_")
+    try:
+        pq.write_table(
+            pa.table({"doc_id": pa.array(range(96), pa.int64()),
+                      "text": pa.array(texts, pa.string())}),
+            f"{tmp}/documents.parquet",
+        )
+        got = sorted(
+            tuple(r) for r in q_byte_weighted_buckets(spark, tmp).collect()
+        )
+        con = duckdb.connect()
+        con.execute(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{tmp}/documents.parquet')"
+        )
+        want = sorted(con.execute(ORACLE_BYTE_BUCKETS).fetchall())
+        con.close()
+        assert got == want
+        # both sides weigh UTF-8 bytes: text plus the ASCII wrapper
+        # overhead interleaved_spans adds (by doc_id % 6, and 11 for the
+        # '<em>ok</em>' span when doc_id % 3 == 0)
+        wrap = [11, 7, 17, 25, 34, 30]
+        assert sum(b for _, _, b in got) == sum(
+            len(t.encode("utf-8")) + wrap[i % 6] + (11 if i % 3 == 0 else 0)
+            for i, t in enumerate(texts)
+        )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_null_and_empty_spans_round_trip(spark):
     """Dirty-corpus shapes: a NULL spans array must stay NULL (the arrow
     reconstruction must propagate the list null mask), an empty array
-    stays empty, and a null text span passes through."""
-    schema = (
-        "doc_id string, spans array<struct<kind:string,text:string,"
-        "media_ref:string,offset:int>>"
-    )
-    rows = [
-        ("a", [("text", "<b>x</b>", None, 0)]),
-        ("b", None),
-        ("c", []),
-        ("d", [("text", None, None, 0)]),
-    ]
-    docs = spark.createDataFrame(rows, schema)
-    out = {
-        r["doc_id"]: r["spans"]
-        for r in rewrite_documents(docs, "default").collect()
-    }
-    assert out["b"] is None
-    assert out["c"] == []
-    assert out["d"][0]["text"] is None
-    assert out["a"][0]["text"] == "x"
-
-
-def test_dedup_and_memo_preserve_null_spans_and_null_text(spark):
-    """Dirty-corpus parity across ALL rewrite paths: NULL spans arrays
-    stay NULL (not []), empty stays empty, and a NULL-text span must not
-    be swapped with an empty-string-text span by the dedup join (the key
-    disambiguates NULL from '')."""
-    from selma_spark.spark.pipeline import (
-        rewrite_documents_dedup,
-        rewrite_documents_memo,
-    )
-
+    stays empty, a null text span stays NULL and an empty-string text
+    span stays '' (never swapped for each other), and a media span ahead
+    of a text span keeps its place."""
     schema = (
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>"
@@ -779,86 +887,29 @@ def test_dedup_and_memo_preserve_null_spans_and_null_text(spark):
         ("f", [("media", None, "media://f/0", 0), ("text", "<i>y</i>", None, 1)]),
     ]
     docs = spark.createDataFrame(rows, schema)
-    expected = {
+    out = {
         r["doc_id"]: r["spans"]
         for r in rewrite_documents(docs, "default").collect()
     }
-    for variant in (rewrite_documents_dedup, rewrite_documents_memo):
-        out = {
-            r["doc_id"]: r["spans"]
-            for r in variant(docs, "default").collect()
-        }
-        assert out["b"] is None, variant.__name__
-        assert out["c"] == [], variant.__name__
-        assert out["d"][0]["text"] is None, variant.__name__
-        assert out["e"][0]["text"] == "", variant.__name__
-        assert out == expected, variant.__name__
-
-
-def test_memo_byte_cap_falls_back_before_collect(spark):
-    """The byte cap must route to the join-based variant (checked
-    distributedly) — and the fallback must still match the narrow path."""
-    from selma_spark.spark.pipeline import rewrite_documents_memo
-
-    docs = make_span_docs(spark)
-    direct = {
-        r["doc_id"]: [tuple(s) for s in r["spans"]]
-        for r in rewrite_documents(docs, "relaxed").collect()
-    }
-    out = {
-        r["doc_id"]: [tuple(s) for s in r["spans"]]
-        for r in rewrite_documents_memo(
-            docs, "relaxed", max_memo_bytes=8
-        ).collect()
-    }
-    assert out == direct
-
-
-@pytest.mark.parametrize(
-    "text, falls_back",
-    [("<b>" + "a" * 10 + "</b>", False),   # 17 chars, 17 bytes
-     ("<b>" + "日" * 10 + "</b>", True)],  # 17 chars, 37 bytes
-    ids=["ascii", "cjk"],
-)
-def test_memo_byte_cap_counts_utf8_bytes(spark, monkeypatch, text, falls_back):
-    """max_memo_bytes bounds the UTF-8 bytes collected to the driver, so
-    a distinct set under the cap in characters but over it in bytes
-    takes the join-based fallback; either way the output is unchanged."""
-    from selma_spark.spark import pipeline
-
-    calls = []
-    dedup = pipeline.rewrite_documents_dedup
-
-    def spy(*args, **kwargs):
-        calls.append(args)
-        return dedup(*args, **kwargs)
-
-    monkeypatch.setattr(pipeline, "rewrite_documents_dedup", spy)
-    docs = spark.createDataFrame(
-        [("d", [{"kind": "text", "text": text, "media_ref": None,
-                 "offset": 0}])],
-        "doc_id string, spans array<struct<kind:string,text:string,"
-        "media_ref:string,offset:int>>",
-    )
-    out = pipeline.rewrite_documents_memo(
-        docs, "default", max_memo_bytes=20
-    ).collect()
-    assert out[0]["spans"][0]["text"] == text[3:-4]
-    assert bool(calls) == falls_back
+    assert out["b"] is None
+    assert out["c"] == []
+    assert out["d"][0]["text"] is None
+    assert out["e"][0]["text"] == ""
+    assert out["a"][0]["text"] == "x"
+    assert [tuple(s) for s in out["f"]] == [
+        ("media", None, "media://f/0", 0), ("text", "y", None, 1)
+    ]
 
 
 def test_rewrite_paths_agree_on_random_dirty_corpus(spark):
     """Seeded random corpus exercising every dirty shape at once — NULL
     spans, empty arrays, NULL/empty text, media-only docs, duplicate
-    payloads, multibyte text, skewed sizes — must produce identical
-    span sequences through the narrow, dedup-join, and broadcast-memo
-    paths."""
+    payloads, multibyte text, skewed sizes — must produce through the
+    arrow path the span sequences an in-process oracle builds span by
+    span: NULL and [] arrays unchanged, media spans and text spans
+    without '<' unchanged, every other text span rewritten by a fresh
+    Rewriter."""
     import random
-
-    from selma_spark.spark.pipeline import (
-        rewrite_documents_dedup,
-        rewrite_documents_memo,
-    )
 
     rng = random.Random(20260816)
     payload_pool = [
@@ -887,16 +938,25 @@ def test_rewrite_paths_agree_on_random_dirty_corpus(spark):
         "media_ref:string,offset:int>>"
     )
     docs = spark.createDataFrame(rows, schema)
+
+    def oracle_span(span, cfg):
+        kind, text, media_ref, offset = span
+        if kind == "text" and text is not None and "<" in text:
+            text = Rewriter(sanitizer=S.BUILTIN_CONFIGS[cfg]).rewrite(text)
+        return (kind, text, media_ref, offset)
+
     for cfg in ("default", "relaxed"):
         expected = {
-            r["doc_id"]: r["spans"]
+            doc_id: None if spans is None
+            else [oracle_span(sp, cfg) for sp in spans]
+            for doc_id, spans in rows
+        }
+        got = {
+            r["doc_id"]: None if r["spans"] is None
+            else [tuple(sp) for sp in r["spans"]]
             for r in rewrite_documents(docs, cfg).collect()
         }
-        for variant in (rewrite_documents_dedup, rewrite_documents_memo):
-            got = {
-                r["doc_id"]: r["spans"] for r in variant(docs, cfg).collect()
-            }
-            assert got == expected, (cfg, variant.__name__)
+        assert got == expected, cfg
 
 
 def test_task_local_rewrite_memo_is_differential_and_bounded():
