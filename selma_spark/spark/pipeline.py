@@ -90,10 +90,11 @@ def make_rewrite_fn(config="default", handlers_factory=None,
     materialization), which keeps the arrow hop ~5x cheaper than a
     pandas round-trip on nested data.
 
-    ``_stats`` is run_pipeline's internal lineage path, not a user
-    option: a ``_BucketStats`` accumulator. The batches must then carry
-    ``doc_id`` and ``bucket``; each task tallies every batch per bucket
-    and adds the tally once, after its last batch."""
+    ``_stats`` is the internal lineage path, not a user option: a
+    ``_BucketStats`` accumulator, passed only by ``_commit_buckets``
+    (the commit unit of run_pipeline and stream_rewrite). The batches
+    must then carry ``doc_id`` and ``bucket``; each task tallies every
+    batch per bucket and adds the tally once, after its last batch."""
     cfg = resolve_config(config)
 
     def fn(batches):
@@ -166,7 +167,7 @@ def make_rewrite_fn(config="default", handlers_factory=None,
             # null-kind / null-text cases to false.
             if rw is None:
                 # passthrough config (config None, no handlers) on
-                # run_pipeline's _stats path: the batch is still walked
+                # the _stats path: the batch is still walked
                 # for the tally, but every text is carried over unchanged
                 new_texts_arr = texts
             else:
@@ -357,7 +358,8 @@ def _add_tally(acc, other):
 
 
 class _BucketStats(AccumulatorParam):
-    """run_pipeline's per-bucket tally accumulator (see ``_add_tally``)."""
+    """``_commit_buckets``' per-bucket tally accumulator (see
+    ``_add_tally``)."""
 
     def zero(self, value):
         return {}
@@ -532,24 +534,13 @@ def run_pipeline(
     overwritePartitions keeps completed buckets intact), and their
     lineage rows are kept as they were. When every bucket
     ``0..n_buckets-1`` is already 'ok', nothing is written."""
-    from .shipping import ensure_shipped
-
-    ensure_shipped(spark)
     if sink is None:
         sink = ParquetSink(output_dir)
     sink.prepare(spark)
-    lineage_schema = _arrow_schema(LINEAGE_SCHEMA)
-
-    prior = lineage_schema.empty_table()
-    if resume:
-        lineage = sink.read_lineage(spark)
-        if lineage is not None:
-            prior = (
-                lineage.where(F.col("status") == "ok")
-                .select(*lineage_schema.names)
-                .toArrow()
-                .cast(lineage_schema)
-            )
+    prior = (
+        _ok_lineage(spark, sink) if resume
+        else _arrow_schema(LINEAGE_SCHEMA).empty_table()
+    )
     done = set(prior["partition_id"].to_pylist())
     todo = [k for k in range(n_buckets) if k not in done]
     prior_docs = pc.sum(prior["doc_count"]).as_py() or 0
@@ -562,10 +553,45 @@ def run_pipeline(
     b = bucketed(docs, n_buckets, byte_weighted=byte_weighted)
     if done:
         b = b.where(F.col("bucket").isin(todo))
+    lineage = _commit_buckets(
+        spark, sink, b.repartition(n_buckets, "bucket"), todo, prior,
+        config, handlers_factory,
+    )
+    result.doc_count = pc.sum(lineage["doc_count"]).as_py()
+    return result
+
+
+def _ok_lineage(spark, sink) -> pa.Table:
+    """The sink's 'ok' lineage rows as a pyarrow table (empty when no run
+    has written a lineage yet)."""
+    schema = _arrow_schema(LINEAGE_SCHEMA)
+    lineage = sink.read_lineage(spark)
+    if lineage is None:
+        return schema.empty_table()
+    return (
+        lineage.where(F.col("status") == "ok")
+        .select(*schema.names)
+        .toArrow()
+        .cast(schema)
+    )
+
+
+def _commit_buckets(spark, sink, b, todo, prior, config, handlers_factory):
+    """The one commit unit of run_pipeline and streaming.stream_rewrite:
+    rewrite ``b`` (documents carrying ``bucket``, one of ``todo`` each)
+    and write it with ``sink.write_documents``, in ONE Spark job whose
+    rewrite UDF tallies every bucket on a ``_BucketStats`` accumulator.
+    From that tally, the lineage (``prior`` rows kept verbatim, plus one
+    new row per ``todo`` bucket, zero for an empty one) and the metrics
+    of the ``todo`` buckets are written through ``sink.write_table``.
+    Returns the lineage table written."""
+    from .shipping import ensure_shipped
+
+    ensure_shipped(spark)
+    lineage_schema = _arrow_schema(LINEAGE_SCHEMA)
     stats = spark.sparkContext.accumulator({}, _BucketStats())
     t0 = time.time()
-    b = b.repartition(n_buckets, "bucket")
-    # the UDF must run in the write's result stage (after the bucket
+    # the UDF must run in the write's result stage (after any bucket
     # exchange): Spark applies result-task accumulator updates once per
     # partition, but re-applies a shuffle-map task's on a stage retry
     sink.write_documents(b.mapInArrow(
@@ -585,9 +611,8 @@ def run_pipeline(
         "attempt": [1] * len(todo),
         "ts": [ts] * len(todo),
     }, schema=lineage_schema)
-    sink.write_table(
-        spark, pa.concat_tables([prior, new]), sink.lineage_path
-    )
+    lineage = pa.concat_tables([prior, new])
+    sink.write_table(spark, lineage, sink.lineage_path)
     sink.write_table(spark, pa.Table.from_pydict({
         "stage": ["rewrite"] * len(todo),
         "partition_id": todo,
@@ -596,8 +621,7 @@ def run_pipeline(
         "bytes_out": [c[2] for c in counts],
         "wall_ms": [wall_ms] * len(todo),
     }, schema=_arrow_schema(METRICS_SCHEMA)), sink.metrics_path)
-    result.doc_count += sum(c[0] for c in counts)
-    return result
+    return lineage
 
 
 def _per_doc_rows(docs: DataFrame, handler_cls, row, schema: str) -> DataFrame:

@@ -599,9 +599,9 @@ FROM sess GROUP BY 1, 2 ORDER BY 1, 2
 
 
 def q_event_window_rollup(spark, sf_dir):
-    """Tumbling-window rollup over the events table — the batch-semantics
-    twin of streaming.windowed_event_metrics (decimal sums for exact
-    cross-engine equality)."""
+    """Tumbling-window rollup over the events table: event count and
+    value sum per (10-minute window, event_type), with decimal sums for
+    exact cross-engine equality."""
     ev = load(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")

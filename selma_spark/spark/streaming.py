@@ -3,21 +3,23 @@
 The reference has no cross-document streaming (its "streaming" is within
 one document); this is the pipeline-added micro-batch ingest path
 (SURVEY.md §2B): new span documents land in a directory (stand-in for an
-Iceberg/queue source), each micro-batch runs the SAME vectorized rewrite
-UDF, and ``foreachBatch`` writes output + lineage transactionally per
-batch — so the streaming and batch paths share one code path and one
-output contract.
+Iceberg/queue source), and ``foreachBatch`` commits each micro-batch
+through run_pipeline's own commit unit (``pipeline._commit_buckets``):
+the same vectorized rewrite UDF, one write, and lineage and metrics from
+the UDF's per-bucket tally — so the streaming and batch paths share one
+code path and one output contract.
 
-Also provides watermarked windowed aggregation over the ``events``
-stream (late-data tolerant throughput metrics)."""
+Also provides streaming exact dedup within a watermark and stateful
+band-keyed near-dup flagging."""
 
 from __future__ import annotations
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .datagen import DOC_SCHEMA
-from .pipeline import make_rewrite_fn
+from .pipeline import ParquetSink, _commit_buckets, _ok_lineage
 
 
 def read_document_stream(
@@ -44,94 +46,32 @@ def stream_rewrite(
     """Continuously rewrite arriving documents. Returns the streaming
     query; callers stop() it or awaitTermination().
 
-    foreachBatch gives exactly-once-per-batch output with the batch id
-    recorded as lineage (restart-safe: Structured Streaming replays the
-    failed batch and the write is idempotent by batch_id directory)."""
-    from .shipping import ensure_shipped
-
-    ensure_shipped(spark)
-    stream = read_document_stream(spark, input_dir)
-    rewritten = stream.mapInArrow(
-        make_rewrite_fn(config, handlers_factory), schema=stream.schema
-    )
-
-    out_path = f"{output_dir}/documents"
-    lineage_path = f"{output_dir}/lineage"
+    Each micro-batch is one bucket of run_pipeline's layout: its batch
+    id is the ``bucket``, so its documents land in
+    ``documents/bucket=<batch id>`` (dynamic partition overwrite) and
+    its lineage row has ``partition_id = <batch id>`` and
+    run_pipeline's checksum. The rewrite UDF runs once per input
+    partition per micro-batch, in the write itself. The lineage is read
+    once when the query starts and rewritten whole after every batch:
+    a replayed batch (Structured Streaming re-runs a batch whose commit
+    was not recorded) overwrites its documents and replaces its lineage
+    row, so it never appends a second one. ``metrics`` holds the last
+    micro-batch's row, as run_pipeline's holds its last run's buckets."""
+    sink = ParquetSink(output_dir)
+    sink.prepare(spark)
+    lineage = _ok_lineage(spark, sink)
 
     def write_batch(batch_df: DataFrame, batch_id: int):
-        batch_df.write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
-        (
-            batch_df.groupBy()
-            .agg(
-                F.lit(int(batch_id)).alias("partition_id"),
-                F.count("*").alias("doc_count"),
-                F.sha2(
-                    F.concat_ws(",", F.sort_array(F.collect_list("doc_id"))), 256
-                ).alias("checksum"),
-                F.lit("ok").alias("status"),
-                F.lit(1).alias("attempt"),
-                F.current_timestamp().alias("ts"),
-            )
-            .select("partition_id", "doc_count", "checksum", "status",
-                    "attempt", "ts")
-            .write.mode("append")
-            .parquet(lineage_path)
+        nonlocal lineage
+        kept = lineage.filter(pc.not_equal(lineage["partition_id"], batch_id))
+        lineage = _commit_buckets(
+            spark, sink, batch_df.withColumn("bucket", F.lit(batch_id)),
+            [batch_id], kept, config, handlers_factory,
         )
 
     return (
-        rewritten.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def windowed_event_metrics(
-    events: DataFrame, window: str = "10 minutes", watermark: str = "30 minutes"
-) -> DataFrame:
-    """Watermarked tumbling-window rollup over the events stream: count +
-    value sum per (window, event_type); late events beyond the watermark
-    are dropped deterministically."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("value_sum"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "value_sum",
-        )
-    )
-
-
-def stream_event_metrics(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-):
-    """File-source events stream -> watermarked windowed aggregation ->
-    append-mode parquet sink (windows finalize when the watermark
-    passes)."""
-    schema = (
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-        "value double, props string"
-    )
-    events = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(input_dir)
-    )
-    agg = windowed_event_metrics(events)
-    return (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
+        read_document_stream(spark, input_dir)
+        .writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
@@ -383,70 +323,6 @@ def stream_near_dup_flags(
     )
     return (
         flags.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-# --- custom stateful operator ------------------------------------------------
-
-STATE_SCHEMA = "n_events bigint, value_sum double"
-RUNNING_OUTPUT_SCHEMA = (
-    "event_type string, n_events bigint, value_sum double"
-)
-
-
-def _running_totals_fn(key, pdf_iter, state):
-    """applyInPandasWithState function: per event_type running totals that
-    survive micro-batch boundaries (the custom-stateful-operator shape —
-    arbitrary Python state + arrow-batched input)."""
-    import pandas as pd  # noqa: PLC0415
-
-    if state.exists:
-        n, vs = state.get
-    else:
-        n, vs = 0, 0.0
-    for pdf in pdf_iter:
-        n += len(pdf)
-        vs += float(pdf["value"].sum())
-    state.update((n, vs))
-    yield pd.DataFrame(
-        {"event_type": [key[0]], "n_events": [n], "value_sum": [round(vs, 2)]}
-    )
-
-
-def stream_running_event_totals(
-    spark: SparkSession, input_dir: str, checkpoint_dir: str,
-    query_name: str = "running_totals",
-):
-    """File-source events stream -> stateful per-type running totals via
-    applyInPandasWithState (update mode, in-memory sink for inspection)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from .shipping import ensure_shipped
-
-    ensure_shipped(spark)
-    schema = (
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-        "value double, props string"
-    )
-    events = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(input_dir)
-    )
-    totals = events.groupBy("event_type").applyInPandasWithState(
-        _running_totals_fn,
-        outputStructType=RUNNING_OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return (
-        totals.writeStream.outputMode("update")
         .format("memory")
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)

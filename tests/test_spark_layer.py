@@ -114,6 +114,34 @@ def _called_name(func) -> str | None:
     return None
 
 
+def test_only_the_commit_unit_tallies_lineage():
+    """One commit unit: ``_commit_buckets`` is the only function that
+    builds a ``_BucketStats`` accumulator or passes ``_stats`` to
+    ``make_rewrite_fn``, and run_pipeline and stream_rewrite are the
+    only functions that call it."""
+    stats_users, commit_callers = set(), set()
+    for path in sorted(SPARK_DIR.glob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        # every top-level statement, nested defs counted in their parent
+        for top in tree.body:
+            where = f"{path.name}:{getattr(top, 'name', '<module>')}"
+            for node in ast.walk(top):
+                if not isinstance(node, ast.Call):
+                    continue
+                name = _called_name(node.func)
+                if name == "_BucketStats" or any(
+                    kw.arg == "_stats" for kw in node.keywords
+                ):
+                    stats_users.add(where)
+                if name == "_commit_buckets":
+                    commit_callers.add(where)
+    assert stats_users == {"pipeline.py:_commit_buckets"}, stats_users
+    assert commit_callers == {
+        "pipeline.py:run_pipeline",
+        "streaming.py:stream_rewrite",
+    }, commit_callers
+
+
 def test_every_python_udf_entry_point_calls_ensure_shipped():
     entry_points, missing = [], []
     for path in sorted(SPARK_DIR.glob("*.py")):
@@ -132,13 +160,16 @@ def test_every_python_udf_entry_point_calls_ensure_shipped():
             entry_points.append(where)
             if "ensure_shipped" not in {_called_name(c) for c in calls}:
                 missing.append(where)
-    # the scan must see the real entry points, or it proves nothing
-    assert len(entry_points) >= 10, entry_points
-    assert {
+    # the scan must see exactly the real entry points, or it proves
+    # nothing; a new one is added here deliberately
+    assert sorted(entry_points) == [
         "functions.py:register_sql_functions",
+        "layout.py:decoded_layout",
+        "layout.py:layout_blocks",
+        "multimodal.py:decoded_resize",
+        "pipeline.py:_commit_buckets",
         "pipeline.py:_per_doc_rows",
         "pipeline.py:rewrite_documents",
-        "pipeline.py:run_pipeline",
-        "streaming.py:stream_running_event_totals",
-    } <= set(entry_points), entry_points
+        "streaming.py:stream_near_dup_flags",
+    ], entry_points
     assert missing == []

@@ -456,6 +456,115 @@ def test_run_pipeline_lineage_and_metrics_match_ground_truth(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_lineage_tallies_add_up_across_any_split():
+    """The lineage checksum does not depend on how the documents are cut
+    into tasks or batches: per-task tallies merged by ``_add_tally`` in
+    any order give the same checksum as one tally of the whole set. A
+    stream's per-micro-batch rows and run_pipeline's per-bucket rows
+    over the same documents therefore sum to the same total."""
+    import random
+
+    from selma_spark.spark.pipeline import (
+        _add_tally,
+        _doc_id_hashes,
+        _lineage_checksum,
+    )
+
+    ids = [f"doc-{i}" for i in range(300)] + ["日本語", "😀", "", None]
+    hashes = [int(h) for h in _doc_id_hashes(ids)]
+    whole = _lineage_checksum(len(ids), sum(hashes))
+    assert whole.startswith(f"{len(ids)}:") and len(whole.split(":")[1]) == 16
+    assert hashes[-1] == hashes[-2]  # a NULL id hashes as ''
+
+    rng = random.Random(7)
+    for _ in range(5):
+        # random tasks, each tallying its documents into random buckets
+        tallies = []
+        for doc_id, h in zip(ids, hashes):
+            if not tallies or rng.random() < 0.1:
+                tallies.append({})
+            t = tallies[-1].setdefault(rng.randrange(4), [0, 0, 0, 0])
+            t[0] += 1
+            t[1] += len((doc_id or "").encode())
+            t[3] = (t[3] + h) % 2**64
+        rng.shuffle(tallies)
+        acc = {}
+        for t in tallies:
+            _add_tally(acc, t)
+        n = sum(c[0] for c in acc.values())
+        h = sum(c[3] for c in acc.values())
+        assert _lineage_checksum(n, h) == whole
+        assert sum(c[1] for c in acc.values()) == sum(
+            len((d or "").encode()) for d in ids)
+    # one document more or less changes the checksum
+    assert _lineage_checksum(len(ids) - 1, sum(hashes[1:])) != whole
+
+
+def test_commit_buckets_keeps_prior_rows_verbatim(spark):
+    """``_commit_buckets`` writes the prior lineage rows unchanged, in
+    any checksum format (an old 64-hex sha2 row included), followed by
+    one row per ``todo`` bucket; the table it returns is the one it
+    wrote. Documents land in ``bucket=<k>`` partitions, and the metrics
+    hold the ``todo`` buckets only."""
+    import datetime
+
+    import pyarrow as pa
+
+    from selma_spark.spark.pipeline import (
+        LINEAGE_SCHEMA,
+        ParquetSink,
+        _arrow_schema,
+        _commit_buckets,
+        _doc_id_hashes,
+        _lineage_checksum,
+    )
+
+    tmp = tempfile.mkdtemp(prefix="selma_commit_")
+    try:
+        schema = _arrow_schema(LINEAGE_SCHEMA)
+        ts = datetime.datetime(2024, 1, 1, 12, 0, 0)
+        prior = pa.Table.from_pydict({
+            "partition_id": [7, 9],
+            "doc_count": [3, 5],
+            "checksum": ["ab" * 32, "5:00000000000000ff"],
+            "status": ["ok", "ok"],
+            "attempt": [2, 1],
+            "ts": [ts, ts],
+        }, schema=schema)
+        docs = make_span_docs(spark)
+        ids = sorted(r["doc_id"] for r in docs.collect())
+        b = docs.withColumn(
+            "bucket",
+            F.when(F.col("doc_id") < F.lit(ids[len(ids) // 2]), 0).otherwise(1),
+        )
+        sink = ParquetSink(tmp)
+        sink.prepare(spark)
+        lineage = _commit_buckets(spark, sink, b, [0, 1, 2], prior,
+                                  "default", None)
+
+        written = spark.read.parquet(sink.lineage_path).toArrow().cast(schema)
+        assert written.to_pylist() == lineage.to_pylist()
+        rows = lineage.to_pylist()
+        assert rows[:2] == prior.to_pylist()
+        by_bucket = {0: ids[:len(ids) // 2], 1: ids[len(ids) // 2:], 2: []}
+        for row, k in zip(rows[2:], [0, 1, 2]):
+            want = by_bucket[k]
+            h = sum(int(x) for x in _doc_id_hashes(want))
+            assert (row["partition_id"], row["doc_count"], row["checksum"],
+                    row["status"], row["attempt"]) == (
+                k, len(want), _lineage_checksum(len(want), h), "ok", 1)
+        assert len(rows) == 5
+
+        out = spark.read.parquet(sink.output_path)
+        assert {r["bucket"]: r["n"] for r in
+                out.groupBy("bucket").agg(F.count("*").alias("n")).collect()
+                } == {0: len(by_bucket[0]), 1: len(by_bucket[1])}
+        metrics = spark.read.parquet(sink.metrics_path).collect()
+        assert sorted(r["partition_id"] for r in metrics) == [0, 1, 2]
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def test_run_pipeline_reads_documents_once_and_noop_resume_reads_none(spark):
     """A run reads its input once and never reads its output back (the
     status store's input records over the call's job group equal the
@@ -510,22 +619,50 @@ DOC_SCHEMA = ("doc_id string, spans array<struct<kind:string,text:string,"
 """
 
 
-def test_run_pipeline_ships_the_package_from_any_cwd():
-    """run_pipeline itself ships selma_spark to the Python workers: a
-    driver whose cwd is outside the repo still runs it."""
+def test_pipeline_and_streams_ship_the_package_from_any_cwd():
+    """run_pipeline, stream_rewrite and the stateful stream_near_dup_flags
+    ship selma_spark to the Python workers themselves: one driver whose
+    cwd is outside the repo runs all three (one child process, so one
+    Spark start)."""
     tmp = tempfile.mkdtemp(prefix="selma_cwd_")
     try:
         proc = _run_script(_SCRIPT_HEAD + """
+import datetime
+from selma_spark.spark.streaming import stream_near_dup_flags, stream_rewrite
+tmp = sys.argv[1]
 spark = (SparkSession.builder.master("local[2]")
-         .config("spark.ui.enabled", "false").getOrCreate())
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.shuffle.partitions", "2").getOrCreate())
 docs = spark.createDataFrame(
     [(f"d{i}", [("text", "<b>x</b><script>y</script>", None, 0)])
      for i in range(20)], DOC_SCHEMA)
-res = run_pipeline(spark, docs, sys.argv[1], config="relaxed", n_buckets=2)
+res = run_pipeline(spark, docs, tmp + "/out", config="relaxed", n_buckets=2)
 print("docs", res.doc_count)
-""", tmp, f"{tmp}/out")
+
+docs.coalesce(1).write.parquet(tmp + "/stream_in")
+q = stream_rewrite(spark, tmp + "/stream_in", tmp + "/stream_out",
+                   tmp + "/stream_ckpt", config="relaxed")
+assert q.awaitTermination(120)
+print("streamed", spark.read.parquet(tmp + "/stream_out/documents").count())
+
+t0 = datetime.datetime(2026, 1, 1)
+text = ("the quick brown fox jumps over the lazy dog while seventeen "
+        "sailors navigate northern waters")
+for f, rows in (("f1", [("a", text, t0)]), ("f2", [("b", text, t0)])):
+    spark.createDataFrame(rows, "doc_id string, text string, ingest_ts timestamp"
+                          ).coalesce(1).write.parquet(tmp + "/nd_in/" + f)
+q = stream_near_dup_flags(spark, tmp + "/nd_in/*", tmp + "/nd_ckpt",
+                          query_name="nd")
+assert q.awaitTermination(120)
+for r in spark.sql("SELECT doc_id, min(near_dup_of) AS of FROM nd "
+                   "GROUP BY 1 ORDER BY 1").collect():
+    print("near_dup", r.doc_id, r.of)
+""", tmp, tmp)
         assert proc.returncode == 0, proc.stderr[-3000:]
-        assert "docs 20" in proc.stdout
+        assert "docs 20" in proc.stdout, proc.stdout
+        assert "streamed 20" in proc.stdout, proc.stdout
+        assert "near_dup a None" in proc.stdout, proc.stdout
+        assert "near_dup b a" in proc.stdout, proc.stdout
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

@@ -230,3 +230,45 @@ def test_kmeans_refine_empty_embeddings_raises_typed_error(spark):
     )
     with pytest.raises(ValueError, match="non-empty embeddings"):
         simsearch.kmeans_refine(empty, rounds=1)
+
+
+def test_event_window_rollup_tumbling_window_edges(spark, tmp_path):
+    """The catalog's tumbling-window rollup against hand-computed
+    windows: 10-minute windows start on the 10-minute mark, an event at
+    exactly hh:10:00 opens the next window, and counts and exact decimal
+    value sums are kept per (window, event_type)."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from selma_spark.spark import queries as q
+
+    t = datetime.datetime
+    events = [
+        (t(2024, 1, 1, 0, 0, 0), "click", 0.1),
+        (t(2024, 1, 1, 0, 9, 59, 999999), "click", 0.2),
+        (t(2024, 1, 1, 0, 9, 59, 999999), "view", 1.25),
+        (t(2024, 1, 1, 0, 10, 0), "click", 2.5),
+        (t(2024, 1, 1, 0, 19, 59), "click", 0.3),
+        (t(2024, 1, 1, 0, 35, 1), "view", 7.0),
+    ]
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(len(events)), pa.int64()),
+        "ts": pa.array([e[0] for e in events], pa.timestamp("us")),
+        "user_id": pa.array([1] * len(events), pa.int64()),
+        "event_type": [e[1] for e in events],
+        "value": [e[2] for e in events],
+        "props": ["{}"] * len(events),
+    }), tmp_path / "events.parquet")
+
+    got = [
+        (r["window_start"], r["event_type"], r["n_events"], r["value_sum"])
+        for r in q.q_event_window_rollup(spark, str(tmp_path)).collect()
+    ]
+    assert got == [
+        (t(2024, 1, 1, 0, 0), "click", 2, "0.30"),
+        (t(2024, 1, 1, 0, 0), "view", 1, "1.25"),
+        (t(2024, 1, 1, 0, 10), "click", 2, "2.80"),
+        (t(2024, 1, 1, 0, 30), "view", 1, "7.00"),
+    ]

@@ -1,6 +1,9 @@
-"""Structured Streaming path: micro-batch rewrite equals the batch
-pipeline; watermarked windowed aggregation over events."""
+"""Structured Streaming paths: the micro-batch rewrite commits through
+run_pipeline's commit unit (same output, same lineage checksum, one UDF
+run per input partition per micro-batch, replay-safe lineage); exact
+dedup within a watermark; stateful near-dup flagging."""
 
+import os
 import random
 import shutil
 import tempfile
@@ -10,12 +13,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from selma_spark.spark.datagen import interleaved_spans
-from selma_spark.spark.pipeline import rewrite_documents
-from selma_spark.spark.streaming import (
-    stream_event_metrics,
-    stream_rewrite,
-    windowed_event_metrics,
-)
+from selma_spark.spark.pipeline import rewrite_documents, run_pipeline
+from selma_spark.spark.streaming import stream_rewrite
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -34,8 +33,38 @@ def spark():
     s.stop()
 
 
+def _lineage_total(rows):
+    """(summed doc counts, summed doc_id hashes mod 2^64) over lineage
+    rows whose checksums are ``"<count>:<16 hex>"``."""
+    n = h = 0
+    for r in rows:
+        count, hex_sum = r["checksum"].split(":")
+        assert int(count) == r["doc_count"]
+        n += int(count)
+        h = (h + int(hex_sum, 16)) % 2**64
+    return n, h
+
+
 def test_stream_rewrite_matches_batch(spark):
+    """The stream's output equals rewrite_documents; its rewrite UDF runs
+    once per input partition per micro-batch (a marking
+    handlers_factory records each task run with its batch id); its
+    lineage totals equal run_pipeline's over the same documents."""
     tmp = tempfile.mkdtemp(prefix="selma_stream_")
+    mark = f"{tmp}/mark"
+    os.makedirs(mark)
+
+    def marking_factory():
+        import uuid  # noqa: PLC0415
+
+        from pyspark import TaskContext  # noqa: PLC0415
+
+        tc = TaskContext.get()
+        batch = tc.getLocalProperty("streaming.sql.batchId")
+        open(f"{mark}/{batch}_{tc.partitionId()}_{uuid.uuid4().hex}",
+             "w").close()
+        return []  # no handlers: the same rewrite as config alone
+
     try:
         docs = interleaved_spans(
             spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -43,7 +72,8 @@ def test_stream_rewrite_matches_batch(spark):
         # stage input as several files so multiple micro-batches fire
         docs.repartition(4).write.parquet(f"{tmp}/in")
         q = stream_rewrite(
-            spark, f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt", config="default"
+            spark, f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt", config="default",
+            handlers_factory=marking_factory,
         )
         assert q.awaitTermination(120)
         q.stop()
@@ -56,69 +86,23 @@ def test_stream_rewrite_matches_batch(spark):
         assert s_out.exceptAll(batch).count() == 0
         assert batch.exceptAll(s_out).count() == 0
 
-        lineage = spark.read.parquet(f"{tmp}/out/lineage")
-        assert lineage.agg(F.sum("doc_count")).collect()[0][0] == docs.count()
-        assert lineage.where("status = 'ok'").count() == lineage.count()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        lineage = spark.read.parquet(f"{tmp}/out/lineage").collect()
+        assert all(r["status"] == "ok" for r in lineage)
+        batch_ids = sorted(r["partition_id"] for r in lineage)
+        # run_pipeline's layout: one bucket per micro-batch
+        assert sorted(
+            r["bucket"] for r in streamed.select("bucket").distinct().collect()
+        ) == batch_ids
 
+        runs = [name.split("_")[:2] for name in os.listdir(mark)]
+        assert runs and {int(b) for b, _ in runs} == set(batch_ids)
+        assert len(runs) == len({tuple(r) for r in runs}), sorted(runs)
 
-def test_windowed_event_metrics_batch_semantics(spark):
-    events = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    agg = windowed_event_metrics(events)
-    rows = agg.collect()
-    assert sum(r["n_events"] for r in rows) == events.count()
-    # window bounds are 10-minute aligned
-    for r in rows[:20]:
-        assert r["window_start"].minute % 10 == 0
-
-
-def test_stream_event_metrics_end_to_end(spark):
-    tmp = tempfile.mkdtemp(prefix="selma_stream_ev_")
-    try:
-        events = spark.read.parquet(f"{SF_DIR}/events.parquet")
-        events.repartition(3).write.parquet(f"{tmp}/in")
-        q = stream_event_metrics(spark, f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt")
-        assert q.awaitTermination(120)
-        q.stop()
-        out = spark.read.parquet(f"{tmp}/out")
-        # append mode only emits windows sealed by the watermark; the
-        # final (max-ts) windows stay open, so emitted <= batch total
-        batch_total = events.count()
-        emitted = out.agg(F.sum("n_events")).collect()[0][0] or 0
-        assert 0 < emitted <= batch_total
-        assert set(out.columns) == {
-            "window_start", "window_end", "event_type", "n_events", "value_sum"
-        }
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_stateful_running_totals(spark):
-    tmp = tempfile.mkdtemp(prefix="selma_stateful_")
-    try:
-        events = spark.read.parquet(f"{SF_DIR}/events.parquet")
-        # several input files so state must survive micro-batch boundaries
-        events.repartition(6).write.parquet(f"{tmp}/in")
-        from selma_spark.spark.streaming import stream_running_event_totals
-
-        q = stream_running_event_totals(
-            spark, f"{tmp}/in", f"{tmp}/ckpt", query_name="rt_test"
-        )
-        assert q.awaitTermination(120)
-        q.stop()
-        # update-mode memory sink: the LAST row per event_type is the
-        # final running total and must equal the batch aggregate
-        out = spark.sql(
-            "SELECT event_type, max(n_events) AS n FROM rt_test GROUP BY 1"
-        ).collect()
-        got = {r["event_type"]: r["n"] for r in out}
-        want = {
-            r["event_type"]: r["n"]
-            for r in events.groupBy("event_type").count()
-            .withColumnRenamed("count", "n").collect()
-        }
-        assert got == want
+        res = run_pipeline(spark, docs, f"{tmp}/batch", config="default",
+                           n_buckets=4)
+        want = _lineage_total(spark.read.parquet(res.lineage_path).collect())
+        assert _lineage_total(lineage) == want
+        assert want[0] == docs.count()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -126,7 +110,10 @@ def test_stateful_running_totals(spark):
 def test_stream_rewrite_resumes_from_checkpoint(spark):
     """Checkpoint-resume: stop the stream, land NEW files, restart with
     the SAME checkpoint — already-processed files are not reprocessed
-    and the combined output covers exactly the union of doc_ids."""
+    and the combined output covers exactly the union of doc_ids. The
+    last batch's commit is dropped before the restart, so Structured
+    Streaming replays it: the replay must replace its lineage row, not
+    append a second one."""
     tmp = tempfile.mkdtemp(prefix="selma_stream_resume_")
     in_dir, out_dir, ckpt = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt"
     try:
@@ -145,16 +132,23 @@ def test_stream_rewrite_resumes_from_checkpoint(spark):
         n1 = got1.count()
         assert n1 == first.count()
 
+        last = max(int(n) for n in os.listdir(f"{ckpt}/commits")
+                   if n.isdigit())
+        for name in (str(last), f".{last}.crc"):
+            os.remove(f"{ckpt}/commits/{name}")
         second.write.parquet(f"{in_dir}/part2")
         q2 = stream_rewrite(spark, f"{in_dir}/*", out_dir, ckpt, "default")
         assert q2.awaitTermination(120)
+        assert q2.recentProgress[0].batchId == last  # the replay
         got = spark.read.parquet(f"{out_dir}/documents")
         ids = [r["doc_id"] for r in got.select("doc_id").collect()]
         assert len(ids) == len(set(ids)) == 200  # no reprocessing dupes
-        # lineage recorded one row per micro-batch, all ok
-        lin = spark.read.parquet(f"{out_dir}/lineage")
-        assert lin.where(F.col("status") == "ok").count() == lin.count()
-        assert lin.agg(F.sum("doc_count")).collect()[0][0] == 200
+        # lineage: one ok row per micro-batch, the replayed one included
+        lin = spark.read.parquet(f"{out_dir}/lineage").collect()
+        batch_ids = [r["partition_id"] for r in lin]
+        assert len(batch_ids) == len(set(batch_ids)) and last in batch_ids
+        assert all(r["status"] == "ok" for r in lin)
+        assert _lineage_total(lin)[0] == 200
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -401,46 +395,6 @@ def test_match_and_absorb_cap_replay_lowest_id_and_sign():
     # all 64 (sign-magnitude would say 1)
     assert _match_and_absorb([("b", -2**63)], ["a"], [1], 3) == [("b", 3, "a")]
     assert _match_and_absorb([("b", -1)], ["a"], [0], 3) == [("b", 3, None)]
-
-
-def test_stream_running_event_totals_ships_the_package_from_any_cwd(spark):
-    """stream_running_event_totals ships selma_spark to the Python
-    workers itself: a driver whose cwd is outside the repo still runs
-    its pickled state function."""
-    import datetime
-
-    from test_spark_pipeline import REPO, _run_script
-
-    tmp = tempfile.mkdtemp(prefix="selma_cwd_rt_")
-    try:
-        t0 = datetime.datetime(2026, 1, 1)
-        spark.createDataFrame(
-            [(i, t0, i, "view" if i % 3 == 0 else "click", 1.5, None)
-             for i in range(30)],
-            "event_id bigint, ts timestamp, user_id bigint, "
-            "event_type string, value double, props string",
-        ).coalesce(1).write.parquet(f"{tmp}/in")
-        proc = _run_script(f"""
-import sys
-sys.path.insert(0, {str(REPO)!r})
-from pyspark.sql import SparkSession
-from selma_spark.spark.streaming import stream_running_event_totals
-spark = (SparkSession.builder.master("local[2]")
-         .config("spark.ui.enabled", "false")
-         .config("spark.sql.shuffle.partitions", "2").getOrCreate())
-q = stream_running_event_totals(
-    spark, sys.argv[1] + "/in", sys.argv[1] + "/ckpt", query_name="rt")
-assert q.awaitTermination(120)
-for r in spark.sql(
-        "SELECT event_type, max(n_events) AS n, max(value_sum) AS v "
-        "FROM rt GROUP BY 1 ORDER BY 1").collect():
-    print(r.event_type, r.n, r.v)
-""", tmp, tmp)
-        assert proc.returncode == 0, proc.stderr[-3000:]
-        assert "click 20 30.0" in proc.stdout, proc.stdout
-        assert "view 10 15.0" in proc.stdout, proc.stdout
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_stream_dedup_documents(spark):
