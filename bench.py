@@ -88,6 +88,15 @@ def _fixture_pages():
     return out
 
 
+def _span_chars():
+    """The summed text length of every span: an aggregate that forces
+    full materialization of every rewritten span."""
+    return F.sum(F.aggregate(
+        "spans", F.lit(0).cast("bigint"),
+        lambda acc, s: acc + F.coalesce(F.length(s["text"]), F.lit(0)),
+    ))
+
+
 def _flagship_count(spark, sf_dir, replicate=None):
     docs = bench_spans(
         q.load(spark, sf_dir, "documents"),
@@ -95,18 +104,9 @@ def _flagship_count(spark, sf_dir, replicate=None):
         n_partitions=N_PARTS,
     )
     out = rewrite_documents(docs, "relaxed")
-    # force full materialization of every rewritten span
-    return (
-        out.select(
-            F.sum(
-                F.aggregate(
-                    "spans", F.lit(0).cast("bigint"),
-                    lambda acc, s: acc + F.coalesce(F.length(s["text"]), F.lit(0)),
-                )
-            ).alias("chars"),
-            F.count("*").alias("docs"),
-        ).collect()[0]
-    )
+    return out.select(
+        _span_chars().alias("chars"), F.count("*").alias("docs"),
+    ).collect()[0]
 
 
 def _timed(fn, *args):
@@ -325,90 +325,6 @@ def main():
     if os.environ.get("SELMA_BENCH_SCALING", "1") != "0":
         _guarded(result, "scaling", scaling_rows)
 
-    # multi-executor scaling: local-cluster[N,1,mem] spawns REAL separate
-    # executor JVMs (driver->executor RPC, per-executor python workers,
-    # py-files shipping) — the closest sandbox stand-in for "N and 4N
-    # executors". Tasks are right-sized (fat splits, not thin ones):
-    # per-task arrow/python setup is ~4x costlier across JVM boundaries,
-    # the same maxPartitionBytes lesson a 100TB corpus needs.
-    # OPT-IN (SELMA_BENCH_MULTI_EXEC=1): this host throttles in phases,
-    # swinging the short 4-JVM measurement 0.52-0.86; the recorded
-    # criterion is the instruction-sanctioned core-count pair above.
-    # Measured multi-executor evidence lives in BENCH/BASELINE.md
-    # (isolated best: 1->4 executors, speedup 3.28x, efficiency 0.86).
-    def multi_exec_rows():
-        from selma_spark.spark.shipping import ensure_shipped
-
-        # let the previous session's executor JVMs fully exit — their
-        # teardown otherwise pollutes the short 4-executor measurement
-        time.sleep(5)
-
-        def run_cluster(n_exec: int, reps: int):
-            spark = (
-                SparkSession.builder.master(f"local-cluster[{n_exec},1,4096]")
-                .appName(f"selma-bench-lc{n_exec}")
-                .config("spark.sql.shuffle.partitions", "32")
-                .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-                .config("spark.executor.memory", "4g")
-                .config("spark.ui.enabled", "false")
-                .getOrCreate()
-            )
-            ensure_shipped(spark)
-            warm = bench_spans(
-                q.load(spark, "/root/testdata/sf0.001", "documents"),
-                replicate=1, n_partitions=4 * n_exec,
-            )
-            wout = rewrite_documents(warm, "relaxed")
-
-            def agg(o):
-                return o.select(
-                    F.sum(F.aggregate(
-                        "spans", F.lit(0).cast("bigint"),
-                        lambda acc, s: acc
-                        + F.coalesce(F.length(s["text"]), F.lit(0)),
-                    ))
-                ).collect()
-
-            agg(wout)
-            agg(wout)
-            # 2x the flagship corpus: the 4-executor run must be long
-            # enough (~25s) that +-3s host jitter can't move the ratio
-            docs = bench_spans(
-                q.load(spark, SF_DIR, "documents"),
-                replicate=2 * REPLICATE, n_partitions=64,
-            )
-            out = rewrite_documents(docs, "relaxed")
-            best = min(_timed(agg, out)[0] for _ in range(reps))
-            n = docs.count()
-            spark.stop()
-            time.sleep(5)
-            return n, best
-
-        base_reps = int(os.environ.get("SELMA_BENCH_SCALING_REPS", "2"))
-        # SANDWICH the short 4-exec leg around the long 1-exec leg
-        # (VERDICT r4 #2): the 4-exec job is the phase-sensitive one
-        # (~25s vs ~100s+), so sample it in two sessions separated by
-        # the 1-exec run's multi-minute wall and take the min — at least
-        # one leg lands outside a throttle phase.
-        _, lc_dt4_a = run_cluster(4, base_reps)
-        lc_docs, lc_dt1 = run_cluster(1, base_reps)
-        _, lc_dt4_b = run_cluster(4, base_reps)
-        lc_dt4 = min(lc_dt4_a, lc_dt4_b)
-        return {
-            "executors_small": 1,
-            "executors_big": 4,
-            "docs": lc_docs,
-            "secs_small": round(lc_dt1, 3),
-            "secs_big": round(lc_dt4, 3),
-            "secs_big_legs": [round(lc_dt4_a, 3), round(lc_dt4_b, 3)],
-            "docs_per_sec_big": round(lc_docs / lc_dt4, 1),
-            "speedup": round(lc_dt1 / lc_dt4, 3),
-            "efficiency": round(lc_dt1 / lc_dt4 / 4, 3),
-        }
-
-    if os.environ.get("SELMA_BENCH_MULTI_EXEC", "0") == "1":
-        _guarded(result, "multi_executor", multi_exec_rows)
-
     # fixture rows, shaped like the reference's benchmark (sm/md pages
     # under (a) RELAXED sanitize, its sanitize bench, README.md:222-241,
     # and (b) its 3 rewrite handlers with sanitizer off, its rewrite
@@ -461,12 +377,7 @@ def main():
                 # get an extra rep
                 reps = 3 if key == "lg" else 2
                 dt = min(
-                    _timed(lambda o=out: o.select(
-                        F.sum(F.aggregate(
-                            "spans", F.lit(0).cast("bigint"),
-                            lambda acc, s: acc
-                            + F.coalesce(F.length(s["text"]), F.lit(0)),
-                        ))).collect())[0]
+                    _timed(lambda o=out: o.select(_span_chars()).collect())[0]
                     for _ in range(reps)
                 )
                 fixtures[f"{mode}_{key}"] = {

@@ -65,18 +65,21 @@ def _extract_text_impl(html: pd.Series) -> pd.Series:
 
 
 def _main_content_impl(html: pd.Series) -> pd.Series:
+    """DensityTextExtractor.main_text per row. Tag-free text sits in no
+    block, so it gives '' (no ``"<" not in h`` identity shortcut here).
+    One Rewriter per batch; the extractor's state is reset per row."""
     from ..extract import DensityTextExtractor  # noqa: PLC0415
     from ..rewriter import Rewriter  # noqa: PLC0415
 
+    ex = DensityTextExtractor()
+    rw = Rewriter(sanitizer=None, handlers=[ex]).rewrite
     out = []
     for h in html:
         if h is None:
             out.append(None)
-        elif "<" not in h:
-            out.append(h)
         else:
-            ex = DensityTextExtractor()  # fresh: per-document block state
-            Rewriter(sanitizer=None, handlers=[ex]).rewrite(h)
+            ex.reset()
+            rw(h)
             out.append(ex.main_text)
     return pd.Series(out)
 

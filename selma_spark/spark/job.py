@@ -12,7 +12,10 @@ Production launch (the north rule's mode):
 Reads span documents (parquet; an Iceberg catalog would swap in via
 ``--format iceberg`` once the runtime jar is on the cluster — not present
 in this sandbox), runs the checkpoint-resumable rewrite, writes
-documents/lineage/metrics. Re-running the same command resumes."""
+documents and a lineage with one row per bucket (doc count, checksum,
+text bytes in and out). Re-running the same command resumes; re-running
+it with another --buckets, --byte-weighted, --config or --extract is
+refused unless --no-resume is given."""
 
 from __future__ import annotations
 
@@ -86,7 +89,7 @@ def main(argv=None) -> int:
         sink=sink,
     )
     print(f"selma-spark: wrote {res.doc_count} documents -> {res.output_path}")
-    print(f"lineage: {res.lineage_path}  metrics: {res.metrics_path}")
+    print(f"lineage: {res.lineage_path}")
     return 0
 
 

@@ -3,15 +3,18 @@
 The north rule's main-content extraction covers three input shapes:
 HTML boilerplate strip (rewriter + extract.ContentExtractor), DOM
 heuristics (selector-driven handlers), and PDF/layout parse — this
-module. No PDF rasterizer/parser library ships in this container, so
-the byte-level parser is STUBBED (``parse_pdf_bytes`` raises
-NotImplementedError, exactly like multimodal.decode_media_bytes), while
-everything Spark-side is real and tested: the page/block schema, the
-arrow-batched mapInPandas stage, and the reading-order reassembly into
-the pipeline's interleaved span schema (kind, text, media_ref, offset).
+module. No PDF library is a dependency, so ``parse_pdf_bytes`` is a
+dependency-free parser for PDFs with UNCOMPRESSED content streams
+(xref table, page tree, text operators, image XObjects); a stream with
+a /Filter raises NotImplementedError. ``decoded_layout`` runs it over
+deterministic synthesized payloads. The Spark side is the page/block
+schema, the arrow-batched mapInPandas stages, and the reading-order
+reassembly into the pipeline's interleaved span schema (kind, text,
+media_ref, offset).
 
-A deterministic fake layout (pure arithmetic in doc_id) stands in for
-the parser so the reading-order logic has value-level oracles.
+``layout_blocks`` still derives its blocks from ``fake_layout`` (pure
+arithmetic in doc_id, no payload), so the reading-order logic has
+value-level oracles.
 """
 
 from __future__ import annotations

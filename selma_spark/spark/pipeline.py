@@ -24,16 +24,20 @@ Spark-first design notes (scale target: 10^12 docs / ~100 TB):
   (not spark_partition_id), written per-bucket with dynamic partition
   overwrite; a ``lineage`` table records completed buckets and a
   restart filters them out with a ``bucket`` predicate built from the
-  collected lineage rows. Lineage and metrics come from the write job
-  itself (per-bucket tallies the rewrite UDF sends through one
-  accumulator), so the committed output is never read back; a resume
-  with every bucket done runs no job over documents.
+  collected lineage rows. A lineage row is the bucket's whole run
+  record (doc count, checksum, text bytes in and out, the run's spec)
+  and comes from the write job itself (per-bucket tallies the rewrite
+  UDF sends through one accumulator), so the committed output is never
+  read back; a resume with every bucket done runs no job over
+  documents, and a resume under a different run spec raises.
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import time
+from collections.abc import Mapping, Set
 from datetime import datetime, timezone
 
 import numpy as np
@@ -49,13 +53,13 @@ from ..rewriter import Rewriter
 from ..sanitizer import BUILTIN_CONFIGS
 from .datagen import DOC_SCHEMA
 
-METRICS_SCHEMA = (
-    "stage string, partition_id int, docs long, bytes_in long, "
-    "bytes_out long, wall_ms long"
-)
+# one row per committed bucket: the whole run record (bytes are UTF-8
+# span-text bytes before/after the rewrite; wall_ms is the commit's job
+# wall time; spec is _run_spec of the run that wrote the row)
 LINEAGE_SCHEMA = (
     "partition_id int, doc_count long, checksum string, status string, "
-    "attempt int, ts timestamp"
+    "attempt int, ts timestamp, bytes_in long, bytes_out long, "
+    "wall_ms long, spec string"
 )
 
 # Task-local rewrite-outcome memo bounds (sanitize-only paths; see
@@ -318,7 +322,7 @@ def bucketed(docs: DataFrame, n_buckets: int, byte_weighted: bool = False) -> Da
     )
 
 
-# --- resumable run with lineage + metrics ----------------------------------
+# --- resumable run with lineage -------------------------------------------
 
 _MASK64 = (1 << 64) - 1
 
@@ -342,6 +346,46 @@ def _lineage_checksum(doc_count: int, hash_sum: int) -> str:
     Order-independent and fixed-size, so per-task tallies add up in any
     order and a bucket of any size costs one short string."""
     return f"{doc_count}:{hash_sum & _MASK64:016x}"
+
+
+# bucketing modes as a run spec records them; a mode's version moves
+# when its doc -> bucket assignment moves (bytes-v2: UTF-8 byte weights,
+# where v1 counted characters)
+_HASH_BUCKETING = "xxhash64-v1"
+_BYTE_BUCKETING = "bytes-v2"
+
+
+def _canonical(v):
+    """A config value as JSON data that does not depend on set or dict
+    iteration order (frozenset order moves with the hash seed)."""
+    if isinstance(v, Mapping):
+        return {str(k): _canonical(x) for k, x in v.items()}
+    if isinstance(v, (Set, list, tuple)):
+        items = [_canonical(x) for x in v]
+        return sorted(items, key=_dumps) if isinstance(v, Set) else items
+    return v
+
+
+def _dumps(v) -> str:
+    return json.dumps(v, sort_keys=True)
+
+
+def _run_spec(bucketing: str, config, handlers_factory) -> str:
+    """What decides a run's buckets and their output, as recorded in every
+    lineage row the run writes: the bucketing (mode, version and bucket
+    count), a digest of the resolved sanitizer config (a builtin name
+    and its config dict give the same digest) and the handlers
+    factory's qualified name. A resume under another spec is refused
+    (``_ok_lineage``)."""
+    cfg = resolve_config(config)
+    cfg_id = "none" if cfg is None else hashlib.sha256(
+        _dumps(_canonical(cfg)).encode()).hexdigest()[:16]
+    f = handlers_factory
+    f_id = "none" if f is None else (
+        f"{getattr(f, '__module__', None)}."
+        f"{getattr(f, '__qualname__', type(f).__qualname__)}"
+    )
+    return f"bucketing={bucketing};config={cfg_id};handlers={f_id}"
 
 
 def _add_tally(acc, other):
@@ -409,10 +453,9 @@ def _arrow_schema(ddl: str):
 
 
 class PipelineResult:
-    def __init__(self, output_path, lineage_path, metrics_path, doc_count):
+    def __init__(self, output_path, lineage_path, doc_count):
         self.output_path = output_path
         self.lineage_path = lineage_path
-        self.metrics_path = metrics_path
         # documents in the output: the lineage's doc_count total
         self.doc_count = doc_count
 
@@ -424,7 +467,6 @@ class ParquetSink:
     def __init__(self, output_dir: str):
         self.output_path = f"{output_dir}/documents"
         self.lineage_path = f"{output_dir}/lineage"
-        self.metrics_path = f"{output_dir}/metrics"
 
     def prepare(self, spark):
         spark.conf.set(
@@ -436,10 +478,11 @@ class ParquetSink:
             self.output_path
         )
 
-    def write_table(self, spark, table, path):
-        """Replace ``path`` with ``table`` (a small pyarrow table) as one
-        parquet file, written by pyarrow through the path's Hadoop
+    def write_lineage(self, spark, table):
+        """Replace the lineage with ``table`` (a small pyarrow table) as
+        one parquet file, written by pyarrow through the path's Hadoop
         FileSystem. Runs no Spark job."""
+        path = self.lineage_path
         buf = pa.BufferOutputStream()
         pq.write_table(table, buf)
         p, fs = _hadoop_path(spark, path)
@@ -456,7 +499,8 @@ class ParquetSink:
         (no run has written one yet). A lineage dir that cannot be read
         (corrupt, unreadable) raises: silently recomputing every bucket
         would hide it. The schema is given, so reading runs no
-        footer-inference job."""
+        footer-inference job, and columns an older lineage lacks read
+        as NULL."""
         p, fs = _hadoop_path(spark, self.lineage_path)
         if not fs.exists(p):
             return None
@@ -484,7 +528,6 @@ class IcebergSink:
     def __init__(self, table: str):
         self.output_path = table
         self.lineage_path = f"{table}_lineage"
-        self.metrics_path = f"{table}_metrics"
 
     def prepare(self, spark):
         pass
@@ -498,14 +541,23 @@ class IcebergSink:
         else:
             df.writeTo(self.output_path).overwritePartitions()
 
-    def write_table(self, spark, table, path):
-        spark.createDataFrame(table).writeTo(path).createOrReplace()
+    def write_lineage(self, spark, table):
+        spark.createDataFrame(table).writeTo(self.lineage_path).createOrReplace()
 
     def read_lineage(self, spark):
-        """The lineage table, or None when no run has created it yet."""
+        """The lineage table, or None when no run has created it yet.
+        Columns an older lineage table lacks read as NULL, as they do
+        through ParquetSink's schema-given read."""
         if not spark.catalog.tableExists(self.lineage_path):
             return None
-        return spark.read.table(self.lineage_path)
+        from pyspark.sql.types import _parse_datatype_string  # noqa: PLC0415
+
+        t = spark.read.table(self.lineage_path)
+        return t.select(*[
+            F.col(f.name) if f.name in t.columns
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in _parse_datatype_string(LINEAGE_SCHEMA).fields
+        ])
 
 
 def run_pipeline(
@@ -520,33 +572,37 @@ def run_pipeline(
     sink=None,
 ) -> PipelineResult:
     """Checkpoint-resumable rewrite: output partitioned by a
-    deterministic doc_id bucket + per-bucket lineage + stage metrics.
+    deterministic doc_id bucket + one lineage row per bucket.
 
     ``sink`` is the storage strategy (default ParquetSink(output_dir);
     pass IcebergSink(\"catalog.db.table\") on a cluster with Iceberg
     jars). One Spark job runs over the documents: the bucketed
     rewrite-and-write. Its rewrite UDF tallies, per bucket, the doc
     count, text bytes in and out and the doc_id checksum, and the
-    lineage and metrics rows are built on the driver from that tally and
-    written by the sink; the output is never read back. On restart, the
-    buckets recorded 'ok' in lineage are filtered out, only the
-    remainder is recomputed (dynamic partition overwrite /
-    overwritePartitions keeps completed buckets intact), and their
-    lineage rows are kept as they were. When every bucket
-    ``0..n_buckets-1`` is already 'ok', nothing is written."""
+    lineage rows are built on the driver from that tally and written by
+    the sink; the output is never read back. On restart, the buckets
+    recorded 'ok' in lineage are filtered out, only the remainder is
+    recomputed (dynamic partition overwrite / overwritePartitions keeps
+    completed buckets intact), and their lineage rows are kept as they
+    were. When every bucket ``0..n_buckets-1`` is already 'ok', nothing
+    is written. A resume whose lineage was written under another run
+    spec (``_run_spec``: bucketing, bucket count, config, handlers)
+    raises ValueError; ``resume=False`` recomputes every bucket."""
     if sink is None:
         sink = ParquetSink(output_dir)
     sink.prepare(spark)
+    spec = _run_spec(
+        f"{_BYTE_BUCKETING if byte_weighted else _HASH_BUCKETING}/{n_buckets}",
+        config, handlers_factory,
+    )
     prior = (
-        _ok_lineage(spark, sink) if resume
+        _ok_lineage(spark, sink, spec) if resume
         else _arrow_schema(LINEAGE_SCHEMA).empty_table()
     )
     done = set(prior["partition_id"].to_pylist())
     todo = [k for k in range(n_buckets) if k not in done]
     prior_docs = pc.sum(prior["doc_count"]).as_py() or 0
-    result = PipelineResult(
-        sink.output_path, sink.lineage_path, sink.metrics_path, prior_docs
-    )
+    result = PipelineResult(sink.output_path, sink.lineage_path, prior_docs)
     if not todo:
         return result
 
@@ -554,37 +610,54 @@ def run_pipeline(
     if done:
         b = b.where(F.col("bucket").isin(todo))
     lineage = _commit_buckets(
-        spark, sink, b.repartition(n_buckets, "bucket"), todo, prior,
+        spark, sink, b.repartition(n_buckets, "bucket"), todo, prior, spec,
         config, handlers_factory,
     )
     result.doc_count = pc.sum(lineage["doc_count"]).as_py()
     return result
 
 
-def _ok_lineage(spark, sink) -> pa.Table:
+def _ok_lineage(spark, sink, spec) -> pa.Table:
     """The sink's 'ok' lineage rows as a pyarrow table (empty when no run
-    has written a lineage yet)."""
+    has written a lineage yet). Raises ValueError when a row was written
+    under a run spec other than ``spec``: resuming would mix two bucket
+    layouts or two rewrites in one output. A lineage written before run
+    specs were recorded has none, and is refused the same way."""
     schema = _arrow_schema(LINEAGE_SCHEMA)
     lineage = sink.read_lineage(spark)
     if lineage is None:
         return schema.empty_table()
-    return (
+    prior = (
         lineage.where(F.col("status") == "ok")
         .select(*schema.names)
         .toArrow()
         .cast(schema)
     )
+    other = set(prior["spec"].to_pylist()) - {spec}
+    if other:
+        wrote = ", ".join(
+            "none (written before run specs were recorded)" if s is None
+            else repr(s)
+            for s in sorted(other, key=str)
+        )
+        raise ValueError(
+            f"cannot resume: lineage {sink.lineage_path} was written under "
+            f"run spec {wrote}, but this run's spec is {spec!r}; rerun with "
+            f"resume=False or write to a new output"
+        )
+    return prior
 
 
-def _commit_buckets(spark, sink, b, todo, prior, config, handlers_factory):
+def _commit_buckets(spark, sink, b, todo, prior, spec, config,
+                    handlers_factory):
     """The one commit unit of run_pipeline and streaming.stream_rewrite:
     rewrite ``b`` (documents carrying ``bucket``, one of ``todo`` each)
     and write it with ``sink.write_documents``, in ONE Spark job whose
     rewrite UDF tallies every bucket on a ``_BucketStats`` accumulator.
     From that tally, the lineage (``prior`` rows kept verbatim, plus one
-    new row per ``todo`` bucket, zero for an empty one) and the metrics
-    of the ``todo`` buckets are written through ``sink.write_table``.
-    Returns the lineage table written."""
+    new row per ``todo`` bucket, zero for an empty one, under ``spec``)
+    is written through ``sink.write_lineage``. Returns the lineage table
+    written."""
     from .shipping import ensure_shipped
 
     ensure_shipped(spark)
@@ -602,25 +675,21 @@ def _commit_buckets(spark, sink, b, todo, prior, config, handlers_factory):
 
     tally = stats.value
     counts = [tally.get(k, [0, 0, 0, 0]) for k in todo]
-    ts = datetime.now(timezone.utc)
+    n = len(todo)
     new = pa.Table.from_pydict({
         "partition_id": todo,
         "doc_count": [c[0] for c in counts],
         "checksum": [_lineage_checksum(c[0], c[3]) for c in counts],
-        "status": ["ok"] * len(todo),
-        "attempt": [1] * len(todo),
-        "ts": [ts] * len(todo),
-    }, schema=lineage_schema)
-    lineage = pa.concat_tables([prior, new])
-    sink.write_table(spark, lineage, sink.lineage_path)
-    sink.write_table(spark, pa.Table.from_pydict({
-        "stage": ["rewrite"] * len(todo),
-        "partition_id": todo,
-        "docs": [c[0] for c in counts],
+        "status": ["ok"] * n,
+        "attempt": [1] * n,
+        "ts": [datetime.now(timezone.utc)] * n,
         "bytes_in": [c[1] for c in counts],
         "bytes_out": [c[2] for c in counts],
-        "wall_ms": [wall_ms] * len(todo),
-    }, schema=_arrow_schema(METRICS_SCHEMA)), sink.metrics_path)
+        "wall_ms": [wall_ms] * n,
+        "spec": [spec] * n,
+    }, schema=lineage_schema)
+    lineage = pa.concat_tables([prior, new])
+    sink.write_lineage(spark, lineage)
     return lineage
 
 

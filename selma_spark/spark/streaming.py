@@ -5,9 +5,9 @@ one document); this is the pipeline-added micro-batch ingest path
 (SURVEY.md §2B): new span documents land in a directory (stand-in for an
 Iceberg/queue source), and ``foreachBatch`` commits each micro-batch
 through run_pipeline's own commit unit (``pipeline._commit_buckets``):
-the same vectorized rewrite UDF, one write, and lineage and metrics from
-the UDF's per-bucket tally — so the streaming and batch paths share one
-code path and one output contract.
+the same vectorized rewrite UDF, one write, and one lineage row per
+micro-batch from the UDF's per-bucket tally — so the streaming and
+batch paths share one code path and one output contract.
 
 Also provides streaming exact dedup within a watermark and stateful
 band-keyed near-dup flagging."""
@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .datagen import DOC_SCHEMA
-from .pipeline import ParquetSink, _commit_buckets, _ok_lineage
+from .pipeline import ParquetSink, _commit_buckets, _ok_lineage, _run_spec
 
 
 def read_document_stream(
@@ -55,18 +55,21 @@ def stream_rewrite(
     once when the query starts and rewritten whole after every batch:
     a replayed batch (Structured Streaming re-runs a batch whose commit
     was not recorded) overwrites its documents and replaces its lineage
-    row, so it never appends a second one. ``metrics`` holds the last
-    micro-batch's row, as run_pipeline's holds its last run's buckets."""
+    row, so it never appends a second one. Every batch's row keeps its
+    own doc count, checksum and text bytes in and out. A lineage written
+    under another run spec (another config or handlers factory, or a
+    run_pipeline output) raises ValueError when the query starts."""
     sink = ParquetSink(output_dir)
     sink.prepare(spark)
-    lineage = _ok_lineage(spark, sink)
+    spec = _run_spec("micro-batch", config, handlers_factory)
+    lineage = _ok_lineage(spark, sink, spec)
 
     def write_batch(batch_df: DataFrame, batch_id: int):
         nonlocal lineage
         kept = lineage.filter(pc.not_equal(lineage["partition_id"], batch_id))
         lineage = _commit_buckets(
             spark, sink, batch_df.withColumn("bucket", F.lit(batch_id)),
-            [batch_id], kept, config, handlers_factory,
+            [batch_id], kept, spec, config, handlers_factory,
         )
 
     return (

@@ -118,8 +118,9 @@ def test_only_the_commit_unit_tallies_lineage():
     """One commit unit: ``_commit_buckets`` is the only function that
     builds a ``_BucketStats`` accumulator or passes ``_stats`` to
     ``make_rewrite_fn``, and run_pipeline and stream_rewrite are the
-    only functions that call it."""
-    stats_users, commit_callers = set(), set()
+    only functions that call it. It writes one aux table: its one call
+    of the sink's ``write_lineage`` is the only one."""
+    stats_users, commit_callers, lineage_writes = set(), set(), []
     for path in sorted(SPARK_DIR.glob("*.py")):
         tree = ast.parse(path.read_text(), filename=str(path))
         # every top-level statement, nested defs counted in their parent
@@ -135,7 +136,10 @@ def test_only_the_commit_unit_tallies_lineage():
                     stats_users.add(where)
                 if name == "_commit_buckets":
                     commit_callers.add(where)
+                if name == "write_lineage":
+                    lineage_writes.append(where)
     assert stats_users == {"pipeline.py:_commit_buckets"}, stats_users
+    assert lineage_writes == ["pipeline.py:_commit_buckets"], lineage_writes
     assert commit_callers == {
         "pipeline.py:run_pipeline",
         "streaming.py:stream_rewrite",

@@ -15,6 +15,7 @@ from selma_spark.golden import STRINGS
 from selma_spark.rewriter import Rewriter
 from selma_spark.spark.datagen import bench_spans, interleaved_spans
 from selma_spark.spark.pipeline import (
+    _run_spec,
     bucketed,
     rewrite_documents,
     run_pipeline,
@@ -209,11 +210,18 @@ def test_run_pipeline_writes_and_resumes(spark):
         assert out.count() == docs.count()
         lineage = spark.read.parquet(res.lineage_path)
         assert lineage.where("status = 'ok'").count() == 4
+        # one row per bucket is the whole run record: no metrics table
         assert lineage.columns == [
-            "partition_id", "doc_count", "checksum", "status", "attempt", "ts"
+            "partition_id", "doc_count", "checksum", "status", "attempt",
+            "ts", "bytes_in", "bytes_out", "wall_ms", "spec",
         ]
-        metrics = spark.read.parquet(res.metrics_path)
-        assert metrics.where("stage = 'rewrite'").count() == 4
+        assert not Path(tmp, "metrics").exists()
+        assert sorted(p.name for p in Path(tmp).iterdir()) == [
+            "documents", "lineage"]
+        assert lineage.where(
+            "bytes_in > 0 AND bytes_out > 0 AND wall_ms >= 0").count() == 4
+        assert {r["spec"] for r in lineage.collect()} == {
+            _run_spec("xxhash64-v1/4", "default", None)}
 
         chk1 = {r["partition_id"]: r["checksum"] for r in lineage.collect()}
 
@@ -441,16 +449,12 @@ def test_run_pipeline_lineage_and_metrics_match_ground_truth(spark):
 
         lineage = {r["partition_id"]: r for r in
                    spark.read.parquet(res.lineage_path).collect()}
-        metrics = {r["partition_id"]: r for r in
-                   spark.read.parquet(res.metrics_path).collect()}
-        assert sorted(lineage) == sorted(metrics) == list(range(n_buckets))
+        assert sorted(lineage) == list(range(n_buckets))
         for k, (n, b_in, b_out, h) in want.items():
-            assert lineage[k]["doc_count"] == n
-            assert lineage[k]["checksum"] == f"{n}:{h % 2**64:016x}"
-            assert lineage[k]["status"] == "ok"
-            m = metrics[k]
-            assert (m["stage"], m["docs"], m["bytes_in"], m["bytes_out"]) == (
-                "rewrite", n, b_in, b_out)
+            row = lineage[k]
+            assert (row["doc_count"], row["checksum"], row["bytes_in"],
+                    row["bytes_out"], row["status"]) == (
+                n, f"{n}:{h % 2**64:016x}", b_in, b_out, "ok")
         assert res.doc_count == len(inputs)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -502,10 +506,10 @@ def test_lineage_tallies_add_up_across_any_split():
 
 def test_commit_buckets_keeps_prior_rows_verbatim(spark):
     """``_commit_buckets`` writes the prior lineage rows unchanged, in
-    any checksum format (an old 64-hex sha2 row included), followed by
-    one row per ``todo`` bucket; the table it returns is the one it
-    wrote. Documents land in ``bucket=<k>`` partitions, and the metrics
-    hold the ``todo`` buckets only."""
+    any checksum format (an old 64-hex sha2 row included) and with their
+    own bytes, followed by one row per ``todo`` bucket; the table it
+    returns is the one it wrote, and it writes no other table.
+    Documents land in ``bucket=<k>`` partitions."""
     import datetime
 
     import pyarrow as pa
@@ -530,6 +534,10 @@ def test_commit_buckets_keeps_prior_rows_verbatim(spark):
             "status": ["ok", "ok"],
             "attempt": [2, 1],
             "ts": [ts, ts],
+            "bytes_in": [300, 500],
+            "bytes_out": [200, 400],
+            "wall_ms": [11, 13],
+            "spec": ["s", "s"],
         }, schema=schema)
         docs = make_span_docs(spark)
         ids = sorted(r["doc_id"] for r in docs.collect())
@@ -539,7 +547,7 @@ def test_commit_buckets_keeps_prior_rows_verbatim(spark):
         )
         sink = ParquetSink(tmp)
         sink.prepare(spark)
-        lineage = _commit_buckets(spark, sink, b, [0, 1, 2], prior,
+        lineage = _commit_buckets(spark, sink, b, [0, 1, 2], prior, "s",
                                   "default", None)
 
         written = spark.read.parquet(sink.lineage_path).toArrow().cast(schema)
@@ -551,18 +559,229 @@ def test_commit_buckets_keeps_prior_rows_verbatim(spark):
             want = by_bucket[k]
             h = sum(int(x) for x in _doc_id_hashes(want))
             assert (row["partition_id"], row["doc_count"], row["checksum"],
-                    row["status"], row["attempt"]) == (
-                k, len(want), _lineage_checksum(len(want), h), "ok", 1)
+                    row["status"], row["attempt"], row["spec"]) == (
+                k, len(want), _lineage_checksum(len(want), h), "ok", 1, "s")
+            assert (row["bytes_in"] > 0) == (row["bytes_out"] > 0) == bool(want)
         assert len(rows) == 5
 
         out = spark.read.parquet(sink.output_path)
         assert {r["bucket"]: r["n"] for r in
                 out.groupBy("bucket").agg(F.count("*").alias("n")).collect()
                 } == {0: len(by_bucket[0]), 1: len(by_bucket[1])}
-        metrics = spark.read.parquet(sink.metrics_path).collect()
-        assert sorted(r["partition_id"] for r in metrics) == [0, 1, 2]
+        assert sorted(p.name for p in Path(tmp).iterdir()) == [
+            "documents", "lineage"]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _write_lineage_file(spark, path, table):
+    """Replace the lineage parquet at ``path`` with ``table``."""
+    import pyarrow.parquet as pq
+
+    shutil.rmtree(path, ignore_errors=True)
+    Path(path).mkdir(parents=True)
+    pq.write_table(table, f"{path}/part-00000.parquet")
+    spark.catalog.refreshByPath(path)
+
+
+def test_resume_keeps_the_first_runs_bytes(spark):
+    """A resume recomputes only the buckets missing from the lineage; the
+    rows of the buckets it skips keep the first run's bytes, ts and
+    wall_ms verbatim, and the recomputed buckets get the same doc counts,
+    checksums and bytes as the first run gave them."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    tmp = tempfile.mkdtemp(prefix="selma_resume_bytes_")
+    try:
+        docs = interleaved_spans(
+            spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        )
+        res = run_pipeline(spark, docs, tmp, config="default", n_buckets=4)
+        first = {r["partition_id"]: r for r in
+                 pq.read_table(res.lineage_path).to_pylist()}
+        assert all(first[k]["bytes_in"] > 0 for k in range(4))
+
+        # the crash: buckets 2 and 3 were never committed
+        kept = pq.read_table(res.lineage_path)
+        kept = kept.filter(pc.less(kept["partition_id"], 2))
+        _write_lineage_file(spark, res.lineage_path, kept)
+        for k in (2, 3):
+            shutil.rmtree(f"{res.output_path}/bucket={k}")
+        spark.catalog.refreshByPath(res.output_path)
+
+        res2 = run_pipeline(spark, docs, tmp, config="default", n_buckets=4)
+        second = {r["partition_id"]: r for r in
+                  pq.read_table(res2.lineage_path).to_pylist()}
+        assert sorted(second) == [0, 1, 2, 3]
+        for k in (0, 1):
+            assert second[k] == first[k]
+        for k in (2, 3):
+            for col in ("doc_count", "checksum", "bytes_in", "bytes_out",
+                        "spec"):
+                assert second[k][col] == first[k][col], (k, col)
+            assert second[k]["ts"] > first[k]["ts"]
+        assert res2.doc_count == docs.count()
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _probe_docs(spark, n=400):
+    return spark.createDataFrame(
+        [(f"d{i}", [("text", f"<b>{i}</b><script>x</script>", None, 0)])
+         for i in range(n)],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+
+
+def _probe_handlers():
+    return []
+
+
+def test_resume_refuses_a_changed_run_spec(spark):
+    """A resume whose bucket count, bucketing mode, config or handlers
+    factory differ from the lineage's raises ValueError naming both run
+    specs, and writes nothing (a resume from n_buckets=4 to 8 used to
+    leave 612 output rows for 400 doc_ids). A resume under the same spec
+    stays a no-op; resume=False recomputes under the new spec."""
+    import pyarrow.parquet as pq
+
+    tmp = tempfile.mkdtemp(prefix="selma_spec_")
+    try:
+        docs = _probe_docs(spark)
+        res = run_pipeline(spark, docs, tmp, config="default", n_buckets=4)
+        first = pq.read_table(res.lineage_path).to_pylist()
+        spec = _run_spec("xxhash64-v1/4", "default", None)
+        assert {r["spec"] for r in first} == {spec}
+
+        for kwargs, moved in (
+            ({"n_buckets": 8}, ("xxhash64-v1/8", "default", None)),
+            ({"byte_weighted": True}, ("bytes-v2/4", "default", None)),
+            ({"config": "relaxed"}, ("xxhash64-v1/4", "relaxed", None)),
+            ({"handlers_factory": _probe_handlers},
+             ("xxhash64-v1/4", "default", _probe_handlers)),
+        ):
+            kwargs = {"config": "default", "n_buckets": 4, **kwargs}
+            with pytest.raises(ValueError) as e:
+                run_pipeline(spark, docs, tmp, **kwargs)
+            msg = str(e.value)
+            assert repr(spec) in msg and "resume=False" in msg, msg
+            assert repr(_run_spec(*moved)) in msg, msg
+            assert pq.read_table(res.lineage_path).to_pylist() == first
+            out = spark.read.parquet(res.output_path)
+            assert out.count() == 400
+
+        same = run_pipeline(spark, docs, tmp, config="default", n_buckets=4)
+        assert same.doc_count == 400
+        assert pq.read_table(res.lineage_path).to_pylist() == first
+
+        res8 = run_pipeline(spark, docs, tmp, config="default", n_buckets=8,
+                            resume=False)
+        out = spark.read.parquet(res8.output_path)
+        assert out.count() == out.select("doc_id").distinct().count() == 400
+        assert {r["spec"] for r in pq.read_table(res8.lineage_path)
+                .to_pylist()} == {_run_spec("xxhash64-v1/8", "default", None)}
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_resume_refuses_a_lineage_without_run_spec(spark):
+    """A lineage written before run specs were recorded (its rows have
+    no ``spec``, nor bytes) cannot show that a resume keeps its bucket
+    layout, so a resume raises and says to rerun with resume=False; the
+    rerun then recomputes every bucket."""
+    import pyarrow.parquet as pq
+
+    tmp = tempfile.mkdtemp(prefix="selma_nospec_")
+    try:
+        docs = _probe_docs(spark, 40)
+        res = run_pipeline(spark, docs, tmp, config="default", n_buckets=4)
+        old = pq.read_table(res.lineage_path).select(
+            ["partition_id", "doc_count", "checksum", "status", "attempt",
+             "ts"])
+        _write_lineage_file(spark, res.lineage_path, old)
+        with pytest.raises(ValueError, match="before run specs") as e:
+            run_pipeline(spark, docs, tmp, config="default", n_buckets=4)
+        assert "resume=False" in str(e.value)
+
+        res2 = run_pipeline(spark, docs, tmp, config="default", n_buckets=4,
+                            resume=False)
+        rows = pq.read_table(res2.lineage_path).to_pylist()
+        assert sorted(r["partition_id"] for r in rows) == [0, 1, 2, 3]
+        assert all(r["spec"] is not None and r["bytes_in"] is not None
+                   for r in rows)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_iceberg_sink_reads_an_old_lineage_table_as_specless(spark):
+    """IcebergSink reads its lineage with ``spark.read.table``, so an old
+    table lacking the run-record columns would fail the resume's select
+    with an analysis error; instead the missing columns read as NULL and
+    the resume is refused with the same ValueError as ParquetSink's. A
+    temp view stands in for the old table (no Iceberg runtime needed)."""
+    import datetime
+
+    from pyspark.sql.types import _parse_datatype_string
+
+    from selma_spark.spark.pipeline import LINEAGE_SCHEMA, IcebergSink
+
+    old = spark.createDataFrame(
+        [(0, 3, "3:00000000000000ff", "ok", 1,
+          datetime.datetime(2024, 1, 1))],
+        "partition_id int, doc_count long, checksum string, status string, "
+        "attempt int, ts timestamp",
+    )
+    old.createOrReplaceTempView("selma_old_docs_lineage")
+    try:
+        sink = IcebergSink("selma_old_docs")
+        lineage = sink.read_lineage(spark)
+        assert lineage.schema.simpleString() == (
+            _parse_datatype_string(LINEAGE_SCHEMA).simpleString())
+        row = lineage.collect()[0]
+        assert (row["doc_count"], row["bytes_in"], row["spec"]) == (3, None, None)
+        with pytest.raises(ValueError, match="before run specs"):
+            run_pipeline(spark, _probe_docs(spark, 8), "ignored",
+                         n_buckets=4, sink=sink)
+    finally:
+        spark.catalog.dropTempView("selma_old_docs_lineage")
+
+
+def test_run_spec_is_canonical():
+    """The run spec names the bucketing, a config digest and the handlers
+    factory's qualified name. A builtin name and its config dict share a
+    digest, and a config holding sets digests the same under any hash
+    seed (set iteration order moves with it)."""
+    import os
+    import subprocess
+    import sys
+
+    assert _run_spec("b", "relaxed", None) == _run_spec("b", S.RELAXED, None)
+    assert _run_spec("b", "relaxed", None) != _run_spec("b", "default", None)
+    assert _run_spec("b", None, None) == "bucketing=b;config=none;handlers=none"
+    assert _run_spec("b", None, _probe_handlers).endswith(
+        ";handlers=test_spark_pipeline._probe_handlers")
+
+    script = (
+        f"import sys; sys.path.insert(0, {str(REPO)!r})\n"
+        "from selma_spark.spark.pipeline import _run_spec\n"
+        "els = frozenset(f'tag{i}' for i in range(40))\n"
+        "cfg = {'elements': els, 'attributes': {'a': {'href', 'rel', 'x'}}}\n"
+        "print(_run_spec('b', cfg, None), list(els)[:5])\n"
+    )
+    specs, orders = set(), set()
+    for seed in ("1", "2", "3", "4"):
+        proc = subprocess.run(
+            [sys.executable, "-c", script], capture_output=True, text=True,
+            env=dict(os.environ, PYTHONHASHSEED=seed), timeout=120,
+        )
+        assert proc.returncode == 0, proc.stderr[-2000:]
+        spec, order = proc.stdout.strip().split(" ", 1)
+        specs.add(spec)
+        orders.add(order)
+    assert len(orders) > 1  # the seeds did move the set order
+    assert len(specs) == 1, specs
 
 
 def test_run_pipeline_reads_documents_once_and_noop_resume_reads_none(spark):
@@ -1295,6 +1514,42 @@ def test_sql_function_main_content(spark):
         "text threshold for a main-content block easily.</p></div>') AS m"
     ).collect()[0]
     assert "real article body" in row["m"] and "Home" not in row["m"]
+
+
+def test_sql_main_content_equals_the_extractor(spark):
+    """SQL ``selma_main_content`` equals ``DensityTextExtractor().main_text``
+    row by row: tag-free text sits in no block and gives '' (it used to
+    come back verbatim), short blocks give '', long blocks their text.
+    One batch holds every row, so block state must not leak between
+    rows."""
+    from selma_spark.extract import DensityTextExtractor
+    from selma_spark.spark.functions import register_sql_functions
+
+    register_sql_functions(spark)
+    long_block = ("<div><p>" + "A long article paragraph with words. " * 3
+                  + "</p></div>")
+    inputs = [
+        long_block,
+        "short nav",
+        "tag-free text long enough to pass the block threshold " * 3,
+        "<p>short block</p>",
+        "<div>short block</div> trailing tag-free text",
+        long_block + "<div>unclosed block with text",
+        "",
+        None,
+    ]
+    df = spark.createDataFrame(list(enumerate(inputs)), "i int, h string")
+    got = {r["i"]: r["m"] for r in
+           df.coalesce(1).selectExpr("i", "selma_main_content(h) AS m")
+           .collect()}
+    for i, h in enumerate(inputs):
+        want = None
+        if h is not None:
+            ex = DensityTextExtractor()
+            Rewriter(sanitizer=None, handlers=[ex]).rewrite(h)
+            want = ex.main_text
+        assert got[i] == want, (i, h)
+    assert got[1] == got[2] == "" and got[0]
 
 
 def test_spark_submit_pyfiles_launch(spark):

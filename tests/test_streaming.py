@@ -153,6 +153,53 @@ def test_stream_rewrite_resumes_from_checkpoint(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _text_bytes(spans):
+    return sum(len(s["text"].encode()) for s in spans or []
+               if s["text"] is not None)
+
+
+def test_stream_keeps_every_batchs_bytes(spark):
+    """Two micro-batches leave two lineage rows, each with its own
+    batch's doc count and UTF-8 text bytes in and out (recomputed here
+    from the input and from ``documents/bucket=<batch id>``); the second
+    batch's commit keeps the first batch's row. A restart under another
+    config is refused when the query starts."""
+    tmp = tempfile.mkdtemp(prefix="selma_stream_bytes_")
+    in_dir, out_dir, ckpt = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt"
+    try:
+        docs = interleaved_spans(
+            spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        ).where(F.col("doc_id").cast("bigint") < 120)
+        ids = F.col("doc_id").cast("bigint")
+        docs.where(ids < 50).write.parquet(f"{in_dir}/part1")
+        q = stream_rewrite(spark, f"{in_dir}/*", out_dir, ckpt, "relaxed")
+        assert q.awaitTermination(120)
+        docs.where(ids >= 50).write.parquet(f"{in_dir}/part2")
+        q = stream_rewrite(spark, f"{in_dir}/*", out_dir, ckpt, "relaxed")
+        assert q.awaitTermination(120)
+
+        inputs = {r["doc_id"]: r["spans"] for r in docs.collect()}
+        out = spark.read.parquet(f"{out_dir}/documents").collect()
+        want = {}
+        for r in out:
+            w = want.setdefault(r["bucket"], [0, 0, 0])
+            w[0] += 1
+            w[1] += _text_bytes(inputs[r["doc_id"]])
+            w[2] += _text_bytes(r["spans"])
+        lineage = spark.read.parquet(f"{out_dir}/lineage").collect()
+        got = {r["partition_id"]: [r["doc_count"], r["bytes_in"],
+                                   r["bytes_out"]] for r in lineage}
+        assert len(lineage) == 2 and sorted(got) == [0, 1]
+        assert got == want
+        assert [w[0] for _, w in sorted(want.items())] == [50, 70]
+        assert all(w[1] != w[2] for w in want.values())
+
+        with pytest.raises(ValueError, match="run spec"):
+            stream_rewrite(spark, f"{in_dir}/*", out_dir, ckpt, "default")
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def test_stream_near_dup_flags(spark):
     """Near-identical docs arriving in DIFFERENT micro-batches are
     flagged against the earlier doc (state survives the batch
