@@ -12,8 +12,13 @@ input — the sandbox stand-in for the N vs 4N executor criterion
 (efficiency = T_small/T_big / 4).
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
-     SELMA_BENCH_SCALING=0 to skip the scaling block.
+     SPARK_GRAFT_CPUS (default: this host's CPU count),
+     SELMA_BENCH_REPLICATE (flagship corpus copies, default 64),
+     SELMA_BENCH_CPUS_SMALL / SELMA_BENCH_CPUS_BIG (scaling pair,
+       default 1 / 4),
+     SELMA_BENCH_SCALING=0, SELMA_BENCH_FIXTURES=0, SELMA_BENCH_SOAK=0
+       and SELMA_BENCH_LATE_LEG=0 skip the scaling block, the fixture
+       rows, the scale soak and the late flagship leg.
 
 Every section is guarded: one that raises records {"error": "..."} in
 its slot and the JSON line is still printed. The fixture rows rewrite
@@ -39,16 +44,17 @@ from pyspark.sql import functions as F  # noqa: E402
 from selma_spark.spark.datagen import bench_spans  # noqa: E402
 from selma_spark.spark.pipeline import rewrite_documents  # noqa: E402
 from selma_spark.spark import queries as q  # noqa: E402
-from selma_spark.spark.session import get_spark  # noqa: E402
+from selma_spark.spark.session import default_cpus, get_spark  # noqa: E402
+from selma_spark.spark.textops import SIMHASH_MAX_BAND_SIZE  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cpus()
 
 
 REPLICATE = int(os.environ.get("SELMA_BENCH_REPLICATE", "64"))
 # input splits fixed to the BIG run's core count (like a real corpus whose
 # split count doesn't depend on cluster size); small run does more waves
-N_PARTS = int(os.environ.get("SELMA_BENCH_PARTITIONS", str(4 * CPUS)))
+N_PARTS = 4 * CPUS
 
 # optional extra fixture source: the reference's benchmark pages, in a
 # checkout of the reference next to this repo
@@ -135,7 +141,7 @@ def run_at(cpus: int, sf_dir: str, reps: int = 1, samples: list | None = None):
     return best_dt, int(row["docs"]), int(row["chars"])
 
 
-SOAK_REPLICATE = int(os.environ.get("SELMA_BENCH_SOAK_REPLICATE", "64"))
+SOAK_REPLICATE = 64
 
 
 def _soak_documents(docs, replicate: int, n_parts: int):
@@ -188,14 +194,13 @@ def run_scale_soak():
 
     spark = get_spark(cpus=CPUS, app_name="selma-bench-soak")
     points = []
-    emb_replicate = max(1, SOAK_REPLICATE)
     for label, sf_dir, replicate in (
         ("sf0.01", "/root/testdata/sf0.01", 1),
         ("sf0.1", SF_DIR, 1),
         (f"sf0.1x{SOAK_REPLICATE}", SF_DIR, SOAK_REPLICATE),
     ):
         docs = _soak_documents(
-            q.load(spark, sf_dir, "documents"), replicate, 4 * CPUS
+            q.load(spark, sf_dir, "documents"), replicate, N_PARTS
         ).localCheckpoint()  # materialize once; lineage-free input for
         # every op below (released with driver GC, not session-pinned)
         n_docs = docs.count()
@@ -222,7 +227,7 @@ def run_scale_soak():
             textops.simhash64(docs).select("doc_id", "simhash")
         )
         occ = bands.groupBy("band_id", "band_val").count()
-        dropped = occ.where(F.col("count") > 100).count()
+        dropped = occ.where(F.col("count") > SIMHASH_MAX_BAND_SIZE).count()
         total_buckets = occ.count()
         point["simhash_near_dup"] = {
             "secs": round(dt, 2),
@@ -240,8 +245,8 @@ def run_scale_soak():
 
         emb = _soak_embeddings(
             q.load(spark, sf_dir, "embeddings"),
-            replicate if replicate > 1 else 1,
-            4 * CPUS,
+            replicate,
+            N_PARTS,
         ).localCheckpoint()
         n_vecs = emb.count()
         dt, assigned = _timed(
@@ -303,9 +308,8 @@ def main():
         # min-per-level approximates each level's unthrottled time (the
         # classical noise estimator); the big side gets one extra cheap
         # rep since a single slow 15s sample moves its min the most.
-        reps = int(os.environ.get("SELMA_BENCH_SCALING_REPS", "2"))
         ts_list, tb_list = [], []
-        for _ in range(reps):
+        for _ in range(2):
             ts_list.append(run_at(small, SF_DIR)[0])
             tb_list.append(run_at(big, SF_DIR)[0])
         tb_list.append(run_at(big, SF_DIR)[0])

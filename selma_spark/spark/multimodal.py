@@ -130,19 +130,23 @@ DECODED_RESIZE_SCHEMA = (
 )
 
 
-def decoded_resize(docs: DataFrame, max_px: int = 8) -> DataFrame:
+# decoded_resize's aspect-fit box (pixels per side); the oracle reads it
+RESIZE_MAX_PX = 8
+
+
+def decoded_resize(docs: DataFrame) -> DataFrame:
     """REAL decode->resize for image media spans (the de-stubbed
     multimodal path, VERDICT r3 #6): synthesize the ref's deterministic
     BMP payload (stand-in for an object-store fetch), parse it with the
     real dependency-free BMP decoder, nearest-neighbor-resample into an
-    aspect-fit max_px box with pure integer math, and emit a
+    aspect-fit RESIZE_MAX_PX box with pure integer math, and emit a
     position-weighted pixel checksum of the RESIZED image —
     sum((y*nw + x + 1) * (r + 2g + 4b)) — so the oracle pins actual
     output pixels, not just dimensions.
 
     Scale shape: explode + class filter are JVM-side, the decoder runs
-    arrow-batched in mapInPandas, per-row work is bounded by max_px^2.
-    Swapping synth_bmp for a real payload column (binary) or store fetch
+    arrow-batched in mapInPandas, per-row work is bounded by
+    RESIZE_MAX_PX^2. Swapping synth_bmp for a real payload column (binary) or store fetch
     changes nothing in the plan."""
     from .shipping import ensure_shipped
 
@@ -160,10 +164,10 @@ def decoded_resize(docs: DataFrame, max_px: int = 8) -> DataFrame:
             for ref in pdf["media_ref"]:
                 w, h, px = decode_media_bytes(synth_bmp(ref))
                 m = max(w, h)
-                if m <= max_px:
+                if m <= RESIZE_MAX_PX:
                     nw, nh = w, h
                 else:
-                    nw, nh = w * max_px // m, h * max_px // m
+                    nw, nh = w * RESIZE_MAX_PX // m, h * RESIZE_MAX_PX // m
                 ck = 0
                 for y in range(nh):
                     row = px[y * h // nh]

@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..extract import DensityTextExtractor, LinkCollector, ScopedTextCollector
-from ..rewriter import Rewriter
+from ..rewriter import Rewriter, _CompiledHandler
 from ..sanitizer import BUILTIN_CONFIGS
 from .datagen import DOC_SCHEMA
 
@@ -370,21 +370,28 @@ def _dumps(v) -> str:
     return json.dumps(v, sort_keys=True)
 
 
+def _handler_id(handler) -> list:
+    """A handler's class and its selector's three fields."""
+    sel = _CompiledHandler(handler).selector
+    return [f"{type(handler).__module__}.{type(handler).__qualname__}",
+            sel.match_element, sel.match_text_within, sel.ignore_text_within]
+
+
 def _run_spec(bucketing: str, config, handlers_factory) -> str:
     """What decides a run's buckets and their output, as recorded in every
     lineage row the run writes: the bucketing (mode, version and bucket
     count), a digest of the resolved sanitizer config (a builtin name
-    and its config dict give the same digest) and the handlers
-    factory's qualified name. A resume under another spec is refused
+    and its config dict give the same digest) and the handlers the
+    factory builds: each one's class and selector, in order. The factory
+    is called once on the driver for this; its name says neither (two
+    lambdas share one, and a script's factory is ``__main__.*`` only
+    when the script is run). A resume under another spec is refused
     (``_ok_lineage``)."""
     cfg = resolve_config(config)
     cfg_id = "none" if cfg is None else hashlib.sha256(
         _dumps(_canonical(cfg)).encode()).hexdigest()[:16]
-    f = handlers_factory
-    f_id = "none" if f is None else (
-        f"{getattr(f, '__module__', None)}."
-        f"{getattr(f, '__qualname__', type(f).__qualname__)}"
-    )
+    f_id = "none" if handlers_factory is None else _dumps(
+        [_handler_id(h) for h in handlers_factory() or []])
     return f"bucketing={bucketing};config={cfg_id};handlers={f_id}"
 
 

@@ -18,9 +18,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..golden import PROTOCOLS, STRINGS
-from . import layout, simsearch, textops
+from . import layout, relational, simsearch, textops
 from .datagen import bench_spans, interleaved_spans
-from .multimodal import decoded_resize, media_manifest
+from .multimodal import RESIZE_MAX_PX, decoded_resize, media_manifest
 from .pipeline import (
     bucketed,
     collect_scoped_text,
@@ -252,7 +252,8 @@ SELECT doc_id, {_MH_COLS} FROM s ORDER BY doc_id
 
 
 # multi-band (b=4, r=1) candidate generation with the bucket-size cap
-# mirrored from textops.lsh_bands (buckets > 50 docs dropped pre-join)
+# mirrored from textops.lsh_bands (buckets over LSH_MAX_BAND_SIZE docs
+# dropped pre-join)
 _DUCK_LSH_BANDS = f"""
 t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
 s AS (SELECT doc_id, {{shingles}} AS sh FROM t),
@@ -263,7 +264,8 @@ bands AS (
   {" UNION ALL ".join(f"SELECT doc_id, {i} AS band_id, mh{i} AS band_val FROM sig" for i in range(4))}),
 kept AS (
   SELECT doc_id, band_id, band_val FROM bands
-  QUALIFY count(*) OVER (PARTITION BY band_id, band_val) <= 50)
+  QUALIFY count(*) OVER (PARTITION BY band_id, band_val)
+    <= {textops.LSH_MAX_BAND_SIZE})
 """
 
 
@@ -287,7 +289,7 @@ scored AS (
   JOIN dsh a ON a.doc_id = c.doc_a
   JOIN dsh b ON b.doc_id = c.doc_b)
 SELECT doc_a, doc_b, jaccard FROM scored
-WHERE jaccard >= 0.5 ORDER BY doc_a, doc_b
+WHERE jaccard >= {textops.NEAR_DUP_JACCARD} ORDER BY doc_a, doc_b
 """
 
 
@@ -357,7 +359,7 @@ prof AS (
   SELECT lang, tg FROM (
     SELECT lang, tg,
            row_number() OVER (PARTITION BY lang ORDER BY df DESC, tg) AS rk
-    FROM dfreq) WHERE rk <= 64),
+    FROM dfreq) WHERE rk <= {textops.LANG_PROFILE_K}),
 doc_n AS (SELECT doc_id, count(*) AS n_tg FROM tg GROUP BY 1),
 hits AS (
   SELECT t.doc_id, p.lang,
@@ -482,13 +484,16 @@ def q_embedding_near_dup(spark, sf_dir):
     return simsearch.near_dup_cosine(load_split(spark, sf_dir, "embeddings"))
 
 
-def _near_dup_cosine_oracle() -> str:
-    bucket_sql = (
-        "(CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END)"
-        " + (CASE WHEN embedding[2] > 0 THEN 2 ELSE 0 END)"
-        " + (CASE WHEN embedding[3] > 0 THEN 4 ELSE 0 END)"
-        " + (CASE WHEN embedding[4] > 0 THEN 8 ELSE 0 END)"
+def _duck_lsh_bucket() -> str:
+    """simsearch._bucket_expr: bit j set iff component j+1 is positive."""
+    return " + ".join(
+        f"(CASE WHEN embedding[{j + 1}] > 0 THEN {1 << j} ELSE 0 END)"
+        for j in range(simsearch.LSH_COMPONENTS)
     )
+
+
+def _near_dup_cosine_oracle() -> str:
+    bucket_sql = _duck_lsh_bucket()
     return f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
                   {bucket_sql} AS bucket FROM embeddings)
@@ -499,7 +504,8 @@ SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
 FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
 WHERE round(list_dot_product(a.emb, b.emb)
         / (sqrt(list_dot_product(a.emb, a.emb))
-           * sqrt(list_dot_product(b.emb, b.emb))), 4) >= 0.4
+           * sqrt(list_dot_product(b.emb, b.emb))), 4)
+      >= {simsearch.NEAR_DUP_COSINE}
 ORDER BY cosine DESC, vec_a, vec_b
 """
 
@@ -633,20 +639,20 @@ FROM events GROUP BY 1, 2 ORDER BY 1, 2
 
 def q_embedding_topk(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
-    qv = simsearch.query_vector(spark, emb, 0)
-    return simsearch.topk_cosine(emb, qv, k=10, exclude_vec_id=0)
+    qv = simsearch.query_vector(spark, emb, simsearch.QUERY_VEC_ID)
+    return simsearch.topk_cosine(emb, qv, exclude_vec_id=simsearch.QUERY_VEC_ID)
 
 
-ORACLE_EMBEDDING_TOPK = """
+ORACLE_EMBEDDING_TOPK = f"""
 WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings
-           WHERE vec_id = 0)
+           WHERE vec_id = {simsearch.QUERY_VEC_ID})
 SELECT e.vec_id,
   round(list_dot_product(CAST(e.embedding AS DOUBLE[]), q.qe)
         / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
                                  CAST(e.embedding AS DOUBLE[])))
            * sqrt(list_dot_product(q.qe, q.qe))), 4) AS cosine
-FROM embeddings e, q WHERE e.vec_id <> 0
-ORDER BY cosine DESC, e.vec_id LIMIT 10
+FROM embeddings e, q WHERE e.vec_id <> {simsearch.QUERY_VEC_ID}
+ORDER BY cosine DESC, e.vec_id LIMIT {simsearch.TOPK_K}
 """
 
 
@@ -655,28 +661,25 @@ def q_embedding_topk_lsh(spark, sf_dir):
     bucket (the candidate-pruning scale path; recall<1 by design but
     deterministic, so SQL-checkable)."""
     emb = load(spark, sf_dir, "embeddings")
-    qv = simsearch.query_vector(spark, emb, 0)
-    return simsearch.topk_cosine_lsh(emb, qv, k=10, exclude_vec_id=0)
+    qv = simsearch.query_vector(spark, emb, simsearch.QUERY_VEC_ID)
+    return simsearch.topk_cosine_lsh(
+        emb, qv, exclude_vec_id=simsearch.QUERY_VEC_ID
+    )
 
 
 def _lsh_topk_oracle() -> str:
-    bucket_sql = (
-        "(CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END)"
-        " + (CASE WHEN embedding[2] > 0 THEN 2 ELSE 0 END)"
-        " + (CASE WHEN embedding[3] > 0 THEN 4 ELSE 0 END)"
-        " + (CASE WHEN embedding[4] > 0 THEN 8 ELSE 0 END)"
-    )
+    bucket_sql = _duck_lsh_bucket()
     return f"""
 WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qe, {bucket_sql} AS qb
-           FROM embeddings WHERE vec_id = 0),
+           FROM embeddings WHERE vec_id = {simsearch.QUERY_VEC_ID}),
 c AS (SELECT e.*, q.qe FROM embeddings e, q WHERE {bucket_sql} = q.qb)
 SELECT vec_id,
   round(list_dot_product(CAST(embedding AS DOUBLE[]), qe)
         / (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
                                  CAST(embedding AS DOUBLE[])))
            * sqrt(list_dot_product(qe, qe))), 4) AS cosine
-FROM c WHERE vec_id <> 0
-ORDER BY cosine DESC, vec_id LIMIT 10
+FROM c WHERE vec_id <> {simsearch.QUERY_VEC_ID}
+ORDER BY cosine DESC, vec_id LIMIT {simsearch.TOPK_K}
 """
 
 
@@ -709,10 +712,11 @@ def q_decoded_resize(spark, sf_dir):
     return decoded_resize(spans_df(spark, sf_dir)).orderBy("media_ref")
 
 
-# dims w=4+hex0, h=4+hex1, seed=byte1 of md5(ref); aspect-fit into 8px;
-# NN sample sx=(x*w)//nw, sy=(y*h)//nh; channels affine in (sx,sy,seed)
-# mod 256; checksum position-weighted so pixel ORDER is pinned too
-ORACLE_DECODED_RESIZE = """
+# dims w=4+hex0, h=4+hex1, seed=byte1 of md5(ref); aspect-fit into the
+# RESIZE_MAX_PX box; NN sample sx=(x*w)//nw, sy=(y*h)//nh; channels
+# affine in (sx,sy,seed) mod 256; checksum position-weighted so pixel
+# ORDER is pinned too
+ORACLE_DECODED_RESIZE = f"""
 WITH m AS (
   SELECT 'media://' || doc_id || '/1' AS media_ref FROM documents
   WHERE doc_id % 4 = 0),
@@ -727,10 +731,10 @@ img AS (
   FROM hh),
 fit AS (
   SELECT media_ref, w, ht, seed,
-    CASE WHEN greatest(w, ht) <= 8 THEN w
-         ELSE w * 8 // greatest(w, ht) END AS nw,
-    CASE WHEN greatest(w, ht) <= 8 THEN ht
-         ELSE ht * 8 // greatest(w, ht) END AS nh
+    CASE WHEN greatest(w, ht) <= {RESIZE_MAX_PX} THEN w
+         ELSE w * {RESIZE_MAX_PX} // greatest(w, ht) END AS nw,
+    CASE WHEN greatest(w, ht) <= {RESIZE_MAX_PX} THEN ht
+         ELSE ht * {RESIZE_MAX_PX} // greatest(w, ht) END AS nh
   FROM img),
 px AS (
   SELECT media_ref, w, ht, nw, nh,
@@ -967,7 +971,7 @@ def q_top_terms(spark, sf_dir):
     return textops.top_terms_tfidf(load(spark, sf_dir, "documents"))
 
 
-ORACLE_TOP_TERMS = """
+ORACLE_TOP_TERMS = f"""
 WITH terms AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY 1, 2),
@@ -985,7 +989,7 @@ ranked AS (
 SELECT doc_id, CAST(rk AS INT) AS rk, term,
        CAST(tf AS BIGINT) AS tf, CAST(df AS BIGINT) AS df,
        round(score, 4) AS score
-FROM ranked WHERE rk <= 3 ORDER BY doc_id, rk
+FROM ranked WHERE rk <= {textops.TOP_TERMS_K} ORDER BY doc_id, rk
 """
 
 
@@ -1016,19 +1020,24 @@ FROM reach GROUP BY 1 ORDER BY 1
 
 
 def q_chunk_documents(spark, sf_dir):
-    """Token-window chunking (128-token windows, 16 overlap)."""
+    """Token-window chunking (CHUNK_TOKENS-token windows overlapping by
+    CHUNK_OVERLAP)."""
     return textops.chunk_documents(load(spark, sf_dir, "documents"))
 
 
-ORACLE_CHUNKS = r"""
+_CHUNK_STRIDE = textops.CHUNK_TOKENS - textops.CHUNK_OVERLAP
+
+ORACLE_CHUNKS = f"""
 WITH t AS (
   SELECT doc_id, len(string_split(text, ' ')) AS n FROM documents),
 c AS (
   SELECT doc_id, n,
-    greatest(1, CAST(ceil((n - 16) / CAST(112 AS DOUBLE)) AS INT)) AS n_chunks
+    greatest(1, CAST(ceil((n - {textops.CHUNK_OVERLAP})
+                          / CAST({_CHUNK_STRIDE} AS DOUBLE)) AS INT)) AS n_chunks
   FROM t)
 SELECT doc_id, CAST(u.i AS INT) AS chunk_id,
-       CAST(least(128, n - u.i * 112) AS INT) AS n_tokens
+       CAST(least({textops.CHUNK_TOKENS}, n - u.i * {_CHUNK_STRIDE}) AS INT)
+         AS n_tokens
 FROM c, UNNEST(range(0, n_chunks)) AS u(i)
 ORDER BY doc_id, chunk_id
 """
@@ -1073,7 +1082,8 @@ WITH scored AS (
 keepers AS (SELECT h, min(doc_id) AS doc_id FROM scored GROUP BY h)
 SELECT s.doc_id, CAST(s.n_tokens AS INT) AS n_tokens
 FROM scored s JOIN keepers k ON s.h = k.h AND s.doc_id = k.doc_id
-WHERE s.n_tokens >= 20 AND s.stop_ratio <= 0.5
+WHERE s.n_tokens >= {textops.KEEP_MIN_TOKENS}
+  AND s.stop_ratio <= {textops.KEEP_MAX_STOPWORD_RATIO}
 ORDER BY s.doc_id
 """
 
@@ -1122,9 +1132,9 @@ def q_salted_lang_counts(spark, sf_dir):
     return textops.salted_lang_counts(load(spark, sf_dir, "documents"))
 
 
-ORACLE_SALTED_LANG_COUNTS = """
+ORACLE_SALTED_LANG_COUNTS = f"""
 WITH staged AS (
-  SELECT lang, doc_id % 8 AS salt,
+  SELECT lang, doc_id % {textops.LANG_SALTS} AS salt,
          count(*) AS n, sum(length(text)) AS c
   FROM documents GROUP BY 1, 2)
 SELECT lang, CAST(sum(n) AS BIGINT) AS n_docs,
@@ -1134,9 +1144,9 @@ FROM staged GROUP BY 1 ORDER BY 1
 """
 
 
-_DUCK_IVF_ASSIGN = """
+_DUCK_IVF_ASSIGN = f"""
 c AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cemb
-      FROM embeddings WHERE vec_id < 16),
+      FROM embeddings WHERE vec_id < {simsearch.N_CENTROIDS}),
 e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
 scored AS (
   SELECT e.vec_id, c.cid,
@@ -1162,8 +1172,9 @@ def q_embedding_topk_ivf(spark, sf_dir):
 ORACLE_EMBEDDING_TOPK_IVF = f"""
 WITH {_DUCK_IVF_ASSIGN},
 probe AS (
-  SELECT cid FROM scored WHERE vec_id = 0 ORDER BY cos DESC, cid LIMIT 4),
-q AS (SELECT emb AS qemb FROM e WHERE vec_id = 0)
+  SELECT cid FROM scored WHERE vec_id = {simsearch.QUERY_VEC_ID}
+  ORDER BY cos DESC, cid LIMIT {simsearch.NPROBE}),
+q AS (SELECT emb AS qemb FROM e WHERE vec_id = {simsearch.QUERY_VEC_ID})
 SELECT b.vec_id,
   round(list_dot_product(e.emb, q.qemb)
         / (sqrt(list_dot_product(e.emb, e.emb))
@@ -1171,8 +1182,8 @@ SELECT b.vec_id,
 FROM best b
 JOIN probe p ON b.cid = p.cid
 JOIN e ON e.vec_id = b.vec_id, q
-WHERE b.vec_id <> 0
-ORDER BY cosine DESC, b.vec_id LIMIT 10
+WHERE b.vec_id <> {simsearch.QUERY_VEC_ID}
+ORDER BY cosine DESC, b.vec_id LIMIT {simsearch.TOPK_K}
 """
 
 
@@ -1199,7 +1210,8 @@ def _kmeans_cte_prefix(rounds: int) -> str:
     parts = [
         "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb"
         " FROM embeddings),\n"
-        "c0 AS (SELECT vec_id AS cid, emb AS cemb FROM e WHERE vec_id < 16)"
+        "c0 AS (SELECT vec_id AS cid, emb AS cemb FROM e"
+        f" WHERE vec_id < {simsearch.N_CENTROIDS})"
     ]
     for r in range(rounds):
         parts.append(f""",
@@ -1218,9 +1230,8 @@ c{r + 1} AS (
     return "".join(parts)
 
 
-def _kmeans_refined_oracle(rounds: int | None = None) -> str:
-    if rounds is None:
-        rounds = simsearch.KMEANS_ROUNDS
+def _kmeans_refined_oracle() -> str:
+    rounds = simsearch.KMEANS_ROUNDS
     return f"""{_kmeans_cte_prefix(rounds)}
 SELECT vec_id, cid, round({_KMEANS_COS9}, 4) AS cosine FROM (
   SELECT e.vec_id, c.cid, e.emb, c.cemb,
@@ -1235,9 +1246,8 @@ def q_embedding_topk_ivf_refined(spark, sf_dir):
     return simsearch.topk_cosine_ivf_refined(load(spark, sf_dir, "embeddings"))
 
 
-def _ivf_refined_topk_oracle(rounds: int | None = None) -> str:
-    if rounds is None:
-        rounds = simsearch.KMEANS_ROUNDS
+def _ivf_refined_topk_oracle() -> str:
+    rounds = simsearch.KMEANS_ROUNDS
     return f"""{_kmeans_cte_prefix(rounds)},
 scoredN AS (
   SELECT e.vec_id, c.cid, e.emb, {_KMEANS_COS9} AS cos
@@ -1249,8 +1259,9 @@ bestN AS (
                               ORDER BY cos DESC, cid) AS rn
     FROM scoredN) WHERE rn = 1),
 probe AS (
-  SELECT cid FROM scoredN WHERE vec_id = 0 ORDER BY cos DESC, cid LIMIT 4),
-q AS (SELECT emb AS qemb FROM e WHERE vec_id = 0)
+  SELECT cid FROM scoredN WHERE vec_id = {simsearch.QUERY_VEC_ID}
+  ORDER BY cos DESC, cid LIMIT {simsearch.NPROBE}),
+q AS (SELECT emb AS qemb FROM e WHERE vec_id = {simsearch.QUERY_VEC_ID})
 SELECT b.vec_id,
   round(list_dot_product(e.emb, q.qemb)
         / (sqrt(list_dot_product(e.emb, e.emb))
@@ -1258,23 +1269,25 @@ SELECT b.vec_id,
 FROM bestN b
 JOIN probe p ON b.cid = p.cid
 JOIN e ON e.vec_id = b.vec_id, q
-WHERE b.vec_id <> 0
-ORDER BY cosine DESC, b.vec_id LIMIT 10"""
+WHERE b.vec_id <> {simsearch.QUERY_VEC_ID}
+ORDER BY cosine DESC, b.vec_id LIMIT {simsearch.TOPK_K}"""
 
 
 # elementwise (x-y)^2 summed in index order, rounded to 9 BEFORE the
 # per-(vec, subspace) argmin — mirrors simsearch._l2sq / pq_codes (the
 # codes topk_pq_adc scans)
-_DUCK_PQ_CODES = """
+_PQ_D = simsearch.PQ_SUBDIM
+
+_DUCK_PQ_CODES = f"""
 c AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cemb
-      FROM embeddings WHERE vec_id < 16),
+      FROM embeddings WHERE vec_id < {simsearch.PQ_K}),
 e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
 sd AS (
   SELECT e.vec_id, c.cid, CAST(u.j AS INT) AS j,
-    round(list_sum(list_transform(range(1, 17),
-      i -> (emb[u.j*16 + i] - cemb[u.j*16 + i])
-         * (emb[u.j*16 + i] - cemb[u.j*16 + i]))), 9) AS d2
-  FROM e, c, UNNEST(range(0, 4)) AS u(j)),
+    round(list_sum(list_transform(range(1, {_PQ_D + 1}),
+      i -> (emb[u.j*{_PQ_D} + i] - cemb[u.j*{_PQ_D} + i])
+         * (emb[u.j*{_PQ_D} + i] - cemb[u.j*{_PQ_D} + i]))), 9) AS d2
+  FROM e, c, UNNEST(range(0, {simsearch.PQ_M})) AS u(j)),
 codes AS (
   SELECT vec_id, j, cid FROM (
     SELECT vec_id, j, cid,
@@ -1291,19 +1304,19 @@ def q_embedding_topk_pq(spark, sf_dir):
 
 ORACLE_EMBEDDING_TOPK_PQ = f"""
 WITH {_DUCK_PQ_CODES},
-q AS (SELECT emb AS qemb FROM e WHERE vec_id = 0),
+q AS (SELECT emb AS qemb FROM e WHERE vec_id = {simsearch.QUERY_VEC_ID}),
 dtab AS (
   SELECT CAST(u.j AS INT) AS j, c.cid,
-    round(list_sum(list_transform(range(1, 17),
-      i -> (qemb[u.j*16 + i] - cemb[u.j*16 + i])
-         * (qemb[u.j*16 + i] - cemb[u.j*16 + i]))), 9) AS d2
-  FROM q, c, UNNEST(range(0, 4)) AS u(j)),
+    round(list_sum(list_transform(range(1, {_PQ_D + 1}),
+      i -> (qemb[u.j*{_PQ_D} + i] - cemb[u.j*{_PQ_D} + i])
+         * (qemb[u.j*{_PQ_D} + i] - cemb[u.j*{_PQ_D} + i]))), 9) AS d2
+  FROM q, c, UNNEST(range(0, {simsearch.PQ_M})) AS u(j)),
 adc AS (
   SELECT codes.vec_id, round(sum(dtab.d2), 6) AS adc_d2
   FROM codes JOIN dtab ON codes.j = dtab.j AND codes.cid = dtab.cid
   GROUP BY 1)
-SELECT vec_id, adc_d2 FROM adc WHERE vec_id <> 0
-ORDER BY adc_d2, vec_id LIMIT 10
+SELECT vec_id, adc_d2 FROM adc WHERE vec_id <> {simsearch.QUERY_VEC_ID}
+ORDER BY adc_d2, vec_id LIMIT {simsearch.TOPK_K}
 """
 
 
@@ -1326,13 +1339,14 @@ bands AS (
       for k in range(4))}),
 kept AS (
   SELECT doc_id, simhash, band_id, band_val FROM bands
-  QUALIFY count(*) OVER (PARTITION BY band_id, band_val) <= 100)
+  QUALIFY count(*) OVER (PARTITION BY band_id, band_val)
+    <= {textops.SIMHASH_MAX_BAND_SIZE})
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
        CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
 FROM kept a JOIN kept b
   ON a.band_id = b.band_id AND a.band_val = b.band_val
  AND a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
+WHERE bit_count(xor(a.simhash, b.simhash)) <= {textops.SIMHASH_MAX_HAMMING}
 ORDER BY doc_a, doc_b
 """
 
@@ -1346,26 +1360,30 @@ def q_contamination_check(spark, sf_dir):
     return textops.contamination_check(load(spark, sf_dir, "documents"))
 
 
-ORACLE_CONTAMINATION = """
+_CN = textops.CONTAMINATION_N
+
+# textops._ngrams(toks, CONTAMINATION_N): every window of _CN words, or
+# the whole text when it is shorter
+ORACLE_CONTAMINATION = f"""
 WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
 grams AS (
   SELECT doc_id, u.g FROM (
-    SELECT doc_id, CASE WHEN len(t) >= 3
-      THEN list_distinct(list_transform(range(1, len(t) - 1),
-           i -> array_to_string(t[i:i+2], ' ')))
+    SELECT doc_id, CASE WHEN len(t) >= {_CN}
+      THEN list_distinct(list_transform(range(1, len(t) - {_CN - 2}),
+           i -> array_to_string(t[i:i+{_CN - 1}], ' ')))
       ELSE [array_to_string(t, ' ')] END AS gs
     FROM toks) x, UNNEST(gs) AS u(g)),
-bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % 97 = 0)
+bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % {textops.BENCH_MOD} = 0)
 SELECT grams.doc_id, count(*) AS n_hits
 FROM grams JOIN bench USING (g)
-WHERE grams.doc_id % 97 <> 0
+WHERE grams.doc_id % {textops.BENCH_MOD} <> 0
 GROUP BY 1 ORDER BY 1
 """
 
 
 def q_length_quantiles(spark, sf_dir):
     """Per-language corpus length profile: exact p50/p90/p99 (DuckDB
-    quantile_cont twin; percentile_approx is the 100TB variant)."""
+    quantile_cont twin)."""
     return textops.length_quantiles(load(spark, sf_dir, "documents"))
 
 
@@ -1409,8 +1427,6 @@ FROM pg GROUP BY doc_id ORDER BY doc_id
 # --------------------------------------------------------------------------
 
 def q_pricing_summary(spark, sf_dir):
-    from . import relational  # noqa: PLC0415
-
     return relational.pricing_summary(load(spark, sf_dir, "lineitem"))
 
 
@@ -1429,8 +1445,6 @@ FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2
 
 
 def q_revenue_by_nation(spark, sf_dir):
-    from . import relational  # noqa: PLC0415
-
     return relational.revenue_by_nation(
         load(spark, sf_dir, "orders"),
         load(spark, sf_dir, "customer"),
@@ -1452,14 +1466,12 @@ GROUP BY 1, 2 ORDER BY 1, 2
 
 
 def q_brand_revenue_topk(spark, sf_dir):
-    from . import relational  # noqa: PLC0415
-
     return relational.brand_revenue_topk(
         load(spark, sf_dir, "lineitem"), load(spark, sf_dir, "part")
     )
 
 
-ORACLE_BRAND_REVENUE_TOPK = """
+ORACLE_BRAND_REVENUE_TOPK = f"""
 WITH agg AS (
   SELECT p_brand, count(*) AS n_items,
     CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -1468,13 +1480,11 @@ WITH agg AS (
   FROM lineitem JOIN part ON l_partkey = p_partkey
   GROUP BY 1)
 SELECT p_brand, n_items, CAST(rev AS VARCHAR) AS revenue
-FROM agg ORDER BY rev DESC, p_brand LIMIT 10
+FROM agg ORDER BY rev DESC, p_brand LIMIT {relational.BRAND_TOPK}
 """
 
 
 def q_revenue_rollup(spark, sf_dir):
-    from . import relational  # noqa: PLC0415
-
     return relational.revenue_rollup(
         load(spark, sf_dir, "orders"),
         load(spark, sf_dir, "customer"),
@@ -1499,8 +1509,6 @@ ORDER BY 1, 2
 
 
 def q_funnel_steps(spark, sf_dir):
-    from . import relational  # noqa: PLC0415
-
     return relational.funnel_steps(load(spark, sf_dir, "events"))
 
 
@@ -1543,8 +1551,6 @@ _PROMOS = [
 def q_range_join_promos(spark, sf_dir):
     """Bucketed range join: events contained in deterministic promo
     intervals (6-hour-grid candidate buckets + exact refine)."""
-    from . import relational  # noqa: PLC0415
-
     intervals = spark.createDataFrame(
         _PROMOS, "promo_id int, start_ts string, end_ts string"
     ).select(
@@ -1573,8 +1579,6 @@ ORDER BY e.event_id, p.promo_id
 def q_asof_view_purchase(spark, sf_dir):
     """AS-OF join (union + partitioned running-max window in Spark,
     native ASOF JOIN in the DuckDB oracle)."""
-    from . import relational  # noqa: PLC0415
-
     return relational.asof_last_view_before_purchase(
         load(spark, sf_dir, "events")
     )
@@ -1594,12 +1598,10 @@ ORDER BY p.event_id
 
 
 def q_priority_top_orders(spark, sf_dir):
-    from . import relational  # noqa: PLC0415
-
     return relational.priority_top_orders(load(spark, sf_dir, "orders"))
 
 
-ORACLE_PRIORITY_TOP_ORDERS = """
+ORACLE_PRIORITY_TOP_ORDERS = f"""
 WITH ranked AS (
   SELECT o_orderpriority, o_orderkey, o_totalprice,
     row_number() OVER (PARTITION BY o_orderpriority
@@ -1607,7 +1609,8 @@ WITH ranked AS (
   FROM orders)
 SELECT o_orderpriority, CAST(rk AS INT) AS rk, o_orderkey,
        CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR) AS total_price
-FROM ranked WHERE rk <= 5 ORDER BY o_orderpriority, rk
+FROM ranked WHERE rk <= {relational.PRIORITY_TOPK}
+ORDER BY o_orderpriority, rk
 """
 
 

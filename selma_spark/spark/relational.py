@@ -23,6 +23,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _DEC = "decimal(18,2)"
+# result rows of the top-k queries; the oracles build LIMIT/rk from these
+BRAND_TOPK = 10
+PRIORITY_TOPK = 5
 
 
 def pricing_summary(lineitem: DataFrame) -> DataFrame:
@@ -75,10 +78,10 @@ def revenue_by_nation(
     )
 
 
-def brand_revenue_topk(lineitem: DataFrame, part: DataFrame, k: int = 10) -> DataFrame:
-    """Top-k brands by discounted revenue: fact ⋈ broadcast(part dim),
-    map-side partial agg, TakeOrderedAndProject for the top-k (ties
-    broken by brand for determinism)."""
+def brand_revenue_topk(lineitem: DataFrame, part: DataFrame) -> DataFrame:
+    """Top-BRAND_TOPK brands by discounted revenue: fact ⋈
+    broadcast(part dim), map-side partial agg, TakeOrderedAndProject for
+    the top-k (ties broken by brand for determinism)."""
     disc_price = F.col("l_extendedprice").cast(_DEC) * (
         F.lit(1).cast(_DEC) - F.col("l_discount").cast(_DEC)
     )
@@ -94,7 +97,7 @@ def brand_revenue_topk(lineitem: DataFrame, part: DataFrame, k: int = 10) -> Dat
     )
     return (
         agg.orderBy(F.desc("_rev"), "p_brand")
-        .limit(k)
+        .limit(BRAND_TOPK)
         .select(
             "p_brand",
             "n_items",
@@ -289,10 +292,11 @@ def asof_last_view_before_purchase(events: DataFrame) -> DataFrame:
     )
 
 
-def priority_top_orders(orders: DataFrame, k: int = 5) -> DataFrame:
-    """Per-priority top-k orders by total price: a PARTITIONED window
-    (hash exchange on o_orderpriority, never a single global sort);
-    o_orderkey tie-break keeps the ranking total and reproducible."""
+def priority_top_orders(orders: DataFrame) -> DataFrame:
+    """Per-priority top-PRIORITY_TOPK orders by total price: a
+    PARTITIONED window (hash exchange on o_orderpriority, never a single
+    global sort); o_orderkey tie-break keeps the ranking total and
+    reproducible."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("o_orderpriority").orderBy(
@@ -300,7 +304,7 @@ def priority_top_orders(orders: DataFrame, k: int = 5) -> DataFrame:
     )
     return (
         orders.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
+        .where(F.col("rk") <= PRIORITY_TOPK)
         .select(
             "o_orderpriority",
             "rk",

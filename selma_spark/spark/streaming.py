@@ -20,17 +20,22 @@ from pyspark.sql import functions as F
 
 from .datagen import DOC_SCHEMA
 from .pipeline import ParquetSink, _commit_buckets, _ok_lineage, _run_spec
+from .textops import _SIMHASH64_EXPR, SIMHASH_MAX_HAMMING
 
 
-def read_document_stream(
-    spark: SparkSession, input_dir: str, max_files_per_trigger: int = 8
-) -> DataFrame:
+# files per micro-batch of the document streams: bounds micro-batch size
+# the way arrow batch rows bound UDF memory
+MAX_FILES_PER_TRIGGER = 8
+# stream_dedup_documents' horizon in event time (ingest_ts)
+DEDUP_WATERMARK = "1 hour"
+
+
+def read_document_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     """File-source stream of span documents (parquet files appearing in
-    input_dir). maxFilesPerTrigger bounds micro-batch size the way
-    arrow batch rows bound UDF memory."""
+    input_dir), MAX_FILES_PER_TRIGGER files per micro-batch."""
     return (
         spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(input_dir)
     )
 
@@ -57,7 +62,7 @@ def stream_rewrite(
     was not recorded) overwrites its documents and replaces its lineage
     row, so it never appends a second one. Every batch's row keeps its
     own doc count, checksum and text bytes in and out. A lineage written
-    under another run spec (another config or handlers factory, or a
+    under another run spec (another config or other handlers, or a
     run_pipeline output) raises ValueError when the query starts."""
     sink = ParquetSink(output_dir)
     sink.prepare(spark)
@@ -86,17 +91,16 @@ def stream_dedup_documents(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    watermark: str = "1 hour",
 ):
-    """Streaming exact-dedup: documents arriving within the watermark
-    horizon are deduplicated on their content hash with
+    """Streaming exact-dedup: documents arriving within the
+    DEDUP_WATERMARK horizon are deduplicated on their content hash with
     dropDuplicatesWithinWatermark — the state store evicts hashes older
     than the watermark, so state is bounded (a plain dropDuplicates
     would grow state forever at corpus scale). Re-sends of the same
     payload across micro-batches inside the horizon are suppressed."""
     stream = (
         spark.readStream.schema(DOC_SCHEMA + ", ingest_ts timestamp")
-        .option("maxFilesPerTrigger", 8)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(input_dir)
     )
     # per-span fingerprint covers kind + text + media_ref, with NULL
@@ -122,7 +126,7 @@ def stream_dedup_documents(
     )
     deduped = (
         stream.withColumn("_h", doc_fp)
-        .withWatermark("ingest_ts", watermark)
+        .withWatermark("ingest_ts", DEDUP_WATERMARK)
         .dropDuplicatesWithinWatermark(["_h"])
         .drop("_h")
     )
@@ -138,7 +142,6 @@ def stream_dedup_documents(
 
 # --- streaming near-dup (stateful simhash banding) ---------------------------
 
-NEAR_DUP_MAX_HAMMING = 3
 # bounded-state discipline (same philosophy as the batch pigeonhole
 # cap): a band bucket holding this many signatures is an exact-dup
 # mega-cluster, not near-dup territory — stop growing its state
@@ -174,7 +177,7 @@ def _match_and_absorb(batch, doc_ids, sims, band_id):
             if od == doc_id:
                 continue
             if ((sim ^ osim) & 0xFFFFFFFFFFFFFFFF).bit_count() \
-                    <= NEAR_DUP_MAX_HAMMING and (match is None or od < match):
+                    <= SIMHASH_MAX_HAMMING and (match is None or od < match):
                 match = od
         rows.append((doc_id, band_id, match))
         if doc_id not in seen and len(doc_ids) < NEAR_DUP_MAX_BAND_STATE:
@@ -188,9 +191,9 @@ def _near_dup_band_fn(key, pdf_iter, state, ttl_ms):
     """applyInPandasWithState function for one (band_id, band_val)
     bucket: match each arriving signature against the bucket's stored
     signatures (state) AND earlier arrivals in the same batch, flag
-    hamming <= NEAR_DUP_MAX_HAMMING. Arrivals are processed in doc_id
-    order so within-batch pairing is deterministic regardless of task
-    scheduling.
+    hamming <= SIMHASH_MAX_HAMMING (the batch path's bound). Arrivals
+    are processed in doc_id order so within-batch pairing is
+    deterministic regardless of task scheduling.
 
     The bucket horizon ``ttl_ms`` is measured in the data's own
     ``ingest_ts``, like stream_dedup_documents' watermark, never in
@@ -279,7 +282,6 @@ def stream_near_dup_flags(
     from pyspark.sql.streaming.state import GroupStateTimeout  # noqa: PLC0415
 
     from .shipping import ensure_shipped  # noqa: PLC0415
-    from .textops import _SIMHASH64_EXPR  # noqa: PLC0415
 
     ensure_shipped(spark)
     docs = (

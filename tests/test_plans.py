@@ -228,7 +228,7 @@ def test_lit_best_struct_expr_matches_column_tree(spark):
     import math
 
     emb = q.load(spark, SF_DIR, "embeddings")
-    rows = simsearch._collect_centroids(emb, 16)
+    rows = simsearch._collect_centroids(emb)
 
     def column_tree(cents_rows, ne_col):
         structs = []

@@ -75,15 +75,17 @@ def _py_minhash(shingles: frozenset) -> tuple:
     )
 
 
-def _kept_bands(mh: dict, max_band_size: int) -> set:
-    """(band_id, band_val) buckets holding at most max_band_size docs —
-    the buckets textops.lsh_bands keeps."""
+def _kept_bands(mh: dict) -> set:
+    """(band_id, band_val) buckets holding at most LSH_MAX_BAND_SIZE docs
+    — the buckets textops.lsh_bands keeps."""
     occupancy: dict[tuple, int] = {}
     for sig in mh.values():
         for band_id, val in enumerate(sig):
             key = (band_id, val)
             occupancy[key] = occupancy.get(key, 0) + 1
-    return {key for key, n in occupancy.items() if n <= max_band_size}
+    return {
+        key for key, n in occupancy.items() if n <= textops.LSH_MAX_BAND_SIZE
+    }
 
 
 def _round_half_up_9(x: float) -> Decimal:
@@ -115,7 +117,10 @@ def test_simhash_near_dup_equals_brute_force_hamming(spark, corpus):
         for k in range(4):
             key = (k, (sig >> (16 * k)) & 0xFFFF)
             occupancy[key] = occupancy.get(key, 0) + 1
-    kept = {key for key, n in occupancy.items() if n <= 100}
+    kept = {
+        key for key, n in occupancy.items()
+        if n <= textops.SIMHASH_MAX_BAND_SIZE
+    }
 
     brute = set()
     brute_with_kept_band = set()
@@ -146,7 +151,7 @@ def test_simhash_near_dup_equals_brute_force_hamming(spark, corpus):
 
 def test_simhash_cap_drop_is_exact_dup_territory(spark):
     """A 150-identical-doc mega-cluster saturates every band bucket
-    (> max_band_size=100), so simhash_near_dup reports NO pairs for it —
+    (> SIMHASH_MAX_BAND_SIZE = 100), so simhash_near_dup reports NO pairs for it —
     and brute force confirms every dropped pair is hamming 0, i.e.
     exact-dup territory (the documented cap contract)."""
     n = 150
@@ -184,23 +189,29 @@ def test_pigeonhole_shared_band_property(corpus):
 
 # --- clustering: star contraction vs brute-force components -----------------
 
+def _chain_docs(spark):
+    """Sliding 21-token windows over one token stream, doc_ids scrambled:
+    a long-chain candidate graph."""
+    stream = [f"w{j}" for j in range(120)]
+    rows = [(i, " ".join(stream[i : i + 21])) for i in range(100)]
+    # 37 is coprime to 100 -> a deterministic id scramble, so the min id
+    # lands mid-chain and label placement is adversarial
+    docs_rows = [((i * 37) % 100, txt) for i, (_, txt) in enumerate(rows)]
+    return spark.createDataFrame(docs_rows, "doc_id bigint, text string")
+
+
 def test_near_dup_clusters_matches_brute_components_on_chain_graph(spark):
     """Adversarial long-chain candidate graph (sliding 21-token windows
     over one token stream, doc_ids scrambled): the r5 soak showed plain
     min-label propagation needs O(diameter) rounds on exactly this
     shape, which is why near_dup_clusters now runs alternating
     large-star/small-star (O(log^2 n) rounds). This pins (a) convergence
-    within the default 20-round budget on a deep chain and (b) cluster
+    within the CLUSTER_MAX_ROUNDS = 20 budget on a deep chain and (b) cluster
     labels == brute-force connected components of the ACTUAL candidate
     pair graph, computed in Python."""
     from selma_spark.spark import textops as T
 
-    stream = [f"w{j}" for j in range(120)]
-    rows = [(i, " ".join(stream[i : i + 21])) for i in range(100)]
-    # 37 is coprime to 100 -> a deterministic id scramble, so the min id
-    # lands mid-chain and label placement is adversarial
-    docs_rows = [((i * 37) % 100, txt) for i, (_, txt) in enumerate(rows)]
-    docs = spark.createDataFrame(docs_rows, "doc_id bigint, text string")
+    docs = _chain_docs(spark)
 
     pairs = [
         (int(r["doc_a"]), int(r["doc_b"]))
@@ -264,10 +275,10 @@ def test_near_dup_verified_equals_brute_force_jaccard(spark, corpus):
     i.e. the LSH candidate stage loses nothing the banding scheme
     promises, the cap's drops are accounted for, and the exact-verify
     stage (with its size-ratio prefilter) filters to true Jaccard."""
-    t = Decimal("0.5")
+    t = Decimal(repr(textops.NEAR_DUP_JACCARD))
     shingles = {d: _py_shingles(txt) for d, txt in corpus.items()}
     mh = {d: _py_minhash(s) for d, s in shingles.items()}
-    kept = _kept_bands(mh, max_band_size=50)
+    kept = _kept_bands(mh)
 
     expected = set()
     candidates = 0
@@ -289,7 +300,7 @@ def test_near_dup_verified_equals_brute_force_jaccard(spark, corpus):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     got = {
         (int(r["doc_a"]), int(r["doc_b"]))
-        for r in textops.near_dup_verified(docs, threshold=0.5).collect()
+        for r in textops.near_dup_verified(docs).collect()
     }
     assert got == expected
     assert got, "vacuous corpus: no J>=0.5 banded pairs to differentiate"
@@ -301,9 +312,9 @@ def test_near_dup_verified_equals_brute_force_jaccard(spark, corpus):
 def test_near_dup_pairs_equals_brute_force_shared_kept_band(spark, corpus):
     """The LSH candidate stage alone: near_dup_pairs returns EXACTLY the
     pairs agreeing on >= 1 of the 4 minhash bands whose bucket holds at
-    most max_band_size docs, each pair once."""
+    most LSH_MAX_BAND_SIZE docs, each pair once."""
     mh = {d: _py_minhash(_py_shingles(t)) for d, t in corpus.items()}
-    kept = _kept_bands(mh, max_band_size=50)
+    kept = _kept_bands(mh)
     ids = sorted(mh)
     expected = {
         (a, b)
@@ -319,6 +330,15 @@ def test_near_dup_pairs_equals_brute_force_shared_kept_band(spark, corpus):
     assert set(got) == expected
     assert got == sorted(got)
     assert got, "vacuous corpus: no banded candidate pairs"
+
+
+def test_near_dup_clusters_raises_when_rounds_run_out(spark, monkeypatch):
+    """A star-round budget too small for the graph fails loudly instead
+    of returning a partially-contracted edge set (which would split a
+    component into several clusters)."""
+    monkeypatch.setattr(textops, "CLUSTER_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not converge within"):
+        textops.near_dup_clusters(_chain_docs(spark))
 
 
 # --- quantizers: nearest-codeword assignment vs brute force -----------------

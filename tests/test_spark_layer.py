@@ -7,6 +7,8 @@
   mapInPandas, applyInPandas*, udf.register) also calls ensure_shipped,
   so workers can import the package from any driver cwd. Checked on the
   source, so it covers entry points no Spark test reaches.
+* Every defaulted parameter of the library modules has a user; any
+  other setting is a constant its oracle shares (checked on the source).
 """
 
 import ast
@@ -177,3 +179,112 @@ def test_every_python_udf_entry_point_calls_ensure_shipped():
         "streaming.py:stream_near_dup_flags",
     ], entry_points
     assert missing == []
+
+
+# The modules whose defaulted parameters must each have a user (see
+# test_every_defaulted_parameter_has_a_user).
+_KNOB_MODULES = (
+    "datagen", "layout", "multimodal", "queries", "relational",
+    "simsearch", "streaming", "textops",
+)
+REPO = SPARK_DIR.parents[1]
+
+
+def _caller_files():
+    """(path, is_test) for every Python file that may call the Spark
+    layer: the package, the entry points, bench, perfbench and tests."""
+    paths = [
+        *REPO.glob("selma_spark/**/*.py"), REPO / "bench.py",
+        REPO / "__spark_entry__.py", *REPO.glob("perfbench/*.py"),
+        *REPO.glob("tests/*.py"),
+    ]
+    return [
+        (p, p.parent.name == "tests" or p.name.startswith("test_"))
+        for p in paths if p.exists()
+    ]
+
+
+def _defaulted_params():
+    """{function name: [(module, position, param, default node)]} for
+    every defaulted parameter of every function in _KNOB_MODULES."""
+    out = {}
+    for mod in _KNOB_MODULES:
+        tree = ast.parse((SPARK_DIR / f"{mod}.py").read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            first = len(pos) - len(a.defaults)
+            entries = [
+                (mod, first + i, p.arg, d)
+                for i, (p, d) in enumerate(zip(pos[first:], a.defaults))
+            ]
+            entries += [
+                (mod, None, p.arg, d)
+                for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+            ]
+            if entries:
+                out.setdefault(fn.name, []).extend(entries)
+    return out
+
+
+def _passed(call: ast.Call, position, param):
+    """The argument node ``call`` gives ``param`` (True for an unpacked
+    ``*args``/``**kwargs`` that may carry it), or None."""
+    for kw in call.keywords:
+        if kw.arg == param:
+            return kw.value
+        if kw.arg is None:
+            return True
+    if position is not None:
+        for i, arg in enumerate(call.args):
+            if isinstance(arg, ast.Starred):
+                return True
+            if i == position:
+                return arg
+    return None
+
+
+def _same_value(arg: ast.AST, default: ast.AST) -> bool:
+    if ast.dump(arg) == ast.dump(default):
+        return True
+    try:
+        return ast.literal_eval(arg) == ast.literal_eval(default)
+    except ValueError:
+        return False
+
+
+def _unused_knobs():
+    """Defaulted parameters of the Spark layer's library modules that
+    break the rule below, as sorted 'module.function(param)' strings."""
+    params = _defaulted_params()
+    used = set()
+    for path, is_test in _caller_files():
+        for call in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(call, ast.Call):
+                continue
+            name = _called_name(call.func)
+            for mod, position, param, default in params.get(name, ()):
+                arg = _passed(call, position, param)
+                if arg is None:
+                    continue
+                if not is_test or arg is True or not _same_value(arg, default):
+                    used.add((mod, name, param))
+    return sorted(
+        f"{mod}.{name}({param})"
+        for name, entries in params.items()
+        for mod, position, param, _ in entries
+        if (mod, name, param) not in used
+    )
+
+
+def test_every_defaulted_parameter_has_a_user():
+    """A defaulted parameter of the Spark layer's library modules stays a
+    parameter only while a non-test caller (the package itself, the
+    catalog, bench.py, perfbench, __spark_entry__.py) passes it, or a
+    test passes it a value other than its default to check a behaviour.
+    Any other value is a module-level constant (or an inline literal
+    used once), and an oracle that repeats it builds its SQL from that
+    constant, so engine and oracle cannot drift apart."""
+    assert _unused_knobs() == []

@@ -750,7 +750,7 @@ def test_iceberg_sink_reads_an_old_lineage_table_as_specless(spark):
 
 def test_run_spec_is_canonical():
     """The run spec names the bucketing, a config digest and the handlers
-    factory's qualified name. A builtin name and its config dict share a
+    the factory builds. A builtin name and its config dict share a
     digest, and a config holding sets digests the same under any hash
     seed (set iteration order moves with it)."""
     import os
@@ -760,8 +760,7 @@ def test_run_spec_is_canonical():
     assert _run_spec("b", "relaxed", None) == _run_spec("b", S.RELAXED, None)
     assert _run_spec("b", "relaxed", None) != _run_spec("b", "default", None)
     assert _run_spec("b", None, None) == "bucketing=b;config=none;handlers=none"
-    assert _run_spec("b", None, _probe_handlers).endswith(
-        ";handlers=test_spark_pipeline._probe_handlers")
+    assert _run_spec("b", None, _probe_handlers).endswith(";handlers=[]")
 
     script = (
         f"import sys; sys.path.insert(0, {str(REPO)!r})\n"
@@ -782,6 +781,87 @@ def test_run_spec_is_canonical():
         orders.add(order)
     assert len(orders) > 1  # the seeds did move the set order
     assert len(specs) == 1, specs
+
+
+def test_resume_refuses_other_handlers_behind_the_same_factory_name(spark):
+    """The spec records the handlers a factory builds (class and selector,
+    in order), not the factory's name: a resume through a second lambda
+    (every lambda is named ``<lambda>``) that builds other handlers is
+    refused, and so is a resume through the same named factory after
+    its handler list changed. The unchanged list resumes as a no-op."""
+    from selma_spark.extract import ContentExtractor, LinkCollector, TextBreaker
+
+    tmp = tempfile.mkdtemp(prefix="selma_handler_spec_")
+    try:
+        docs = _probe_docs(spark, n=40)
+        first, other = (lambda: [ContentExtractor()]), (lambda: [LinkCollector()])
+        assert first.__qualname__ == other.__qualname__
+        run_pipeline(spark, docs, f"{tmp}/a", config=None,
+                     handlers_factory=first, n_buckets=2)
+        with pytest.raises(ValueError, match="LinkCollector"):
+            run_pipeline(spark, docs, f"{tmp}/a", config=None,
+                         handlers_factory=other, n_buckets=2)
+
+        classes = [ContentExtractor]
+
+        def factory():
+            return [c() for c in classes]
+
+        run_pipeline(spark, docs, f"{tmp}/b", config=None,
+                     handlers_factory=factory, n_buckets=2)
+        classes.append(TextBreaker)
+        with pytest.raises(ValueError, match="TextBreaker"):
+            run_pipeline(spark, docs, f"{tmp}/b", config=None,
+                         handlers_factory=factory, n_buckets=2)
+        classes.pop()
+        res = run_pipeline(spark, docs, f"{tmp}/b", config=None,
+                           handlers_factory=factory, n_buckets=2)
+        assert res.doc_count == 40
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_job_extract_spec_is_the_same_from_either_launcher(
+    spark, monkeypatch, tmp_path
+):
+    """``job.py --extract`` run as a script (its factory is then
+    ``__main__.main.<locals>.handlers_factory``, as under spark-submit)
+    and through an imported ``main()`` (``selma_spark.spark.job...``)
+    give one run spec, so either launcher resumes the other's run."""
+    import runpy
+    import sys
+    from types import SimpleNamespace
+
+    from selma_spark.spark import job
+    from selma_spark.spark import pipeline as P
+
+    factories = []
+
+    def fake_run_pipeline(spark, docs, output, **kwargs):
+        factories.append(kwargs["handlers_factory"])
+        return SimpleNamespace(doc_count=0, output_path=output,
+                               lineage_path=output)
+
+    monkeypatch.setattr(P, "run_pipeline", fake_run_pipeline)
+    _probe_docs(spark, n=4).write.parquet(str(tmp_path / "in"))
+    argv = ["--input", str(tmp_path / "in"), "--output",
+            str(tmp_path / "out"), "--extract"]
+    assert job.main(argv) == 0
+    monkeypatch.setattr(sys, "argv", [job.__file__, *argv])
+    with pytest.raises(SystemExit) as e:
+        runpy.run_path(job.__file__, run_name="__main__")
+    assert e.value.code == 0
+
+    assert [f.__module__ for f in factories] == [
+        "selma_spark.spark.job", "__main__"]
+    specs = {_run_spec("b", "default", f) for f in factories}
+    assert specs == {_run_spec("b", "default", _content_extractor_handlers)}
+
+
+def _content_extractor_handlers():
+    from selma_spark.extract import ContentExtractor
+
+    return [ContentExtractor()]
 
 
 def test_run_pipeline_reads_documents_once_and_noop_resume_reads_none(spark):
@@ -1437,7 +1517,7 @@ def test_iceberg_sink_seam(spark):
 
 def test_lsh_hot_band_is_capped(spark):
     """A 1000-copy boilerplate cluster must NOT produce ~500k candidate
-    pairs: buckets over max_band_size are dropped before the self-join
+    pairs: buckets over LSH_MAX_BAND_SIZE are dropped before the self-join
     (those docs are exact-dup territory), so the pair count stays
     bounded while genuinely-near docs still pair via the other bands."""
     from selma_spark.spark import textops
@@ -1448,7 +1528,7 @@ def test_lsh_hot_band_is_capped(spark):
         ("u2", "a genuinely unique document about owls and lightships"),
     ]
     docs = spark.createDataFrame(rows, "doc_id string, text string")
-    pairs = textops.near_dup_pairs(docs, max_band_size=50)
+    pairs = textops.near_dup_pairs(docs)
     n = pairs.count()
     # the hot cluster contributes zero pairs; u1/u2 share 4 of their
     # shingles' bands at most -> a handful of pairs, never quadratic
